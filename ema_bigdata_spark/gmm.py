@@ -35,11 +35,10 @@ import math
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ema_bigdata_spark.functions.gaussian import DENSITY_FLOOR, wdens
-from ema_bigdata_spark.sources.tables import load_table
 
 #: reference converged when Δ lnP ≤ 80 absolute (Main.scala:89) — a
 #: dataset-size-dependent threshold; ours is configurable.
@@ -183,7 +182,7 @@ def _init_params_hist(
 #: Order-independent (integer sums), range-equivalent to DECIMAL(38,0)
 #: (4 limbs cover |d| < 2^126 ≈ 8.5e37), and bit-identical to the
 #: decimal path's result (equivalence-tested).  Limb-sum overflow is
-#: impossible while bins < 2^29 (top-limb |q3| < 2^33, Σ < 2^62); the
+#: impossible while bins < 2^29 (top-limb |q0| < 2^33, Σ < 2^62); the
 #: bin count is known from the init aggregate, so wider histograms
 #: fall back to the decimal path instead of silently wrapping.
 #: ``SPARK_GRAFT_EM_DECIMAL=1`` forces the decimal path (A/B lever and
@@ -203,7 +202,14 @@ def _em_quantized_terms(resp: DataFrame, names: dict[str, str]) -> DataFrame:
     EXACT — IEEE fmod never rounds, and trunc == floor on the
     non-negative ``u``).  ``a`` stays a DOUBLE column: ``floor()``'s
     BIGINT return would ANSI-overflow for terms beyond 2^63·1e-12,
-    which in-domain sufficient statistics legitimately exceed."""
+    which in-domain sufficient statistics legitimately exceed.
+
+    On ties this is not always the pre-r13 ``round()``: the ``+ 0.5``
+    is itself a rounded double add, so a scaled term whose fraction
+    lies within an ulp of .5 (or any term ≥ 2^52, where the add rounds
+    to even) can land one 1e-12 quantum away from ``round()``'s exact
+    BigDecimal HALF_UP.  Both sum paths share this quantizer, so they
+    stay bit-identical to each other."""
     t = resp.select(
         *[F.expr(expr).alias(f"t_{n}") for n, expr in names.items()]
     )
@@ -309,87 +315,76 @@ def _em_stats_limb(resp: DataFrame, names: dict[str, str]) -> dict:
 
 
 def _distributed_em(
-    hist: DataFrame, k: int, tol: float, max_iter: int,
-    pre_cached: bool = False,
+    hist: DataFrame, k: int, tol: float, max_iter: int
 ) -> GMMModel:
     """Scale fallback when the histogram exceeds ``MAX_DRIVER_BINS``:
     SURVEY §4.3's one-aggregation-per-iteration loop, frequency-weighted
-    over the cached histogram (bins ≪ N rows scanned per iteration).
-    ``pre_cached=True`` means the caller already holds a materialized
-    ``cache()`` of ``hist`` and owns its release (ADVICE r12: the old
-    form re-cached ``spread(hist)``, which when spread repartitions
-    creates a SECOND InMemoryRelation of the same histogram)."""
-    from ema_bigdata_spark.sources.tables import spread
+    over the histogram (bins ≪ N rows scanned per iteration).  ``hist``
+    must already be materialized (``gmm_fit_hist``'s cache, which the
+    caller owns and releases): every iteration re-reads it."""
+    phi, mu, s2, n, nbins = _init_params_hist(hist, k)
+    use_decimal = (
+        nbins >= _LIMB_MAX_BINS
+        or os.environ.get("SPARK_GRAFT_EM_DECIMAL") == "1"
+    )
 
-    if not pre_cached:
-        hist = spread(hist).cache()
-    try:
-        phi, mu, s2, n, nbins = _init_params_hist(hist, k)
-        use_decimal = (
-            nbins >= _LIMB_MAX_BINS
-            or os.environ.get("SPARK_GRAFT_EM_DECIMAL") == "1"
+    lnp_prev = None
+    trace: list[float] = []
+    it = 0
+    for it in range(1, max_iter + 1):
+        p, m, v = tuple(phi), tuple(mu), tuple(s2)
+        # two-stage plan, still one job: a projection computes each
+        # weighted density ONCE, then the agg sums trivial refs.
+        weights = hist.select(
+            F.col("_x"),
+            F.col("cnt").cast("double").alias("_c"),
+            *[
+                F.expr(wdens("_x", p[j], m[j], v[j])).alias(f"w{j}")
+                for j in range(k)
+            ],
         )
+        rowsum = F.greatest(
+            sum((F.col(f"w{j}") for j in range(k)), F.lit(0.0)),
+            F.lit(DENSITY_FLOOR),
+        )
+        resp = weights.select(
+            "_x",
+            "_c",
+            F.log(rowsum).alias("_lnp"),
+            *[
+                (F.col(f"w{j}") / rowsum).alias(f"g{j}")
+                for j in range(k)
+            ],
+        )
+        # Sufficient statistics as exact fixed-point sums (per-bin
+        # term quantized to 1e-12, summed as integers — associative,
+        # hence identical under ANY partitioning; raw double sums
+        # are order-dependent).  The limb form is the fast path
+        # (plain int64 adds); the decimal form is the wide-histogram
+        # fallback and A/B hook (_LIMB_SHIFTS note).
+        stat_names = {}
+        for j in range(k):
+            stat_names[f"n{j}"] = f"g{j} * _c"
+            stat_names[f"sx{j}"] = f"g{j} * _x * _c"
+            stat_names[f"sxx{j}"] = f"g{j} * _x * _x * _c"
+        stat_names["lnp"] = "_lnp * _c"
+        stats_fn = _em_stats_decimal if use_decimal else _em_stats_limb
+        vals = stats_fn(resp, stat_names)
 
-        lnp_prev = None
-        trace: list[float] = []
-        it = 0
-        for it in range(1, max_iter + 1):
-            p, m, v = tuple(phi), tuple(mu), tuple(s2)
-            # two-stage plan, still one job: a projection computes each
-            # weighted density ONCE, then the agg sums trivial refs.
-            weights = hist.select(
-                F.col("_x"),
-                F.col("cnt").cast("double").alias("_c"),
-                *[
-                    F.expr(wdens("_x", p[j], m[j], v[j])).alias(f"w{j}")
-                    for j in range(k)
-                ],
+        lnp = vals["lnp"]
+        trace.append(lnp)
+        for j in range(k):
+            nj = vals[f"n{j}"] or 1e-300
+            phi[j] = nj / n
+            mu[j] = vals[f"sx{j}"] / nj
+            s2[j] = max(
+                vals[f"sxx{j}"] / nj - mu[j] * mu[j], 1e-12
             )
-            rowsum = F.greatest(
-                sum((F.col(f"w{j}") for j in range(k)), F.lit(0.0)),
-                F.lit(DENSITY_FLOOR),
-            )
-            resp = weights.select(
-                "_x",
-                "_c",
-                F.log(rowsum).alias("_lnp"),
-                *[
-                    (F.col(f"w{j}") / rowsum).alias(f"g{j}")
-                    for j in range(k)
-                ],
-            )
-            # Sufficient statistics as exact fixed-point sums (per-bin
-            # term quantized to 1e-12, summed as integers — associative,
-            # hence identical under ANY partitioning; raw double sums
-            # are order-dependent).  The limb form is the fast path
-            # (plain int64 adds); the decimal form is the wide-histogram
-            # fallback and A/B hook (_LIMB_SHIFTS note).
-            stat_names = {}
-            for j in range(k):
-                stat_names[f"n{j}"] = f"g{j} * _c"
-                stat_names[f"sx{j}"] = f"g{j} * _x * _c"
-                stat_names[f"sxx{j}"] = f"g{j} * _x * _x * _c"
-            stat_names["lnp"] = "_lnp * _c"
-            stats_fn = _em_stats_decimal if use_decimal else _em_stats_limb
-            vals = stats_fn(resp, stat_names)
 
-            lnp = vals["lnp"]
-            trace.append(lnp)
-            for j in range(k):
-                nj = vals[f"n{j}"] or 1e-300
-                phi[j] = nj / n
-                mu[j] = vals[f"sx{j}"] / nj
-                s2[j] = max(
-                    vals[f"sxx{j}"] / nj - mu[j] * mu[j], 1e-12
-                )
-
-            if lnp_prev is not None and abs(lnp - lnp_prev) <= tol:
-                lnp_prev = lnp
-                break
+        if lnp_prev is not None and abs(lnp - lnp_prev) <= tol:
             lnp_prev = lnp
-    finally:
-        if not pre_cached:
-            hist.unpersist()
+            break
+        lnp_prev = lnp
     return GMMModel(phi, mu, s2, lnp_prev, it, trace)
 
 
@@ -411,25 +406,16 @@ def value_histogram(df: DataFrame, x: str = "value") -> DataFrame:
     )
 
 
-def _head_rows(head) -> int:
-    """Row count of a head probe — a pyarrow Table or legacy Row list."""
-    return head.num_rows if hasattr(head, "num_rows") else len(head)
-
-
 def _head_arrays(head):
-    """(vals, cnts) numpy arrays from a head probe (Table or Row list)."""
+    """(vals, cnts) numpy arrays from the Arrow head probe."""
     import numpy as np
 
-    if hasattr(head, "num_rows"):  # pyarrow.Table from DataFrame.toArrow
-        vals = head.column("_x").to_numpy(zero_copy_only=False).astype(
-            np.float64, copy=False
-        )
-        cnts = head.column("cnt").to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False
-        )
-        return vals, cnts
-    vals = np.array([r._x for r in head], dtype=np.float64)
-    cnts = np.array([r.cnt for r in head], dtype=np.int64)
+    vals = head.column("_x").to_numpy(zero_copy_only=False).astype(
+        np.float64, copy=False
+    )
+    cnts = head.column("cnt").to_numpy(zero_copy_only=False).astype(
+        np.int64, copy=False
+    )
     return vals, cnts
 
 
@@ -438,37 +424,27 @@ def gmm_fit_hist(
     k: int = 3,
     tol: float = DEFAULT_TOL,
     max_iter: int = DEFAULT_MAX_ITER,
-    head=None,
 ) -> GMMModel:
-    """Fit from a precomputed ``(value, count)`` histogram.  ``head``
-    is an optional already-collected ``hist.limit(MAX_DRIVER_BINS+1)``
-    head probe — a pyarrow Table from ``.toArrow()`` (preferred) or a
-    legacy ``.collect()`` row list — so multi-fit callers (model
-    selection) collect it once.
+    """Fit from a precomputed ``(value, count)`` histogram.
 
-    The probe moves up to ``MAX_DRIVER_BINS`` rows driver-side, so it
-    crosses as ONE Arrow batch set (``toArrow``), not pickled Rows —
-    measured 38× cheaper at 500 k rows (guide §4.1: control how
-    efficiently bytes cross the JVM↔Python boundary; a 1 M-row pickled
-    collect was ~10 s of the wide-domain bench fixture).  The probe
-    also ``cache()``-s the histogram first: a wide domain would
-    otherwise compute the full histogram twice — once under the probe's
-    limit (an agg cannot short-circuit) and again inside
-    ``_distributed_em``'s cache — and a driver-bound histogram is ≤1 M
-    rows, so the cache write is noise there."""
-    own_cache = head is None
-    if own_cache:
-        hist = hist.cache()
-        head = hist.limit(MAX_DRIVER_BINS + 1).toArrow()
+    A ``hist.limit(MAX_DRIVER_BINS+1)`` head probe picks the path.  It
+    moves up to ``MAX_DRIVER_BINS`` rows driver-side, so it crosses as
+    ONE Arrow batch set (``toArrow``), not pickled Rows — measured 38×
+    cheaper at 500 k rows (guide §4.1: control how efficiently bytes
+    cross the JVM↔Python boundary; a 1 M-row pickled collect was ~10 s
+    of the wide-domain bench fixture).  The histogram is ``cache()``-d
+    first: a wide domain would otherwise compute the full histogram
+    twice — once under the probe's limit (an agg cannot
+    short-circuit) and again for ``_distributed_em``'s iterations.
+    The cache is cheap at any width because AQE sizes it
+    (``session.RUNTIME_CONFS``: cached plans may change their output
+    partitioning): a ~30 k-bin histogram builds and probes in a single
+    task each instead of one per shuffle partition."""
+    hist = hist.cache()
     try:
-        if _head_rows(head) > MAX_DRIVER_BINS:
-            # domain too wide: iterate on-cluster over OUR cache entry
-            # (pre_cached=True — ADVICE r12: letting _distributed_em
-            # re-cache spread(hist) could hold the histogram twice)
-            if own_cache:
-                return _distributed_em(
-                    hist, k, tol, max_iter, pre_cached=True
-                )
+        head = hist.limit(MAX_DRIVER_BINS + 1).toArrow()
+        if head.num_rows > MAX_DRIVER_BINS:
+            # domain too wide: iterate on-cluster over this cache entry
             return _distributed_em(hist, k, tol, max_iter)
         import numpy as np
 
@@ -476,8 +452,7 @@ def gmm_fit_hist(
         order = np.argsort(vals, kind="stable")
         return _driver_em(vals[order], cnts[order], k, tol, max_iter)
     finally:
-        if own_cache:
-            hist.unpersist()
+        hist.unpersist()
 
 
 def gmm_fit(
@@ -493,79 +468,3 @@ def gmm_fit(
     bounded-cardinality histogram (module docstring).  The cluster
     touches the full dataset exactly once per fit."""
     return gmm_fit_hist(value_histogram(df, x), k, tol, max_iter)
-
-
-def q_gmm_fit_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r6 registered form of ``gmm_fit`` (numpy EM over the
-    histogram).  Since r6 the REGISTERED ``gmm_fit`` lives in
-    ``gmm_parity.py`` — a bit-exact cross-engine EM with a real DuckDB
-    oracle (libm exp/ln here diverge by 1 ulp between engines, which
-    iteration feedback amplifies; SURVEY §2.2 no longer exempts it).
-    This numpy path stays as the fast library API and equivalence
-    fixture.
-
-    Fixed iteration budget (tol=0 → always exactly 15 iterations) so
-    the query is deterministic AND its bench cost measures
-    per-iteration throughput, not convergence luck."""
-    model = gmm_fit(
-        load_table(spark, sf_dir, "events"), "value", k=3, tol=0.0, max_iter=15
-    )
-    rows = [
-        (j, round(model.weights[j], 6), round(model.means[j], 6),
-         round(model.variances[j], 6))
-        for j in range(3)
-    ]
-    return spark.createDataFrame(
-        rows, "component BIGINT, weight DOUBLE, mean DOUBLE, variance DOUBLE"
-    )
-
-
-def q_gmm_bic_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model selection over K via BIC = p·ln(n) − 2·lnL with
-    p = 3K−1 free parameters — fits K ∈ {2, 3, 4} with the same
-    one-job-per-iteration EM and reports each fit, lowest BIC first.
-
-    ONE histogram scan total: the ``(value, count)`` histogram is built
-    and collected once (n = Σcnt comes from it for free — no separate
-    ``count()`` job), then all three candidate fits iterate over the
-    same arrays driver-side; the marginal cost per extra K is numpy
-    iterations, not I/O.  The wide-domain fallback caches the histogram
-    so the distributed path also scans events exactly once.
-
-    INTENTIONAL (r2): n here is the histogram total, i.e. the count of
-    non-NULL values — the likelihood's actual sample size — not
-    ``ev.count()``, which would also count NULL rows the lnL term never
-    sees.  On data with NULLs the two differ and BIC shifts; the
-    null-excluding n is the statistically correct one."""
-    import math
-
-    ev = load_table(spark, sf_dir, "events").select("value")
-    hist = value_histogram(ev, "value")
-    wide = False
-    # Arrow head probe (r12 optimization, same rationale as
-    # gmm_fit_hist: batch the boundary crossing instead of pickling
-    # up to 1 M Rows)
-    head = hist.limit(MAX_DRIVER_BINS + 1).toArrow()
-    if head.num_rows > MAX_DRIVER_BINS:
-        wide = True
-        hist = hist.cache()  # one events scan shared by the K fits
-        n = hist.agg(F.sum("cnt")).collect()[0][0]
-    else:
-        n = int(_head_arrays(head)[1].sum())
-    rows = []
-    try:
-        for k in (2, 3, 4):
-            # equal 6-iteration budget per candidate: enough for the BIC
-            # ordering to stabilize on this data, and the selection query
-            # stays ~half the cost of the full flagship fit
-            m = gmm_fit_hist(hist, k=k, tol=0.0, max_iter=6, head=head)
-            p = 3 * k - 1
-            bic = p * math.log(n) - 2.0 * m.log_likelihood
-            rows.append((k, round(m.log_likelihood, 3), round(bic, 3)))
-    finally:
-        if wide:
-            hist.unpersist()
-    rows.sort(key=lambda r: r[2])
-    return spark.createDataFrame(
-        rows, "k BIGINT, log_likelihood DOUBLE, bic DOUBLE"
-    )

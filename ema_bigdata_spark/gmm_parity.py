@@ -422,19 +422,20 @@ def _fresh_view(stem: str) -> str:
 
 def prepare_hist(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the (value, count) histogram once and return its
-    temp-view name.  ``coalesce(4)``: post-aggregation the histogram
-    is domain-bounded (~60 k bins for 2-decimal data regardless of row
-    count — gmm.py module docstring), so the 32 shuffle partitions
-    would cost 15-24 × 32 near-empty tasks across the iteration jobs;
-    four partitions keep per-iteration overhead at ~30 ms without
-    giving up distribution headroom for wide domains."""
+    temp-view name.  No hand-set width: the histogram is
+    domain-bounded (~60 k bins for 2-decimal data regardless of row
+    count — gmm.py module docstring), and ``localCheckpoint`` runs the
+    aggregate through AQE, which coalesces its shuffle partitions to
+    the data — one partition (one task per iteration job) for a narrow
+    domain, as many as the advisory partition size asks for a wide
+    one."""
     ev = load_table(spark, sf_dir, "events")
     ev_view = _fresh_view("v_gmm_events")
     ev.createOrReplaceTempView(ev_view)
     try:
         # localCheckpoint is EAGER: the histogram is materialized
         # here, so the events view has served its purpose
-        hist = spark.sql(hist_sql(ev_view)).coalesce(4).localCheckpoint()
+        hist = spark.sql(hist_sql(ev_view)).localCheckpoint()
     finally:
         # drop immediately (ADVICE r8): per-call names otherwise
         # accumulate in the session catalog for its whole lifetime

@@ -9,9 +9,12 @@ without plan changes.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Confs that are safe (and desirable) at any scale.  All of these are
 # runtime-settable so they also work when applied to an externally
@@ -24,6 +27,20 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce (and re-plan joins in) the final stage of a
+    # CACHED plan too.  Spark's default builds every cache with these
+    # final-stage optimizations off, so a cached groupBy keeps all
+    # ``spark.sql.shuffle.partitions`` partitions.  What it buys: the EM
+    # histogram cache (``gmm.gmm_fit_hist``, ~30 k bins) is built and
+    # probed in one task each instead of 32 near-empty ones each, and
+    # CC's per-round label cache shrinks the same way.  Why it is safe:
+    # the two caches whose LAYOUT later plans rely on — CC's
+    # dst-partitioned edge cache (``dedup.py``) and ``q_pagerank``'s
+    # src-partitioned one (``analytics.py``) — are built with
+    # ``repartition(n, key)``, whose partitioning AQE never changes, so
+    # their iteration joins stay exchange-free on the edge side
+    # (pinned in tests/test_plans.py).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # (The AQE sort-merge→shuffled-hash threshold is set in ``tune()``,
     # not here: its value must track the session's ACTUAL advisory
     # partition size — Spark only applies the rewrite when the
@@ -54,13 +71,28 @@ BUILDER_CONFS: dict[str, str] = {
 }
 
 
+#: confs that ``tune()`` could not set, name → error text.  A
+#: driver-owned session may reject a conf (static, or locked by its
+#: deployment); the query still runs, without that conf's effect, so
+#: the failure is recorded here and logged once per name rather than
+#: passed silently.
+CONF_FAILURES: dict[str, str] = {}
+
+
+def _set_conf(spark: SparkSession, key: str, value: str) -> None:
+    try:
+        spark.conf.set(key, value)
+    except Exception as e:
+        if key not in CONF_FAILURES:
+            _log.warning("could not set %s=%s: %s", key, value, e)
+        CONF_FAILURES[key] = f"{type(e).__name__}: {e}"
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (driver-owned)."""
+    """Apply runtime-settable confs to an existing session (driver-owned).
+    Confs the session rejects land in ``CONF_FAILURES``."""
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build; loader re-asserts what it needs
+        _set_conf(spark, k, v)
     # AQE sort-merge→shuffled-hash rewrite (guide §3.1; Spark default 0
     # = off): when every post-shuffle partition of the build side is
     # under the threshold, the sort of both sides is skipped.  The
@@ -81,12 +113,9 @@ def tune(spark: SparkSession) -> SparkSession:
             )
         except Exception:
             shj = str(64 * 1024 * 1024)
-    try:
-        spark.conf.set(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shj
-        )
-    except Exception:
-        pass
+    _set_conf(
+        spark, "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shj
+    )
     return spark
 
 

@@ -829,3 +829,166 @@ def test_pair_queries_have_no_trailing_global_sort(spark, sf_dir):
     ):
         plan = _plan(spark, sf_dir, name)
         assert "rangepartitioning" not in plan, name
+
+
+# -- layout-dependent caches ---------------------------------------------------
+#
+# Two iterative operators rely on a cached edge table keeping the hash
+# partitioning it was built with: CC's dst-partitioned edge cache and
+# q_pagerank's src-partitioned one.  The session lets AQE re-size
+# cached plans (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``);
+# AQE never changes the partitioning an explicit ``repartition(npart,
+# key)`` asks for, so each iteration join must still read its edge
+# side without an Exchange.  Broadcast is disabled while the plan is built:
+# at test scale every join would otherwise broadcast and hide the
+# shuffle these pins look for.
+
+_CACHED_LAYOUT_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    yield spark
+    for k, v in old.items():
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+
+
+def _edge_side_checks(plan: str, join_re: str, key: str, npart: int) -> int:
+    """For every join in ``plan`` matching ``join_re``, walk its left
+    (edge) child down to the first leaf and assert that the path holds
+    no shuffle and ends in a cache scan.  The cached plan's topmost
+    shuffle must be ``hashpartitioning(key, npart)`` read as is — no
+    AQE coalescing above it, which is what the explicit
+    ``repartition(npart, key)`` guarantees (Spark drops that
+    repartition when its child's join already hash-partitions by the
+    key, so the Exchange's origin may be either).  Returns the number
+    of joins checked."""
+    import re
+
+    lines = plan.splitlines()
+    checked = 0
+    for i, line in enumerate(lines):
+        if not re.search(join_re, line):
+            continue
+        checked += 1
+        path = []
+        for nxt in lines[i + 1:]:
+            path.append(nxt)
+            if "Scan" in nxt:  # first leaf: cache, RDD or file scan
+                break
+        leaf = path[-1]
+        assert "InMemoryTableScan" in leaf, (line, path)
+        assert not any(
+            "Exchange" in p or "ShuffleQueryStage" in p for p in path
+        ), (line, path)
+        rest = lines[i + 1 + len(path):]
+        top = next(j for j, x in enumerate(rest) if "Exchange" in x)
+        assert re.search(
+            rf"Exchange hashpartitioning\({key}#\d+L, {npart}\),", rest[top]
+        ), (line, rest[top])
+        assert not any("AQEShuffleRead" in x for x in rest[:top]), (
+            line, rest[: top + 1],
+        )
+    return checked
+
+
+def test_cc_round_edge_side_has_no_exchange(no_broadcast, monkeypatch):
+    """Distributed CC: the round-2 propagate join (edges ⋈ labels on
+    dst = doc_id) must read the dst-partitioned edge cache directly —
+    only the |V|-sized label side may shuffle."""
+    from ema_bigdata_spark.operators import dedup as dd
+
+    spark = no_broadcast
+    assert spark.conf.get(_CACHED_LAYOUT_CONF) == "true"
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX", 0)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)] + [(100, 101)],
+        "doc_a BIGINT, doc_b BIGINT",
+    )
+    # two rounds: the returned frame is round 2's cache, whose plan
+    # holds the propagate join (round 1 is join-free)
+    labels = dd.connected_components(pairs, max_iter=2)
+    try:
+        plan = labels._jdf.queryExecution().executedPlan().toString()
+    finally:
+        labels.unpersist()
+    npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = _edge_side_checks(
+        plan, r"Join \[dst#\d+L\], \[doc_id#\d+L\], Inner", "dst", npart
+    )
+    assert n >= 1, plan
+
+
+def test_pagerank_iteration_edge_side_has_no_exchange(
+    no_broadcast, sf_dir, monkeypatch
+):
+    """q_pagerank: every iteration join (edges ⋈ ranks on src = node)
+    must read the src-partitioned edge cache directly.  The plan is
+    taken from the final ranks just before the query checkpoints them
+    (the checkpointed frame's own plan is a bare RDD scan)."""
+    spark = no_broadcast
+    assert spark.conf.get(_CACHED_LAYOUT_CONF) == "true"
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+    seen = []
+
+    def record(self, *a, **kw):
+        seen.append(self)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "localCheckpoint", record)
+    registry.QUERIES["q_pagerank"](spark, sf_dir)
+    plan = seen[-1]._jdf.queryExecution().executedPlan().toString()
+    npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = _edge_side_checks(
+        plan, r"Join \[src#\d+L\], \[node#\d+L\], Inner", "src", npart
+    )
+    assert n >= 1, plan
+
+
+def test_gmm_fit_task_count(spark):
+    """The EM fit's histogram cache must be sized by AQE, not by
+    ``spark.sql.shuffle.partitions``: a ~30 k-row mixture (a few
+    thousand bins) costs one map stage over the input plus one task
+    each for the cache build and its head probe — never one near-empty
+    task per shuffle partition for both."""
+    from pyspark.sql import functions as F
+
+    from ema_bigdata_spark.gmm import gmm_fit
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    comp = F.col("id") % 3
+    df = spark.range(0, 30_000, 1, par).select(
+        F.round(
+            F.when(comp == 0, F.randn(7) - 5.0)
+            .when(comp == 1, F.randn(7) * 0.7)
+            .otherwise(F.randn(7) * 1.5 + 6.0),
+            2,
+        ).alias("value")
+    )
+    group = "test_gmm_fit_task_count"
+    sc.setJobGroup(group, "gmm_fit task-count pin")
+    try:
+        model = gmm_fit(df, "value", k=3, tol=0.0, max_iter=20)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    tasks = 0
+    for jid in st.getJobIdsForGroup(group):
+        for sid in st.getJobInfo(jid).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None:
+                tasks += info.numCompletedTasks
+    assert model.n_iter == 20
+    assert 0 < tasks <= 2 * par + 1, (tasks, par)

@@ -98,9 +98,8 @@ def main():
         h = cached_hist()
         timed("em: init agg over cached hist",
               lambda: _init_params_hist(h, 3))
-        timed("em: full 3-iter distributed_em (incl build)",
-              lambda: _distributed_em(value_histogram(wide_df(), "value"),
-                                      3, 0.0, 3))
+        timed("em: 3-iter distributed_em over cached hist",
+              lambda: _distributed_em(h, 3, 0.0, 3))
         h.unpersist()
         timed("em: head-probe limit(1M+1).collect over hist",
               lambda: value_histogram(wide_df(), "value")
