@@ -889,6 +889,8 @@ def connected_components(
     durable storage and swap in reliable ``checkpoint()``.  Both
     paths return identical labels.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
@@ -987,10 +989,6 @@ def connected_components(
             break
         prev_sum = new_sum
     edges.unpersist()
-    if labels is None:  # max_iter < 1: identity labeling, unpropagated
-        return nodes_df.select(
-            F.col("src").alias("doc_id"), F.col("src").alias("cluster_id")
-        )
     return labels
 
 

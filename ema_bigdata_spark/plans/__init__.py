@@ -27,14 +27,6 @@ def executed_plan(df: DataFrame, execute: bool = False) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def analyzed_plan(df: DataFrame) -> str:
-    """The analyzed logical plan — the right level for streaming
-    DataFrames (which refuse full optimization outside
-    ``writeStream.start()``) and for checking that hints (broadcast)
-    are attached before the per-batch planner runs."""
-    return df._jdf.queryExecution().analyzed().toString()
-
-
 def query_plan(
     spark, sf_dir: str, name: str, execute: bool = False
 ) -> str:

@@ -107,10 +107,6 @@ _CHECK_WINDOW: tuple[str, ...] = (
 #: (ADVICE r10, tools/check_freshness.py:54).
 _CHECK_WINDOW_ROUND = 13
 
-#: legacy name for the pre-r4 round-scoped constant — ROUND3_NOTES.md
-#: still directs readers here; keep it resolving
-_R3_CHECK_WINDOW = _CHECK_WINDOW
-
 
 def load_all() -> None:
     """Import every operator module so registrations run, then reorder

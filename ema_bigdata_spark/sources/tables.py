@@ -25,12 +25,28 @@ into the parquet scan, so hot queries that filter on time ranges should
 use :func:`ts_ns` literals against the raw long column — see
 ``filter_ts_range`` — which keeps predicate pushdown + row-group
 pruning intact at 100 TB.
+
+Schema memoization
+------------------
+``spark.read.parquet`` with no schema runs a one-task Spark job to read
+a file footer, on every call.  :func:`load_raw` — the one parquet read
+path of the engine, the streaming seam included — memoizes the inferred
+``StructType`` per path and hands it back through ``spark.read.schema``,
+which skips inference.  An entry holds the path's fingerprint and the
+session values of the confs that shape inference (``_SCHEMA_CONFS``);
+the fingerprint comes from driver-side Hadoop ``FileSystem`` status
+calls, with no Spark job — (length, mtime) for a file, the sorted (name,
+length, mtime) of the entries for a directory.  A read whose fingerprint or confs differ infers again and
+replaces the entry, so a file rewritten at the same path is re-read and
+the memo holds one entry per distinct path.  Like ``_SPREAD_CACHE`` it
+is a plain dict without a lock: a race only infers twice.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,10 +85,55 @@ def ts_ns(value: str | _dt.datetime) -> int:
     return int(value.replace(tzinfo=_dt.timezone.utc).timestamp() * 1_000_000) * 1_000
 
 
+#: session confs that change what parquet schema inference returns
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: memoized inferred schemas: path -> (fingerprint, confs, StructType)
+_SCHEMAS: dict[str, tuple] = {}
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """(length, mtime) of a file, or the sorted (name, length, mtime) of
+    a directory's entries — driver-side FileSystem calls, no job.
+    None when the path cannot be statted (the read reports why)."""
+    try:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        st = fs.getFileStatus(jpath)
+        if not st.isDirectory():
+            return (st.getLen(), st.getModificationTime())
+        return tuple(sorted(
+            (e.getPath().getName(), e.getLen(), e.getModificationTime())
+            for e in fs.listStatus(jpath)
+        ))
+    except Py4JJavaError:
+        return None
+
+
 def load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read a table with nanos timestamps left as raw long columns."""
+    """Read a table with nanos timestamps left as raw long columns.
+
+    The inferred schema is memoized per path (module docstring), so only
+    a path's first read pays Spark's footer-inference job."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    fp = _fingerprint(spark, path)
+    if fp is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[:2] == (fp, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (fp, confs, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -64,7 +64,6 @@ def _state_partitions(spark, n: int | None = None):
     prev_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     # r13 (guide §1 — measured): after the data batch drains, Spark
     # schedules one extra NO-DATA micro-batch purely to advance the
     # watermark and evict state; it emits nothing for every query in
@@ -79,9 +78,19 @@ def _state_partitions(spark, n: int | None = None):
     # or that needs idle-time state eviction should leave the default
     # on — which is why this rides the per-query context, not the
     # session builder.  Env-overridable like the partition count.
+    # Validated before any conf.set, so a bad value leaves the session
+    # untouched.
     nodata = os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCHES", "false")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", nodata)
+    if nodata.lower() not in ("true", "false"):
+        raise ValueError(
+            "SPARK_GRAFT_STREAM_NODATA_BATCHES must be true or false, "
+            f"got {nodata!r}"
+        )
     try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set(
+            "spark.sql.streaming.noDataMicroBatches.enabled", nodata.lower()
+        )
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)

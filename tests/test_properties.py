@@ -542,6 +542,25 @@ def test_connected_components_correct(spark, monkeypatch):
     assert got_dist == want
 
 
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_refuses_no_rounds(spark, monkeypatch, max_iter):
+    """``max_iter < 1`` is refused at entry with a ValueError, before
+    any Spark job (no probe collect, no edge cache built)."""
+    from ema_bigdata_spark.operators import dedup as dd
+
+    pairs = spark.createDataFrame([(1, 2)], "doc_a BIGINT, doc_b BIGINT")
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX", 0)
+    sc = spark.sparkContext
+    group = f"cc_refuse_{max_iter}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="max_iter"):
+            dd.connected_components(pairs, max_iter=max_iter)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_ngram_jaccard_hot_shingle_cap_engages(spark):
     """VERDICT r4 §Next-8: the stop-shingle bucket cap under a
     PATHOLOGICAL hot shingle, not uniform testdata.  2 000 documents

@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -226,6 +228,69 @@ def test_spread_fallback_and_memoization(spark, sf_dir, tmp_path):
     )
     assert "RoundRobinPartitioning" not in spread_plan
     assert plan.splitlines()[0] == spread_plan.splitlines()[0]
+
+
+def _jobs_run(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran) — counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestSchemaMemo:
+    """load_raw infers a parquet file's schema once per path, and infers
+    again when the file or the inference confs change."""
+
+    def test_second_load_runs_no_job(self, spark, tmp_path):
+        from ema_bigdata_spark.sources.tables import load_table
+
+        pq.write_table(pa.table({"a": [1, 2]}), tmp_path / "t.parquet")
+        first, _ = _jobs_run(
+            spark, "memo_first", lambda: load_table(spark, str(tmp_path), "t").schema
+        )
+        second, n = _jobs_run(
+            spark, "memo_second", lambda: load_table(spark, str(tmp_path), "t").schema
+        )
+        assert n == 0
+        assert second == first
+
+    def test_replaced_file_is_reinferred(self, spark, tmp_path):
+        from ema_bigdata_spark.sources import tables as T
+
+        path = tmp_path / "t.parquet"
+        pq.write_table(pa.table({"a": [1, 2]}), path)
+        assert T.load_raw(spark, str(tmp_path), "t").columns == ["a"]
+        n_entries = len(T._SCHEMAS)
+        pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+        df = T.load_raw(spark, str(tmp_path), "t")
+        assert df.columns == ["a", "b"]
+        assert sorted(r.b for r in df.collect()) == ["x", "y"]
+        assert len(T._SCHEMAS) == n_entries
+        assert T._SCHEMAS[str(path)][2].fieldNames() == ["a", "b"]
+
+    def test_inference_conf_change_is_reinferred(self, spark, tmp_path):
+        from pyspark.sql.types import BinaryType, StringType
+
+        from ema_bigdata_spark.sources.tables import load_raw
+
+        pq.write_table(
+            pa.table({"s": pa.array([b"x"], pa.binary())}), tmp_path / "t.parquet"
+        )
+        key = "spark.sql.parquet.binaryAsString"
+        prev = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "false")
+            plain = load_raw(spark, str(tmp_path), "t").schema["s"].dataType
+            spark.conf.set(key, "true")
+            as_str = load_raw(spark, str(tmp_path), "t").schema["s"].dataType
+        finally:
+            spark.conf.set(key, prev)
+        assert isinstance(plain, BinaryType)
+        assert isinstance(as_str, StringType)
 
 
 class TestStreamSourceSeam:
