@@ -32,7 +32,6 @@ not reproduce them).
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -148,8 +147,8 @@ def _init_params_hist(
     (exact frequency-weighted `percentile` over ×100 fixed-point integers
     and exact DECIMAL moment sums — approxQuantile's sketch merges and
     var_pop's double sums both vary with partition count).  Also returns
-    the bin count (free — same aggregate job), which sizes the
-    per-iteration limb-sum overflow guard (``_LIMB_MAX_BINS``)."""
+    the bin count (free — same aggregate job), which sets the width of
+    the per-iteration int64 limb sums (``_limb_shifts``)."""
     probs = ", ".join(str((j + 1) / (k + 1)) for j in range(k))
     xi = "CAST(round(_x * 100) AS BIGINT)"
     stats = hist.agg(
@@ -168,48 +167,51 @@ def _init_params_hist(
     return [1.0 / k] * k, means, [var] * k, n, int(stats.nbins)
 
 
-#: exact-sum strategy for ``_distributed_em``'s per-iteration
-#: sufficient statistics.  The r12 A/B on the 1.73 M-bin fixture
-#: measured the DECIMAL(38,0) sums at 1.37-2.33 s/iteration vs
-#: 0.22-0.41 s for (order-dependent, hence forbidden) double sums — a
-#: ~6× exactness tax paid to Decimal128/BigDecimal per-row adds.  The
-#: limb path below keeps the EXACT SAME per-bin quantized integer
-#: (``round(term·1e12)`` as a double) but splits it into four int64
-#: limbs (31/31/31/top bits) with exact power-of-two double arithmetic
-#: — a double has 53 significant bits, so every floor/scale/subtract
-#: below is exact — sums each limb with plain codegen'd BIGINT adds,
-#: and recombines driver-side in Python's arbitrary-precision ints.
-#: Order-independent (integer sums), range-equivalent to DECIMAL(38,0)
-#: (4 limbs cover |d| < 2^126 ≈ 8.5e37), and bit-identical to the
-#: decimal path's result (equivalence-tested).  Limb-sum overflow is
-#: impossible while bins < 2^29 (top-limb |q0| < 2^33, Σ < 2^62); the
-#: bin count is known from the init aggregate, so wider histograms
-#: fall back to the decimal path instead of silently wrapping.
-#: ``SPARK_GRAFT_EM_DECIMAL=1`` forces the decimal path (A/B lever and
-#: the equivalence test's hook).
-_LIMB_SHIFTS = (93, 62, 31, 0)
-_LIMB_MAX_BINS = 1 << 29
+def _limb_shifts(nbins: int) -> list[int]:
+    """Bit offsets of the int64 limbs ``_em_stats`` splits each
+    quantized term into: the multiples of ``w = 62 − bit_length(nbins)``
+    below 126.  Each limb is < 2^w (the top one covers bits up to 126,
+    the range of the quantized terms) and ``nbins < 2^bit_length``, so a
+    limb's sum over all bins stays below 2^62 and cannot overflow int64
+    at any bin count.  2 M bins gives w = 41, four limbs."""
+    w = 62 - nbins.bit_length()
+    if w < 1:
+        raise ValueError(f"histogram too wide for int64 limb sums: {nbins}")
+    return list(range(0, 126, w))
 
 
-def _em_quantized_terms(resp: DataFrame, names: dict[str, str]) -> DataFrame:
-    """Shared exact quantizer of both sum paths: per-bin term →
-    ``(sg, a)`` with ``a = floor(|term|·1e12 + 0.5)`` and ``sg`` the
-    term's sign — i.e. round-half-up away from zero at 1e-12, the same
-    snap discipline as gmm_parity's ``_snap`` (r13: the previous
-    ``round()`` call routes every value through BigDecimal and
-    measured ~0.27 s/iteration on the 1.73 M-bin fixture; the
-    ``u − u % 1.0`` truncation below is plain double arithmetic and
-    EXACT — IEEE fmod never rounds, and trunc == floor on the
-    non-negative ``u``).  ``a`` stays a DOUBLE column: ``floor()``'s
-    BIGINT return would ANSI-overflow for terms beyond 2^63·1e-12,
-    which in-domain sufficient statistics legitimately exceed.
+def _em_stats(resp: DataFrame, names: dict[str, str], nbins: int) -> dict:
+    """Exact fixed-point sums of the per-bin terms ``names`` (name →
+    SQL expression over ``resp``), in ONE job: name → Python int, the
+    sum of the terms in units of 1e-12.  Integer sums are associative,
+    so the result is identical under ANY partitioning (double sums are
+    order-dependent).
 
-    On ties this is not always the pre-r13 ``round()``: the ``+ 0.5``
-    is itself a rounded double add, so a scaled term whose fraction
-    lies within an ulp of .5 (or any term ≥ 2^52, where the add rounds
-    to even) can land one 1e-12 quantum away from ``round()``'s exact
-    BigDecimal HALF_UP.  Both sum paths share this quantizer, so they
-    stay bit-identical to each other."""
+    Each term is quantized to ``sg · a`` with ``a = floor(|t|·1e12 +
+    0.5)`` — round-half-up away from zero, the snap discipline of
+    gmm_parity's ``_snap``.  ``u − u % 1.0`` is plain double arithmetic
+    and EXACT (IEEE fmod never rounds; trunc == floor on the
+    non-negative ``u``), where ``round()`` routes every value through
+    BigDecimal.  ``a`` stays a DOUBLE: ``floor()``'s BIGINT return would
+    ANSI-overflow for terms beyond 2^63·1e-12, which in-domain
+    sufficient statistics legitimately exceed.  On ties this is not
+    always BigDecimal HALF_UP: the ``+ 0.5`` is itself a rounded double
+    add, so a scaled term whose fraction lies within an ulp of .5 (or
+    any term ≥ 2^52, where the add rounds to even) can land one 1e-12
+    quantum away (ADVICE r13).
+
+    ``a`` (< 2^126) is split into BIGINT limbs at ``_limb_shifts(nbins)``,
+    summed with plain codegen'd long adds, and recombined in Python
+    ints.  A double has 53 significant bits, and floor/mod/divide of a
+    non-negative double by a power of two is exact (the remainder
+    reuses a suffix of the significand).  That is why the split runs on
+    the NON-NEGATIVE ``a`` with the sign applied to each finished limb:
+    a floor-mod of a negative value yields ``2^s − |d|``, which can need
+    up to ``s`` significand bits and silently rounds.  Each limb is
+    computed FLAT from ``a`` (``a % 2^hi / 2^lo``) rather than by
+    chained remainders, which measured 2× slower (every level re-inlines
+    the whole upstream expression tree)."""
+    shifts = _limb_shifts(nbins)
     t = resp.select(
         *[F.expr(expr).alias(f"t_{n}") for n, expr in names.items()]
     )
@@ -225,93 +227,32 @@ def _em_quantized_terms(resp: DataFrame, names: dict[str, str]) -> DataFrame:
             for n in names
         ],
     )
-    return u.select(
+    q = u.select(
         *[F.col(f"sg_{n}") for n in names],
         *[
             F.expr(f"u_{n} - (u_{n} % 1.0)").alias(f"a_{n}")
             for n in names
         ],
     )
-
-
-def _em_stats_decimal(resp: DataFrame, names: dict[str, str]) -> dict:
-    """DECIMAL(38,0) exact fixed-point sums (the pre-r13 form, kept as
-    the wide-histogram fallback and A/B hook): sum the quantized
-    per-bin integers as Decimal128 — associative, so the result is
-    identical under ANY partitioning."""
-    q = _em_quantized_terms(resp, names)
-    aggs = [
-        (
-            F.sum(
-                F.expr(
-                    f"CAST(CAST(sg_{n} AS DOUBLE) * a_{n}"
-                    f" AS DECIMAL(38,0))"
-                )
-            ).cast("double")
-            / F.lit(1e12)
-        ).alias(n)
-        for n in names
-    ]
-    row = q.agg(*aggs).collect()[0]  # ONE job; 3K+2 scalars
-    return {n: float(row[n]) for n in names}
-
-
-def _em_stats_limb(resp: DataFrame, names: dict[str, str]) -> dict:
-    """Four-limb int64 exact sums (see ``_LIMB_SHIFTS`` note): the same
-    quantized per-bin integers as the decimal path, split into four
-    BIGINT limbs, summed with plain codegen'd adds, and recombined
-    exactly driver-side in Python's arbitrary-precision ints.
-
-    The decomposition runs on the NON-NEGATIVE ``a`` with the sign
-    applied to each finished limb: floor/mod of a non-negative double
-    by a power of two is exact (the remainder reuses a suffix of the
-    53 significand bits), whereas a floor-mod of a negative value
-    yields ``2^s − |d|``, which can need up to ``s`` significand bits
-    and silently rounds.  Each limb is computed FLAT from ``a``
-    (``a % 2^hi / 2^lo``) rather than by chained remainders — IEEE
-    fmod is always exact, and the chained form measured 2× slower
-    (every level re-inlines the whole upstream expression tree)."""
-    p93, p62, p31 = repr(2.0**93), repr(2.0**62), repr(2.0**31)
-    q = _em_quantized_terms(resp, names)
+    bounds = list(zip(shifts, shifts[1:] + [None]))
     limbs = q.select(
         *[
-            F.expr(f"sg_{n} * floor(a_{n} / {p93})").alias(f"q0_{n}")
-            for n in names
-        ],
-        *[
             F.expr(
-                f"sg_{n} * floor((a_{n} % {p93}) / {p62})"
-            ).alias(f"q1_{n}")
-            for n in names
-        ],
-        *[
-            F.expr(
-                f"sg_{n} * floor((a_{n} % {p62}) / {p31})"
-            ).alias(f"q2_{n}")
-            for n in names
-        ],
-        *[
-            F.expr(f"sg_{n} * CAST(a_{n} % {p31} AS BIGINT)").alias(
-                f"q3_{n}"
-            )
-            for n in names
-        ],
-    )
-    row = limbs.agg(
-        *[
-            F.sum(f"q{i}_{n}").alias(f"s{i}_{n}")
-            for i in range(4)
+                f"sg_{n} * floor("
+                + (f"a_{n}" if hi is None else f"(a_{n} % {2.0**hi!r})")
+                + f" / {2.0**lo!r})"
+            ).alias(f"q{i}_{n}")
+            for i, (lo, hi) in enumerate(bounds)
             for n in names
         ]
-    ).collect()[0]  # ONE job; 4·(3K+2) int64 scalars
-    out = {}
-    for n in names:
-        total = sum(
-            int(row[f"s{i}_{n}"]) << s
-            for i, s in enumerate(_LIMB_SHIFTS)
-        )
-        out[n] = float(total) / 1e12
-    return out
+    )
+    row = limbs.agg(
+        *[F.sum(c).alias(c) for c in limbs.columns]
+    ).collect()[0]  # ONE job; len(shifts)·(3K+2) int64 scalars
+    return {
+        n: sum(int(row[f"q{i}_{n}"]) << s for i, s in enumerate(shifts))
+        for n in names
+    }
 
 
 def _distributed_em(
@@ -323,10 +264,6 @@ def _distributed_em(
     must already be materialized (``gmm_fit_hist``'s cache, which the
     caller owns and releases): every iteration re-reads it."""
     phi, mu, s2, n, nbins = _init_params_hist(hist, k)
-    use_decimal = (
-        nbins >= _LIMB_MAX_BINS
-        or os.environ.get("SPARK_GRAFT_EM_DECIMAL") == "1"
-    )
 
     lnp_prev = None
     trace: list[float] = []
@@ -357,19 +294,18 @@ def _distributed_em(
             ],
         )
         # Sufficient statistics as exact fixed-point sums (per-bin
-        # term quantized to 1e-12, summed as integers — associative,
-        # hence identical under ANY partitioning; raw double sums
-        # are order-dependent).  The limb form is the fast path
-        # (plain int64 adds); the decimal form is the wide-histogram
-        # fallback and A/B hook (_LIMB_SHIFTS note).
+        # term quantized to 1e-12, summed as int64 limbs whose width
+        # the bin count sets — ``_em_stats``).
         stat_names = {}
         for j in range(k):
             stat_names[f"n{j}"] = f"g{j} * _c"
             stat_names[f"sx{j}"] = f"g{j} * _x * _c"
             stat_names[f"sxx{j}"] = f"g{j} * _x * _x * _c"
         stat_names["lnp"] = "_lnp * _c"
-        stats_fn = _em_stats_decimal if use_decimal else _em_stats_limb
-        vals = stats_fn(resp, stat_names)
+        vals = {
+            name: total / 1e12
+            for name, total in _em_stats(resp, stat_names, nbins).items()
+        }
 
         lnp = vals["lnp"]
         trace.append(lnp)

@@ -96,23 +96,21 @@ def tune(spark: SparkSession) -> SparkSession:
     # AQE sort-merge→shuffled-hash rewrite (guide §3.1; Spark default 0
     # = off): when every post-shuffle partition of the build side is
     # under the threshold, the sort of both sides is skipped.  The
-    # default DERIVES from the session's advisory partition size
+    # threshold DERIVES from the session's advisory partition size
     # (Spark only applies the rewrite when threshold ≥ advisory size,
     # and the advisory size is exactly the "one normal post-AQE
-    # partition" bound that makes the rewritten hash table OOM-safe).
+    # partition" bound that makes the rewritten hash table OOM-safe),
+    # so cluster sizing moves it through the advisory size alone.
     # Evidence: interleaved min-of-3 A/B at sf1 (r13) on the five
     # SMJ-shaped queries — q_join_full −8.8%, q_cdc_merge −10.8%,
     # q_dedup_incremental_near −11.8%, q_pagerank −7.9%,
     # q_sql_tpch_q2 flat (+2%, noise); the sf0.1 A/B was within noise
-    # (r12), the sf1 one is not.  Env-overridable for cluster sizing.
-    shj = os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD")
-    if shj is None:
-        try:
-            shj = spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-            )
-        except Exception:
-            shj = str(64 * 1024 * 1024)
+    # (r12), the sf1 one is not.  A session that cannot report its
+    # advisory size gets Spark's default one, 64 MiB.
+    try:
+        shj = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    except Exception:
+        shj = str(64 * 1024 * 1024)
     _set_conf(
         spark, "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shj
     )

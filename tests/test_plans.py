@@ -117,6 +117,70 @@ def test_gmm_iteration_is_single_shuffle_free_job(spark, sf_dir):
     assert "SinglePartition" in plan
 
 
+def test_em_stats_sums_only_bigint_at_any_width(spark, monkeypatch):
+    """The exact EM sums stay plain int64 adds however wide the
+    histogram: at nbins = 2^40 (21-bit limbs, six of them) the
+    executed aggregate holds only ``sum`` over BIGINT, with no Decimal
+    arithmetic anywhere in the plan."""
+    import re
+
+    from ema_bigdata_spark.gmm import _em_stats
+
+    terms = spark.createDataFrame(
+        [(1.5, -2.25), (-3.0e20, 4.0e-9)], "g DOUBLE, x DOUBLE"
+    )
+    plans = []
+    collect = type(terms).collect
+
+    def collect_and_record(df):
+        rows = collect(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(type(terms), "collect", collect_and_record)
+    _em_stats(terms, {"n": "g", "sx": "g * x"}, 1 << 40)
+
+    (plan,) = plans
+    for bad in ("Decimal", "MakeDecimal", "CheckOverflow"):
+        assert bad not in plan, bad
+    funcs = re.findall(r"functions=\[([^\]]*)\]", plan)
+    assert funcs
+    for fs in funcs:
+        for f in fs.split(", "):
+            assert re.fullmatch(r"(partial_)?sum\(\w+#\d+L\)", f), f
+
+
+def test_limb_layout_covers_126_bits_without_overflow():
+    """For every bin-count bit length the int64 limb layout covers bits
+    0–125, no limb is wider than w = 62 − bit_length(nbins), and a
+    limb summed over nbins bins stays below 2^63."""
+    import hypothesis.strategies as st
+    from hypothesis import given, settings
+
+    from ema_bigdata_spark.gmm import _limb_shifts
+
+    def check(nbins):
+        w = 62 - nbins.bit_length()
+        shifts = _limb_shifts(nbins)
+        bounds = shifts + [126]
+        assert shifts[0] == 0 and shifts == sorted(set(shifts))
+        assert all(0 < hi - lo <= w for lo, hi in zip(bounds, bounds[1:]))
+        assert (1 << w) * nbins < 1 << 63
+
+    for bl in range(1, 62):  # both ends of every bit length
+        check(1 << (bl - 1))
+        check((1 << bl) - 1)
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.integers(1, 61).flatmap(
+        lambda bl: st.integers(1 << (bl - 1), (1 << bl) - 1)
+    ))
+    def check_any(nbins):
+        check(nbins)
+
+    check_any()
+
+
 def test_tpch_q5_broadcasts_dims(spark, sf_dir):
     """The 6-way join must broadcast the tiny dims (region/nation at
     minimum) rather than shuffling every relation."""

@@ -282,40 +282,85 @@ class TestGMM:
             < abs(driver.log_likelihood) * 0.01
         )
 
-    def test_distributed_em_limb_sums_match_decimal(
-        self, spark, monkeypatch
-    ):
-        """The r13 four-limb int64 sufficient-statistic sums must be
-        BIT-IDENTICAL to the DECIMAL(38,0) fixed-point sums they
-        replace: both quantize each per-bin term to the same integer
-        (``round(term·1e12)`` on the same double) and sum it exactly,
-        so every parameter and the whole lnp trace must agree to the
-        last bit — any divergence means the limb extraction lost a
-        bit and the partitioning-independence contract is broken."""
+    @staticmethod
+    def _em_fixture(spark, seed):
+        """Seed 41: two components near the origin (small terms, one
+        limb).  Seed 7: components at −400, 2.5e5 and 9e5, whose
+        Σγ·x²·c terms reach ~1e24 at 1e-12 scale, so several limbs are
+        non-zero and the ``+ 0.5`` add rounds to even."""
         import numpy as np
 
+        rng = np.random.default_rng(seed)
+        if seed == 41:
+            parts = [rng.normal(-3.0, 1.5, 2500), rng.normal(7.0, 0.8, 2500)]
+        else:
+            parts = [
+                rng.normal(-400.0, 20.0, 1500),
+                rng.normal(2.5e5, 500.0, 1500),
+                rng.normal(9e5, 2000.0, 1500),
+            ]
+        xs = np.round(np.concatenate(parts), 2)
+        return spark.createDataFrame([(float(v),) for v in xs], "value DOUBLE")
+
+    def test_em_stats_match_python_int_reference(self, spark):
+        """``_em_stats`` must return, for EVERY limb layout, exactly
+        Σ sign·(u − u % 1.0) with u = |t|·1e12 + 0.5 computed in Python
+        ints over the same doubles: a lost or double-counted bit in
+        any limb, or a split that rounds, changes the integer."""
+        import numpy as np
+
+        from ema_bigdata_spark.gmm import _em_stats
+
+        rng = np.random.default_rng(5)
+        mags = 10.0 ** rng.uniform(-13.0, 25.9, 300)  # up to ~8e25
+        signs = rng.choice([-1.0, 1.0], 300)
+        ties = [m / 8192.0 for m in (1, 3, 5, 12345, -7, -99999)]  # x.5
+        edges = [8.4e25, -8.4e25, 0.0, -0.0]  # 8.4e37 < 2^126
+        col_a = [float(v) for v in mags * signs] + ties + edges
+        col_b = [-v * 0.37 for v in reversed(col_a)]
+        df = spark.createDataFrame(
+            list(zip(col_a, col_b)), "a DOUBLE, b DOUBLE"
+        )
+
+        def ref(ts):
+            total = 0
+            for t in ts:
+                u = abs(t) * 1e12 + 0.5
+                a = int(u - u % 1.0)
+                total += -a if t < 0 else a
+            return total
+
+        want = {"a": ref(col_a), "b": ref(col_b)}
+        assert max(abs(t) for t in col_a) * 1e12 > 2.0**125
+        for nbins in ((1 << 20) + 1, 1 << 29, 1 << 31, 1 << 44, 1 << 52):
+            got = _em_stats(df, {"a": "a", "b": "b"}, nbins)
+            assert got == want, nbins
+
+    @pytest.mark.parametrize("seed", [41, 7])
+    def test_distributed_em_layout_invariant(self, spark, monkeypatch, seed):
+        """A distributed fit with the bin-count-derived limb layout and
+        one forced to the widest tested layout (nbins = 2^52: 9-bit
+        limbs, 14 of them) must agree to the last bit in every
+        parameter and the whole lnp trace."""
         from ema_bigdata_spark import gmm as gmm_mod
 
-        rng = np.random.default_rng(41)
-        xs = np.round(
-            np.concatenate(
-                [rng.normal(-3.0, 1.5, 2500), rng.normal(7.0, 0.8, 2500)]
-            ),
-            2,
-        )
-        df = spark.createDataFrame([(float(v),) for v in xs], "value DOUBLE")
+        df = self._em_fixture(spark, seed)
         monkeypatch.setattr(gmm_mod, "MAX_DRIVER_BINS", 4)
+        natural = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
 
-        monkeypatch.setenv("SPARK_GRAFT_EM_DECIMAL", "1")
-        dec = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
-        monkeypatch.delenv("SPARK_GRAFT_EM_DECIMAL")
-        limb = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
+        em_stats = gmm_mod._em_stats
+        monkeypatch.setattr(
+            gmm_mod,
+            "_em_stats",
+            lambda resp, names, nbins: em_stats(resp, names, 1 << 52),
+        )
+        wide = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
 
-        assert dec.weights == limb.weights
-        assert dec.means == limb.means
-        assert dec.variances == limb.variances
-        assert dec.lnp_trace == limb.lnp_trace
-        assert dec.log_likelihood == limb.log_likelihood
+        assert natural.weights == wide.weights
+        assert natural.means == wide.means
+        assert natural.variances == wide.variances
+        assert natural.lnp_trace == wide.lnp_trace
+        assert natural.log_likelihood == wide.log_likelihood
 
     def test_matches_sparkml_loglik(self, spark, sf_dir):
         """Converged average log-likelihood within tolerance of

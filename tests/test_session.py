@@ -1,10 +1,14 @@
 """Session hygiene on a driver-owned session: a conf the session rejects
 must be recorded and logged, never passed over silently, and a bad
-per-query setting must leave the session's confs as they were."""
+per-query setting must leave the session's confs as they were.  Also
+the inventory of ``SPARK_GRAFT_*`` environment knobs the engine reads."""
 
 from __future__ import annotations
 
+import glob
 import logging
+import os
+import re
 
 import pytest
 
@@ -51,3 +55,46 @@ def test_stream_context_bad_nodata_leaves_session_untouched(spark, monkeypatch):
     with _state_partitions(spark, 3):
         assert [spark.conf.get(k) for k in keys] == ["3", "true"]
     assert [spark.conf.get(k) for k in keys] == before
+
+
+def test_tune_derives_shj_threshold_from_advisory_size(spark):
+    from ema_bigdata_spark import session
+
+    adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    shj = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
+    before = {k: spark.conf.get(k) for k in (adv, shj)}
+    try:
+        spark.conf.set(adv, "48m")
+        session.tune(spark)
+        assert spark.conf.get(shj) == "48m"
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+
+
+#: every ``SPARK_GRAFT_*`` environment variable the engine reads, with
+#: the reason it is a knob rather than a derived value.  A new knob
+#: must be added here, so it shows up in review.
+ENV_KNOBS = {
+    "SPARK_GRAFT_CPUS": "deployment: local[N] core count",
+    "SPARK_GRAFT_DRIVER_MEM": "deployment: driver heap of a built session",
+    "SPARK_GRAFT_STREAM_PARTITIONS": "deployment: streaming state partitions",
+    "SPARK_GRAFT_STREAM_SOURCE": "deployment: file or Kafka stream source",
+    "SPARK_GRAFT_KAFKA_BOOTSTRAP": "deployment: Kafka brokers",
+    "SPARK_GRAFT_KAFKA_TOPIC_": "deployment: per-table Kafka topic prefix",
+    "SPARK_GRAFT_STREAM_NODATA_BATCHES": (
+        "A/B lever pending the ROADMAP stream-settle item"
+    ),
+}
+
+
+def test_env_knob_inventory():
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "ema_bigdata_spark",
+    )
+    found = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            found.update(re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read()))
+    assert found == set(ENV_KNOBS)
