@@ -41,14 +41,13 @@ full data passes per iteration — SURVEY §3.3).  Textbook math
 
 from __future__ import annotations
 
-import itertools
 import math
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ema_bigdata_spark.functions import xmath as X
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import load_table
+from ema_bigdata_spark.sources.tables import sql_on_tables
 
 #: sufficient-statistic snap scales.  BIGINT overflow headroom at
 #: |x| ≤ 1e3: n·1e9 < 2⁶³ to ~9e9 rows, Σgxc·1e6 to ~9e9 rows,
@@ -175,7 +174,7 @@ def iter_ctes(dialect: str, src: str, P: dict[str, str], k: int,
     # Param texts are either plain column refs (oracle: the
     # cross-joined 1-row params CTE — these must be CARRIED through
     # the stage chain) or folded literal expressions (Spark — nothing
-    # to carry; see parity_em_spark's docstring for the measured
+    # to carry; see parity_em_spark_multi's docstring for the measured
     # literal-vs-view decision).
     pnames = sorted({v for v in P.values() if v.isidentifier()})
     pfwd = (", " + ", ".join(pnames)) if pnames else ""
@@ -405,208 +404,116 @@ def _with(ctes: list[tuple[str, str]], final_sql: str,
     return f"WITH {body} {final_sql}"
 
 
-#: monotonic suffix for per-call temp-view names (r8, ADVICE): fixed
-#: session-global names ('v_gmm_hist', 'v_em_prev') would let two
-#: concurrent fits in one SparkSession — or a user view of the same
-#: name — silently clobber each other.  A counter (not uuid) keeps the
-#: names deterministic for plan-text comparisons across runs;
-#: ``itertools.count`` because ``next()`` on it is atomic under the
-#: GIL, so concurrent fits on separate THREADS of one session can't
-#: race the increment either (a bare ``global n; n += 1`` can).
-_VIEW_SEQ = itertools.count(1)
+def prepare_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Materialize the (value, count) histogram once and return it.
+    No hand-set width: the histogram is domain-bounded (~60 k bins for
+    2-decimal data regardless of row count — gmm.py module docstring),
+    and ``localCheckpoint`` runs the aggregate through AQE, which
+    coalesces its shuffle partitions to the data — one partition (one
+    task per iteration job) for a narrow domain, as many as the
+    advisory partition size asks for a wide one."""
+    return sql_on_tables(spark, sf_dir, hist_sql("{events}")).localCheckpoint()
 
 
-def _fresh_view(stem: str) -> str:
-    return f"{stem}_{next(_VIEW_SEQ)}"
+class _Fit:
+    """One fit's window over a lockstep row's ``k{K}_``-prefixed columns."""
 
+    def __init__(self, row, k):
+        self._row, self._k = row, k
 
-def prepare_hist(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the (value, count) histogram once and return its
-    temp-view name.  No hand-set width: the histogram is
-    domain-bounded (~60 k bins for 2-decimal data regardless of row
-    count — gmm.py module docstring), and ``localCheckpoint`` runs the
-    aggregate through AQE, which coalesces its shuffle partitions to
-    the data — one partition (one task per iteration job) for a narrow
-    domain, as many as the advisory partition size asks for a wide
-    one."""
-    ev = load_table(spark, sf_dir, "events")
-    ev_view = _fresh_view("v_gmm_events")
-    ev.createOrReplaceTempView(ev_view)
-    try:
-        # localCheckpoint is EAGER: the histogram is materialized
-        # here, so the events view has served its purpose
-        hist = spark.sql(hist_sql(ev_view)).localCheckpoint()
-    finally:
-        # drop immediately (ADVICE r8): per-call names otherwise
-        # accumulate in the session catalog for its whole lifetime
-        spark.catalog.dropTempView(ev_view)
-    hist_view = _fresh_view("v_gmm_hist")
-    hist.createOrReplaceTempView(hist_view)
-    return hist_view
+    def __getitem__(self, name):
+        return self._row[f"k{self._k}_{name}"]
 
 
 def parity_em_spark(spark: SparkSession, sf_dir: str, k: int, iters: int,
-                    want_lnl: bool = False, hist_view: str | None = None):
-    """Run the bit-exact EM on Spark: one histogram scan, then ONE
-    statement per iteration (SURVEY §4.3), params folded driver-side
-    with the Python mirrors between statements (``update_fold`` is the
-    op-for-op mirror of the oracle's ``update_ctes`` — same IEEE ops
-    on the same doubles).  Returns ``(nd, P, lnl)``.
-
-    Params fold as literals — measured against the alternative (1-row
-    params temp view cross-joined for constant statement text): the
-    view costs a createDataFrame round-trip + a broadcast join per
-    iteration and times WORSE (9 s vs 5.5 s for the 15-iteration fit
-    at sf0.1).  A chunked variant (several iterations unrolled per
-    action, the update running as Spark-side ``update_ctes`` SQL) was
-    built in r7 to amortize the ~0.3 s/statement analyze+JIT fixed
-    cost and REMOVED in r9 after staying dormant at chunk=1: Catalyst
-    optimizer cost grows superlinearly with merged tree depth and the
-    chunk always lost (measured at sf0.1, 15-iteration fit: 4.2 s
-    per-iteration vs 5.7/7.5/28.6 s at chunk 3/5/15 — ROUND8_NOTES §9,
-    decision recorded per VERDICT r8 item 8).  Horizontal merging
-    (q_gmm_bic's across-K lockstep) keeps tree depth constant and
-    stays.
-
-    If ``hist_view`` is None the histogram view is created AND dropped
-    here (ADVICE r8: per-call view names must not accumulate in the
-    session catalog); pass an explicit view to share one histogram
-    across fits — then the caller owns the drop."""
-    own_view = hist_view is None
-    if own_view:
-        hist_view = prepare_hist(spark, sf_dir)
-    try:
-        ctes, fin = init_ctes(hist_view, k, "ini")
-        row = spark.sql(_with(ctes, f"SELECT * FROM {fin}")).collect()[0]
-        _require_nonempty(row["n"])
-        nd, P = init_fold(row, k)
-
-        for _ in range(iters):
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            ic, sfin = iter_ctes("spark", hist_view, pt, k, "it", "fit")
-            srow = spark.sql(
-                _with(ic, f"SELECT * FROM {sfin}")
-            ).collect()[0]
-            P = update_fold(srow, nd, k)
-
-        lnl = None
-        if want_lnl:
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            for j in range(1, k + 1):
-                pt[f"lnc{j}"] = X.dlit_exact(X.xln(P[f"nrm{j}"]))
-            ctes, fin = iter_ctes("spark", hist_view, pt, k, "ll", "lnl")
-            lrow = spark.sql(
-                _with(ctes, f"SELECT * FROM {fin}")
-            ).collect()[0]
-            lnl = float(lrow["lnlu"]) / _LNL_SCF
-        return nd, P, lnl
-    finally:
-        if own_view:
-            spark.catalog.dropTempView(hist_view)
+                    want_lnl: bool = False, hist: DataFrame | None = None):
+    """One fit of :func:`parity_em_spark_multi`; returns ``(nd, P, lnl)``."""
+    return parity_em_spark_multi(spark, sf_dir, (k,), iters, want_lnl, hist)[k]
 
 
 def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
                           ks: tuple[int, ...], iters: int,
                           want_lnl: bool = False,
-                          hist_view: str | None = None):
-    """LOCKSTEP variant of :func:`parity_em_spark` for several
-    independent K values over ONE shared histogram: every iteration
-    issues a SINGLE statement computing all fits' sufficient-statistic
-    sums (per-fit CTE chains cross-joined at the end, columns prefixed
-    k{K}_), cutting the per-statement fixed cost (~0.35 s of
-    analyze+JIT+schedule) from ``len(ks)``× to 1× per iteration —
-    measured 5.1 → ~2.6 s for q_gmm_bic at sf0.1.  Arithmetic is
-    untouched: each fit's expressions are the same text as the
-    single-K path, so results are bit-identical to running the fits
-    separately (asserted by TestParityEMInvariants).  Returns
-    ``{k: (nd, P, lnl)}``.  View ownership as in
-    :func:`parity_em_spark`: a self-created histogram view is dropped
-    on exit."""
-    own_view = hist_view is None
-    if own_view:
-        hist_view = prepare_hist(spark, sf_dir)
-    try:
-        return _parity_em_multi_body(spark, hist_view, ks, iters, want_lnl)
-    finally:
-        if own_view:
-            spark.catalog.dropTempView(hist_view)
+                          hist: DataFrame | None = None):
+    """Run the bit-exact EM on Spark for one or more independent K values
+    in lockstep over ONE histogram (``hist``, or a fresh
+    :func:`prepare_hist`): one statement for all inits, then ONE
+    statement per iteration (SURVEY §4.3) computing every fit's
+    sufficient-statistic sums — per-fit CTE chains cross-joined at the
+    end, columns prefixed ``k{K}_``.  Params fold driver-side with the
+    Python mirrors between statements (``update_fold`` is the op-for-op
+    mirror of the oracle's ``update_ctes`` — same IEEE ops on the same
+    doubles).  Returns ``{k: (nd, P, lnl)}``.
 
+    The histogram is bound into each statement as ``{hist}`` through
+    ``spark.sql`` keyword arguments, so no view outlives a statement.
+    Each fit's expressions are the same text whatever else runs beside
+    it, so a lockstep run is bit-identical to separate one-K runs
+    (asserted by TestParityEMInvariants); merging K values only cuts
+    the per-statement fixed cost (~0.35 s of analyze+JIT+schedule) from
+    ``len(ks)``× to 1× per iteration — 5.1 → ~2.6 s for q_gmm_bic at
+    sf0.1.  Merging keeps tree depth constant; unrolling several
+    iterations into one statement does not, and Catalyst optimizer cost
+    grows superlinearly with depth (sf0.1, 15-iteration fit: 4.2 s
+    per-iteration vs 5.7/7.5/28.6 s at 3/5/15 iterations per statement —
+    ROUND8_NOTES §9).
 
-def _parity_em_multi_body(spark, hist_view, ks, iters, want_lnl):
+    Params fold as literals: a 1-row params view cross-joined for a
+    constant statement text costs a createDataFrame round-trip plus a
+    broadcast join per iteration and times worse (9 s vs 5.5 s for the
+    15-iteration fit at sf0.1)."""
+    if hist is None:
+        hist = prepare_hist(spark, sf_dir)
+
+    def collect(ctes, parts):
+        q = _with(ctes, "SELECT * FROM " + " CROSS JOIN ".join(parts))
+        return spark.sql(q, hist=hist).collect()[0]
+
+    def prefixed(cols, k, fin):
+        return (f"(SELECT {', '.join(f'{c} AS k{k}_{c}' for c in cols)}"
+                f" FROM {fin}) t{k}")
+
     # one statement for ALL inits (cum/tot shared across k)
     ctes: list[tuple[str, str]] = []
-    sels = []
+    parts = []
     for i, k in enumerate(ks):
         shared = f"i{ks[0]}" if i > 0 else None
-        ic, fin = init_ctes(hist_view, k, f"i{k}", shared=shared)
+        ic, fin = init_ctes("{hist}", k, f"i{k}", shared=shared)
         ctes += ic
-        sels.append((k, fin))
-    final = " CROSS JOIN ".join(
-        f"(SELECT {', '.join(f'{c} AS k{k}_{c}' for c in ['nd', 'n'] + [f'mu0_{j}' for j in range(1, k + 1)] + ['s20'])}"
-        f" FROM {fin}) t{k}"
-        for k, fin in sels
-    )
-    row = spark.sql(_with(ctes, f"SELECT * FROM {final}")).collect()[0]
+        cols = ["nd", "n"] + [f"mu0_{j}" for j in range(1, k + 1)] + ["s20"]
+        parts.append(prefixed(cols, k, fin))
+    row = collect(ctes, parts)
     _require_nonempty(row[f"k{ks[0]}_n"])
-
-    class _View:
-        """Per-k window over the prefixed combined row."""
-
-        def __init__(self, row, k):
-            self._row, self._k = row, k
-
-        def __getitem__(self, name):
-            return self._row[f"k{self._k}_{name}"]
-
-    state = {}
-    for k in ks:
-        nd, P = init_fold(_View(row, k), k)
-        state[k] = (nd, P)
+    state = {k: init_fold(_Fit(row, k), k) for k in ks}
 
     for _ in range(iters):
-        ctes = []
-        parts = []
+        ctes, parts = [], []
         for k in ks:
-            _, P = state[k]
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            ic, fin = iter_ctes("spark", hist_view, pt, k, f"m{k}", "fit")
+            pt = {key: X.dlit_exact(val) for key, val in state[k][1].items()}
+            ic, fin = iter_ctes("spark", "{hist}", pt, k, f"m{k}", "fit")
             ctes += ic
             cols = [f"{a}{j}u" for j in range(1, k + 1)
                     for a in ("n", "sx", "sxx")]
-            parts.append(
-                f"(SELECT {', '.join(f'{c} AS k{k}_{c}' for c in cols)}"
-                f" FROM {fin}) t{k}"
-            )
-        q = _with(ctes, "SELECT * FROM " + " CROSS JOIN ".join(parts))
-        row = spark.sql(q).collect()[0]
+            parts.append(prefixed(cols, k, fin))
+        row = collect(ctes, parts)
         for k in ks:
-            nd, _ = state[k]
-            state[k] = (nd, update_fold(_View(row, k), nd, k))
+            nd = state[k][0]
+            state[k] = (nd, update_fold(_Fit(row, k), nd, k))
 
-    out = {}
-    if want_lnl:
-        ctes = []
-        parts = []
-        for k in ks:
-            _, P = state[k]
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            for j in range(1, k + 1):
-                pt[f"lnc{j}"] = X.dlit_exact(X.xln(P[f"nrm{j}"]))
-            ic, fin = iter_ctes("spark", hist_view, pt, k, f"l{k}", "lnl")
-            ctes += ic
-            parts.append(
-                f"(SELECT lnlu AS k{k}_lnlu FROM {fin}) t{k}"
-            )
-        q = _with(ctes, "SELECT * FROM " + " CROSS JOIN ".join(parts))
-        row = spark.sql(q).collect()[0]
-        for k in ks:
-            nd, P = state[k]
-            out[k] = (nd, P, float(row[f"k{k}_lnlu"]) / _LNL_SCF)
-    else:
-        for k in ks:
-            nd, P = state[k]
-            out[k] = (nd, P, None)
-    return out
+    if not want_lnl:
+        return {k: (nd, P, None) for k, (nd, P) in state.items()}
+    ctes, parts = [], []
+    for k in ks:
+        P = state[k][1]
+        pt = {key: X.dlit_exact(val) for key, val in P.items()}
+        for j in range(1, k + 1):
+            pt[f"lnc{j}"] = X.dlit_exact(X.xln(P[f"nrm{j}"]))
+        ic, fin = iter_ctes("spark", "{hist}", pt, k, f"l{k}", "lnl")
+        ctes += ic
+        parts.append(prefixed(["lnlu"], k, fin))
+    row = collect(ctes, parts)
+    return {k: (nd, P, float(row[f"k{k}_lnlu"]) / _LNL_SCF)
+            for k, (nd, P) in state.items()}
 
 
 # ---- DuckDB oracle builders ---------------------------------------------

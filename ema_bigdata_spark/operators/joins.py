@@ -25,7 +25,11 @@ from ema_bigdata_spark.functions.parity import (
     sum_fixed,
 )
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import load_table
+from ema_bigdata_spark.sources.tables import (
+    load_table,
+    plain_sql,
+    sql_on_tables,
+)
 
 
 # -- q_join_inner: orders ⋈ customer, aggregate by segment ----------------
@@ -257,50 +261,37 @@ def q_join_cross(spark, sf_dir):
 # -- q_sql_exists: correlated EXISTS via the SQL entry path ---------------
 
 
-@query(
-    "q_sql_exists",
-    oracle="""
+_EXISTS_BODY = """
     SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-    FROM orders
+    FROM {orders}
     WHERE EXISTS (
-      SELECT 1 FROM lineitem
+      SELECT 1 FROM {lineitem}
       WHERE l_orderkey = o_orderkey
         AND l_shipdate > o_orderdate + INTERVAL 60 DAY
     )
     GROUP BY o_orderpriority
-    """,
-)
+"""
+
+
+@query("q_sql_exists", oracle=plain_sql(_EXISTS_BODY))
 def q_sql_exists(spark, sf_dir):
     """TPC-H Q4 shape through ``spark.sql`` — the engine's SQL front
     door.  Catalyst rewrites the correlated EXISTS into a left-semi
     join (same physical plan as q_join_semi's DataFrame form)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        FROM v_orders
-        WHERE EXISTS (
-          SELECT 1 FROM v_lineitem
-          WHERE l_orderkey = o_orderkey
-        AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        )
-        GROUP BY o_orderpriority
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _EXISTS_BODY)
 
 
 # -- q_sql_scalar_subquery: uncorrelated scalar subquery ------------------
 
 
-@query(
-    "q_sql_scalar_subquery",
-    oracle="""
+_SCALAR_SUBQUERY_BODY = """
     SELECT o_orderkey, o_totalprice
-    FROM orders
-    WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)
-    """,
-)
+    FROM {orders}
+    WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM {orders})
+"""
+
+
+@query("q_sql_scalar_subquery", oracle=plain_sql(_SCALAR_SUBQUERY_BODY))
 def q_sql_scalar_subquery(spark, sf_dir):
     """Scalar subquery via ``spark.sql``: the inner aggregate runs once
     and is broadcast into the filter (a subquery-reuse exchange, not a
@@ -308,14 +299,7 @@ def q_sql_scalar_subquery(spark, sf_dir):
     (380 rows at sf0.001, ~2.5%% of orders at sf0.01/0.1 — 3× matched
     nothing) while the nearest o_totalprice sits O(100) away from the
     boundary, so the order-dependent double `avg` can't flip a row."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM v_orders
-        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM v_orders)
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _SCALAR_SUBQUERY_BODY)
 
 
 # -- salted_join: explicit skew mitigation (library API, not a query) -----
@@ -491,15 +475,13 @@ def q_join_asof(spark, sf_dir):
 # -- q_sql_tpch_q3: shipping-priority (3-table join + agg + top-k) --------
 
 
-@query(
-    "q_sql_tpch_q3",
-    oracle="""
+_Q3_BODY = """
     SELECT l_orderkey,
            (CAST(sum(TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
                  * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)))
              AS DOUBLE) / CAST(10000 AS DOUBLE)) AS revenue,
            o_orderdate, o_orderpriority
-    FROM customer, orders, lineitem
+    FROM {customer}, {orders}, {lineitem}
     WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
       AND l_orderkey = o_orderkey
       AND o_orderdate < TIMESTAMP '1995-03-15'
@@ -507,45 +489,27 @@ def q_join_asof(spark, sf_dir):
     GROUP BY l_orderkey, o_orderdate, o_orderpriority
     ORDER BY revenue DESC, o_orderdate, l_orderkey
     LIMIT 10
-    """,
-)
+"""
+
+
+@query("q_sql_tpch_q3", oracle=plain_sql(_Q3_BODY))
 def q_sql_tpch_q3(spark, sf_dir):
     """TPC-H Q3 shape through ``spark.sql``: selective dim filter →
     two hash joins (customer side broadcasts under AQE) → fixed-point
     revenue aggregate → TakeOrdered top-10.  Ties broken by
     (o_orderdate, l_orderkey) so the LIMIT is deterministic."""
-    for t in ("customer", "orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        """
-        SELECT l_orderkey,
-               (CAST(sum(TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
-                     * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)))
-                 AS DOUBLE) / CAST(10000 AS DOUBLE)) AS revenue,
-               o_orderdate, o_orderpriority
-        FROM v_customer, v_orders, v_lineitem
-        WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-          AND l_orderkey = o_orderkey
-          AND o_orderdate < TIMESTAMP '1995-03-15'
-          AND l_shipdate  > TIMESTAMP '1995-03-15'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        ORDER BY revenue DESC, o_orderdate, l_orderkey
-        LIMIT 10
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _Q3_BODY)
 
 
 # -- q_sql_tpch_q5: local-supplier volume (6-way join) --------------------
 
 
-@query(
-    "q_sql_tpch_q5",
-    oracle="""
+_Q5_BODY = """
     SELECT n_name,
            (CAST(sum(TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
                  * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)))
              AS DOUBLE) / CAST(10000 AS DOUBLE)) AS revenue
-    FROM customer, orders, lineitem, supplier, nation, region
+    FROM {customer}, {orders}, {lineitem}, {supplier}, {nation}, {region}
     WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
       AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
       AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
@@ -553,33 +517,16 @@ def q_sql_tpch_q3(spark, sf_dir):
       AND o_orderdate >= TIMESTAMP '1994-01-01'
       AND o_orderdate <  TIMESTAMP '1996-01-01'
     GROUP BY n_name
-    """,
-)
+"""
+
+
+@query("q_sql_tpch_q5", oracle=plain_sql(_Q5_BODY))
 def q_sql_tpch_q5(spark, sf_dir):
     """TPC-H Q5 shape: a 6-relation join tree that exercises Catalyst's
     join reordering — the selective region filter prunes nation, which
     prunes supplier/customer, before the fact tables join.  region and
     nation broadcast; AQE picks strategies for the rest at runtime."""
-    for t in ("customer", "orders", "lineitem", "supplier", "nation",
-              "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(
-        """
-        SELECT n_name,
-               (CAST(sum(TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
-                     * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)))
-                 AS DOUBLE) / CAST(10000 AS DOUBLE)) AS revenue
-        FROM v_customer, v_orders, v_lineitem, v_supplier, v_nation,
-             v_region
-        WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-          AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-          AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-          AND r_name = 'ASIA'
-          AND o_orderdate >= TIMESTAMP '1994-01-01'
-          AND o_orderdate <  TIMESTAMP '1996-01-01'
-        GROUP BY n_name
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _Q5_BODY)
 
 
 # -- q_sql_tpch_q10: returned-item revenue loss (4-way join + top-k) ------
@@ -590,7 +537,7 @@ _Q10_BODY = """
                  * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)))
              AS DOUBLE) / CAST(10000 AS DOUBLE)) AS revenue,
            round(c_acctbal, 2) AS c_acctbal, n_name
-    FROM {c}customer, {c}orders, {c}lineitem, {c}nation
+    FROM {customer}, {orders}, {lineitem}, {nation}
     WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
       AND o_orderdate >= TIMESTAMP '1993-10-01'
       AND o_orderdate <  TIMESTAMP '1994-01-01'
@@ -602,7 +549,7 @@ _Q10_BODY = """
 """
 
 
-@query("q_sql_tpch_q10", oracle=_Q10_BODY.format(c=""))
+@query("q_sql_tpch_q10", oracle=plain_sql(_Q10_BODY))
 def q_sql_tpch_q10(spark, sf_dir):
     """TPC-H Q10 shape (top returned-revenue customers): selective
     quarter + returnflag filters push to both fact scans, nation
@@ -610,10 +557,8 @@ def q_sql_tpch_q10(spark, sf_dir):
     and the top-20 is a TakeOrdered over the aggregate.  Fixed-point
     revenue sums; ties broken by c_custkey so the LIMIT is
     deterministic.  The identical SQL text runs on both engines
-    (`_Q10_BODY`) — view-prefix substitution only."""
-    for t in ("customer", "orders", "lineitem", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q10_BODY.format(c="v_"))
+    (`_Q10_BODY`); only the table bindings differ."""
+    return sql_on_tables(spark, sf_dir, _Q10_BODY)
 
 
 # -- q_sql_tpch_q6: forecasting revenue change (pure scan-agg) ------------
@@ -623,7 +568,7 @@ _Q6_BODY = """
                  * TRY_CAST(round(l_discount * 100) AS BIGINT)) AS DOUBLE)
              / CAST(10000 AS DOUBLE)) AS revenue,
            CAST(count(*) AS BIGINT) AS n_lines
-    FROM {c}lineitem
+    FROM {lineitem}
     WHERE l_shipdate >= TIMESTAMP '1995-01-01'
       AND l_shipdate <  TIMESTAMP '1996-01-01'
       AND l_discount BETWEEN 0.045 AND 0.075
@@ -631,7 +576,7 @@ _Q6_BODY = """
 """
 
 
-@query("q_sql_tpch_q6", oracle=_Q6_BODY.format(c=""))
+@query("q_sql_tpch_q6", oracle=plain_sql(_Q6_BODY))
 def q_sql_tpch_q6(spark, sf_dir):
     """TPC-H Q6 shape (forecasting revenue change): the canonical
     pure scan-aggregate — every predicate (ship-year, discount band,
@@ -644,10 +589,7 @@ def q_sql_tpch_q6(spark, sf_dir):
     descaled once (`/10⁴`), so the result is partition-order-stable.
     The identical SQL text runs on both engines (`_Q6_BODY`).
     Driver-mandated surface (SURVEY §2.4); no Main.scala counterpart."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "v_lineitem"
-    )
-    return spark.sql(_Q6_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q6_BODY)
 
 
 # -- q_sql_tpch_q18: large-volume customers (HAVING subquery + 3-way) -----
@@ -657,9 +599,9 @@ _Q18_BODY = """
            round(o_totalprice, 2) AS o_totalprice,
            CAST(sum(TRY_CAST(round(l_quantity) AS BIGINT)) AS BIGINT)
                AS sum_qty
-    FROM {c}customer, {c}orders, {c}lineitem
+    FROM {customer}, {orders}, {lineitem}
     WHERE o_orderkey IN (
-            SELECT l_orderkey FROM {c}lineitem
+            SELECT l_orderkey FROM {lineitem}
             GROUP BY l_orderkey
             HAVING sum(TRY_CAST(round(l_quantity) AS BIGINT)) > 250)
       AND c_custkey = o_custkey AND o_orderkey = l_orderkey
@@ -670,7 +612,7 @@ _Q18_BODY = """
 """
 
 
-@query("q_sql_tpch_q18", oracle=_Q18_BODY.format(c=""))
+@query("q_sql_tpch_q18", oracle=plain_sql(_Q18_BODY))
 def q_sql_tpch_q18(spark, sf_dir):
     """TPC-H Q18 shape (large-volume customers): the aggregated IN
     subquery is Catalyst-rewritten to a left-semi join against the
@@ -684,9 +626,7 @@ def q_sql_tpch_q18(spark, sf_dir):
     truncate-vs-round divergence).  Top-100 is a TakeOrdered with
     unique o_orderkey tie-break.  Identical SQL text on both engines
     (`_Q18_BODY`).  Driver-mandated surface (SURVEY §2.4)."""
-    for t in ("customer", "orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q18_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q18_BODY)
 
 
 # -- q_sql_tpch_q14: promotion revenue share (conditional aggregate) ------
@@ -702,14 +642,14 @@ _Q14_BODY = """
         SELECT TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
                * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)) AS rev,
                p_type
-        FROM {c}lineitem, {c}part
+        FROM {lineitem}, {part}
         WHERE l_partkey = p_partkey
           AND l_shipdate >= TIMESTAMP '1995-09-01'
           AND l_shipdate <  TIMESTAMP '1995-10-01'))
 """
 
 
-@query("q_sql_tpch_q14", oracle=_Q14_BODY.format(c=""))
+@query("q_sql_tpch_q14", oracle=plain_sql(_Q14_BODY))
 def q_sql_tpch_q14(spark, sf_dir):
     """TPC-H Q14 shape (promotion revenue share): the one-month filter
     pushes to the lineitem scan, part broadcasts (AQE converts on the
@@ -719,9 +659,7 @@ def q_sql_tpch_q14(spark, sf_dir):
     double division over identical integers on both engines.
     Identical SQL text (`_Q14_BODY`).  Driver-mandated surface
     (SURVEY §2.4)."""
-    for t in ("lineitem", "part"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q14_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q14_BODY)
 
 
 # -- q_sql_tpch_q17: small-quantity-order revenue (correlated agg) --------
@@ -731,15 +669,15 @@ _Q17_BODY = """
                  AS DOUBLE) / CAST(100 AS DOUBLE) / CAST(7.0 AS DOUBLE),
                  2) AS avg_yearly,
            CAST(count(*) AS BIGINT) AS n_lines
-    FROM {c}lineitem l, {c}part p
+    FROM {lineitem} l, {part} p
     WHERE p.p_partkey = l.l_partkey AND p.p_brand = 'Brand#9'
       AND l.l_quantity < (SELECT 0.5 * avg(l2.l_quantity)
-                          FROM {c}lineitem l2
+                          FROM {lineitem} l2
                           WHERE l2.l_partkey = l.l_partkey)
 """
 
 
-@query("q_sql_tpch_q17", oracle=_Q17_BODY.format(c=""))
+@query("q_sql_tpch_q17", oracle=plain_sql(_Q17_BODY))
 def q_sql_tpch_q17(spark, sf_dir):
     """TPC-H Q17 shape (small-quantity-order revenue): the correlated
     AGGREGATE subquery — each lineitem compares against its own part's
@@ -751,9 +689,7 @@ def q_sql_tpch_q17(spark, sf_dir):
     exact integer sums identically on both engines; revenue is exact
     cents descaled once.  Identical SQL text (`_Q17_BODY`).
     Driver-mandated surface (SURVEY §2.4)."""
-    for t in ("lineitem", "part"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q17_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q17_BODY)
 
 
 # -- q_join_salted: skew-safe equi join as declared surface ---------------
@@ -816,8 +752,8 @@ _Q7_BODY = """
              CAST(EXTRACT(YEAR FROM l_shipdate) AS BIGINT) AS l_year,
              TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
                * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)) AS rev
-      FROM {c}supplier, {c}lineitem, {c}orders, {c}customer,
-           {c}nation n1, {c}nation n2
+      FROM {supplier}, {lineitem}, {orders}, {customer},
+           {nation} n1, {nation} n2
       WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
         AND c_custkey = o_custkey
         AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
@@ -830,7 +766,7 @@ _Q7_BODY = """
 """
 
 
-@query("q_sql_tpch_q7", oracle=_Q7_BODY.format(c=""))
+@query("q_sql_tpch_q7", oracle=plain_sql(_Q7_BODY))
 def q_sql_tpch_q7(spark, sf_dir):
     """TPC-H Q7 shape (volume shipping): nation appears TWICE in the
     join graph (supplier side and customer side), and the disjunctive
@@ -844,9 +780,7 @@ def q_sql_tpch_q7(spark, sf_dir):
     DuckDB).  Identical SQL text on both engines (`_Q7_BODY`).
     Driver-mandated surface (SURVEY §2.4); no Main.scala
     counterpart."""
-    for t in ("supplier", "lineitem", "orders", "customer", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q7_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q7_BODY)
 
 
 # -- q_sql_tpch_q8: national market share ---------------------------------
@@ -862,8 +796,8 @@ _Q8_BODY = """
              TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
                * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)) AS rev,
              n2.n_name AS nation
-      FROM {c}part, {c}supplier, {c}lineitem, {c}orders, {c}customer,
-           {c}nation n1, {c}nation n2, {c}region
+      FROM {part}, {supplier}, {lineitem}, {orders}, {customer},
+           {nation} n1, {nation} n2, {region}
       WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
         AND l_orderkey = o_orderkey AND o_custkey = c_custkey
         AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
@@ -876,7 +810,7 @@ _Q8_BODY = """
 """
 
 
-@query("q_sql_tpch_q8", oracle=_Q8_BODY.format(c=""))
+@query("q_sql_tpch_q8", oracle=plain_sql(_Q8_BODY))
 def q_sql_tpch_q8(spark, sf_dir):
     """TPC-H Q8 shape (national market share): the widest join graph
     in the suite — 8 relations, nation twice (customer's region
@@ -888,10 +822,7 @@ def q_sql_tpch_q8(spark, sf_dir):
     so the final double division is bit-identical across engines.
     Identical SQL text on both engines (`_Q8_BODY`).  Driver-mandated
     surface (SURVEY §2.4)."""
-    for t in ("part", "supplier", "lineitem", "orders", "customer",
-              "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q8_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q8_BODY)
 
 
 # -- q_sql_tpch_q13: customer order-count distribution --------------------
@@ -901,7 +832,7 @@ _Q13_BODY = """
     FROM (
       SELECT c_custkey,
              CAST(count(o_orderkey) AS BIGINT) AS c_count
-      FROM {c}customer LEFT JOIN {c}orders
+      FROM {customer} LEFT JOIN {orders}
         ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
       GROUP BY c_custkey
     ) c_orders
@@ -909,7 +840,7 @@ _Q13_BODY = """
 """
 
 
-@query("q_sql_tpch_q13", oracle=_Q13_BODY.format(c=""))
+@query("q_sql_tpch_q13", oracle=plain_sql(_Q13_BODY))
 def q_sql_tpch_q13(spark, sf_dir):
     """TPC-H Q13 shape (customer order-count distribution): an OUTER
     join with an extra non-equi conjunct (the priority exclusion rides
@@ -923,9 +854,7 @@ def q_sql_tpch_q13(spark, sf_dir):
     o_orderpriority (TESTDATA.md has no comment columns).  Identical
     SQL text on both engines (`_Q13_BODY`).  Driver-mandated surface
     (SURVEY §2.4)."""
-    for t in ("customer", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q13_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q13_BODY)
 
 
 # -- q_sql_tpch_q15: top supplier by quarterly revenue --------------------
@@ -936,21 +865,21 @@ _Q15_BODY = """
              sum(TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
                  * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)))
                  AS total_rev_u
-      FROM {c}lineitem
+      FROM {lineitem}
       WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         AND l_shipdate <  TIMESTAMP '1996-04-01'
       GROUP BY l_suppkey)
     SELECT s_suppkey, s_name,
            (CAST(total_rev_u AS DOUBLE) / CAST(10000 AS DOUBLE))
                AS total_revenue
-    FROM {c}supplier, revenue
+    FROM {supplier}, revenue
     WHERE s_suppkey = supplier_no
       AND total_rev_u = (SELECT max(total_rev_u) FROM revenue)
     ORDER BY s_suppkey
 """
 
 
-@query("q_sql_tpch_q15", oracle=_Q15_BODY.format(c=""))
+@query("q_sql_tpch_q15", oracle=plain_sql(_Q15_BODY))
 def q_sql_tpch_q15(spark, sf_dir):
     """TPC-H Q15 shape (top supplier): spec defines a revenue VIEW
     used twice — once joined to supplier, once under max() — expressed
@@ -963,9 +892,7 @@ def q_sql_tpch_q15(spark, sf_dir):
     determinism tiebreak if several suppliers tie).  Identical SQL
     text on both engines (`_Q15_BODY`).  Driver-mandated surface
     (SURVEY §2.4)."""
-    for t in ("lineitem", "supplier"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q15_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q15_BODY)
 
 
 # -- q_sql_tpch_q19: discounted revenue (disjunctive multi-attr filter) ---
@@ -975,7 +902,7 @@ _Q19_BODY = """
                  * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)))
              AS DOUBLE) / CAST(10000 AS DOUBLE)) AS revenue,
            CAST(count(*) AS BIGINT) AS n_lines
-    FROM {c}lineitem, {c}part
+    FROM {lineitem}, {part}
     WHERE p_partkey = l_partkey
       AND ((p_brand = 'Brand#2'
             AND p_size BETWEEN 1 AND 15
@@ -989,7 +916,7 @@ _Q19_BODY = """
 """
 
 
-@query("q_sql_tpch_q19", oracle=_Q19_BODY.format(c=""))
+@query("q_sql_tpch_q19", oracle=plain_sql(_Q19_BODY))
 def q_sql_tpch_q19(spark, sf_dir):
     """TPC-H Q19 shape (discounted revenue): the canonical
     DISJUNCTIVE join filter — three (brand, size-band, quantity-band)
@@ -1005,9 +932,7 @@ def q_sql_tpch_q19(spark, sf_dir):
     brand/size/quantity structure is preserved.  Revenue exact
     fixed-point.  Identical SQL text on both engines (`_Q19_BODY`).
     Driver-mandated surface (SURVEY §2.4)."""
-    for t in ("lineitem", "part"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q19_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q19_BODY)
 
 
 # -- q_zorder_layout: Z-order clustering audit (r5 addition) --------------
@@ -1060,7 +985,7 @@ def _zorder_body(dialect: str) -> str:
             else f"(zval // {_Z_BUCKET})")
     return f"""
     WITH dims AS (
-      SELECT {a} AS a, {b} AS b FROM events
+      SELECT {a} AS a, {b} AS b FROM {{events}}
     ),
     z AS (
       SELECT a, b, {z} AS zval FROM dims
@@ -1077,7 +1002,7 @@ def _zorder_body(dialect: str) -> str:
     """
 
 
-@query("q_zorder_layout", oracle=_zorder_body("duck"))
+@query("q_zorder_layout", oracle=plain_sql(_zorder_body("duck")))
 def q_zorder_layout(spark, sf_dir):
     """Z-order (Morton) clustering audit: interleave the low 8 bits of
     two scan-predicate dimensions (user bucket, minute-of-day
@@ -1096,11 +1021,7 @@ def q_zorder_layout(spark, sf_dir):
     arithmetic in each engine's shift syntax), the aggregate is one
     map-side-combined groupBy over 16 buckets.  Driver-mandated
     surface (SURVEY §2.4); no Main.scala counterpart."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "v_zevents"
-    )
-    return spark.sql(_zorder_body("spark").replace("FROM events",
-                                                   "FROM v_zevents"))
+    return sql_on_tables(spark, sf_dir, _zorder_body("spark"))
 
 
 # -- q_sql_tpch_q2: min-cost supplier (correlated min over a view) --------
@@ -1119,7 +1040,7 @@ def _q2_body(dialect: str) -> str:
       SELECT l_partkey, l_suppkey,
              min((TRY_CAST(round(l_extendedprice * 100) AS BIGINT) * 10000)
                  {idiv} TRY_CAST(round(l_quantity) AS BIGINT)) AS unit_mu
-      FROM {{c}}lineitem, {{c}}supplier, {{c}}nation, {{c}}region
+      FROM {{lineitem}}, {{supplier}}, {{nation}}, {{region}}
       WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
         AND n_regionkey = r_regionkey AND r_name = 'EUROPE'
       GROUP BY l_partkey, l_suppkey
@@ -1131,7 +1052,7 @@ def _q2_body(dialect: str) -> str:
     SELECT round(s_acctbal, 2) AS s_acctbal, s_name, n_name,
            p_partkey, p_name,
            round(CAST(best_mu AS DOUBLE) / 1000000, 4) AS unit_cost
-    FROM {{c}}part, cost, best, {{c}}supplier, {{c}}nation, {{c}}region
+    FROM {{part}}, cost, best, {{supplier}}, {{nation}}, {{region}}
     WHERE p_partkey = cost.l_partkey
       AND cost.l_partkey = best.l_partkey AND unit_mu = best_mu
       AND s_suppkey = cost.l_suppkey
@@ -1143,7 +1064,7 @@ def _q2_body(dialect: str) -> str:
 """
 
 
-@query("q_sql_tpch_q2", oracle=_q2_body("duck").format(c=""))
+@query("q_sql_tpch_q2", oracle=plain_sql(_q2_body("duck")))
 def q_sql_tpch_q2(spark, sf_dir):
     """TPC-H Q2 shape (minimum-cost supplier): the region-restricted
     cost view is referenced twice — once per (part, supplier), once
@@ -1157,9 +1078,7 @@ def q_sql_tpch_q2(spark, sf_dir):
     cost/best aggregates collapse lineitem before any dim join, and
     part/supplier/nation/region broadcast.  Driver-mandated surface
     (SURVEY §2.4)."""
-    for t in ("lineitem", "part", "supplier", "nation", "region"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_q2_body("spark").format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _q2_body("spark"))
 
 
 # -- q_sql_tpch_q9: product-type profit by nation and year ----------------
@@ -1173,7 +1092,7 @@ _Q9_BODY = """
              CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
              TRY_CAST(round(l_extendedprice * 100) AS BIGINT)
                * (100 - TRY_CAST(round(l_discount * 100) AS BIGINT)) AS rev
-      FROM {c}part, {c}supplier, {c}lineitem, {c}orders, {c}nation
+      FROM {part}, {supplier}, {lineitem}, {orders}, {nation}
       WHERE s_suppkey = l_suppkey AND p_partkey = l_partkey
         AND o_orderkey = l_orderkey AND s_nationkey = n_nationkey
         AND p_name LIKE '%gear%'
@@ -1182,7 +1101,7 @@ _Q9_BODY = """
 """
 
 
-@query("q_sql_tpch_q9", oracle=_Q9_BODY.format(c=""))
+@query("q_sql_tpch_q9", oracle=plain_sql(_Q9_BODY))
 def q_sql_tpch_q9(spark, sf_dir):
     """TPC-H Q9 shape (product-type profit): the LIKE-filtered part
     dim prunes lineitem first (the '%gear%' contains-match cannot
@@ -1194,9 +1113,7 @@ def q_sql_tpch_q9(spark, sf_dir):
     and (nation, year) rollup are the shape under test.  Exact
     fixed-point sums.  Identical SQL text (`_Q9_BODY`).
     Driver-mandated surface (SURVEY §2.4)."""
-    for t in ("part", "supplier", "lineitem", "orders", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q9_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q9_BODY)
 
 
 # -- q_sql_tpch_q16: supplier-part relationship count ---------------------
@@ -1204,17 +1121,17 @@ def q_sql_tpch_q9(spark, sf_dir):
 _Q16_BODY = """
     SELECT p_brand, p_type, p_size,
            CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-    FROM {c}part, {c}lineitem
+    FROM {part}, {lineitem}
     WHERE p_partkey = l_partkey
       AND p_brand <> 'Brand#2' AND p_type <> 'PROMO'
       AND p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
       AND l_suppkey NOT IN (
-            SELECT s_suppkey FROM {c}supplier WHERE s_acctbal < 0)
+            SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
     GROUP BY p_brand, p_type, p_size
 """
 
 
-@query("q_sql_tpch_q16", oracle=_Q16_BODY.format(c=""))
+@query("q_sql_tpch_q16", oracle=plain_sql(_Q16_BODY))
 def q_sql_tpch_q16(spark, sf_dir):
     """TPC-H Q16 shape (parts/supplier relationship): negated dim
     predicates + an IN-list + a NOT IN exclusion subquery (Catalyst:
@@ -1228,25 +1145,23 @@ def q_sql_tpch_q16(spark, sf_dir):
     the (brand, type, size) filter prunes part before the fact join.
     Identical SQL text (`_Q16_BODY`).  Driver-mandated surface
     (SURVEY §2.4)."""
-    for t in ("part", "lineitem", "supplier"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q16_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q16_BODY)
 
 
 # -- q_sql_tpch_q21: suppliers who kept orders waiting --------------------
 
 _Q21_BODY = """
     SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-    FROM {c}supplier, {c}lineitem l1, {c}orders, {c}nation
+    FROM {supplier}, {lineitem} l1, {orders}, {nation}
     WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
       AND o_orderstatus = 'F'
       AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
       AND EXISTS (
-            SELECT 1 FROM {c}lineitem l2
+            SELECT 1 FROM {lineitem} l2
             WHERE l2.l_orderkey = l1.l_orderkey
               AND l2.l_suppkey <> l1.l_suppkey)
       AND NOT EXISTS (
-            SELECT 1 FROM {c}lineitem l3
+            SELECT 1 FROM {lineitem} l3
             WHERE l3.l_orderkey = l1.l_orderkey
               AND l3.l_suppkey <> l1.l_suppkey
               AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
@@ -1257,7 +1172,7 @@ _Q21_BODY = """
 """
 
 
-@query("q_sql_tpch_q21", oracle=_Q21_BODY.format(c=""))
+@query("q_sql_tpch_q21", oracle=plain_sql(_Q21_BODY))
 def q_sql_tpch_q21(spark, sf_dir):
     """TPC-H Q21 shape (suppliers who kept orders waiting): the
     double-correlated EXISTS / NOT EXISTS pair over the same fact
@@ -1272,9 +1187,7 @@ def q_sql_tpch_q21(spark, sf_dir):
     lineitem references shuffle once on l_orderkey (AQE reuses the
     exchange).  Identical SQL text (`_Q21_BODY`).  Driver-mandated
     surface (SURVEY §2.4)."""
-    for t in ("supplier", "lineitem", "orders", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q21_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q21_BODY)
 
 
 # -- q_sql_tpch_q22: global sales opportunity (dormant customers) ---------
@@ -1283,7 +1196,7 @@ _Q22_BODY = """
     WITH eligible AS (
       SELECT c_custkey, c_acctbal, n_name,
              TRY_CAST(round(c_acctbal * 100) AS BIGINT) AS bal_c
-      FROM {c}customer JOIN {c}nation ON c_nationkey = n_nationkey
+      FROM {customer} JOIN {nation} ON c_nationkey = n_nationkey
       WHERE n_name IN ('NATION_1', 'NATION_3', 'NATION_5', 'NATION_7',
                        'NATION_9', 'NATION_11', 'NATION_13')
     ),
@@ -1298,14 +1211,14 @@ _Q22_BODY = """
     FROM eligible, avg_bal
     WHERE bal_c * n > tot_c
       AND NOT EXISTS (
-            SELECT 1 FROM {c}orders
+            SELECT 1 FROM {orders}
             WHERE o_custkey = c_custkey
               AND o_orderdate >= TIMESTAMP '2000-01-01')
     GROUP BY n_name
 """
 
 
-@query("q_sql_tpch_q22", oracle=_Q22_BODY.format(c=""))
+@query("q_sql_tpch_q22", oracle=plain_sql(_Q22_BODY))
 def q_sql_tpch_q22(spark, sf_dir):
     """TPC-H Q22 shape (global sales opportunity): an uncorrelated
     scalar aggregate (the average balance of the positive-balance
@@ -1321,6 +1234,4 @@ def q_sql_tpch_q22(spark, sf_dir):
     is one tiny broadcast row and the anti join is date-pruned
     before it shuffles.  Identical SQL text (`_Q22_BODY`).
     Driver-mandated surface (SURVEY §2.4)."""
-    for t in ("customer", "nation", "orders"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}")
-    return spark.sql(_Q22_BODY.format(c="v_"))
+    return sql_on_tables(spark, sf_dir, _Q22_BODY)

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ema_bigdata_spark.gmm_parity import _fresh_view
 from ema_bigdata_spark.functions.parity import cents, sql_cents
 from ema_bigdata_spark.registry import query
 from ema_bigdata_spark.sources.tables import load_table
@@ -159,21 +158,12 @@ def q_kmeans(spark, sf_dir):
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .localCheckpoint()
     )
-    # per-call view name (r8, same class as the gmm_parity ADVICE
-    # fix): a fixed name lets concurrent fits in one session, or a
-    # user view of that name, silently clobber each other.  Dropped
-    # as soon as the statement is ANALYZED (r9, ADVICE r8: per-call
-    # names otherwise accumulate in the catalog, pinning their
-    # localCheckpoint storage for the session's lifetime) — the
-    # returned DataFrame holds the resolved plan, so a later collect
-    # doesn't need the catalog entry (probed; pinned by
-    # test_gmm_views_do_not_accumulate).
-    view = _fresh_view("v_kmeans_hist")
-    hist.createOrReplaceTempView(view)
-    try:
-        return spark.sql(_kmeans_body("spark", view, with_hist_cte=False))
-    finally:
-        spark.catalog.dropTempView(view)
+    # bound as a keyword argument: spark.sql names the view uniquely
+    # and drops it once the statement is analysed, so the catalog
+    # never holds (or pins the checkpoint storage of) this histogram
+    return spark.sql(
+        _kmeans_body("spark", "{hist}", with_hist_cte=False), hist=hist
+    )
 
 
 # -- q_linreg: closed-form OLS from exact integer moment sums --------------
@@ -282,9 +272,4 @@ def q_linreg(spark, sf_dir):
             .alias("syy"),
         )
     )
-    view = _fresh_view("v_linreg_g")  # per-call name + drop (see kmeans)
-    g.createOrReplaceTempView(view)
-    try:
-        return spark.sql(_linreg_select(view))
-    finally:
-        spark.catalog.dropTempView(view)
+    return spark.sql(_linreg_select("{g}"), g=g)

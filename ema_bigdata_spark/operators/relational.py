@@ -24,7 +24,13 @@ from ema_bigdata_spark.functions.parity import (
     sum_fixed,
 )
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import filter_ts_range, load_raw, load_table
+from ema_bigdata_spark.sources.tables import (
+    filter_ts_range,
+    load_raw,
+    load_table,
+    plain_sql,
+    sql_on_tables,
+)
 
 # lineitem derived measures as exact scaled integers (lazy: Column
 # construction needs an active session):
@@ -507,32 +513,22 @@ def q_pivot(spark, sf_dir):
 # -- q_grouping_sets: explicit grouping sets + grouping_id ----------------
 
 
-@query(
-    "q_grouping_sets",
-    oracle="""
+_GROUPING_SETS_BODY = """
     SELECT o_orderstatus, o_orderpriority,
            CAST(count(*) AS BIGINT) AS n_orders,
            CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
                 AS BIGINT) AS gid
-    FROM orders
+    FROM {orders}
     GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-    """,
-)
+"""
+
+
+@query("q_grouping_sets", oracle=plain_sql(_GROUPING_SETS_BODY))
 def q_grouping_sets(spark, sf_dir):
     """Arbitrary grouping sets (not the rollup/cube lattices) through
     the SQL entry path — Catalyst expands to a single Expand + one
     hash aggregate, not one scan per set."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        SELECT o_orderstatus, o_orderpriority,
-               CAST(count(*) AS BIGINT) AS n_orders,
-               CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority)
-                    AS BIGINT) AS gid
-        FROM v_orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _GROUPING_SETS_BODY)
 
 
 # -- q_events_hourly: time-series rollup with pushdown time filter --------

@@ -45,6 +45,7 @@ is a plain dict without a lock: a race only infers twice.
 from __future__ import annotations
 
 import datetime as _dt
+import string
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -151,6 +152,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if isinstance(df.schema[c].dataType, LongType):
             df = df.withColumn(c, _ns_to_ntz(c))
     return df
+
+
+def _placeholders(body: str) -> list[str]:
+    """The ``{name}`` fields of ``body``, first-use order, no repeats."""
+    names = (f for _, f, _, _ in string.Formatter().parse(body) if f)
+    return list(dict.fromkeys(names))
+
+
+def sql_on_tables(spark: SparkSession, sf_dir: str, body: str) -> DataFrame:
+    """Run a SQL text whose ``{table}`` placeholders name driver tables.
+
+    Each placeholder is loaded with :func:`load_table` and bound through
+    ``spark.sql``'s keyword arguments, which register a uniquely named
+    view per frame and drop it once the statement is analysed — the
+    session catalog is left as it was found.  As with any ``spark.sql``
+    keyword call, literal braces in ``body`` must be doubled."""
+    return spark.sql(
+        body, **{t: load_table(spark, sf_dir, t) for t in _placeholders(body)}
+    )
+
+
+def plain_sql(body: str) -> str:
+    """The same SQL text with each placeholder replaced by its own name
+    — the DuckDB oracle form, where the tables are views of those names."""
+    return body.format(**{t: t for t in _placeholders(body)})
 
 
 def event_epoch_us(df: DataFrame, col: str = "ts") -> F.Column:

@@ -98,6 +98,33 @@ def _state_partitions(spark, n: int | None = None):
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
         )
 
+
+def _drain(stream, mode: str, stem: str):
+    """Run ``stream`` to completion into a memory sink and return the
+    sink's rows as a DataFrame.
+
+    The memory sink registers its rows as a temporary view named after
+    the query.  ``spark.table`` resolves that view's plan at once, so the
+    view is dropped before returning: the session catalog is left as it
+    was found, and the returned frame still holds the rows."""
+    spark = stream.sparkSession
+    sink = f"{stem}_{uuid.uuid4().hex[:8]}"
+    with _state_partitions(spark):
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    drained = spark.table(sink)
+    spark.catalog.dropTempView(sink)
+    return drained
+
+
 def _configure_kafka(reader, table: str):
     """Apply the Kafka source configuration to a ``DataStreamReader``
     (or any object with the same fluent ``format``/``option`` API —
@@ -305,20 +332,9 @@ def s_stream_session(spark, sf_dir):
         "user_id", event_epoch_us(stream).alias("ts_us")
     )
     sessions = session_stream(stream)
-    sink = f"stream_session_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drained = _drain(sessions, "update", "stream_session")
     us_to_ntz = "timestampadd(MICROSECOND, {}, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-    return spark.table(sink).select(
+    return drained.select(
         "user_id",
         F.expr(us_to_ntz.format("start_us")).alias("session_start"),
         F.expr(us_to_ntz.format("end_us")).alias("session_end"),
@@ -344,18 +360,7 @@ def s_stream_tumbling(spark, sf_dir):
         .groupBy(F.window("ts", _WINDOW).alias("w"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
     )
-    sink = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drained = _drain(agg, "complete", "stream_tumbling")
     # exact distinct users per window from the batch side (stream keeps
     # counts) — demonstrates stream/batch unification on one API.  This
     # is a deliberate BATCH read of the same table, not part of the
@@ -367,7 +372,7 @@ def s_stream_tumbling(spark, sf_dir):
         .groupBy(F.window("ts", _WINDOW).alias("w"))
         .agg(F.countDistinct("user_id").cast("long").alias("n_users"))
     )
-    stream_counts = spark.table(sink).select("w", "n_events")
+    stream_counts = drained.select("w", "n_events")
     return stream_counts.join(exact_users, "w").select(
         F.expr(_START_NTZ).alias("window_start"),
         "n_events",
@@ -400,19 +405,7 @@ def s_stream_sliding(spark, sf_dir):
         .groupBy(F.window("ts", "2 minutes", "1 minute").alias("w"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
     )
-    sink = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(sink).select(
+    return _drain(agg, "complete", "stream_sliding").select(
         F.expr(_START_NTZ).alias("window_start"), "n_events"
     )
 
@@ -436,19 +429,7 @@ def s_stream_dedup(spark, sf_dir):
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(sink)
+    return _drain(stream, "append", "stream_dedup")
 
 
 @query(
@@ -493,20 +474,8 @@ def s_stream_join(spark, sf_dir):
             """
         ),
     ).select(F.col("a.user_id").alias("user_id"))
-    sink = f"stream_join_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
     return (
-        spark.table(sink)
+        _drain(joined, "append", "stream_join")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
     )
@@ -530,8 +499,6 @@ def s_stream_static_join(spark, sf_dir):
     is re-broadcast per batch, so at 100 TB/day the join cost is the
     broadcast, not stream volume).  Aggregation runs on the enriched
     stream.  Single-batch run = the batch join, so it's SQL-oracled."""
-    import uuid as _uuid
-
     from ema_bigdata_spark.sources.tables import load_table
 
     stream = (
@@ -548,18 +515,7 @@ def s_stream_static_join(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.approx_count_distinct("user_id").alias("_approx_users"),
     )
-    sink = f"stream_static_{_uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drained = _drain(agg, "complete", "stream_static")
     # exact per-segment distinct users from the batch side (streaming
     # keeps approximate state); batch/stream share the one dim snapshot
     exact_users = (
@@ -570,7 +526,7 @@ def s_stream_static_join(spark, sf_dir):
         .agg(F.countDistinct("user_id").cast("long").alias("n_users"))
     )
     return (
-        spark.table(sink)
+        drained
         .join(exact_users, "c_mktsegment")
         .select("c_mktsegment", "n_events", "n_users")
     )
@@ -618,23 +574,12 @@ def s_stream_upsert(spark, sf_dir):
         ),
         F.max(F.struct("ts_us", "event_id")).alias("m"),
     )
-    sink = f"stream_upsert_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drained = _drain(agg, "complete", "stream_upsert")
     us_to_ntz = (
         "timestampadd(MICROSECOND, m.ts_us,"
         " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
     )
-    return spark.table(sink).select(
+    return drained.select(
         "user_id",
         "event_type",
         F.expr(us_to_ntz).alias("last_ts"),
@@ -778,19 +723,7 @@ def s_stream_anomaly(spark, sf_dir):
         F.expr("CAST(round(value * 100) AS BIGINT)").alias("vu"),
     )
     alerts = anomaly_stream(stream)
-    sink = f"stream_anomaly_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            alerts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(sink).select(
+    return _drain(alerts, "update", "stream_anomaly").select(
         "user_id", "event_id", "value", "n_prior"
     )
 
@@ -834,25 +767,14 @@ def s_stream_topk(spark, sf_dir):
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    sink = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drained = _drain(agg, "complete", "stream_topk")
     from pyspark.sql import Window
 
     rk = F.row_number().over(
         Window.partitionBy("w").orderBy(F.desc("n"), F.asc("event_type"))
     )
     return (
-        spark.table(sink)
+        drained
         .withColumn("rk", rk.cast("long"))
         .where(F.col("rk") <= 3)
         .select(

@@ -12,11 +12,38 @@ registry.load_all()
 SQL_QUERIES = sorted(registry.ORACLES)
 
 
+def _temp_views(spark):
+    return {
+        t.name
+        for t in spark.catalog.listTables()
+        if t.tableType == "TEMPORARY"
+    }
+
+
 @pytest.mark.parametrize("name", SQL_QUERIES)
 def test_oracle_parity(spark, duck, sf_dir, name):
+    """Hash parity with the oracle, and the query leaves the session's
+    temporary views as it found them: no view is added, and none is
+    dropped or replaced."""
     from tests.oracle import compare_query
 
+    before = _temp_views(spark)
     compare_query(spark, duck, sf_dir, name)
+    after = _temp_views(spark)
+    assert after == before, (sorted(after - before), sorted(before - after))
+
+
+def test_user_view_survives_sql_queries(spark, sf_dir):
+    """A user's view whose name a query once used internally keeps its
+    own contents after the query runs."""
+    spark.range(3).createOrReplaceTempView("v_orders")
+    try:
+        for name in ("q_sql_exists", "q_grouping_sets"):
+            registry.QUERIES[name](spark, sf_dir).collect()
+            assert spark.table("v_orders").columns == ["id"], name
+            assert spark.table("v_orders").count() == 3, name
+    finally:
+        spark.catalog.dropTempView("v_orders")
 
 
 def test_every_query_registered_once():

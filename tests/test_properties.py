@@ -4037,23 +4037,14 @@ class TestParityEMInvariants:
         """The snapped-integer sufficient-statistic sums make every
         iteration order-free, so the fit must be bit-identical under
         any histogram partitioning (the same invariant gmm.py's
-        DECIMAL path guarantees for the numpy engine)."""
+        exact limb sums guarantee for the numpy engine)."""
         from ema_bigdata_spark import gmm_parity as G
-        from ema_bigdata_spark.sources.tables import load_table
 
         base = G.parity_em_spark(spark, sf_dir, 3, 4)
-        ev = load_table(spark, sf_dir, "events")
-        ev.createOrReplaceTempView("v_gmm_events")
         for parts in (1, 13):
-            hist = (
-                spark.sql(G.hist_sql("v_gmm_events"))
-                .repartition(parts)
-                .localCheckpoint()
-            )
-            hist.createOrReplaceTempView("v_gmm_hist_t")
-            got = G.parity_em_spark(
-                spark, sf_dir, 3, 4, hist_view="v_gmm_hist_t"
-            )
+            hist = (G.prepare_hist(spark, sf_dir).repartition(parts)
+                    .localCheckpoint())
+            got = G.parity_em_spark(spark, sf_dir, 3, 4, hist=hist)
             assert got[0] == base[0]
             # compare by IEEE bits: Python == treats -0.0 == +0.0,
             # exactly the class the driver hash distinguishes
@@ -4168,44 +4159,20 @@ class TestParityEMInvariants:
             assert struct.pack(">d", sv) == want, ("spark", c, sv)
             assert struct.pack(">d", dv) == want, ("duckdb", c, dv)
 
-    def test_gmm_views_do_not_accumulate(self, spark, sf_dir):
-        """r9 (ADVICE r8): the per-call temp-view names (gmm histogram,
-        kmeans histogram, linreg moments) must be DROPPED once their
-        consuming statement is analyzed — a long-lived session or a
-        bench loop must not accumulate catalog entries (each pinning a
-        localCheckpoint'ed frame).  The r7 chunked-EM path — the other
-        leak site ADVICE named — was removed outright in r9 (dormant
-        since its negative measurement, VERDICT r8 item 8)."""
-        from ema_bigdata_spark import registry
-
-        registry.load_all()
-        def temp_views():
-            return {
-                t.name
-                for t in spark.catalog.listTables()
-                if t.tableType == "TEMPORARY"
-            }
-
-        before = temp_views()
-        for name in ("gmm_fit", "q_gmm_bic", "q_kmeans", "q_linreg"):
-            registry.QUERIES[name](spark, sf_dir).collect()
-        after = temp_views()
-        assert after == before, sorted(after - before)
-
     def test_lockstep_multi_equals_single_k(self, spark, sf_dir):
-        """The merged per-iteration statement (all K fits in one SQL)
-        must produce BIT-identical parameters and lnL to the single-K
-        path — the merge is a scheduling change, not a math change."""
+        """The merged per-iteration statement (both K fits in one SQL)
+        must produce BIT-identical parameters and lnL to separate one-K
+        runs — the merge is a scheduling change, not a math change."""
         from ema_bigdata_spark import gmm_parity as G
 
-        hv = G.prepare_hist(spark, sf_dir)
+        hist = G.prepare_hist(spark, sf_dir)
         multi = G.parity_em_spark_multi(
-            spark, sf_dir, (2, 3), 3, want_lnl=True, hist_view=hv
+            spark, sf_dir, (2, 3), 3, want_lnl=True, hist=hist
         )
         for k in (2, 3):
-            nd, P, lnl = G.parity_em_spark(
-                spark, sf_dir, k, 3, want_lnl=True, hist_view=hv
-            )
+            nd, P, lnl = G.parity_em_spark_multi(
+                spark, sf_dir, (k,), 3, want_lnl=True, hist=hist
+            )[k]
             assert multi[k][0] == nd
             assert _packed(multi[k][1]) == _packed(P), k
             assert _packed({"l": multi[k][2]}) == _packed({"l": lnl}), k

@@ -1,7 +1,8 @@
 """Session hygiene on a driver-owned session: a conf the session rejects
 must be recorded and logged, never passed over silently, and a bad
 per-query setting must leave the session's confs as they were.  Also
-the inventory of ``SPARK_GRAFT_*`` environment knobs the engine reads."""
+the inventory of ``SPARK_GRAFT_*`` environment knobs the engine reads
+and of the places it touches the session catalog."""
 
 from __future__ import annotations
 
@@ -88,13 +89,48 @@ ENV_KNOBS = {
 }
 
 
-def test_env_knob_inventory():
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "ema_bigdata_spark",
-    )
-    found = set()
-    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "ema_bigdata_spark",
+)
+
+
+def _package_sources():
+    for path in sorted(glob.glob(os.path.join(_PKG, "**", "*.py"),
+                                 recursive=True)):
         with open(path, encoding="utf-8") as f:
-            found.update(re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read()))
+            yield os.path.relpath(path, _PKG), f.read()
+
+
+def test_env_knob_inventory():
+    found = set()
+    for _, text in _package_sources():
+        found.update(re.findall(r"SPARK_GRAFT_[A-Z_]+", text))
     assert found == set(ENV_KNOBS)
+
+
+#: ways of naming a frame in the session catalog the package must not
+#: use: SQL texts bind frames through ``spark.sql`` keyword arguments,
+#: whose views are dropped as soon as the statement is analysed.
+_CATALOG_WRITES = (
+    "createOrReplaceTempView",
+    "createTempView",
+    "createGlobalTempView",
+    "createOrReplaceGlobalTempView",
+    "registerTempTable",
+    ".format(c=",
+)
+
+#: the one drop: Spark itself registers a streaming memory sink as a
+#: view, which the stream drain removes once it has read the sink.
+_CATALOG_DROPS = {os.path.join("streaming", "stream_queries.py"): 1}
+
+
+def test_session_catalog_inventory():
+    writes, drops = [], {}
+    for rel, text in _package_sources():
+        writes += [(rel, w) for w in _CATALOG_WRITES if w in text]
+        if "dropTempView" in text:
+            drops[rel] = text.count("dropTempView")
+    assert writes == []
+    assert drops == _CATALOG_DROPS

@@ -150,16 +150,15 @@ def main():
         from ema_bigdata_spark import gmm_parity as GP
 
         timed("parity: prepare_hist", lambda: GP.prepare_hist(spark, SF_DIR))
-        hv = GP.prepare_hist(spark, SF_DIR)
+        hist = GP.prepare_hist(spark, SF_DIR)
         timed("parity: 15-iter single fit (gmm_fit body)",
               lambda: GP.parity_em_spark(spark, SF_DIR, 3, 15,
-                                         want_lnl=False, hist_view=hv),
+                                         want_lnl=False, hist=hist),
               runs=2)
         timed("parity: multi-k 6-iter (q_gmm_bic body)",
               lambda: GP.parity_em_spark_multi(spark, SF_DIR, (2, 3, 4), 6,
-                                               want_lnl=True, hist_view=hv),
+                                               want_lnl=True, hist=hist),
               runs=2)
-        spark.catalog.dropTempView(hv)
 
     spark.stop()
 
