@@ -1,12 +1,12 @@
-"""Cross-engine bit-exact EM for the flagship GMM queries (r6).
+"""Cross-engine bit-exact EM for the flagship GMM queries.
 
-Through r5, ``gmm_fit`` and ``q_gmm_bic`` were the ONLY two operators
-without a DuckDB oracle (rows-only determinism checks): their numpy EM
-uses libm ``exp``/``ln``, whose 1-ulp engine differences amplify over
-iterations.  This module re-expresses the fixed-iteration EM so that
-every arithmetic step is IEEE-exact-and-identical across Spark SQL,
-DuckDB SQL, and CPython (see ``functions/xmath.py``), making the fits
-hash-comparable — the same unrolled-iteration pattern already proven by
+``gmm_fit`` and ``q_gmm_bic`` are hash-checked against a DuckDB replay
+even though a numpy EM built on libm ``exp``/``ln`` would not be: those
+functions differ by an ulp between engines and EM feedback amplifies
+the difference over iterations.  This module re-expresses the
+fixed-iteration EM so that every arithmetic step is IEEE-exact and
+identical across Spark SQL, DuckDB SQL and CPython (see
+``functions/xmath.py``) — the unrolled-iteration pattern of
 ``q_pagerank`` and ``q_kmeans``, extended to transcendental-bearing EM.
 
 Parity posture:
@@ -28,14 +28,19 @@ Parity posture:
   runs as Python ``xln`` / a DuckDB CTE chain of the same ops.
 
 Spark-first shape (SURVEY §4.3): ONE distributed ``groupBy(value)``
-histogram scan (map-side combined — at 100 TB the only full pass),
-then one tiny aggregation job per EM iteration over the checkpointed
-histogram; shuffle volume is bin-count, never row-count.  The driver
-holds 3K floats of state.  The DuckDB oracle replays the identical
-computation as a flat materialized-CTE chain.
+histogram scan (map-side combined — at 100 TB the only full pass;
+two jobs: its map stage and the checkpoint), then one statement for
+the init and one per EM iteration over the checkpointed histogram.
+Every statement is one projection chain over the histogram plus one
+aggregate, whatever the number of K values fitted in lockstep: no
+second scan, no join, no broadcast — two jobs each (the aggregate's
+single-partition shuffle and the result).  Shuffle volume is
+bin-count, never row-count; the driver holds 3K floats per fit.  The
+DuckDB oracle replays the identical computation as a flat
+materialized-CTE chain built from the same text builders.
 
-Reference: ``/root/reference`` ``Main.scala:59-92`` (EM loop; 5K+2
-full data passes per iteration — SURVEY §3.3).  Textbook math
+Reference: the Scala ``Main.scala:59-92`` EM loop (5K+2 full data
+passes per iteration — SURVEY §3.3).  Textbook math
 (Bishop PRML §9.2), not the reference's precedence bugs (SURVEY §2.3).
 """
 
@@ -86,8 +91,8 @@ def hist_sql(events_src: str) -> str:
     gmm.value_histogram; same filter text on both engines — NaN/±Inf
     compare greater than any finite bound on both, and NULL fails the
     predicate, so the gate subsumes IS NOT NULL) are excluded like
-    NULLs (r8): a NaN or 1e308 bin would overflow the fixed-point
-    snaps mid-iteration."""
+    NULLs: a NaN or 1e308 bin would overflow the fixed-point snaps
+    mid-iteration."""
     return (
         "SELECT value AS x, CAST(count(*) AS BIGINT) AS cnt"
         f" FROM {events_src}"
@@ -95,62 +100,47 @@ def hist_sql(events_src: str) -> str:
     )
 
 
-def init_ctes(src: str, k: int, tag: str,
-              shared: str | None = None) -> tuple[list[tuple[str, str]], str]:
-    """Init CTEs over the histogram ``src``: exact frequency-weighted
-    percentile means (linear interpolation at p·(n−1), Spark
-    ``percentile`` semantics), snapped-integer mean/variance.  Returns
-    ``(ctes, final)`` where final has columns nd, n, mu0_1..k, s20.
-    Pass ``shared`` = another fit's tag to reuse its cum/tot CTEs
-    (they are k-independent) instead of re-emitting them."""
-    pos = {}
-    for j in range(1, k + 1):
-        fr = f"(CAST({j} AS DOUBLE) / CAST({k + 1} AS DOUBLE))"
-        pos[j] = f"({fr} * (CAST(n AS DOUBLE) - 1.0))"
-    lo = {j: f"CAST(floor({pos[j]}) AS BIGINT)" for j in pos}
-    frac = {
-        j: f"({pos[j]} - CAST({lo[j]} AS DOUBLE))" for j in pos
-    }
-    inc = {
-        j: f"(CASE WHEN {pos[j]} > CAST({lo[j]} AS DOUBLE)"
-           f" THEN 1 ELSE 0 END)"
-        for j in pos
-    }
-    qcols = []
-    for j in range(1, k + 1):
-        qcols.append(
-            f"min(CASE WHEN cm >= {lo[j]} + 1 THEN x END) AS vlo{j}"
-        )
-        qcols.append(
-            f"min(CASE WHEN cm >= {lo[j]} + 1 + {inc[j]} THEN x END)"
-            f" AS vhi{j}"
-        )
-        qcols.append(f"max({frac[j]}) AS frac{j}")
-    mu0 = ", ".join(
-        f"(vlo{j} * (1.0 - frac{j}) + vhi{j} * frac{j}) AS mu0_{j}"
-        for j in range(1, k + 1)
-    )
-    mu_fwd = ", ".join(f"mu0_{j}" for j in range(1, k + 1))
-    base = shared if shared is not None else tag
-    ctes: list[tuple[str, str]] = []
-    if shared is None:
-        ctes += [
-            (f"{tag}_cum",
-             f"SELECT x, cnt, SUM(cnt) OVER (ORDER BY x) AS cm"
-             f" FROM {src}"),
-            (f"{tag}_tot",
-             "SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-             f"CAST(SUM({_snap('x', SX_SC)} * cnt) AS BIGINT) AS s1u, "
-             f"CAST(SUM({_snap('(x * x)', SXX_SC)} * cnt) AS BIGINT) AS s2u"
-             f" FROM {src}"),
-        ]
-    ctes += [
+def init_ctes(src: str, ks: tuple[int, ...], tag: str
+              ) -> tuple[list[tuple[str, str]], str, str]:
+    """Init CTEs over the histogram ``src`` for every K in ``ks``: exact
+    frequency-weighted percentile means (linear interpolation at
+    p·(n−1), Spark ``percentile`` semantics) and the snapped-integer
+    mean/variance.  One window pass carries the running count ``cm``
+    and the total ``tot`` on every bin; one aggregate over it emits
+    ``n``, the snapped sums ``s1u``/``s2u`` and each fit's
+    ``k{K}_vlo{j}``/``k{K}_vhi{j}``/``k{K}_frac{j}``.  Returns
+    ``(ctes, agg, final)``: ``agg`` is that aggregate (the oracle's
+    update reads ``n`` from it), ``final`` has columns nd, n, s20 and
+    ``k{K}_mu0_1..K`` (the init variance is K-independent)."""
+    qcols, mu0 = [], []
+    for k in ks:
+        for j in range(1, k + 1):
+            fr = f"(CAST({j} AS DOUBLE) / CAST({k + 1} AS DOUBLE))"
+            pos = f"({fr} * (CAST(tot AS DOUBLE) - 1.0))"
+            lo = f"CAST(floor({pos}) AS BIGINT)"
+            inc = f"(CASE WHEN {pos} > CAST({lo} AS DOUBLE) THEN 1 ELSE 0 END)"
+            c = f"k{k}_"
+            qcols += [
+                f"min(CASE WHEN cm >= {lo} + 1 THEN x END) AS {c}vlo{j}",
+                f"min(CASE WHEN cm >= {lo} + 1 + {inc} THEN x END)"
+                f" AS {c}vhi{j}",
+                f"max(({pos} - CAST({lo} AS DOUBLE))) AS {c}frac{j}",
+            ]
+            mu0.append(f"({c}vlo{j} * (1.0 - {c}frac{j})"
+                       f" + {c}vhi{j} * {c}frac{j}) AS {c}mu0_{j}")
+    mu_fwd = ", ".join(f"k{k}_mu0_{j}" for k in ks for j in range(1, k + 1))
+    ctes = [
+        (f"{tag}_cum",
+         "SELECT x, cnt, SUM(cnt) OVER (ORDER BY x) AS cm,"
+         f" SUM(cnt) OVER () AS tot FROM {src}"),
         (f"{tag}_q",
-         f"SELECT {', '.join(qcols)}"
-         f" FROM {base}_cum CROSS JOIN {base}_tot"),
+         "SELECT CAST(max(tot) AS BIGINT) AS n, "
+         f"CAST(SUM({_snap('x', SX_SC)} * cnt) AS BIGINT) AS s1u, "
+         f"CAST(SUM({_snap('(x * x)', SXX_SC)} * cnt) AS BIGINT) AS s2u, "
+         f"{', '.join(qcols)} FROM {tag}_cum"),
         (f"{tag}_i0",
-         f"SELECT CAST(n AS DOUBLE) AS nd, n, s1u, s2u, {mu0}"
-         f" FROM {tag}_q CROSS JOIN {base}_tot"),
+         f"SELECT CAST(n AS DOUBLE) AS nd, n, s1u, s2u, {', '.join(mu0)}"
+         f" FROM {tag}_q"),
         (f"{tag}_i1",
          f"SELECT nd, n, {mu_fwd},"
          f" (CAST(s1u AS DOUBLE) / {SX_SC}) / nd AS mean0, s2u"
@@ -161,108 +151,130 @@ def init_ctes(src: str, k: int, tag: str,
          f" - mean0 * mean0, {_VAR_FLOOR}) AS s20"
          f" FROM {tag}_i1"),
     ]
-    return ctes, f"{tag}_i2"
+    return ctes, f"{tag}_q", f"{tag}_i2"
 
 
-def iter_ctes(dialect: str, src: str, P: dict[str, str], k: int,
+def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
               tag: str, mode: str) -> tuple[list[tuple[str, str]], str]:
-    """One EM pass over histogram ``src`` with parameter texts ``P``
-    (keys mu{j}, s2{j}, nrm{j} [, lnc{j} for mode='lnl']).  mode='fit'
-    emits the snapped sufficient-statistic sums n{j}u/sx{j}u/sxx{j}u;
-    mode='lnl' emits the snapped log-likelihood sum lnlu."""
-    J = range(1, k + 1)
+    """One EM pass over histogram ``src`` for every fit in ``params``
+    (K → parameter texts keyed mu{j}, s2{j}, nrm{j} [, lnc{j} for
+    mode='lnl']).  All fits share one projection chain and one
+    aggregate, their columns prefixed ``k{K}_``; each column's
+    expression is the same text whatever other fits run beside it, so
+    a lockstep pass is bit-identical to separate one-K passes.
+    mode='fit' emits the snapped sufficient-statistic sums
+    ``k{K}_n{j}u``/``k{K}_sx{j}u``/``k{K}_sxx{j}u``; mode='lnl' emits
+    the snapped log-likelihood sums ``k{K}_lnlu``."""
+    fits = [(k, P, f"k{k}_", range(1, k + 1)) for k, P in params.items()]
     # Param texts are either plain column refs (oracle: the
     # cross-joined 1-row params CTE — these must be CARRIED through
     # the stage chain) or folded literal expressions (Spark — nothing
     # to carry; see parity_em_spark_multi's docstring for the measured
     # literal-vs-view decision).
-    pnames = sorted({v for v in P.values() if v.isidentifier()})
+    pnames = sorted({v for _, P, _, _ in fits for v in P.values()
+                     if v.isidentifier()})
     pfwd = (", " + ", ".join(pnames)) if pnames else ""
     zc = ", ".join(
         f"least(((x - {P[f'mu{j}']}) * (x - {P[f'mu{j}']}))"
-        f" / (2.0 * {P[f's2{j}']}), {X.dlit_exact(X.EXP_CLAMP)}) AS zc{j}"
-        for j in J
+        f" / (2.0 * {P[f's2{j}']}), {X.dlit_exact(X.EXP_CLAMP)}) AS {c}zc{j}"
+        for _, P, c, J in fits for j in J
     )
-    zarr = X.arr([f"zc{j}" for j in J], dialect)
-    et = X.exp_neg_arr(zarr, dialect)
-    zfwd = ", ".join(f"zc{j}" for j in J)
+    et = ", ".join(
+        f"{X.exp_neg_arr(X.arr([f'{c}zc{j}' for j in J], dialect), dialect)}"
+        f" AS {c}et"
+        for _, _, c, J in fits
+    )
+    zfwd = ", ".join(f"{c}zc{j}" for _, _, c, J in fits for j in J)
     wcols = ", ".join(
-        f"{P[f'nrm{j}']} * {X.ix('et', j, dialect)} AS w{j}" for j in J
+        f"{P[f'nrm{j}']} * {X.ix(f'{c}et', j, dialect)} AS {c}w{j}"
+        for _, P, c, J in fits for j in J
     )
-    wfwd = ", ".join(f"w{j}" for j in J)
-    rs = f"greatest({' + '.join(f'w{j}' for j in J)}, {_FLOOR})"
+    wfwd = ", ".join(f"{c}w{j}" for _, _, c, J in fits for j in J)
+    rs = ", ".join(
+        f"greatest({' + '.join(f'{c}w{j}' for j in J)}, {_FLOOR}) AS {c}rs"
+        for _, _, c, J in fits
+    )
+    rfwd = ", ".join(f"{c}rs" for _, _, c, _ in fits)
     ctes = [
         (f"{tag}_b",
          f"SELECT x, CAST(cnt AS DOUBLE) AS c{pfwd}, {zc} FROM {src}"),
         (f"{tag}_e",
-         f"SELECT x, c{pfwd}, {zfwd}, {et} AS et FROM {tag}_b"),
+         f"SELECT x, c{pfwd}, {zfwd}, {et} FROM {tag}_b"),
         (f"{tag}_w",
          f"SELECT x, c{pfwd}, {zfwd}, {wcols} FROM {tag}_e"),
         (f"{tag}_r",
-         f"SELECT x, c{pfwd}, {zfwd}, {wfwd}, {rs} AS rs FROM {tag}_w"),
+         f"SELECT x, c{pfwd}, {zfwd}, {wfwd}, {rs} FROM {tag}_w"),
     ]
     if mode == "fit":
         sums = []
-        for j in J:
-            g = f"(w{j} / rs)"
-            sums.append(
-                f"CAST(SUM({_snap(f'({g} * c)', N_SC)}) AS BIGINT)"
-                f" AS n{j}u"
-            )
-            sums.append(
-                f"CAST(SUM({_snap(f'(({g} * x) * c)', SX_SC)}) AS BIGINT)"
-                f" AS sx{j}u"
-            )
-            sums.append(
-                f"CAST(SUM({_snap(f'((({g} * x) * x) * c)', SXX_SC)})"
-                f" AS BIGINT) AS sxx{j}u"
-            )
+        for _, _, c, J in fits:
+            for j in J:
+                g = f"({c}w{j} / {c}rs)"
+                sums += [
+                    f"CAST(SUM({_snap(f'({g} * c)', N_SC)}) AS BIGINT)"
+                    f" AS {c}n{j}u",
+                    f"CAST(SUM({_snap(f'(({g} * x) * c)', SX_SC)})"
+                    f" AS BIGINT) AS {c}sx{j}u",
+                    f"CAST(SUM({_snap(f'((({g} * x) * x) * c)', SXX_SC)})"
+                    f" AS BIGINT) AS {c}sxx{j}u",
+                ]
         ctes.append((f"{tag}_s", f"SELECT {', '.join(sums)} FROM {tag}_r"))
         return ctes, f"{tag}_s"
     # mode == 'lnl': ln(rs) = lnb + atanh-series(rs / max-w), bounded
     # series argument in [1, k] (see module docstring)
-    big = f"greatest({', '.join(f'w{j}' for j in J)})"
+    bg = ", ".join(
+        f"greatest({', '.join(f'{c}w{j}' for j in J)}, {_FLOOR}) AS {c}bg"
+        for _, _, c, J in fits
+    )
     ctes.append(
         (f"{tag}_m",
-         f"SELECT c{pfwd}, {zfwd}, {wfwd}, rs,"
-         f" greatest({big}, {_FLOOR}) AS bg"
-         f" FROM {tag}_r")
+         f"SELECT c{pfwd}, {zfwd}, {wfwd}, {rfwd}, {bg} FROM {tag}_r")
     )
     # argmax-selected ln(w_max) ≈ lnc_m − zc_m; floor fallback when all
     # densities underflowed (bg clamped to the rs floor)
-    cases = []
-    for j in J:
-        conds = [f"w{j} >= w{jj}" for jj in J if jj > j]
-        lnb_j = f"({P[f'lnc{j}']} - zc{j})"
-        if conds and j < k:
-            cases.append(f"WHEN {' AND '.join(conds)} THEN {lnb_j}")
-        else:
-            cases.append(f"ELSE {lnb_j}")
-    sel = f"CASE {' '.join(cases)} END"
-    lnb = (
-        f"(CASE WHEN {' + '.join(f'w{j}' for j in J)} <= {_FLOOR}"
-        f" THEN {X.dlit_exact(math.log(1e-300))} ELSE {sel} END)"
-    )
-    ctes.append(
-        (f"{tag}_l0", f"SELECT c, lnbv, (rs / bg) AS sv FROM"
-                      f" (SELECT c, rs, bg, {lnb} AS lnbv FROM {tag}_m)")
-    )
-    a_steps = X.atanh_ln_series("sv", f"{tag}_a")
-    # atanh steps reference earlier step columns → chain as CTEs
-    prev = f"{tag}_l0"
-    carry = ["c", "lnbv", "sv"]
-    for n, e in a_steps:
-        ctes.append(
-            (f"cte_{n}", f"SELECT {', '.join(carry)}, {e} AS {n} FROM {prev}")
+    lnbs = []
+    for k, P, c, J in fits:
+        sel = f"({P[f'lnc{k}']} - {c}zc{k})"
+        if k > 1:
+            whens = " ".join(
+                "WHEN " + " AND ".join(f"{c}w{j} >= {c}w{jj}"
+                                       for jj in range(j + 1, k + 1))
+                + f" THEN ({P[f'lnc{j}']} - {c}zc{j})"
+                for j in range(1, k)
+            )
+            sel = f"CASE {whens} ELSE {sel} END"
+        lnbs.append(
+            f"(CASE WHEN {' + '.join(f'{c}w{j}' for j in J)} <= {_FLOOR}"
+            f" THEN {X.dlit_exact(math.log(1e-300))} ELSE {sel} END)"
+            f" AS {c}lnbv"
         )
-        carry.append(n)
-        prev = f"cte_{n}"
-    final_a = a_steps[-1][0]
+    carry = ["c"] + [f"{c}{v}" for _, _, c, _ in fits for v in ("lnbv", "sv")]
+    sv = ", ".join(f"{c}lnbv, ({c}rs / {c}bg) AS {c}sv"
+                   for _, _, c, _ in fits)
+    rbg = ", ".join(f"{c}rs, {c}bg" for _, _, c, _ in fits)
     ctes.append(
-        (f"{tag}_lnl",
-         f"SELECT CAST(SUM({_snap(f'((lnbv + {final_a}) * c)', LNL_SC)})"
-         f" AS BIGINT) AS lnlu FROM {prev}")
+        (f"{tag}_l0", f"SELECT c, {sv} FROM"
+                      f" (SELECT c, {rbg}, {', '.join(lnbs)} FROM {tag}_m)")
     )
+    # atanh steps reference earlier step columns → chain as CTEs, step
+    # i of every fit in one CTE so the chain is as deep as one fit's
+    series = [X.atanh_ln_series(f"{c}sv", f"{c}a") for _, _, c, _ in fits]
+    prev = f"{tag}_l0"
+    for i, step in enumerate(zip(*series)):
+        ctes.append(
+            (f"{tag}_a{i}",
+             f"SELECT {', '.join(carry)}, "
+             + ", ".join(f"{e} AS {n}" for n, e in step)
+             + f" FROM {prev}")
+        )
+        carry += [n for n, _ in step]
+        prev = f"{tag}_a{i}"
+    lnl = ", ".join(
+        f"CAST(SUM({_snap(f'(({c}lnbv + {s[-1][0]}) * c)', LNL_SC)})"
+        f" AS BIGINT) AS {c}lnlu"
+        for (_, _, c, _), s in zip(fits, series)
+    )
+    ctes.append((f"{tag}_lnl", f"SELECT {lnl} FROM {prev}"))
     return ctes, f"{tag}_lnl"
 
 
@@ -270,13 +282,13 @@ def iter_ctes(dialect: str, src: str, P: dict[str, str], k: int,
 
 
 def init_fold(row, k: int) -> tuple[float, dict[str, float]]:
-    """From the collected init row → (nd, params dict)."""
+    """From the collected init row → fit K's (nd, params dict)."""
     nd = float(row["nd"])
     phi0 = 1.0 / float(k)
     s20 = float(row["s20"])
     P: dict[str, float] = {}
     for j in range(1, k + 1):
-        P[f"mu{j}"] = float(row[f"mu0_{j}"])
+        P[f"mu{j}"] = float(row[f"k{k}_mu0_{j}"])
         P[f"s2{j}"] = s20
         P[f"phi{j}"] = phi0
         P[f"nrm{j}"] = max(
@@ -286,14 +298,15 @@ def init_fold(row, k: int) -> tuple[float, dict[str, float]]:
 
 
 def update_fold(row, nd: float, k: int) -> dict[str, float]:
-    """From a collected sums row → next params (op-for-op mirror of the
-    oracle's pa/pb/pc/pd CTE chain)."""
+    """From a collected sums row → fit K's next params (op-for-op mirror
+    of the oracle's pa/pb/pc/pd CTE chain)."""
     P: dict[str, float] = {}
     for j in range(1, k + 1):
-        nf = max(float(row[f"n{j}u"]) / _N_SCF, _FLOOR_F)
+        nf = max(float(row[f"k{k}_n{j}u"]) / _N_SCF, _FLOOR_F)
         phi = nf / nd
-        mu = (float(row[f"sx{j}u"]) / _SX_SCF) / nf
-        s2 = max((float(row[f"sxx{j}u"]) / _SXX_SCF) / nf - mu * mu, _VAR_FLOOR_F)
+        mu = (float(row[f"k{k}_sx{j}u"]) / _SX_SCF) / nf
+        s2 = max((float(row[f"k{k}_sxx{j}u"]) / _SXX_SCF) / nf - mu * mu,
+                 _VAR_FLOOR_F)
         P[f"phi{j}"] = phi
         P[f"mu{j}"] = mu
         P[f"s2{j}"] = s2
@@ -303,15 +316,16 @@ def update_fold(row, nd: float, k: int) -> dict[str, float]:
 
 def update_ctes(sums_cte: str, tot_cte: str, k: int, tag: str
                 ) -> tuple[list[tuple[str, str]], str]:
-    """Oracle-side parameter update CTEs from a sums row (mirrors
+    """Oracle-side parameter update CTEs from fit K's sums in
+    ``sums_cte`` and the total ``n`` in ``tot_cte`` (mirrors
     :func:`update_fold`)."""
     J = range(1, k + 1)
     nf = ", ".join(
-        f"greatest(CAST(n{j}u AS DOUBLE) / {N_SC}, {_FLOOR}) AS nf{j}"
+        f"greatest(CAST(k{k}_n{j}u AS DOUBLE) / {N_SC}, {_FLOOR}) AS nf{j}"
         for j in J
     )
     sums_fwd = ", ".join(
-        f"sx{j}u, sxx{j}u" for j in J
+        f"k{k}_sx{j}u AS sx{j}u, k{k}_sxx{j}u AS sxx{j}u" for j in J
     )
     nf_fwd = ", ".join(f"nf{j}" for j in J)
     pm = ", ".join(
@@ -354,7 +368,7 @@ def init_param_ctes(init_cte: str, k: int, tag: str
     J = range(1, k + 1)
     phi0 = f"(1.0 / CAST({k} AS DOUBLE))"
     cols = ", ".join(
-        f"{phi0} AS phi{j}, mu0_{j} AS mu{j}, s20 AS s2{j}" for j in J
+        f"{phi0} AS phi{j}, k{k}_mu0_{j} AS mu{j}, s20 AS s2{j}" for j in J
     )
     fwd = ", ".join(f"phi{j}, mu{j}, s2{j}" for j in J)
     pn = ", ".join(
@@ -385,11 +399,11 @@ _SQL_R3 = "floor((({v}) * 1000.0) + 0.5) / 1000.0"
 
 
 def _require_nonempty(n) -> None:
-    """Designed loud refusal for an empty corpus (VERDICT r6 item 4):
-    the init statement's histogram total is NULL when events.value has
-    no non-NULL rows, and a mixture fit is undefined without data —
-    refuse with the same friendly-ValueError posture as the similarity
-    family's probe guards instead of crashing in ``init_fold``."""
+    """Loud refusal for an empty corpus: the init statement's histogram
+    total is NULL when events.value has no non-NULL rows, and a mixture
+    fit is undefined without data — refuse with the same friendly
+    ValueError as the similarity family's probe guards instead of
+    crashing in ``init_fold``."""
     if n is None or n == 0:
         raise ValueError(
             "gmm: empty corpus — events.value has no non-NULL rows;"
@@ -415,20 +429,27 @@ def prepare_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql_on_tables(spark, sf_dir, hist_sql("{events}")).localCheckpoint()
 
 
-class _Fit:
-    """One fit's window over a lockstep row's ``k{K}_``-prefixed columns."""
-
-    def __init__(self, row, k):
-        self._row, self._k = row, k
-
-    def __getitem__(self, name):
-        return self._row[f"k{self._k}_{name}"]
-
-
 def parity_em_spark(spark: SparkSession, sf_dir: str, k: int, iters: int,
                     want_lnl: bool = False, hist: DataFrame | None = None):
     """One fit of :func:`parity_em_spark_multi`; returns ``(nd, P, lnl)``."""
     return parity_em_spark_multi(spark, sf_dir, (k,), iters, want_lnl, hist)[k]
+
+
+def _check_fit_args(ks, iters) -> None:
+    """Refuse parameters no fit is defined for, naming the bad value,
+    before any job runs."""
+    if not ks:
+        raise ValueError("parity EM: ks=() — pass at least one K")
+    for k in ks:
+        if not isinstance(k, int) or k < 1:
+            raise ValueError(
+                f"parity EM: K={k!r} in ks={ks!r} is not a positive"
+                " component count"
+            )
+        if ks.count(k) > 1:
+            raise ValueError(f"parity EM: K={k} appears twice in ks={ks!r}")
+    if iters < 0:
+        raise ValueError(f"parity EM: iters={iters!r} is negative")
 
 
 def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
@@ -437,11 +458,15 @@ def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
                           hist: DataFrame | None = None):
     """Run the bit-exact EM on Spark for one or more independent K values
     in lockstep over ONE histogram (``hist``, or a fresh
-    :func:`prepare_hist`): one statement for all inits, then ONE
-    statement per iteration (SURVEY §4.3) computing every fit's
-    sufficient-statistic sums — per-fit CTE chains cross-joined at the
-    end, columns prefixed ``k{K}_``.  Params fold driver-side with the
-    Python mirrors between statements (``update_fold`` is the op-for-op
+    :func:`prepare_hist` — two jobs).  One statement computes every
+    fit's init, ONE statement per iteration (SURVEY §4.3) every fit's
+    sufficient-statistic sums, and with ``want_lnl`` one more every
+    fit's log-likelihood.  Each statement is one projection chain over
+    the histogram plus one aggregate, with columns prefixed ``k{K}_``
+    (:func:`init_ctes`, :func:`iter_ctes`), so it runs two jobs however
+    many K values ride along: ``2·(1 + iters + want_lnl)`` in all over a
+    prepared histogram.  Params fold driver-side with the Python
+    mirrors between statements (``update_fold`` is the op-for-op
     mirror of the oracle's ``update_ctes`` — same IEEE ops on the same
     doubles).  Returns ``{k: (nd, P, lnl)}``.
 
@@ -451,67 +476,48 @@ def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
     it, so a lockstep run is bit-identical to separate one-K runs
     (asserted by TestParityEMInvariants); merging K values only cuts
     the per-statement fixed cost (~0.35 s of analyze+JIT+schedule) from
-    ``len(ks)``× to 1× per iteration — 5.1 → ~2.6 s for q_gmm_bic at
-    sf0.1.  Merging keeps tree depth constant; unrolling several
-    iterations into one statement does not, and Catalyst optimizer cost
-    grows superlinearly with depth (sf0.1, 15-iteration fit: 4.2 s
-    per-iteration vs 5.7/7.5/28.6 s at 3/5/15 iterations per statement —
-    ROUND8_NOTES §9).
+    ``len(ks)``× to 1× per iteration.  Merging keeps tree depth
+    constant; unrolling several iterations into one statement does
+    not, and Catalyst optimizer cost grows superlinearly with depth
+    (sf0.1, 15-iteration fit: 4.2 s per-iteration vs 5.7/7.5/28.6 s at
+    3/5/15 iterations per statement).
 
     Params fold as literals: a 1-row params view cross-joined for a
     constant statement text costs a createDataFrame round-trip plus a
     broadcast join per iteration and times worse (9 s vs 5.5 s for the
     15-iteration fit at sf0.1)."""
+    _check_fit_args(ks, iters)
     if hist is None:
         hist = prepare_hist(spark, sf_dir)
 
-    def collect(ctes, parts):
-        q = _with(ctes, "SELECT * FROM " + " CROSS JOIN ".join(parts))
+    def collect(ctes, fin):
+        q = _with(ctes, f"SELECT * FROM {fin}")
         return spark.sql(q, hist=hist).collect()[0]
 
-    def prefixed(cols, k, fin):
-        return (f"(SELECT {', '.join(f'{c} AS k{k}_{c}' for c in cols)}"
-                f" FROM {fin}) t{k}")
+    def literals(with_lnc: bool = False):
+        """Each fit's params as exact literals (plus ``lnc{j}`` = ln of
+        the normalizers for the log-likelihood pass)."""
+        out = {}
+        for k, (_, P) in state.items():
+            if with_lnc:
+                P = {**P, **{f"lnc{j}": X.xln(P[f"nrm{j}"])
+                             for j in range(1, k + 1)}}
+            out[k] = {key: X.dlit_exact(val) for key, val in P.items()}
+        return out
 
-    # one statement for ALL inits (cum/tot shared across k)
-    ctes: list[tuple[str, str]] = []
-    parts = []
-    for i, k in enumerate(ks):
-        shared = f"i{ks[0]}" if i > 0 else None
-        ic, fin = init_ctes("{hist}", k, f"i{k}", shared=shared)
-        ctes += ic
-        cols = ["nd", "n"] + [f"mu0_{j}" for j in range(1, k + 1)] + ["s20"]
-        parts.append(prefixed(cols, k, fin))
-    row = collect(ctes, parts)
-    _require_nonempty(row[f"k{ks[0]}_n"])
-    state = {k: init_fold(_Fit(row, k), k) for k in ks}
+    ctes, _, fin = init_ctes("{hist}", ks, "i")
+    row = collect(ctes, fin)
+    _require_nonempty(row["n"])
+    state = {k: init_fold(row, k) for k in ks}
 
     for _ in range(iters):
-        ctes, parts = [], []
-        for k in ks:
-            pt = {key: X.dlit_exact(val) for key, val in state[k][1].items()}
-            ic, fin = iter_ctes("spark", "{hist}", pt, k, f"m{k}", "fit")
-            ctes += ic
-            cols = [f"{a}{j}u" for j in range(1, k + 1)
-                    for a in ("n", "sx", "sxx")]
-            parts.append(prefixed(cols, k, fin))
-        row = collect(ctes, parts)
-        for k in ks:
-            nd = state[k][0]
-            state[k] = (nd, update_fold(_Fit(row, k), nd, k))
+        row = collect(*iter_ctes("spark", "{hist}", literals(), "m", "fit"))
+        state = {k: (nd, update_fold(row, nd, k))
+                 for k, (nd, _) in state.items()}
 
     if not want_lnl:
         return {k: (nd, P, None) for k, (nd, P) in state.items()}
-    ctes, parts = [], []
-    for k in ks:
-        P = state[k][1]
-        pt = {key: X.dlit_exact(val) for key, val in P.items()}
-        for j in range(1, k + 1):
-            pt[f"lnc{j}"] = X.dlit_exact(X.xln(P[f"nrm{j}"]))
-        ic, fin = iter_ctes("spark", "{hist}", pt, k, f"l{k}", "lnl")
-        ctes += ic
-        parts.append(prefixed(["lnlu"], k, fin))
-    row = collect(ctes, parts)
+    row = collect(*iter_ctes("spark", "{hist}", literals(True), "l", "lnl"))
     return {k: (nd, P, float(row[f"k{k}_lnlu"]) / _LNL_SCF)
             for k, (nd, P) in state.items()}
 
@@ -524,7 +530,7 @@ def _oracle_em_ctes(k: int, iters: int, tag: str, want_lnl: bool
     """Full oracle CTE list for one fit; returns (ctes, params_cte,
     lnl_cte_or_None)."""
     ctes: list[tuple[str, str]] = []
-    ictes, ifin = init_ctes(f"{tag}_hist", k, f"{tag}_ini")
+    ictes, tot, ifin = init_ctes(f"{tag}_hist", (k,), f"{tag}_ini")
     ctes += ictes
     pctes, pcur = init_param_ctes(ifin, k, f"{tag}_x0")
     ctes += pctes
@@ -533,9 +539,9 @@ def _oracle_em_ctes(k: int, iters: int, tag: str, want_lnl: bool
              [f"{a}{j}" for j in range(1, k + 1)
               for a in ("mu", "s2", "nrm")]}
         src = f"{tag}_hist CROSS JOIN {pcur}"
-        bctes, bfin = iter_ctes("duckdb", src, P, k, f"{tag}_x{i}", "fit")
+        bctes, bfin = iter_ctes("duckdb", src, {k: P}, f"{tag}_x{i}", "fit")
         ctes += bctes
-        uctes, pcur = update_ctes(bfin, f"{tag}_ini_tot", k, f"{tag}_x{i}")
+        uctes, pcur = update_ctes(bfin, tot, k, f"{tag}_x{i}")
         ctes += uctes
     lnl_cte = None
     if want_lnl:
@@ -568,7 +574,8 @@ def _oracle_em_ctes(k: int, iters: int, tag: str, want_lnl: bool
         for j in range(1, k + 1):
             P[f"lnc{j}"] = f"{tag}_lc{j}_v"
         src = f"{tag}_hist CROSS JOIN {prev}"
-        lctes, lnl_cte = iter_ctes("duckdb", src, P, k, f"{tag}_ll", "lnl")
+        lctes, lnl_cte = iter_ctes("duckdb", src, {k: P}, f"{tag}_ll",
+                                   "lnl")
         ctes += lctes
     return ctes, pcur, lnl_cte
 
@@ -615,7 +622,7 @@ def gmm_bic_oracle_sql() -> str:
             carry.append(n)
             prev = f"c_{n}"
         pd_lit = X.dlit_exact(float(3 * k - 1))
-        lnl = f"(CAST(lnlu AS DOUBLE) / {LNL_SC})"
+        lnl = f"(CAST(k{k}_lnlu AS DOUBLE) / {LNL_SC})"
         bic = f"({pd_lit} * {tag}_ln_v - 2.0 * {lnl})"
         parts.append(
             f"SELECT CAST({k} AS BIGINT) AS k, "
@@ -632,10 +639,10 @@ def gmm_bic_oracle_sql() -> str:
 @query("gmm_fit", oracle=gmm_fit_oracle_sql())
 def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic EM fit on events.value → K-row parameter table
-    (K=3, fixed 15 iterations) — now hash-checked against a DuckDB
-    replay via the bit-exact parity EM (module docstring); through r5
-    this was rows-only.  One histogram scan + 15 histogram-sized
-    aggregation jobs; the driver holds 9 floats of state."""
+    (K=3, fixed 15 iterations), hash-checked against a DuckDB replay
+    via the bit-exact parity EM (module docstring).  One histogram scan,
+    then 16 histogram-sized statements of two jobs each (init + 15
+    iterations); the driver holds 9 floats of state."""
     _, P, _ = parity_em_spark(spark, sf_dir, K_FIT, ITERS_FIT)
     rows = [
         (j - 1, _round6(P[f"phi{j}"]), _round6(P[f"mu{j}"]),
@@ -651,14 +658,14 @@ def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model selection over K ∈ {2,3,4} via BIC = (3K−1)·ln n − 2·lnL
     (6 fixed iterations per candidate, lnL evaluated at the final
-    parameters) — hash-checked against a DuckDB replay (module
-    docstring); through r5 this was rows-only.  ONE histogram scan
-    shared by all three fits; lnL rides the same snapped-integer sum
+    parameters), hash-checked against a DuckDB replay (module
+    docstring).  ONE histogram scan shared by all three fits, which
+    run in lockstep: 8 statements of two jobs each (init, 6
+    iterations, lnL).  lnL rides the same snapped-integer sum
     discipline as the sufficient statistics.
 
-    INTENTIONAL (since r2): n is the histogram total — the count of
-    non-NULL values the likelihood actually sees — not the raw row
-    count."""
+    INTENTIONAL: n is the histogram total — the count of non-NULL
+    values the likelihood actually sees — not the raw row count."""
     rows = []
     fits = parity_em_spark_multi(
         spark, sf_dir, (2, 3, 4), ITERS_BIC, want_lnl=True

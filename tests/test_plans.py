@@ -1056,3 +1056,39 @@ def test_gmm_fit_task_count(spark):
                 tasks += info.numCompletedTasks
     assert model.n_iter == 20
     assert 0 < tasks <= 2 * par + 1, (tasks, par)
+
+
+def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
+    """Every parity-EM statement — init, fit iteration, lnL — is one
+    projection chain over the prepared histogram plus one aggregate:
+    two jobs however many K values run in lockstep, and no join or
+    broadcast in any executed plan."""
+    from ema_bigdata_spark import gmm_parity as G
+
+    sc = spark.sparkContext
+    hist = G.prepare_hist(spark, sf_dir)
+    frames = []
+    sql = spark.sql
+
+    def capture(q, **kwargs):
+        df = sql(q, **kwargs)
+        frames.append(df)
+        return df
+
+    monkeypatch.setattr(spark, "sql", capture)
+    for ks, want_lnl in (((3,), False), ((2, 3, 4), True)):
+        group = f"test_parity_em_job_shape_{len(ks)}"
+        sc.setJobGroup(group, "parity EM job-shape pin")
+        try:
+            G.parity_em_spark_multi(spark, sf_dir, ks, 2,
+                                    want_lnl=want_lnl, hist=hist)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        # init + 2 iterations (+ lnL)
+        assert 0 < jobs <= 2 * (3 + want_lnl), (ks, jobs)
+    assert len(frames) == 3 + 4
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert "BroadcastExchange" not in plan, plan

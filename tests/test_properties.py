@@ -4160,22 +4160,106 @@ class TestParityEMInvariants:
             assert struct.pack(">d", dv) == want, ("duckdb", c, dv)
 
     def test_lockstep_multi_equals_single_k(self, spark, sf_dir):
-        """The merged per-iteration statement (both K fits in one SQL)
+        """The merged per-iteration statement (every K fit in one SQL)
         must produce BIT-identical parameters and lnL to separate one-K
-        runs — the merge is a scheduling change, not a math change."""
+        runs, whatever order the K values come in — the merge is a
+        scheduling change, not a math change."""
         from ema_bigdata_spark import gmm_parity as G
 
         hist = G.prepare_hist(spark, sf_dir)
-        multi = G.parity_em_spark_multi(
-            spark, sf_dir, (2, 3), 3, want_lnl=True, hist=hist
-        )
-        for k in (2, 3):
-            nd, P, lnl = G.parity_em_spark_multi(
+        single = {
+            k: G.parity_em_spark_multi(
                 spark, sf_dir, (k,), 3, want_lnl=True, hist=hist
             )[k]
-            assert multi[k][0] == nd
-            assert _packed(multi[k][1]) == _packed(P), k
-            assert _packed({"l": multi[k][2]}) == _packed({"l": lnl}), k
+            for k in (2, 3, 4)
+        }
+        for ks in ((2, 3), (4, 2, 3)):
+            multi = G.parity_em_spark_multi(
+                spark, sf_dir, ks, 3, want_lnl=True, hist=hist
+            )
+            assert sorted(multi) == sorted(ks)
+            for k in ks:
+                nd, P, lnl = single[k]
+                assert multi[k][0] == nd
+                assert _packed(multi[k][1]) == _packed(P), (ks, k)
+                assert _packed({"l": multi[k][2]}) == _packed({"l": lnl}), (
+                    ks, k)
+
+    @pytest.mark.parametrize("hist_rows", [
+        [(2.5, 7)],
+        [(-1.0, 1), (3.0, 1)],
+        # n = 5: K=3 positions 1, 2, 3 land exactly on cm = 2, 3 and
+        # inside the last bin; K=2's 4/3 and 8/3 straddle boundaries
+        [(0.25, 2), (0.75, 1), (1.5, 2)],
+        [(1.5, 2**31 + 3), (2.0, 5), (4.25, 2**32)],
+        [(-3.5, 4), (-1.25, 9), (0.5, 2), (2.0, 1)],
+    ], ids=["one-bin", "two-bins-n2", "cm-boundary", "counts-2^31",
+            "negative"])
+    def test_init_matches_independent_reference(self, spark, hist_rows):
+        """The init statement's row against a reference that shares no
+        SQL text with it: numpy percentiles (``gmm._weighted_percentiles``,
+        Spark ``percentile`` semantics) for every K's mean, Python-int
+        sums of the per-bin snaps for n / s1u / s2u."""
+        import math
+
+        import numpy as np
+
+        from ema_bigdata_spark import gmm_parity as G
+        from ema_bigdata_spark.gmm import _weighted_percentiles
+
+        ks = (1, 2, 3, 4)
+        hist = spark.createDataFrame(hist_rows, "x DOUBLE, cnt BIGINT")
+        ctes, agg, fin = G.init_ctes("{hist}", ks, "i")
+        tot = spark.sql(G._with(ctes, f"SELECT n, s1u, s2u FROM {agg}"),
+                        hist=hist).collect()[0]
+        row = spark.sql(G._with(ctes, f"SELECT * FROM {fin}"),
+                        hist=hist).collect()[0]
+
+        def snap(v, scale):
+            return math.floor((v * scale) + 0.5)
+
+        n = sum(c for _, c in hist_rows)
+        s1u = sum(snap(x, 1e6) * c for x, c in hist_rows)
+        s2u = sum(snap(x * x, 1e4) * c for x, c in hist_rows)
+        assert (tot["n"], tot["s1u"], tot["s2u"]) == (n, s1u, s2u)
+        assert row["n"] == n and row["nd"] == float(n)
+        vals = np.array([x for x, _ in hist_rows])
+        cnts = np.array([c for _, c in hist_rows], dtype=np.int64)
+        for k in ks:
+            want = _weighted_percentiles(
+                vals, cnts, [(j + 1) / (k + 1) for j in range(k)]
+            )
+            got = [row[f"k{k}_mu0_{j}"] for j in range(1, k + 1)]
+            assert _packed(dict(enumerate(got))) == _packed(
+                dict(enumerate(want))), (k, got, want)
+
+    @pytest.mark.parametrize("ks, iters, named", [
+        ((), 2, "ks=()"),
+        ((0,), 2, "K=0"),
+        ((-1,), 2, "K=-1"),
+        ((3, 3), 2, "K=3 appears twice"),
+        ((3,), -1, "iters=-1"),
+    ])
+    def test_degenerate_params_refused(self, spark, sf_dir, ks, iters,
+                                       named):
+        """Parameters no fit is defined for fail loudly, naming the bad
+        value, before any job runs."""
+        import re
+
+        from ema_bigdata_spark import gmm_parity as G
+
+        with pytest.raises(ValueError, match=re.escape(named)):
+            G.parity_em_spark_multi(spark, sf_dir, ks, iters)
+
+    def test_single_component_fits(self, spark, sf_dir):
+        """K=1 is a plain Gaussian, not a degenerate mixture: it fits
+        (weight 1) and has a log-likelihood."""
+        import math
+
+        from ema_bigdata_spark import gmm_parity as G
+
+        _, P, lnl = G.parity_em_spark(spark, sf_dir, 1, 2, want_lnl=True)
+        assert P["phi1"] == 1.0 and math.isfinite(lnl)
 
 
 def test_covariance_arrow_path_bit_identical(spark, sf_dir):
