@@ -33,10 +33,14 @@ two jobs: its map stage and the checkpoint), then one statement for
 the init and one per EM iteration over the checkpointed histogram.
 Every statement is one projection chain over the histogram plus one
 aggregate, whatever the number of K values fitted in lockstep: no
-second scan, no join, no broadcast — two jobs each (the aggregate's
-single-partition shuffle and the result).  Shuffle volume is
-bin-count, never row-count; the driver holds 3K floats per fit.  The
-DuckDB oracle replays the identical computation as a flat
+second scan, no join, no broadcast.  Over a one-partition histogram
+(the narrow 2-decimal domain) each statement is ONE job and has no
+exchange: ``local_checkpoint`` marks the checkpoint
+``SinglePartition``, so the aggregate and the init's window read it
+in place.  A histogram of several partitions keeps its
+single-partition shuffle — two jobs per statement.  Shuffle volume
+is bin-count, never row-count; the driver holds 3K floats per fit.
+The DuckDB oracle replays the identical computation as a flat
 materialized-CTE chain built from the same text builders.
 
 Reference: the Scala ``Main.scala:59-92`` EM loop (5K+2 full data
@@ -52,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ema_bigdata_spark.functions import xmath as X
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import sql_on_tables
+from ema_bigdata_spark.sources.tables import local_checkpoint, sql_on_tables
 
 #: sufficient-statistic snap scales.  BIGINT overflow headroom at
 #: |x| ≤ 1e3: n·1e9 < 2⁶³ to ~9e9 rows, Σgxc·1e6 to ~9e9 rows,
@@ -422,11 +426,14 @@ def prepare_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize the (value, count) histogram once and return it.
     No hand-set width: the histogram is domain-bounded (~60 k bins for
     2-decimal data regardless of row count — gmm.py module docstring),
-    and ``localCheckpoint`` runs the aggregate through AQE, which
-    coalesces its shuffle partitions to the data — one partition (one
-    task per iteration job) for a narrow domain, as many as the
-    advisory partition size asks for a wide one."""
-    return sql_on_tables(spark, sf_dir, hist_sql("{events}")).localCheckpoint()
+    and the checkpoint runs the aggregate through AQE, which coalesces
+    its shuffle partitions to the data — one partition for a narrow
+    domain, as many as the advisory partition size asks for a wide
+    one.  :func:`~ema_bigdata_spark.sources.tables.local_checkpoint`
+    marks a one-partition histogram ``SinglePartition``, so each
+    statement over it is one job of one task with no exchange."""
+    hist = sql_on_tables(spark, sf_dir, hist_sql("{events}"))
+    return local_checkpoint(hist)
 
 
 def parity_em_spark(spark: SparkSession, sf_dir: str, k: int, iters: int,
@@ -463,10 +470,12 @@ def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
     sufficient-statistic sums, and with ``want_lnl`` one more every
     fit's log-likelihood.  Each statement is one projection chain over
     the histogram plus one aggregate, with columns prefixed ``k{K}_``
-    (:func:`init_ctes`, :func:`iter_ctes`), so it runs two jobs however
-    many K values ride along: ``2·(1 + iters + want_lnl)`` in all over a
-    prepared histogram.  Params fold driver-side with the Python
-    mirrors between statements (``update_fold`` is the op-for-op
+    (:func:`init_ctes`, :func:`iter_ctes`), so it runs one job however
+    many K values ride along — ``1 + iters + want_lnl`` in all over a
+    prepared one-partition histogram, twice that over a histogram of
+    several partitions (each aggregate then pays its single-partition
+    shuffle).  Params fold driver-side with the Python mirrors
+    between statements (``update_fold`` is the op-for-op
     mirror of the oracle's ``update_ctes`` — same IEEE ops on the same
     doubles).  Returns ``{k: (nd, P, lnl)}``.
 
@@ -641,8 +650,9 @@ def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic EM fit on events.value → K-row parameter table
     (K=3, fixed 15 iterations), hash-checked against a DuckDB replay
     via the bit-exact parity EM (module docstring).  One histogram scan,
-    then 16 histogram-sized statements of two jobs each (init + 15
-    iterations); the driver holds 9 floats of state."""
+    then 16 histogram-sized statements of one job each over the
+    one-partition histogram (init + 15 iterations); the driver holds 9
+    floats of state."""
     _, P, _ = parity_em_spark(spark, sf_dir, K_FIT, ITERS_FIT)
     rows = [
         (j - 1, _round6(P[f"phi{j}"]), _round6(P[f"mu{j}"]),
@@ -660,9 +670,9 @@ def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (6 fixed iterations per candidate, lnL evaluated at the final
     parameters), hash-checked against a DuckDB replay (module
     docstring).  ONE histogram scan shared by all three fits, which
-    run in lockstep: 8 statements of two jobs each (init, 6
-    iterations, lnL).  lnL rides the same snapped-integer sum
-    discipline as the sufficient statistics.
+    run in lockstep: 8 statements of one job each over the
+    one-partition histogram (init, 6 iterations, lnL).  lnL rides the
+    same snapped-integer sum discipline as the sufficient statistics.
 
     INTENTIONAL: n is the histogram total — the count of non-NULL
     values the likelihood actually sees — not the raw row count."""

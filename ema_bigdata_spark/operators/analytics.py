@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ema_bigdata_spark.functions.parity import cents, sql_cents
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import load_table
+from ema_bigdata_spark.sources.tables import load_table, local_checkpoint
 
 
 # -- q_retention: daily cohort retention ----------------------------------
@@ -237,10 +237,10 @@ def q_pagerank(spark, sf_dir):
     connected-components.
 
     Scale design: the (src, dst, deg) edge table is built ONCE and
-    ``localCheckpoint``-ed — without the cut each iteration would
-    re-derive the orders⋈lineitem join, turning 3 iterations into 3
-    corpus scans (same materialize-the-invariant rationale as
-    unigram_lm's vocab).  Each iteration is then one
+    cached, pre-partitioned by ``src`` — without the cut each
+    iteration would re-derive the orders⋈lineitem join, turning 3
+    iterations into 3 corpus scans (same materialize-the-invariant
+    rationale as unigram_lm's vocab).  Each iteration is then one
     edges⋈ranks hash join (shuffle ∝ |E|, ranks side ∝ |V|) + one
     map-side-combined groupBy(dst) — the textbook distributed-PR
     shape; at 100 TB pre-partitioning both sides by the node key
@@ -258,15 +258,15 @@ def q_pagerank(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
-    # node-key gate (r9, hostile-nulls sweep): a NULL custkey/suppkey
-    # is not a node.  Without it the NULL "node" leaks ASYMMETRICALLY
-    # — the oracle's GROUP BY src keeps a NULL degree row (inflating
-    # its |V| by one, shifting every teleport scalar) while Spark's
-    # n comes after a join that drops NULL — so the gate is declared
-    # domain, applied identically on both engines.  |key| < 2^62
-    # (r9, hostile-extremes sweep): the ±(2k, 2k+1) node encode needs
-    # one headroom bit — a key at 2^62 overflows the multiply into an
-    # ANSI job kill; beyond-encode keys are excluded like NULLs.
+    # node-key gate: a NULL custkey/suppkey is not a node.  Without it
+    # the NULL "node" leaks ASYMMETRICALLY — the oracle's GROUP BY src
+    # keeps a NULL degree row (inflating its |V| by one, shifting
+    # every teleport scalar) while Spark's n comes after a join that
+    # drops NULL — so the gate is declared domain, applied identically
+    # on both engines.  |key| < 2^62: the ±(2k, 2k+1) node encode
+    # needs one headroom bit — a key at 2^62 overflows the multiply
+    # into an ANSI job kill; beyond-encode keys are excluded like
+    # NULLs.
     pairs = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .where(
@@ -290,29 +290,28 @@ def q_pagerank(spark, sf_dir):
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
-    # r13 (guide §2.4/§3.3 — pre-partition both sides by the node
-    # key): the r12 localCheckpoint dropped the edge table's output
-    # partitioning (probed: the ExistingRDD scan reports
-    # UnknownPartitioning even when explicitly repartitioned first),
-    # so EVERY iteration re-exchanged the full (src, dst, deg) table
-    # by src.  A materialized CACHE preserves its partitioning, so
-    # hash-repartitioning once by src makes each iteration's
-    # edges⋈ranks join exchange-free on the edge side (the ranks side
-    # is already hash(node) out of the previous groupBy) — the only
+    # Pre-partition both join sides by the node key.  A checkpoint of
+    # several partitions drops its output partitioning (its RDD scan
+    # reports UnknownPartitioning even when repartitioned first), so
+    # every iteration would re-exchange the full (src, dst, deg) table
+    # by src.  A materialized CACHE keeps its hash partitioning, so
+    # repartitioning once by src makes each iteration's edges⋈ranks
+    # join exchange-free on the edge side (the ranks side is already
+    # hash(node) out of the previous groupBy) — the only
     # per-iteration shuffle left is the contribution aggregate.  The
     # node table derives from the cached edges without any exchange
     # (distinct on the cache's own key).  Both caches are released
-    # before returning, with the final ranks localCheckpoint-ed first
-    # so the returned frame never recomputes the unpersisted lineage
+    # before returning, with the final ranks checkpointed first so
+    # the returned frame never recomputes the unpersisted lineage
     # (and a bench rep can never reuse a prior rep's cache).
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.join(deg, "src").repartition(npart, "src").cache()
     nodes = e.select("src").distinct().cache()
     n = nodes.count()
     if n == 0:
-        # designed loud refusal (VERDICT r6 item 4): the teleport and
-        # init scalars divide by |V| — an empty purchase graph has no
-        # ranks, so refuse friendly instead of an ANSI DIVIDE_BY_ZERO
+        # designed loud refusal: the teleport and init scalars divide
+        # by |V| — an empty purchase graph has no ranks, so refuse
+        # friendly instead of an ANSI DIVIDE_BY_ZERO
         e.unpersist()
         nodes.unpersist()
         raise ValueError(
@@ -348,14 +347,14 @@ def q_pagerank(spark, sf_dir):
     # the returned frame must not lazily recompute through unpersisted
     # entries (3 corpus scans), and must not let a later invocation
     # silently reuse this one's cache
-    ranks = ranks.localCheckpoint()
+    ranks = local_checkpoint(ranks)
     e.unpersist()
     nodes.unpersist()
     return ranks.select(
         "node",
-        # sign-robust odd test (ADVICE r9): truncated % yields -1 for
-        # negative supplier nodes, so `% 2 == 1` mislabels them; both
-        # engines agree on `% 2 != 0`
+        # sign-robust odd test: truncated % yields -1 for negative
+        # supplier nodes, so `% 2 == 1` mislabels them; both engines
+        # agree on `% 2 != 0`
         (F.col("node") % 2 != 0).alias("is_supplier"),
         F.round(F.col("r_u").cast("double") / F.lit(1000000), 6).alias(
             "rank"

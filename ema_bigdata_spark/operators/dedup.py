@@ -17,7 +17,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from ema_bigdata_spark.functions.textfold import fold_lower, lev_bytes
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import load_table, spread
+from ema_bigdata_spark.sources.tables import (
+    load_table,
+    local_checkpoint,
+    spread,
+)
 
 # MinHash parameters: 16 hashes = 4 bands × 4 rows (LSH threshold
 # ≈ (1/4)^(1/4) ≈ 0.71 Jaccard).
@@ -854,39 +858,35 @@ def connected_components(
     orders smaller, so below ``_CC_DRIVER_MAX`` pairs a driver-side
     union-find answers in one collect (measured 4× faster than the
     4-round distributed loop's job overhead).  Above it, distributed
-    min-label propagation with POINTER DOUBLING (r8): each round every
-    node takes the minimum label among itself and its neighbors (the
-    self-inclusion rides a per-node SELF-LOOP in the edge cache — r13,
-    guide §2.4 — so the propagate is one join + one aggregate, not a
-    third per-round |V| shuffle join; round 1's seed labels are the
-    identity, so its propagate is a plain ``min(dst) GROUP BY src``
-    with no join at all), then jumps once through the label table
-    (label ← label(label)), so the distance a min label covers roughly
-    doubles per round — O(log diameter) rounds instead of O(diameter)
-    (dup clusters are near-cliques, so 2-3 rounds either way; deep
-    chains are where the doubling earns; a SECOND jump per round was
-    measured r13 and LOSES ~2.7× — the extra |V| shuffle join per
-    round costs more than the rounds it could save at these
-    diameters).  The edge cache is hash-partitioned by ``dst`` before
-    materialization (width = the session's shuffle-partition setting),
-    so every round's propagate join reuses the cached layout instead
-    of re-exchanging the full edge table — only the label side
-    shuffles per round.  Convergence is detected by an exact-sum
-    fixpoint: per-node labels are monotonically non-increasing
-    (``least`` of self and neighbors), so two consecutive rounds with
-    equal DECIMAL(38,0) label sums mean NO node changed — one
-    map-side-combined aggregate per round instead of the r5 form's
-    labels⋈labels change probe.  Measured on the 612 k-node
-    diameter-5 chain fixture (warm min-of-3, interleaved): r5 form
-    11.31 s / 6 rounds → sum-fixpoint 8.83 s / 6 rounds → +doubling
-    7.91 s / 3 rounds → r13 self-loop + round-1 + pre-partitioned
-    cache 5.3 s / 3 rounds.  Every 3rd round the label frame is
+    min-label propagation with POINTER DOUBLING: each round every node
+    takes the minimum label among itself and its neighbors (the
+    self-inclusion rides a per-node SELF-LOOP in the edge cache, so
+    the propagate is one join + one aggregate, not a third per-round
+    |V| shuffle join; round 1's seed labels are the identity, so its
+    propagate is a plain ``min(dst) GROUP BY src`` with no join at
+    all), then jumps once through the label table (label ←
+    label(label)), so the distance a min label covers roughly doubles
+    per round — O(log diameter) rounds instead of O(diameter) (dup
+    clusters are near-cliques, so 2-3 rounds either way; deep chains
+    are where the doubling earns; a SECOND jump per round costs an
+    extra |V| shuffle join per round, more than the rounds it could
+    save at these diameters).  The edge cache is hash-partitioned by
+    ``dst`` before materialization (width = the session's
+    shuffle-partition setting), so every round's propagate join reuses
+    the cached layout instead of re-exchanging the full edge table —
+    only the label side shuffles per round.  Convergence is detected
+    by an exact-sum fixpoint: per-node labels are monotonically
+    non-increasing (``least`` of self and neighbors), so two
+    consecutive rounds with equal DECIMAL(38,0) label sums mean NO
+    node changed — one map-side-combined aggregate per round, no
+    labels⋈labels change probe.  Every 3rd round the label frame is
     checkpointed — caching alone truncates COMPUTE but not the PLAN,
     so an iterative self-join otherwise grows the lineage (and
     Catalyst re-analysis cost) per round and recompute cascades on
-    cache eviction.  Locally that's ``localCheckpoint``; at true
-    cluster scale point ``spark.sparkContext.setCheckpointDir`` at
-    durable storage and swap in reliable ``checkpoint()``.  Both
+    cache eviction.  Locally that's
+    :func:`~ema_bigdata_spark.sources.tables.local_checkpoint`; at
+    true cluster scale point ``spark.sparkContext.setCheckpointDir``
+    at durable storage and swap in reliable ``checkpoint()``.  Both
     paths return identical labels.
     """
     if max_iter < 1:
@@ -898,33 +898,31 @@ def connected_components(
     # variant — a separate count probe would re-evaluate the whole
     # candidate-pair pipeline and could under-count a source that
     # changes between jobs, unbounding the later collect.  Collected
-    # as Arrow batches, not pickled Rows (r12 optimization, guide
-    # §4.1): at the 500 k-row cutover the Row path measured 2.0 s of
-    # pure serialization vs 0.06 s via toArrow — the probe is the
-    # distributed path's entry fee, so it must be cheap.
+    # as Arrow batches, not pickled Rows: at the 500 k-row cutover Row
+    # pickling dominates the probe, and the probe is the distributed
+    # path's entry fee, so it must be cheap.
     probe = edges.limit(_CC_DRIVER_MAX + 1).toArrow()
     if probe.num_rows <= _CC_DRIVER_MAX:
         return _components_driver(pairs.sparkSession, probe)
-    # r13 shape changes (guide §2.4 — remove shuffles outright):
+    # The distributed shape removes shuffles outright:
     # (1) SELF-LOOPS: the symmetrized edge set is augmented with one
     #     (x, x) loop per node, so the per-round propagation min
-    #     already includes the node's own label — the old
+    #     already includes the node's own label — no
     #     labels⋈neighbor_min LEFT JOIN (a full |V| shuffle join per
-    #     round) disappears; `min(self ∪ neighbors)` ≡
-    #     `least(own, min(neighbors))` exactly, and every node has a
-    #     self-loop so no row can drop out.
+    #     round); `min(self ∪ neighbors)` ≡ `least(own,
+    #     min(neighbors))` exactly, and every node has a self-loop so
+    #     no row can drop out.
     # (2) ROUND-1 SPECIALIZATION: the seed labels are the identity, so
     #     round 1's propagate is `min(dst) GROUP BY src` straight off
     #     the edge cache — no join at all.
     # (3) PRE-PARTITIONED EDGE CACHE: the union's output partitioning
-    #     is unknown, so every round's propagate re-exchanged the full
-    #     edge table by dst; hash-repartitioning ONCE before the cache
-    #     (the cached partitioning is preserved — localCheckpoint's is
-    #     not, probed on this build) leaves only the |V|-sized label
-    #     side to shuffle per round.  Width follows the session's
-    #     shuffle-partition setting, not a local constant.
-    # Measured together on the 510 k-edge fixture: 7.0 → 5.3 s warm
-    # min-of-3, labels identical (analytic ground truth + oracle).
+    #     is unknown, so without it every round's propagate would
+    #     re-exchange the full edge table by dst; hash-repartitioning
+    #     ONCE before the cache (a cache keeps its hash partitioning,
+    #     a checkpoint of several partitions does not) leaves only the
+    #     |V|-sized label side to shuffle per round.  Width follows
+    #     the session's shuffle-partition setting, not a local
+    #     constant.
     npart = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
@@ -955,8 +953,8 @@ def connected_components(
         # node's doc_id, so one self-join jumps each label to that
         # node's (≤) label; left join + coalesce is belt-and-braces.
         # Deliberately NOT caching the propagate step before this
-        # self-join: exchange reuse already dedupes the shared subplan
-        # and an explicit cache measured SLOWER (8.3 vs 7.9 s warm)
+        # self-join: exchange reuse already dedupes the shared subplan,
+        # and an explicit cache adds a materialization on top of it.
         jump = new_labels.select(
             F.col("doc_id").alias("j_id"), F.col("cluster_id").alias("j_cl")
         )
@@ -971,7 +969,7 @@ def connected_components(
         )
         # periodic lineage cut (docstring); cache suffices in between
         if (it + 1) % 3 == 0:
-            new_labels = new_labels.localCheckpoint()
+            new_labels = local_checkpoint(new_labels)
         else:
             new_labels = new_labels.cache()
         # exact-sum fixpoint (docstring): DECIMAL(38,0) so the sum
@@ -1250,10 +1248,8 @@ def dup_span_stats(docs: DataFrame) -> DataFrame:
     # pipelines persist exactly this index — or Spark re-derives the
     # whole explode+aggregate subtree per consumer (second corpus
     # scan + shuffle)
-    grid = (
-        occ.groupBy("doc_id", "sh")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .localCheckpoint()
+    grid = local_checkpoint(
+        occ.groupBy("doc_id", "sh").agg(F.count(F.lit(1)).alias("k"))
     )
     ndocs = grid.groupBy("sh").agg(F.count(F.lit(1)).alias("d"))
     dup_occ = F.when(F.col("d") >= 2, F.col("k")).otherwise(F.lit(0))
@@ -1383,6 +1379,6 @@ def q_dedup_incremental_near(spark, sf_dir):
     docs = spread(load_table(spark, sf_dir, "documents")).withColumn(
         "shingles", _shingles()
     )
-    bands = _banded(_minhash_signatures(docs), []).localCheckpoint()
+    bands = local_checkpoint(_banded(_minhash_signatures(docs), []))
     is_new = (F.col("doc_id") % _INC_MOD) == _INC_NEW
     return minhash_incremental(bands.where(is_new), bands.where(~is_new))

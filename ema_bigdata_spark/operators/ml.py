@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ema_bigdata_spark.functions.parity import cents, sql_cents
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import load_table
+from ema_bigdata_spark.sources.tables import load_table, local_checkpoint
 
 # -- q_kmeans: 1-D fixed-point Lloyd over the value histogram --------------
 
@@ -136,14 +136,16 @@ def q_kmeans(spark, sf_dir):
     clustering job, built on the ``gmm.py`` histogram design: the only
     data-proportional cost is ONE ``groupBy(value).count()`` scan; the
     Lloyd iterations then run over the materialized histogram
-    (``localCheckpoint`` — without the cut each of the 4 downstream
-    references would re-derive the corpus aggregate), each iteration a
-    ≤3-key hash agg over histogram-sized input joined to a broadcast
-    1-row centroid tuple.  At 100 TB: shuffle volume is distinct
-    values (bounded by the fixed-point domain), iterations cost
-    histogram passes, and nothing ever returns to the driver — the
-    centroid state stays a 1-row DataFrame composed lazily into the
-    final plan.
+    (:func:`~ema_bigdata_spark.sources.tables.local_checkpoint` —
+    without the cut each of the 4 downstream references would re-derive
+    the corpus aggregate), each iteration a ≤3-key hash agg over
+    histogram-sized input joined to a broadcast 1-row centroid tuple.
+    A one-partition histogram is marked ``SinglePartition``, so the
+    init aggregate and every iteration's GROUP BY read it in place,
+    with no exchange.  At 100 TB: shuffle volume is distinct values
+    (bounded by the fixed-point domain), iterations cost histogram
+    passes, and nothing ever returns to the driver — the centroid
+    state stays a 1-row DataFrame composed lazily into the final plan.
 
     Everything through the last assignment is exact BIGINT arithmetic
     (fixed-point Lloyd — see :func:`_kmeans_body`), so cluster
@@ -151,12 +153,11 @@ def q_kmeans(spark, sf_dir):
     means divide as doubles, via shared expression text.  Semantics:
     Lloyd (1982); no Main.scala counterpart (its one iterative fit is
     the GMM EM, SURVEY §2.1)."""
-    hist = (
+    hist = local_checkpoint(
         load_table(spark, sf_dir, "events")
         .select(cents("value").alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()
     )
     # bound as a keyword argument: spark.sql names the view uniquely
     # and drops it once the statement is analysed, so the catalog

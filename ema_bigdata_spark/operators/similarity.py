@@ -19,7 +19,11 @@ import hashlib
 from pyspark.sql import functions as F
 
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import load_table, spread
+from ema_bigdata_spark.sources.tables import (
+    load_table,
+    local_checkpoint,
+    spread,
+)
 
 _DIM = 64
 _PROBE_ID = 0
@@ -895,7 +899,7 @@ def q_similarity_batch(spark, sf_dir):
     )
 
 
-# -- q_semdedup: cluster-blocked semantic dedup (r4 addition) -------------
+# -- q_semdedup: cluster-blocked semantic dedup ---------------------------
 #
 # SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
 # embedding space, find near-duplicate pairs WITHIN each cluster, and
@@ -932,9 +936,9 @@ def semdedup_pairs(emb):
 
     Scale shape: one scan aggregates centroids, one scan builds the
     per-row (signature, norm, centroid-cosine) projection, which is
-    MATERIALIZED (``localCheckpoint`` — without the cut the self-join
+    MATERIALIZED (``local_checkpoint`` — without the cut the self-join
     duplicates the whole scan ⋈ broadcast(centroid) subtree on each
-    side: measured 4 corpus scans instead of 2); the (label, sig)
+    side: 4 corpus scans instead of 2); the (label, sig)
     self-join then reads only the checkpointed columns.  Candidate
     volume is governed by the LSH match rate exactly as in
     q_embed_dup, and vectors shuffle only within blocks."""
@@ -962,16 +966,13 @@ def semdedup_pairs(emb):
         "aggregate(transform(cent, x -> x * x),"
         " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-    base = base.select(
-        "vec_id",
-        "label",
-        "e",
-        "nrm",
-        "sig",
-        F.round(
-            F.expr(cdot) / (F.col("nrm") * F.expr(f"sqrt({cself})")), 6
-        ).alias("cent_cos"),
-    ).localCheckpoint()
+    cent_cos = F.round(
+        F.expr(cdot) / (F.col("nrm") * F.expr(f"sqrt({cself})")), 6
+    )
+    base = local_checkpoint(
+        base.select("vec_id", "label", "e", "nrm", "sig",
+                    cent_cos.alias("cent_cos"))
+    )
     a, b = base.alias("a"), base.alias("b")
     dot_ab = (
         "aggregate(zip_with(a.e, b.e, (x, y) -> x * y),"

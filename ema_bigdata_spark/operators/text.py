@@ -18,7 +18,11 @@ from ema_bigdata_spark.functions.textfold import (
     sql_fold_lower,
 )
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import load_table, spread
+from ema_bigdata_spark.sources.tables import (
+    load_table,
+    local_checkpoint,
+    spread,
+)
 
 # Deterministic demo lexicon over the corpus vocabulary (synthetic
 # docs; real deployments swap in per-language stopword lists — the
@@ -934,14 +938,14 @@ def unigram_lm(docs, text_col: str = "text"):
 
     Two corpus scans, which is the canonical shape: pass 1 aggregates
     token counts (shuffle ∝ vocabulary, map-side combined) and
-    MATERIALIZES them (`localCheckpoint` — CCNet literally writes the
-    trained LM out; without the cut, Spark re-derives the vocab subtree
-    once for the cost table and once for the grand total = a third
-    full corpus scan).  Pass 2 re-tokenizes and scores.  The
+    MATERIALIZES them (``local_checkpoint`` — CCNet literally writes
+    the trained LM out; without the cut, Spark re-derives the vocab
+    subtree once for the cost table and once for the grand total = a
+    third full corpus scan).  Pass 2 re-tokenizes and scores.  The
     vocabulary cost table re-joins by BROADCAST **only while it
-    provably fits** (ADVICE r3): a whitespace-token vocab over
-    web-scale text grows roughly with the corpus (URLs, hashes,
-    typos), so the hint is applied iff the materialized vocab has
+    provably fits**: a whitespace-token vocab over web-scale text
+    grows roughly with the corpus (URLs, hashes, typos), so the hint
+    is applied iff the materialized vocab has
     ≤ ``_VOCAB_BROADCAST_MAX`` rows — counting the checkpoint is a
     cheap scan of already-materialized blocks, not a third corpus
     pass.  Beyond the cap the hint is dropped and AQE picks the join
@@ -958,17 +962,15 @@ def unigram_lm(docs, text_col: str = "text"):
     toks = docs.select(
         "doc_id", F.explode(F.split(text_col, " ", -1)).alias("token")
     ).where(F.col("token") != "")
-    vocab = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
+    vocab = local_checkpoint(
+        toks.groupBy("token").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     # ONE driver aggregate over the already-materialized checkpoint
-    # blocks yields both gate inputs (ADVICE r4: the previous version
-    # paid a separate count() job on top): n_vocab drives the
-    # broadcast gate, total becomes a literal in the cost expression
-    # — which also deletes the 1-row cross-join subtree from the
-    # executed plan.
+    # blocks yields both gate inputs, so no separate count() job:
+    # n_vocab drives the broadcast gate, total becomes a literal in
+    # the cost expression — so the executed plan has no 1-row
+    # cross-join subtree.  A one-partition vocab reads in place
+    # (no single-partition shuffle).
     n_vocab, total = vocab.agg(
         F.count(F.lit(1)), F.sum("cnt").cast("long")
     ).first()
@@ -1927,22 +1929,21 @@ def bigram_lm(docs, text_col: str = "text"):
     in-domain, high = gibberish; filtering on it is the classic
     training-data perplexity filter).
 
-    Same two-pass architecture as :func:`unigram_lm` (its r3/r4 advice
-    trail applied): pass 1 tokenizes once and collapses to the bigram
-    count table, which is localCheckpoint-ed — BOTH the context
-    normalizer Σ_w2 cnt AND the smoothing constant V = |{w2}| are then
-    derived from the checkpointed blocks, so the corpus pays exactly
-    two scans total (counts + scoring), never three.  V folds into the
+    Same two-pass architecture as :func:`unigram_lm` (gated broadcast,
+    one driver aggregate for the gate inputs): pass 1 tokenizes once
+    and collapses to the bigram count table, which is checkpointed
+    with ``local_checkpoint`` — BOTH the context normalizer Σ_w2 cnt
+    AND the smoothing constant V = |{w2}| are then derived from the
+    checkpointed blocks, so the corpus pays exactly two scans total
+    (counts + scoring), never three.  V folds into the
     cost expression as a literal (no 1-row cross join); the cost table
     broadcasts only under the `_VOCAB_BROADCAST_MAX` gate, else AQE
     picks the shuffle join on (w1, w2).  At 100 TB the text itself is
     never shuffled — only (doc_id, w1, w2) token-pair rows and the
     bigram-type table move."""
     db = _doc_bigrams(docs, text_col)
-    bg = (
-        db.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
+    bg = local_checkpoint(
+        db.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
     n_types, nv = bg.agg(
         F.count(F.lit(1)), F.count_distinct("w2")

@@ -275,6 +275,27 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df if _SPREAD_CACHE[key] else df.repartition(n)
 
 
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once (``localCheckpoint``) and keep a
+    one-partition result's layout.
+
+    The checkpoint's ``LogicalRDD`` takes its partitioning from the AQE
+    root, which reports ``UnknownPartitioning(0)`` — so a global
+    aggregate or an un-partitioned window over it plans an ``Exchange
+    SinglePartition``, and a GROUP BY a hash exchange, even when the
+    checkpoint already IS one partition: an extra job and task per
+    statement, and a full re-shuffle for a window.  ``coalesce(1)``
+    over a one-partition RDD
+    is a narrow no-op whose ``CoalesceExec`` reports ``SinglePartition``,
+    which satisfies every required distribution, so the exchange goes.
+    A checkpoint with several partitions is returned as it is: a wide
+    histogram or vocabulary keeps its parallelism and its exchange.
+    (``cache()`` keeps AQE's final layout and needs no such step.)
+    """
+    ckpt = df.localCheckpoint()
+    return ckpt.coalesce(1) if ckpt.rdd.getNumPartitions() == 1 else ckpt
+
+
 def filter_ts_range(
     df_raw: DataFrame,
     col: str,

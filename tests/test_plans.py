@@ -1060,9 +1060,10 @@ def test_gmm_fit_task_count(spark):
 
 def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
     """Every parity-EM statement — init, fit iteration, lnL — is one
-    projection chain over the prepared histogram plus one aggregate:
-    two jobs however many K values run in lockstep, and no join or
-    broadcast in any executed plan."""
+    projection chain over the prepared histogram plus one aggregate.
+    The one-partition histogram is checkpointed ``SinglePartition``, so
+    each statement is ONE job however many K values run in lockstep,
+    with no exchange, join or broadcast in any executed plan."""
     from ema_bigdata_spark import gmm_parity as G
 
     sc = spark.sparkContext
@@ -1086,9 +1087,42 @@ def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         # init + 2 iterations (+ lnL)
-        assert 0 < jobs <= 2 * (3 + want_lnl), (ks, jobs)
+        assert 0 < jobs <= 3 + want_lnl, (ks, jobs)
+    assert hist.rdd.getNumPartitions() == 1
     assert len(frames) == 3 + 4
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
         assert "BroadcastExchange" not in plan, plan
+
+
+#: jobs each iterative query runs at the Tier-1 scale, result collect
+#: included, over its one-partition checkpoint (histogram, vocabulary
+#: or bigram table).  Each statement over a checkpoint is one job; a
+#: checkpoint that loses its SinglePartition layout adds a shuffle job
+#: per statement and goes over these ceilings.
+_CHECKPOINT_JOB_CEILINGS = {
+    "gmm_fit": 19,
+    "q_gmm_bic": 11,
+    "q_kmeans": 7,
+    "q_bigram_lm": 7,
+    "q_unigram_lm": 6,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_CHECKPOINT_JOB_CEILINGS))
+def test_checkpointed_query_job_ceiling(spark, sf_dir, name):
+    from ema_bigdata_spark.sources.tables import load_table
+
+    for table in ("events", "documents"):
+        load_table(spark, sf_dir, table)  # schema inference outside the count
+    sc = spark.sparkContext
+    group = f"test_checkpoint_job_ceiling_{name}"
+    sc.setJobGroup(group, "checkpointed-query job ceiling")
+    try:
+        registry.QUERIES[name](spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= _CHECKPOINT_JOB_CEILINGS[name], (name, jobs)

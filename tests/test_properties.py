@@ -4033,22 +4033,43 @@ class TestJsonBoundary:
 class TestParityEMInvariants:
     """r6: invariants of the oracled parity EM beyond the DuckDB hash."""
 
-    def test_partitioning_independence(self, spark, sf_dir):
+    def test_partitioning_independence(self, spark, sf_dir, monkeypatch):
         """The snapped-integer sufficient-statistic sums make every
         iteration order-free, so the fit must be bit-identical under
         any histogram partitioning (the same invariant gmm.py's
-        exact limb sums guarantee for the numpy engine)."""
+        exact limb sums guarantee for the numpy engine).  The
+        histograms go through ``local_checkpoint``: the one-partition
+        one is read in place, the 13-partition one keeps its Exchange
+        — a wide histogram is never squeezed into one task."""
         from ema_bigdata_spark import gmm_parity as G
+        from ema_bigdata_spark.plans import executed_plan
+        from ema_bigdata_spark.sources.tables import local_checkpoint
 
         base = G.parity_em_spark(spark, sf_dir, 3, 4)
+        sql = spark.sql
         for parts in (1, 13):
-            hist = (G.prepare_hist(spark, sf_dir).repartition(parts)
-                    .localCheckpoint())
+            hist = local_checkpoint(
+                G.prepare_hist(spark, sf_dir).repartition(parts)
+            )
+            assert hist.rdd.getNumPartitions() == parts
+            frames = []
+
+            def capture(q, **kwargs):
+                frames.append(sql(q, **kwargs))
+                return frames[-1]
+
+            monkeypatch.setattr(spark, "sql", capture)
             got = G.parity_em_spark(spark, sf_dir, 3, 4, hist=hist)
+            monkeypatch.setattr(spark, "sql", sql)
             assert got[0] == base[0]
             # compare by IEEE bits: Python == treats -0.0 == +0.0,
             # exactly the class the driver hash distinguishes
             assert _packed(got[1]) == _packed(base[1]), parts
+            plans = [executed_plan(f) for f in frames]
+            assert len(plans) == 1 + 4
+            assert all(("Exchange" in p) == (parts > 1) for p in plans), (
+                parts, plans,
+            )
 
     def test_randomized_xmath_cross_engine(self, spark, duck):
         """Seeded random doubles through the shared exp/ln texts,

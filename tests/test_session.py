@@ -134,3 +134,20 @@ def test_session_catalog_inventory():
             drops[rel] = text.count("dropTempView")
     assert writes == []
     assert drops == _CATALOG_DROPS
+
+
+def test_local_checkpoint_inventory():
+    """``sources.tables.local_checkpoint`` is the package's one
+    ``localCheckpoint()`` call, so every checkpoint gets its
+    one-partition layout step."""
+    import inspect
+
+    from ema_bigdata_spark.sources.tables import local_checkpoint
+
+    sites = {
+        rel: text.count("localCheckpoint(")
+        for rel, text in _package_sources()
+        if "localCheckpoint(" in text
+    }
+    assert sites == {os.path.join("sources", "tables.py"): 1}
+    assert "localCheckpoint(" in inspect.getsource(local_checkpoint)

@@ -241,6 +241,66 @@ def _jobs_run(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+class TestLocalCheckpoint:
+    """local_checkpoint marks a one-partition checkpoint SinglePartition,
+    so statements over it need no Exchange, and leaves a checkpoint of
+    several partitions as it is."""
+
+    @staticmethod
+    def _frame(spark, parts):
+        return spark.range(0, 200, 1, parts).select(
+            "id", (F.col("id") % 7).alias("v")
+        )
+
+    def test_one_partition_statements_run_one_job(self, spark):
+        from pyspark.sql import Window
+
+        from ema_bigdata_spark.plans import executed_plan
+        from ema_bigdata_spark.sources.tables import local_checkpoint
+
+        ckpt = local_checkpoint(self._frame(spark, 1))
+        agg = ckpt.agg(F.sum("v").alias("s"), F.count("id").alias("n"))
+        win = ckpt.select(
+            "id", F.sum("v").over(Window.orderBy("id")).alias("cm")
+        )
+        rows, n_agg = _jobs_run(spark, "lckpt_agg", agg.collect)
+        _, n_win = _jobs_run(spark, "lckpt_win", win.collect)
+        assert [tuple(r) for r in rows] == [
+            (sum(i % 7 for i in range(200)), 200)
+        ]
+        assert (n_agg, n_win) == (1, 1)
+        for df in (agg, win):
+            assert "Exchange" not in executed_plan(df), executed_plan(df)
+
+    def test_wide_checkpoint_keeps_partitions_and_exchange(self, spark):
+        from ema_bigdata_spark.plans import executed_plan
+        from ema_bigdata_spark.sources.tables import local_checkpoint
+
+        def total(df):
+            return df.groupBy("v").agg(F.sum("id").alias("s"))
+
+        wide = local_checkpoint(self._frame(spark, 1).repartition(4))
+        narrow = local_checkpoint(self._frame(spark, 1))
+        assert wide.rdd.getNumPartitions() == 4
+        agg = total(wide)
+        assert sorted(agg.collect()) == sorted(total(narrow).collect())
+        assert "Exchange" in executed_plan(agg)
+
+    def test_runs_the_jobs_of_a_bare_checkpoint(self, spark):
+        from ema_bigdata_spark.sources.tables import local_checkpoint
+
+        for parts in (1, 3):
+            _, bare = _jobs_run(
+                spark, f"lckpt_bare_{parts}",
+                lambda: self._frame(spark, parts).localCheckpoint(),
+            )
+            _, helper = _jobs_run(
+                spark, f"lckpt_helper_{parts}",
+                lambda: local_checkpoint(self._frame(spark, parts)),
+            )
+            assert helper == bare > 0, (parts, helper, bare)
+
+
 class TestSchemaMemo:
     """load_raw infers a parquet file's schema once per path, and infers
     again when the file or the inference confs change."""
