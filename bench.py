@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-BENCH_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
+BENCH_RUNS = 2
 # 2 fixed reps + an ADAPTIVE third (below): measured same-day
 # min-of-2 swings of 2-4 s on multi-second queries under co-tenant
 # load (e.g. q_dedup_keep_best 1.26 s vs 4.37 s an hour apart, code
@@ -39,7 +39,7 @@ BENCH_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 # driver-side time budget; instead rep 3 runs only when reps 1-2
 # disagree by > BENCH_SPREAD (noise signature — steady-state pairs
 # agree within ~10%), so the typical sweep stays near min-of-2 time.
-BENCH_SPREAD = float(os.environ.get("SPARK_GRAFT_BENCH_SPREAD", "0.3"))
+BENCH_SPREAD = 0.3
 
 #: queries excluded from the timing sweep (not representative of
 #: engine throughput): none currently.
@@ -81,6 +81,18 @@ def _calibrate(spark) -> float:
 #: a mean calibration ratio above this is direct uniform-slowness
 #: evidence even when the gates never tripped
 CALIB_POISON_MAX = 1.15
+
+#: load gate: a calibration probe above GATE_MAX × pin reads hot; the
+#: pre-sweep gate re-probes up to GATE_WAITS times, GATE_SLEEP
+#: seconds apart, before starting anyway
+GATE_MAX = 1.2
+GATE_WAITS = 4
+GATE_SLEEP = 45.0
+
+#: the sweep runs in segments of SEG_SIZE entries; at most SEG_RERUNS
+#: segments whose post-probe reads hot are re-run
+SEG_SIZE = 25
+SEG_RERUNS = 3
 
 
 def bench_fixtures(spark) -> list[tuple[str, object]]:
@@ -316,14 +328,11 @@ def main() -> None:
     # reads hot, WAIT (bounded — the driver has a time budget) and
     # re-probe before starting; the full gate trace is recorded in the
     # payload either way.
-    gate_max = float(os.environ.get("SPARK_GRAFT_LOAD_GATE_MAX", "1.2"))
-    gate_waits = int(os.environ.get("SPARK_GRAFT_LOAD_GATE_WAITS", "4"))
-    gate_sleep = float(os.environ.get("SPARK_GRAFT_LOAD_GATE_SLEEP", "45"))
     gate_ratios: list[float] = []
     if calib_pin:
         gate_ratios.append(round(calib_start / calib_pin, 3))
-        while gate_ratios[-1] > gate_max and len(gate_ratios) <= gate_waits:
-            time.sleep(gate_sleep)
+        while gate_ratios[-1] > GATE_MAX and len(gate_ratios) <= GATE_WAITS:
+            time.sleep(GATE_SLEEP)
             calib_start = _calibrate(spark)
             gate_ratios.append(round(calib_start / calib_pin, 3))
         # the sweep starts NOW — re-read load so loadavg_start reflects
@@ -367,15 +376,12 @@ def main() -> None:
     # ---- segmented, gated sweep (r8, VERDICT r7 item 2): the r5/r6/r7
     # official records were each poisoned by mid-sweep co-tenant bursts
     # that the ENTRY gate cannot see.  The sweep now runs in segments
-    # of ~SPARK_GRAFT_BENCH_SEG queries with the calibration probe
+    # of SEG_SIZE queries with the calibration probe
     # re-run between segments: a segment whose POST-probe reads hot is
     # re-run once after the burst clears (bounded budget), and min()
     # merges the two passes — re-running can only improve a min, so
     # the protocol is bias-free.  One burst now costs one segment's
     # re-run (~30-60 s), not the whole record. ----
-    seg_size = int(os.environ.get("SPARK_GRAFT_BENCH_SEG", "25"))
-    seg_rerun_budget = int(os.environ.get("SPARK_GRAFT_BENCH_SEG_RERUNS",
-                                          "3"))
     seg_trace: list[dict] = []
     timings: dict[str, float] = {}
     # co-tenancy normalization (r10, VERDICT r9 item 2): the r8/r9
@@ -421,15 +427,15 @@ def main() -> None:
         """Bounded wait for the load to clear; returns the last probe."""
         r = probe_ratio()
         waits = 0
-        while r is not None and r > gate_max and waits < max_waits:
-            time.sleep(gate_sleep)
+        while r is not None and r > GATE_MAX and waits < max_waits:
+            time.sleep(GATE_SLEEP)
             waits += 1
             r = probe_ratio()
         return r
 
-    reruns_left = seg_rerun_budget
-    for i in range(0, len(worklist), seg_size):
-        seg = worklist[i:i + seg_size]
+    reruns_left = SEG_RERUNS
+    for i in range(0, len(worklist), SEG_SIZE):
+        seg = worklist[i:i + SEG_SIZE]
         before = wait_clear()
         pass_times = run_segment(seg)
         after = probe_ratio()
@@ -441,7 +447,7 @@ def main() -> None:
             "reran": False,
         }
         _merge(pass_times, _pass_ratio(before, after))
-        if (after is not None and after > gate_max and reruns_left > 0):
+        if (after is not None and after > GATE_MAX and reruns_left > 0):
             # a burst landed mid-segment: wait it out, re-run, min-merge
             reruns_left -= 1
             entry["reran"] = True
@@ -485,8 +491,8 @@ def main() -> None:
     # evidence only: the entry gate gave up hot, a segment stayed hot
     # after its re-run budget, or the mean calibration ratio exceeds
     # 1.15.  The flag count remains recorded as `n_above_pin`.
-    entry_hot = entry_gave_up_hot(gate_ratios, gate_max)
-    seg_hot = any(seg_stayed_hot(e, gate_max) for e in seg_trace)
+    entry_hot = entry_gave_up_hot(gate_ratios, GATE_MAX)
+    seg_hot = any(seg_stayed_hot(e, GATE_MAX) for e in seg_trace)
 
     # retime budget: on a clean machine every flag is a genuine
     # suspect — in-sweep numbers for sub-second queries carry 2-5×
@@ -625,11 +631,11 @@ def main() -> None:
             },
             # pre-sweep load-gate trace: probe/pin ratios measured
             # before the sweep started (first entry = initial probe;
-            # extra entries = re-probes after gate_sleep waits).  A
+            # extra entries = re-probes after GATE_SLEEP waits).  A
             # final entry above the threshold means the gate gave up
             # waiting — read the record load-normalized.
             "load_gate": {
-                "threshold": gate_max,
+                "threshold": GATE_MAX,
                 "ratios": gate_ratios,
             },
             # per-segment gate trace (r8): calibration probe before /

@@ -307,49 +307,51 @@ def q_pagerank(spark, sf_dir):
     npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.join(deg, "src").repartition(npart, "src").cache()
     nodes = e.select("src").distinct().cache()
-    n = nodes.count()
-    if n == 0:
-        # designed loud refusal: the teleport and init scalars divide
-        # by |V| — an empty purchase graph has no ranks, so refuse
-        # friendly instead of an ANSI DIVIDE_BY_ZERO
+    try:
+        n = nodes.count()
+        if n == 0:
+            # designed loud refusal: the teleport and init scalars
+            # divide by |V| — an empty purchase graph has no ranks, so
+            # refuse friendly instead of an ANSI DIVIDE_BY_ZERO
+            raise ValueError(
+                "q_pagerank: empty graph — no customer↔supplier purchase"
+                " edges; PageRank is undefined on zero nodes"
+            )
+        r0_u, t_u = (
+            spark.range(1)
+            .select(
+                F.expr(f"CAST(round(1000000.0 / {n}) AS BIGINT)"),
+                F.expr(f"CAST(round(150000.0 / {n}) AS BIGINT)"),
+            )
+            .first()
+        )
+        # seed ranks off the CACHED node table (itself derived from the
+        # cached, pre-partitioned edge table): the whole iteration loop
+        # then reads only materialized blocks — plan-tested
+        ranks = nodes.select(
+            F.col("src").alias("node"),
+            F.lit(r0_u).cast("long").alias("r_u"),
+        )
+        for _ in range(_PR_ITERS):
+            ranks = (
+                e.join(ranks, e.src == ranks.node)
+                .select("dst", F.expr(_PR_CONTRIB).alias("contrib"))
+                .groupBy("dst")
+                .agg(
+                    (F.sum("contrib") + F.lit(t_u))
+                    .cast("long")
+                    .alias("r_u")
+                )
+                .withColumnRenamed("dst", "node")
+            )
+        # materialize the final integer ranks BEFORE releasing the
+        # caches: the returned frame must not lazily recompute through
+        # unpersisted entries (3 corpus scans), and must not let a
+        # later invocation silently reuse this one's cache
+        ranks = local_checkpoint(ranks)
+    finally:
         e.unpersist()
         nodes.unpersist()
-        raise ValueError(
-            "q_pagerank: empty graph — no customer↔supplier purchase"
-            " edges; PageRank is undefined on zero nodes"
-        )
-    r0_u, t_u = (
-        spark.range(1)
-        .select(
-            F.expr(f"CAST(round(1000000.0 / {n}) AS BIGINT)"),
-            F.expr(f"CAST(round(150000.0 / {n}) AS BIGINT)"),
-        )
-        .first()
-    )
-    # seed ranks off the CACHED node table (itself derived from the
-    # cached, pre-partitioned edge table): the whole iteration loop
-    # then reads only materialized blocks — plan-tested
-    ranks = nodes.select(
-        F.col("src").alias("node"),
-        F.lit(r0_u).cast("long").alias("r_u"),
-    )
-    for _ in range(_PR_ITERS):
-        ranks = (
-            e.join(ranks, e.src == ranks.node)
-            .select("dst", F.expr(_PR_CONTRIB).alias("contrib"))
-            .groupBy("dst")
-            .agg(
-                (F.sum("contrib") + F.lit(t_u)).cast("long").alias("r_u")
-            )
-            .withColumnRenamed("dst", "node")
-        )
-    # materialize the final integer ranks BEFORE releasing the caches:
-    # the returned frame must not lazily recompute through unpersisted
-    # entries (3 corpus scans), and must not let a later invocation
-    # silently reuse this one's cache
-    ranks = local_checkpoint(ranks)
-    e.unpersist()
-    nodes.unpersist()
     return ranks.select(
         "node",
         # sign-robust odd test: truncated % yields -1 for negative

@@ -30,20 +30,15 @@ _MH_COEFFS = [(2 * j + 3, 104_729 * (j + 1) % _MH_PRIME) for j in range(16)]
 _MH_BANDS = 4
 _MH_ROWS = 4
 
-#: Cross-engine 60-bit string hash (first 15 hex digits of md5, so the
-#: value fits BIGINT with headroom for the affine minhash step).  md5
-#: is the one high-quality hash both engines expose bit-identically,
-#: which is what buys MinHash/SimHash a full-value DuckDB oracle (r2
-#: they were rows-only because xxhash64 is Spark-specific).  At 100 TB
-#: swap the template back to ``pmod(xxhash64({x}), …)`` — one line —
-#: and drop the oracle; the LSH plan shape is identical either way.
-#: MEASURED r8 (min-of-3, interleaved, sf0.1 and a 10× disjoint
-#: corpus): xxhash64 is 1.21-1.23× faster on the signature STAGE
-#: (the 16 affine min-folds dominate it, not the raw hash) and
-#: 0.99-1.08× end-to-end on minhash/simhash pairs (band shuffle +
-#: self-join dominate) — the hash swap is a real but small win, not
-#: the 2-3× an isolated hash µ-benchmark suggests.  Parity is pinned
-#: by tests/test_properties.py::test_hash60_cross_engine_parity.
+#: The one shingle/word hash: a cross-engine 60-bit string hash
+#: (first 15 hex digits of md5, so the value fits BIGINT with headroom
+#: for the affine minhash step).  md5 is the one high-quality hash
+#: both engines expose bit-identically, which is what buys
+#: MinHash/SimHash a full-value DuckDB oracle; Spark's xxhash64 has
+#: no DuckDB twin and measured only 0.99-1.08× faster end to end on
+#: the pair pipelines (band shuffle + self-join dominate, not the
+#: hash), so it would cost the oracle for no real gain.  Parity is pinned
+#: by tests/test_properties.py::test_h60_cross_engine_parity.
 _SPARK_H60 = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 _DUCK_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
@@ -53,7 +48,7 @@ _DUCK_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 #: Split ONCE in the subquery, then zip three shifted slices — the
 #: exact lesson `_shingles()`'s docstring records for Spark applies to
 #: DuckDB too: an earlier form re-ran string_split inside the
-#: per-shingle lambda, O(tokens²) per document (measured by the r8
+#: per-shingle lambda, O(tokens²) per document (measured on the
 #: hostile-docs sweep: ONE 20 k-token boilerplate doc took the oracle
 #: 190 s; the zip form is 0.05 s, byte-identical output on a hostile
 #: text battery incl. multi-space/lead/trail/unicode).
@@ -73,7 +68,7 @@ _DUCK_SHINGLES = """
 
 #: LSH band buckets larger than this are "boilerplate bands" —
 #: dropped from candidate generation on BOTH engines before the
-#: quadratic self-join (r8, VERDICT item 3; same posture as the
+#: quadratic self-join (same posture as the
 #: ``_BUCKET_CAP`` stop-shingle rule below).  A (band, signature)
 #: bucket of b documents emits b(b-1)/2 candidate pairs; without the
 #: cap one boilerplate cluster of 100 k identical pages costs 5e9
@@ -87,7 +82,7 @@ _DUCK_SHINGLES = """
 #: is observable, not silent: `lsh_band_stats` reports dropped
 #: buckets/rows, pinned by the boilerplate-corpus tests.
 #:
-#: Values are MEASURED against the driver testdata (r8): minhash
+#: Values are MEASURED against the driver testdata: minhash
 #: buckets peak at 3 (sf0.01) / 14 (sf0.1) — 128-bit band signatures
 #: scatter benign content, so 100 is a pure mega-cluster guard.
 #: SimHash's 8-bit band values give only 256 buckets per band, so
@@ -236,25 +231,12 @@ def q_dedup_exact_hash(spark, sf_dir):
 # -- q_dedup_minhash: MinHash-LSH candidate pairs (SQL-oracled) -----------
 
 
-#: production hash template (see _SPARK_H60 docstring): xxhash64 is
-#: cheaper (measured r8: 1.2× on the signature stage, ~1.0× end to
-#: end — the pipelines are shuffle-bound) but Spark-specific, so the
-#: REGISTERED queries stay on the oracle-verifiable md5 form; pass
-#: this to the library functions' ``hash60`` parameter at true scale.
-#: Exercised by tests/test_properties.py::test_minhash_production_hash_path.
-_SPARK_XXH60 = "pmod(xxhash64({x}), 1152921504606846976)"
-
-
-def _minhash_signatures(
-    docs: DataFrame, hash60: str = _SPARK_H60
-) -> DataFrame:
+def _minhash_signatures(docs: DataFrame) -> DataFrame:
     """doc_id + 16 minhash values, computed per-row with HOFs (no
-    shuffle, no Python).  The 60-bit shingle hashes (``hash60``
-    template; default md5 cross-engine — see `_SPARK_H60`; pass
-    `_SPARK_XXH60` at production scale) are reduced mod p before the
-    affine step so products stay far from BIGINT overflow (ANSI mode
-    errors on wrap)."""
-    h60 = hash60.format(x="s")
+    shuffle, no Python).  The 60-bit shingle hashes (`_SPARK_H60`) are
+    reduced mod p before the affine step so products stay far from
+    BIGINT overflow (ANSI mode errors on wrap)."""
+    h60 = _SPARK_H60.format(x="s")
     sig = docs.select(
         "doc_id",
         F.expr(
@@ -279,30 +261,24 @@ def _minhash_signatures(
 )
 def q_dedup_minhash(spark, sf_dir):
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # no trailing orderBy (r12 optimization, the r11 q_mm_* precedent):
-    # the driver hash is order-insensitive, and a global sort costs a
+    # no trailing orderBy (as in the q_mm_* queries): the driver hash
+    # is order-insensitive, and a global sort costs a
     # rangepartitioning exchange PLUS a boundary-sampling pass that
-    # re-executes the whole signature pipeline (guide §2.4: an orderBy
-    # used only to make output deterministic is an accidental shuffle)
+    # re-executes the whole signature pipeline — an orderBy used only
+    # to make output deterministic is an accidental shuffle
     return minhash_pairs(docs)
 
 
-def minhash_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    hash60: str = _SPARK_H60,
-) -> DataFrame:
+def minhash_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """MinHash-LSH near-duplicate candidate pairs (unordered) for any
     DataFrame with (``doc_id``, ``text_col``) — the library entry
     point; the declared query binds it to the driver's ``documents``
     table.  To reuse signatures already built for banding/estimation,
     build them once with :func:`_minhash_signatures` and call
     :func:`minhash_pairs_from_sigs` (separate function so a ``docs``
-    argument can never be silently ignored — ADVICE r1/r2).  Pass
-    ``hash60=_SPARK_XXH60`` at production scale (cheaper, loses the
-    DuckDB oracle)."""
+    argument can never be silently ignored)."""
     docs = docs.withColumn("shingles", _shingles(text_col))
-    return minhash_pairs_from_sigs(_minhash_signatures(docs, hash60))
+    return minhash_pairs_from_sigs(_minhash_signatures(docs))
 
 
 def _cap_buckets(
@@ -463,7 +439,6 @@ def q_dedup_simhash(spark, sf_dir):
 
 def simhash_pairs(
     docs: DataFrame,
-    hash60: str = _SPARK_H60,
     bits: int = _SH_BITS,
     n_bands: int = _SH_BANDS,
     band_cap: int = _SH_BAND_CAP,
@@ -479,12 +454,11 @@ def simhash_pairs(
     majority count is an independent scalar fold over it: 32
     allocation-free long accumulations beat one fold that rebuilds a
     32-long array per token (measured ~25% faster).
-    Word hashes default to the cross-engine md5-60bit (see
-    `_SPARK_H60`) so the signature — and therefore the pair set — has
-    a full-value DuckDB oracle; pass ``hash60=_SPARK_XXH60`` at
-    production scale (same shape, cheaper, no oracle).
+    Word hashes are the cross-engine md5-60bit (see `_SPARK_H60`), so
+    the signature — and therefore the pair set — has a full-value
+    DuckDB oracle.
 
-    Scale levers (r8): ``band_cap`` drops boilerplate band buckets
+    Scale levers: ``band_cap`` drops boilerplate band buckets
     before the quadratic self-join (``_SH_BAND_CAP`` rationale and
     measured values), and ``bits``/``n_bands`` widen the signature —
     the registered query keeps the oracle-matched 32-bit/4-band
@@ -499,7 +473,7 @@ def simhash_pairs(
         "doc_id",
         F.expr(
             "transform(split(text, ' ', -1), w -> "
-            + hash60.format(x="w")
+            + _SPARK_H60.format(x="w")
             + ")"
         ).alias("hs"),
     )
@@ -654,7 +628,7 @@ def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
 
 
 def boilerplate_corpus(spark, n_docs: int) -> DataFrame:
-    """Pathological-skew fixture (VERDICT r4 §Next-8): ``n_docs``
+    """Pathological-skew fixture: ``n_docs``
     documents that each carry 4 unique filler tokens followed by the
     SAME 10-token boilerplate sentence — so one set of hot shingles
     appears in EVERY document.  Uncapped, the shingle self-join would
@@ -731,9 +705,9 @@ def q_dedup_fuzzy(spark, sf_dir):
     The verify join brings the texts back by doc_id with the CANDIDATE
     side broadcast (it is orders of magnitude smaller than the corpus),
     so the corpus is scanned, never shuffled.  Integer edit distance is
-    engine-exact IN UTF-8 BYTES (r9, hostile-unicode sweep: Spark's
-    levenshtein counts code points, DuckDB's counts bytes, so the
-    NFC/NFD twin pair read 2 vs 3 — the declared unit is bytes via
+    engine-exact IN UTF-8 BYTES (Spark's levenshtein counts code
+    points, DuckDB's counts bytes, so the hostile-unicode NFC/NFD twin
+    pair reads 2 vs 3 — the declared unit is bytes via
     textfold.lev_bytes, and the similarity denominator is byte length
     to match; identity on ASCII corpora, hence on all driver data);
     the normalized similarity is one rounded double formula over
@@ -749,7 +723,7 @@ def q_dedup_fuzzy(spark, sf_dir):
     longest = F.greatest(
         F.octet_length(F.col("da.text")), F.octet_length(F.col("db.text"))
     )
-    # BOTH text fetches keep the candidate side broadcast (ADVICE r2):
+    # BOTH text fetches keep the candidate side broadcast:
     # the first join's result is still candidate-sized (pairs + one
     # text), so re-asserting the hint on it keeps the second join a
     # broadcast-hash too — without it static planning may pick a
@@ -809,8 +783,8 @@ def _components_driver(spark, edge_rows) -> DataFrame:
     nodes = sorted(parent)
     if len(nodes) >= 10_000:
         # ship the label table back through Arrow, not pickled tuples
-        # (guide §6: arrow.pyspark.enabled makes createDataFrame(pandas)
-        # orders faster than the row path) — at the 500 k-edge cutover
+        # (arrow.pyspark.enabled makes createDataFrame(pandas) orders
+        # faster than the row path) — at the 500 k-edge cutover
         # this table is up to ~1 M rows
         import pandas as pd
 
@@ -829,7 +803,7 @@ def chain_edges(
 ) -> DataFrame:
     """Deterministic chain-component edge fixture for pinning the
     DISTRIBUTED connected-components path past the ``_CC_DRIVER_MAX``
-    gate (VERDICT r4 §Next-4): nodes 0..n-1 in groups of ``group``,
+    gate: nodes 0..n-1 in groups of ``group``,
     edge (i, i+1) within each group.  Defaults give 510 000 edges
     (> the 500 000 cutover, so the gate flips naturally — no
     monkeypatch) over 102 000 components of diameter ``group-1`` —
@@ -935,58 +909,69 @@ def connected_components(
         .repartition(npart, "dst")
         .cache()
     )
-    labels = None
+    labels = new_labels = None
     prev_sum = None
-    for it in range(max_iter):
-        if labels is None:
-            new_labels = edges.groupBy("src").agg(
-                F.min("dst").alias("cluster_id")
-            ).withColumnRenamed("src", "doc_id")
-        else:
-            new_labels = (
-                edges.join(labels, edges.dst == labels.doc_id)
-                .groupBy("src")
-                .agg(F.min("cluster_id").alias("cluster_id"))
-                .withColumnRenamed("src", "doc_id")
+    try:
+        for it in range(max_iter):
+            if labels is None:
+                new_labels = edges.groupBy("src").agg(
+                    F.min("dst").alias("cluster_id")
+                ).withColumnRenamed("src", "doc_id")
+            else:
+                new_labels = (
+                    edges.join(labels, edges.dst == labels.doc_id)
+                    .groupBy("src")
+                    .agg(F.min("cluster_id").alias("cluster_id"))
+                    .withColumnRenamed("src", "doc_id")
+                )
+            # pointer doubling (docstring): every cluster_id IS some
+            # node's doc_id, so one self-join jumps each label to that
+            # node's (≤) label; left join + coalesce is
+            # belt-and-braces.  Deliberately NOT caching the propagate
+            # step before this self-join: exchange reuse already
+            # dedupes the shared subplan, and an explicit cache adds a
+            # materialization on top of it.
+            jump = new_labels.select(
+                F.col("doc_id").alias("j_id"),
+                F.col("cluster_id").alias("j_cl"),
             )
-        # pointer doubling (docstring): every cluster_id IS some
-        # node's doc_id, so one self-join jumps each label to that
-        # node's (≤) label; left join + coalesce is belt-and-braces.
-        # Deliberately NOT caching the propagate step before this
-        # self-join: exchange reuse already dedupes the shared subplan,
-        # and an explicit cache adds a materialization on top of it.
-        jump = new_labels.select(
-            F.col("doc_id").alias("j_id"), F.col("cluster_id").alias("j_cl")
-        )
-        new_labels = new_labels.join(
-            jump, new_labels.cluster_id == F.col("j_id"), "left"
-        ).select(
-            "doc_id",
-            F.least(
-                F.col("cluster_id"),
-                F.coalesce(F.col("j_cl"), F.col("cluster_id")),
-            ).alias("cluster_id"),
-        )
-        # periodic lineage cut (docstring); cache suffices in between
-        if (it + 1) % 3 == 0:
-            new_labels = local_checkpoint(new_labels)
-        else:
-            new_labels = new_labels.cache()
-        # exact-sum fixpoint (docstring): DECIMAL(38,0) so the sum
-        # cannot wrap even at 1e9 nodes × 1e18 ids; empty input
-        # (sum NULL) coalesces to 0 and converges on round 2
-        new_sum = (
-            new_labels.agg(
-                F.sum(F.col("cluster_id").cast("decimal(38,0)"))
-            ).collect()[0][0]
-        ) or 0
-        if labels is not None:
-            labels.unpersist()
-        labels = new_labels
-        if prev_sum is not None and new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    edges.unpersist()
+            new_labels = new_labels.join(
+                jump, new_labels.cluster_id == F.col("j_id"), "left"
+            ).select(
+                "doc_id",
+                F.least(
+                    F.col("cluster_id"),
+                    F.coalesce(F.col("j_cl"), F.col("cluster_id")),
+                ).alias("cluster_id"),
+            )
+            # periodic lineage cut (docstring); cache suffices in between
+            if (it + 1) % 3 == 0:
+                new_labels = local_checkpoint(new_labels)
+            else:
+                new_labels = new_labels.cache()
+            # exact-sum fixpoint (docstring): DECIMAL(38,0) so the sum
+            # cannot wrap even at 1e9 nodes × 1e18 ids; empty input
+            # (sum NULL) coalesces to 0 and converges on round 2
+            new_sum = (
+                new_labels.agg(
+                    F.sum(F.col("cluster_id").cast("decimal(38,0)"))
+                ).collect()[0][0]
+            ) or 0
+            if labels is not None:
+                labels.unpersist()
+            labels = new_labels
+            if prev_sum is not None and new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+    except BaseException:
+        # a failed round must not leave its label caches registered
+        # for the life of the session
+        for df in (labels, new_labels):
+            if df is not None:
+                df.unpersist()
+        raise
+    finally:
+        edges.unpersist()
     return labels
 
 
@@ -1130,20 +1115,16 @@ def q_minhash_jaccard_est(spark, sf_dir):
     pass (q_ngram_jaccard) touches documents again, while this needs
     only the 128-byte signatures already shuffled for banding.
 
-    The signature RIDES THROUGH the band explode (r3 rework, via
+    The signature RIDES THROUGH the band explode (via
     ``_banded(..., ["sig"])``), so the estimate is computed directly
-    on the band self-join's output — the previous form re-joined the
-    signature table onto each side of every pair, costing two extra
-    scans and four extra exchanges for data the join already had.
-
-    r4 A/B (VERDICT r3 watch item): both shapes retimed isolated,
-    warm, min-of-3 at sf0.1 — this form 1.24 s vs the r2
-    rejoin-signatures form 1.50-1.61 s (even with both rejoin sides
-    broadcast), so the r3 plan stands and the stale 0.751 s baseline
-    pin (a lucky co-tenant-free min-of-2) was re-pinned from the same
-    protocol.  The 4× sig-array duplication through the band explode
-    costs less than two extra signature exchanges at every scale
-    where the sketch table exceeds one partition."""
+    on the band self-join's output — re-joining the signature table
+    onto each side of every pair would cost two extra scans and four
+    extra exchanges for data the join already has.  Measured isolated,
+    warm, min-of-3 at sf0.1: this form 1.24 s vs 1.50-1.61 s for the
+    rejoin-signatures form (even with both rejoin sides broadcast).
+    The 4× sig-array duplication through the band explode costs less
+    than two extra signature exchanges at every scale where the
+    sketch table exceeds one partition."""
     docs = spread(load_table(spark, sf_dir, "documents")).withColumn(
         "shingles", _shingles()
     )

@@ -4,7 +4,9 @@ cosine top-k, LSH-bucketed ANN, and embedding-cosine near-dup pairs.
 
 All vector math is higher-order array functions (JVM-side sequential
 folds — identical op order to DuckDB's list functions, so per-row
-values match bit-for-bit before the ROUND).  No Python UDFs.
+values match bit-for-bit before the ROUND).  No Python UDFs; the one
+Python stage is the covariance's Arrow/numpy product partials, which
+sum exact integers and so need no shared op order.
 
 Scale path: brute-force top-k is the exact baseline (one narrow scan +
 TakeOrdered).  The LSH variant compresses each vector to a small
@@ -39,23 +41,22 @@ _SQL_DOT_SELF = (
     " x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')"
 )
 
-#: the family's declared vector domain (r6 zero-norm/NULL gate,
-#: widened r8 with the upper bound): Σx² ∈ (0, 1e4].  Zero-norm and
-#: NULL vectors have no cosine (r6); NaN/±Inf elements make Σx²
+#: the family's declared vector domain: Σx² ∈ (0, 1e4].  Zero-norm
+#: and NULL vectors have no cosine; NaN/±Inf elements make Σx²
 #: NaN/Inf, and both compare greater than the bound on BOTH engines,
-#: so it excludes them — before r8 a NaN element crashed the
+#: so it excludes them — an ungated NaN element crashes the
 #: fixed-point centroid/covariance snaps (ANSI CAST) and silently
-#: diverged q_ann_ivf's codebook assignment.  Why 1e4 and not lower:
+#: diverges q_ann_ivf's codebook assignment.  Why 1e4 and not lower:
 #: RAW (unnormalized) embeddings are a legitimate corpus — a d-dim
 #: Gaussian has Σx² ≈ d, so a tighter bound (an earlier draft used
 #: 100) silently drops ordinary 1024-dim raw vectors and even the
 #: tail of 64-dim ones; 1e4 admits raw corpora to ~4096 dims and
 #: every unit-normalized corpus with a 10⁴ margin.  Why not higher:
 #: Σx² ≤ 1e4 caps any per-row covariance product at Σx²/2 · 1e9 =
-#: 5e12 µ-units, keeping the stage-1 per-partition BIGINT sums
-#: (q_embed_covariance) exact up to ~1.8e6 rows/partition — 6-18×
-#: the rows a 128 MB partition holds — and the ×1e7 centroid snaps
-#: at ≤1e9/row (label sums exact to ~9e9 rows/label).  Pinned by
+#: 5e12 µ-units, keeping q_embed_covariance's per-batch int64
+#: partials exact up to ~1.8e6 rows/batch (an Arrow batch holds
+#: 10⁴), and the ×1e7 centroid snaps at ≤1e9/row (label sums exact
+#: to ~9e9 rows/label).  Pinned by
 #: tests/test_nonfinite_values.py::TestEmbeddingDomain.
 _NORM2_MAX = 10_000
 
@@ -63,9 +64,9 @@ _NORM2_MAX = 10_000
 def _sql_norm_gate(col: str = "embedding", id_col: str | None = "vec_id") -> str:
     """Oracle text of the domain gate for a given embedding column.
 
-    ``id_col`` (r9, hostile-nulls sweep): corpus rows must carry a
-    non-NULL vector id — the family keys, pairs, ranks, and
-    tie-orders rows by ``vec_id``, and a NULL id silently falls out
+    ``id_col``: corpus rows must carry a non-NULL vector id — the
+    family keys, pairs, ranks, and tie-orders rows by ``vec_id``,
+    and a NULL id silently falls out
     of the oracles' join-back shapes (covariance's positional
     self-join, topk's id tiebreak) while surviving Spark's
     projection shapes.  Pass ``id_col=None`` for probe-vector
@@ -80,13 +81,13 @@ def _sql_norm_gate(col: str = "embedding", id_col: str | None = "vec_id") -> str
 def _norm_gated(df):
     """ONE source of truth for the family's vector domain on the Spark
     side — see `_NORM2_MAX`, and `_sql_norm_gate` for why the row id
-    is part of the domain (r9).  The oracle texts spell the same gate
+    is part of the domain.  The oracle texts spell the same gate
     via :func:`_sql_norm_gate`.
 
-    The ``vec_id`` clause applies only when the frame HAS that column
-    (ADVICE r9): library entry points such as
-    :func:`embed_covariance_arrow` accept any (…, ``embedding``)
-    frame, and an id-less frame has no row-identity requirement —
+    The ``vec_id`` clause applies only when the frame HAS that
+    column: library entry points such as :func:`embed_covariance`
+    accept any (…, ``embedding``) frame, and an id-less frame has no
+    row-identity requirement —
     matching ``_sql_norm_gate(id_col=None)``.  Every registered
     query's operand carries ``vec_id``, so this is identity for the
     oracle contract."""
@@ -137,8 +138,8 @@ def _probe_vector(spark, sf_dir) -> list[float]:
         raise ValueError(
             f"probe vec_id={_PROBE_ID} not found in {sf_dir}/embeddings"
         )
-    # same loud refusal for a probe outside the family's vector domain
-    # (r6 review): a NULL or zero-norm probe has no cosine — without
+    # same loud refusal for a probe outside the family's vector
+    # domain: a NULL or zero-norm probe has no cosine — without
     # this, ANSI Spark dies on the folded 0.0 denominator while the
     # oracles return NaN rows (engine-divergent)
     if rows[0].embedding is None:
@@ -209,8 +210,7 @@ def cosine_topk(emb, probe: list[float], k: int = _TOPK):
     driver merges k·partitions rows."""
     # cosine is undefined for zero-norm or NULL vectors — both engines
     # exclude them (NULL dot-self fails the > 0 gate too); under ANSI
-    # Spark an ungated zero norm is a DIVIDE_BY_ZERO crash (r6,
-    # adversarial-embeddings probe)
+    # Spark an ungated zero norm is a DIVIDE_BY_ZERO crash
     return (
         _norm_gated(emb)
         .select(
@@ -333,14 +333,14 @@ def q_ann_lsh(spark, sf_dir):
 # -- q_ann_ivf: inverted-file (IVF) ANN (exact+recall oracled) ------------
 
 _IVF_LISTS = 8
-#: 3 of 8 lists probed (r9, hostile-extremes sweep — was 2): recall
-#: sat ON the declared floor (3/10) at tiny corpus scale, where any
-#: corpus perturbation reshuffles the hash-ordered training sample
-#: and can push one true-neighbor-rich list to probe rank 3 (the
-#: planted duplicate cluster did exactly that: exact top-10 had four
-#: ids in the third-ranked list, recall 2 < floor).  nprobe=3 still
-#: prunes 5/8 of all exact-distance work and restores margin;
-#: measured recall after the bump: pristine sf0.001 5/10 and
+#: 3 of 8 lists probed, not 2: with 2, recall sits ON the declared
+#: floor (3/10) at tiny corpus scale, where any corpus perturbation
+#: reshuffles the hash-ordered training sample and can push one
+#: true-neighbor-rich list to probe rank 3 (the hostile-extremes
+#: duplicate cluster does exactly that: exact top-10 has four ids in
+#: the third-ranked list, recall 2 < floor).  nprobe=3 still prunes
+#: 5/8 of all exact-distance work and restores margin; measured
+#: recall at nprobe=3: pristine sf0.001 5/10 and
 #: sf0.01 6/10, extremes fixture 6/10, nulls fixture 5/10.
 _IVF_NPROBE = 3
 
@@ -417,7 +417,7 @@ def _ivf_centroids(spark, sf_dir) -> list[list[float]]:
         return _IVF_CACHE[sf_dir]
     import numpy as np
 
-    # domain gate, not just IS NOT NULL (r8, _NORM2_MAX): a NaN/Inf
+    # domain gate, not just IS NOT NULL (_NORM2_MAX): a NaN/Inf
     # element in the training sample silently poisons a numpy centroid
     # mean, diverging every downstream assignment (measured: q_ann_ivf
     # value mismatch on a NaN-vector fixture)
@@ -429,7 +429,7 @@ def _ivf_centroids(spark, sf_dir) -> list[list[float]]:
         .collect()
     )
     X = np.array([r.embedding for r in rows], dtype=np.float64)
-    # DISTINCT seeds (r9, hostile-extremes sweep): a duplicate-heavy
+    # DISTINCT seeds: a duplicate-heavy
     # corpus (boilerplate embeddings) can put identical vectors among
     # the first _IVF_LISTS sample rows — duplicate seeds collapse two
     # lists into one (argmin ties take the lowest index, the higher
@@ -483,7 +483,7 @@ def ann_ivf_topk(spark, sf_dir):
         range(1, _IVF_LISTS + 1), key=lambda i: (pdists[i - 1], i)
     )[:_IVF_NPROBE]
 
-    # cosine rerank is undefined for zero-norm / NULL vectors (r6)
+    # cosine rerank is undefined for zero-norm / NULL vectors
     emb = _norm_gated(load_table(spark, sf_dir, "embeddings"))
     cand = _with_assignment(spark, emb, cents).where(
         F.col("ivf_list").isin(probe_lists)
@@ -733,10 +733,10 @@ def q_embed_quantize(spark, sf_dir):
         F.size("q8").cast("long").alias("dim"),
         # + 0.0 = the signed-zero guard: DuckDB abs(-0.0) returns
         # -0.0 (Spark returns +0.0), so an all-negative-zero vector
-        # would differ by sign bit without it (r6 adversarial probe)
+        # would differ by sign bit without it
         (F.round(F.col("scale"), 6) + F.lit(0.0)).alias("scale"),
         (F.round(F.expr(err), 6) + F.lit(0.0)).alias("max_abs_err"),
-    )  # no trailing orderBy (r12, the r11 q_mm_* precedent): the
+    )  # no trailing orderBy (as in the q_mm_* queries): the
     # driver hash is order-free, and the sort's range-boundary
     # sampling pass re-ran the Arrow quantization stage end to end
 
@@ -754,7 +754,7 @@ def _centroid_sums(emb):
     ONE implementation of the centroid statistic, shared by
     q_embed_centroid (scalarized report) and semdedup's
     `_centroid_array` (array form); a fixed-point or rounding change
-    lands in both consumers or neither (review-r4 finding)."""
+    lands in both consumers or neither."""
     sums = [
         F.sum(
             F.round(
@@ -765,7 +765,7 @@ def _centroid_sums(emb):
         ).alias(f"_s{i}")
         for i in range(_DIM)
     ]
-    # domain gate (r8, _NORM2_MAX): a NaN/Inf element would hard-error
+    # domain gate (_NORM2_MAX): a NaN/Inf element would hard-error
     # the ANSI fixed-point snap above; out-of-domain vectors carry no
     # centroid information and are excluded like NULLs on BOTH engines
     return _norm_gated(emb).groupBy(
@@ -803,7 +803,7 @@ def q_embed_centroid(spark, sf_dir):
     are exact ×1e7 fixed-point (float sums would be partition-order-
     dependent); the output centroid is scalarized '|'-joined rounded
     components, hashable by the driver."""
-    # NO spread() by measurement (r7 A/B, min-of-3 at sf0.1: identity
+    # NO spread() by measurement (A/B min-of-3 at sf0.1: identity
     # 1.61 s vs spread 1.89 s): the 64-column codegen sums are cheaper
     # than round-robin-exchanging the full vectors — unlike the
     # Python-codec/explode stages where spread() won (q_mm_png,
@@ -1110,7 +1110,7 @@ def _pq_codebooks(spark, sf_dir) -> list[list[list[float]]]:
         return _PQ_CACHE[sf_dir]
     import numpy as np
 
-    # domain gate, not just IS NOT NULL (r8, _NORM2_MAX): a NaN/Inf
+    # domain gate, not just IS NOT NULL (_NORM2_MAX): a NaN/Inf
     # element in the training sample silently poisons a numpy centroid
     # mean, diverging every downstream assignment (measured: q_ann_ivf
     # value mismatch on a NaN-vector fixture)
@@ -1271,7 +1271,7 @@ def q_ann_pq(spark, sf_dir):
     TRUE.  Driver-mandated surface (SURVEY §2.4)."""
     emb = load_table(spark, sf_dir, "embeddings").where(
         # L2 of a NULL embedding is NULL, and the engines order NULLs
-        # oppositely at the top-k boundary (r6 adversarial probe)
+        # oppositely at the top-k boundary
         F.col("embedding").isNotNull()
     )
     probe = _probe_vector(spark, sf_dir)
@@ -1308,24 +1308,6 @@ def q_ann_pq(spark, sf_dir):
 
 # -- q_embed_covariance: exact feature covariance (the PCA reduce) --------
 
-#: per-row upper-tri outer products, snapped to integer 1e-9 units
-#: BEFORE the corpus sum (float→double widening is exact and the
-#: double product is the same IEEE op both engines, so the snapped
-#: integers agree bit-for-bit; BIGINT sums are order-free).  Emitted
-#: as a FLAT BIGINT array — row-major upper-tri enumeration (i outer,
-#: j = i..d−1 inner), so the posexplode ordinal IS the cell id; the
-#: (i, j) labels rejoin from a broadcast 2 080-row dim AFTER the
-#: aggregate.  Measured 25% faster than exploding (i, j, p) structs
-#: (3.39 → 2.61 s at sf0.1: two-thirds less Generate output width).
-#: ``slice`` is 1-based so position i+1 IS element index i — the
-#: diagonal is included.
-_OUTER_U = (
-    "flatten(transform(embedding, (xi, i) ->"
-    " transform(slice(embedding, i + 1, size(embedding) - i), (xj, j) ->"
-    " CAST(round(CAST(xi AS DOUBLE) * CAST(xj AS DOUBLE)"
-    " * 1000000000, 0) AS BIGINT))))"
-)
-
 #: per-row single elements in integer 1e-6 units (for the mean vector)
 _ELEM_U = (
     "transform(embedding, (x, i) -> struct(CAST(i AS BIGINT) AS i,"
@@ -1335,8 +1317,8 @@ _ELEM_U = (
 #: shared covariance text over the exact integers:
 #: cov = E[xy] − E[x]E[y], every double derived from the same BIGINTs
 #: by the same expression → bit-equal before round(6).  The trailing
-#: `+ CAST(0 AS DOUBLE)` is the signed-zero guard (r5 official red
-#: row, cell i=5 j=9): for cells that round to zero, Spark's
+#: `+ CAST(0 AS DOUBLE)` is the signed-zero guard: for cells that
+#: round to zero (cell i=5 j=9 of the driver corpus), Spark's
 #: BigDecimal HALF_UP round emits +0.0 while DuckDB's round keeps
 #: -0.0 — equal values, different bits, and the driver hash is
 #: bit-sensitive.  IEEE `-0.0 + 0.0 = +0.0` canonicalizes both
@@ -1386,107 +1368,66 @@ def q_embed_covariance(spark, sf_dir):
     PCA / whitening: everything after this (eigendecomposition of a
     64×64 matrix) is driver-side numpy by design, exactly how Spark
     MLlib's own PCA stages it (RowMatrix.computeCovariance → local
-    Breeze eig).
+    Breeze eig).  The query body is :func:`embed_covariance` bound to
+    the driver's ``embeddings`` table.
 
     Spark-first plan with NO self-join and NO d×-row shuffle: the
-    per-row upper-tri product stage feeds a MAP-SIDE-combined hash
-    aggregate — the exchange carries at most 2 080 keys per partition
-    regardless of row count; the (i, j) labels rejoin from a broadcast
-    dim built join-free (range × sequence explode) AFTER the aggregate
-    (measured 25% faster than the struct form); the mean vector rides
-    the same pattern over single elements (64 keys).  Per-element
+    per-row upper-tri products are summed per Arrow batch
+    (:func:`_cov_sxy_arrow`), so the exchange carries at most 2 080
+    partial sums per batch regardless of row count; the (i, j) labels
+    rejoin from a broadcast dim built join-free (range × sequence
+    explode) AFTER the aggregate; the mean vector is a map-side
+    combined aggregate over single elements (64 keys).  Per-element
     snapping to integer units before the sum makes every cell
     bit-exact cross-engine AND order-free, so the plan is
     shuffle-minimal without a determinism tax; network is
-    O(d² × partitions).
-
-    The product stage AUTO-SWITCHES on corpus size (r9, VERDICT r8
-    item 4 — both producers feed the identical :func:`_cov_assemble`
-    back half and are proven bit-identical by
-    test_covariance_arrow_path_bit_identical): corpora of
-    ≥ :data:`_COV_ARROW_MIN_ROWS` rows take the Arrow/numpy partials
-    (:func:`_cov_sxy_arrow`), smaller ones the zero-Python JVM-HOF
-    form (:func:`_cov_sxy_hof`).  Threshold from an r9 size sweep
-    (64/128/256/512/500/2k/4k/10k/20k/40k rows, warm min-of-4 plus
-    fresh-session cold runs, ROUND9_NOTES): Arrow wins every size
-    ≥ 500 (sf0.1: 6.6 → 2.6 s warm, 13.9 → 11.6 s cold; 40 k rows:
-    38 → 5.7 s, and the gap grows linearly with rows since the HOF
-    interpreter costs ~330 ns/product) and TIES within noise at
-    64-512, where both are overhead-bound — so the threshold only
-    decides who handles degenerate corpora, and the no-Python path's
-    simpler failure surface wins those.  The r8 claim that the HOF
-    beat Arrow cold at driver scale did NOT reproduce and is
-    retracted by this sweep.  The oracle replays via a positional
-    self-join — same integers, different (test-scale-only) plan.
+    O(d² × batches).  The oracle replays via a positional self-join —
+    same integers, different (test-scale-only) plan.
     Driver-mandated surface (SURVEY §2.4); no Main.scala
     counterpart."""
-    # domain gate (r8, _NORM2_MAX): a NaN/Inf element would hard-error
-    # the ANSI per-row product snaps; out-of-domain vectors are
-    # excluded like NULLs on BOTH engines (the oracle `x` CTE carries
-    # the same predicate).  The ragged-width refusal below still runs
-    # on the gated frame — wrong-width FINITE rows stay loud.
-    emb = _norm_gated(load_table(spark, sf_dir, "embeddings"))
-    d, n = _cov_stats(emb)
-    if n >= _COV_ARROW_MIN_ROWS:
-        sxy_pos = _cov_sxy_arrow(emb)
-    else:
-        sxy_pos = _cov_sxy_hof(emb)
-    return _cov_assemble(spark, emb, d, sxy_pos)
+    return embed_covariance(spark, load_table(spark, sf_dir, "embeddings"))
 
 
-#: producer switch point for q_embed_covariance — see its docstring
-#: for the r9 measurement that set it
-_COV_ARROW_MIN_ROWS = 256
+def embed_covariance(spark, emb):
+    """Exact feature covariance (i, j, cov) over any (…,
+    ``embedding``) frame — the library entry point of
+    ``q_embed_covariance``.
 
-
-def _cov_sxy_hof(emb):
-    """JVM-HOF product partials: nested array ``transform`` emits each
-    row's 2 080 upper-tri products as a flat BIGINT array whose
-    posexplode ordinal is the cell id — zero Python, ~330 ns/product
-    in Spark's lambda interpreter.
-
-    Overflow-safe two-stage sum (parity.py headroom rule): p_u reaches
-    ~1e11/row for |x|~10, so one flat BIGINT sum would wrap past ~1e8
-    rows.  Stage 1 long-sums per (scan partition, cell) — exact while
-    a single partition holds < 2^63/max(p_u) rows (~1e7 at 128 MB
-    partitions, orders of magnitude of headroom) — and stage 2
-    DECIMAL(38,0)-sums the tiny per-partition partials, so the decimal
-    arithmetic never touches the hot path (measured:
-    decimal-everywhere costs +25%, this form is free; DuckDB's BIGINT
-    sums widen to HUGEINT natively, and both engines widen to the
-    identical double inside _COV_EXPR)."""
-    return (
-        emb.select(
-            F.spark_partition_id().alias("pid"),
-            F.posexplode(F.expr(_OUTER_U)).alias("pos", "p_u"),
-        )
-        .groupBy("pid", "pos")
-        .agg(F.sum("p_u").alias("ps"))
-        .groupBy("pos")
-        .agg(F.sum(F.col("ps").cast("decimal(38,0)")).alias("sxy"))
-    )
+    Rows outside the family's vector domain (:data:`_NORM2_MAX`) are
+    excluded like NULLs on both engines — the oracle ``x`` CTE
+    carries the same predicate — because a NaN/Inf element would
+    hard-error the ANSI per-row product snaps.  The ragged-width
+    refusal runs on the gated frame, so wrong-width FINITE rows stay
+    loud."""
+    emb = _norm_gated(emb)
+    return _cov_assemble(spark, emb, _cov_dim(emb), _cov_sxy_arrow(emb))
 
 
 def _cov_sxy_arrow(emb):
-    """Arrow/numpy product partials: per-batch int64 sums ARE the
-    stage-1 combine (headroom |p| ≤ 5e12 × 10⁴ rows/batch ≪ 2⁶³); the
-    same stage-2 DECIMAL(38,0) reduce as the HOF form.
+    """Arrow/numpy product partials: each batch sums its rows' 2 080
+    upper-tri products (snapped to integer 1e-9 units) in int64 — the
+    stage-1 combine, headroom |p| ≤ 5e12 × 10⁴ rows/batch ≪ 2⁶³ — and
+    a DECIMAL(38,0) reduce sums the per-batch partials, so the decimal
+    arithmetic never touches the per-row work.  DuckDB's BIGINT sums
+    widen to HUGEINT natively, and both engines widen to the identical
+    double inside :data:`_COV_EXPR`.  numpy does the products because
+    the JVM lambda interpreter costs ~330 ns per product, and there
+    are d²/2 of them per row.
 
     The batch fn is a ``<locals>`` closure ON PURPOSE (the
     multimodal.py module-docstring rule): cloudpickle serializes
     locals BY VALUE, while a module-level fn ships as an import
     reference that a worker under a neutral-sys.path driver (the
     external driver imports ``__spark_entry__`` by path) cannot
-    resolve — the r8 module-level form died with ModuleNotFoundError
-    the first time the REGISTERED query took this path (r9).
+    resolve, and dies with ModuleNotFoundError.
 
     The snap reproduces Spark's ``round(x, 0)`` (BigDecimal HALF_UP)
     EXACTLY: ``a = |p|`` and ``a - floor(a)`` are both exact doubles
     for |p| < 2⁵³, so ``floor(|p|) + (frac ≥ 0.5)`` with the sign
     reapplied is the true round-half-away-from-zero of the double's
     exact value — no ``p + 0.5`` representability caveat, no numpy
-    half-even.  Verified bit-identical to the HOF snap over the
-    driver corpus (1.2e7 products) and a randomized ±9 battery."""
+    half-even.  The oracle's ``round(a.xd * b.xd * 1000000000, 0)`` is
+    the same snap, so every cell sum agrees bit-for-bit."""
 
     def partials(it):
         import numpy as np
@@ -1518,39 +1459,30 @@ def _cov_sxy_arrow(emb):
     )
 
 
-def _cov_stats(emb) -> tuple[int, int]:
-    """Corpus-wide (embedding width, row count) with a loud
-    ragged-width refusal — ONE tiny aggregate job.
+def _cov_dim(emb) -> int:
+    """Corpus-wide embedding width with a loud ragged-width refusal —
+    ONE tiny aggregate job.
 
     Dimension discovery MUST be corpus-wide, not head(1): a single
-    off-width vector would otherwise emit flatten ordinals laid out
-    for the wrong triangle and sum into wrong cells with no error.
-    The row count rides the same aggregate for free — it drives the
-    producer auto-switch (:data:`_COV_ARROW_MIN_ROWS`)."""
+    off-width vector would otherwise emit partials laid out for the
+    wrong triangle and sum into wrong cells with no error."""
     bounds = emb.agg(
         F.min(F.size("embedding")).alias("mn"),
         F.max(F.size("embedding")).alias("mx"),
-        F.count(F.lit(1)).alias("n"),
     ).first()
     d = bounds["mn"] if bounds["mn"] is not None else 0
     if d != (bounds["mx"] if bounds["mx"] is not None else 0):
         raise ValueError(
             f"ragged embedding widths: {bounds['mn']}..{bounds['mx']}"
         )
-    return d, int(bounds["n"])
-
-
-def _cov_width(emb) -> int:
-    """See :func:`_cov_stats` (kept for callers that only need d)."""
-    return _cov_stats(emb)[0]
+    return d
 
 
 def _cov_assemble(spark, emb, d: int, sxy_pos):
-    """Shared back half of both covariance paths: label the flat
-    upper-tri cell sums (``pos``, ``sxy`` DECIMAL) with (i, j) from a
-    broadcast dim, join the exact mean sums, and evaluate
-    :data:`_COV_EXPR` — identical integers in, identical doubles out,
-    whichever producer made the partials."""
+    """Back half of the covariance: label the flat upper-tri cell sums
+    (``pos``, ``sxy`` DECIMAL) with (i, j) from a broadcast dim, join
+    the exact mean sums, and evaluate :data:`_COV_EXPR` — the same
+    integers the oracle sums, so the same doubles come out."""
     # row-major upper-tri cell ids: pos(i, j) = i·d − i(i−1)/2 + (j−i)
     cells = (
         spark.range(d)
@@ -1591,19 +1523,3 @@ def _cov_assemble(spark, emb, d: int, sxy_pos):
         .join(F.broadcast(mj), sxy.j == mj.mj_i)
         .select("i", "j", F.expr(_COV_EXPR).alias("cov"))
     )
-
-
-def embed_covariance_arrow(spark, emb):
-    """Covariance over any (…, ``embedding``) frame, FORCED onto the
-    Arrow/numpy product stage — bit-identical output to
-    ``q_embed_covariance`` (which since r9 auto-switches to this same
-    producer at ≥ :data:`_COV_ARROW_MIN_ROWS` rows; the size sweep
-    behind the threshold lives in its docstring).  Kept as a library
-    entry point for frames whose row count the caller already knows
-    to be large — it skips nothing but the switch.  Same domain gate,
-    same ragged refusal, same two-stage exact-integer reduce
-    (per-batch int64 partials here ARE the stage-1 combine; headroom
-    |p|≤5e12 × 10⁴ rows/batch ≪ 2⁶³), same assembly."""
-    emb = _norm_gated(emb)
-    d = _cov_width(emb)
-    return _cov_assemble(spark, emb, d, _cov_sxy_arrow(emb))

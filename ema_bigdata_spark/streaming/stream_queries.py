@@ -59,37 +59,40 @@ def _state_partitions(spark, n: int | None = None):
     (``SPARK_GRAFT_STREAM_PARTITIONS``; a production deploy sizes it
     to sustained keys/sec once — it cannot change after the
     checkpoint is created)."""
-    n = n or int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
+    if n is None:
+        raw = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
+        try:
+            n = int(raw)
+        except ValueError:
+            n = 0
+        # validated before any conf.set, so a bad value leaves the
+        # session untouched
+        if n < 1:
+            raise ValueError(
+                "SPARK_GRAFT_STREAM_PARTITIONS must be a positive integer,"
+                f" got {raw!r}"
+            )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
-    # r13 (guide §1 — measured): after the data batch drains, Spark
-    # schedules one extra NO-DATA micro-batch purely to advance the
-    # watermark and evict state; it emits nothing for every query in
-    # this module (complete/update modes re-emit state, and the
-    # append-mode shapes — dropDuplicates, stream-stream inner join —
-    # emit on arrival, never on watermark advance), yet it re-pays
-    # query planning plus a state-store commit per partition per store
-    # (~0.9 s of s_stream_join's 2.8 s: 4 stores × 4 partitions).
-    # Disabled for these drains — A/B'd rows-identical across all nine
-    # queries, join 1.33× faster interleaved.  A deployment whose sink
+    # After the data batch drains, Spark schedules one extra NO-DATA
+    # micro-batch purely to advance the watermark and evict state; it
+    # emits nothing for every query in this module (complete/update
+    # modes re-emit state, and the append-mode shapes — dropDuplicates,
+    # stream-stream inner join — emit on arrival, never on watermark
+    # advance), yet it re-pays query planning plus a state-store commit
+    # per partition per store (measured ~0.9 s of s_stream_join's
+    # 2.8 s: 4 stores × 4 partitions).  So these drains skip it: rows
+    # are identical across all nine queries.  A deployment whose sink
     # DOES emit on watermark advance (append-mode windowed aggregation)
     # or that needs idle-time state eviction should leave the default
     # on — which is why this rides the per-query context, not the
-    # session builder.  Env-overridable like the partition count.
-    # Validated before any conf.set, so a bad value leaves the session
-    # untouched.
-    nodata = os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCHES", "false")
-    if nodata.lower() not in ("true", "false"):
-        raise ValueError(
-            "SPARK_GRAFT_STREAM_NODATA_BATCHES must be true or false, "
-            f"got {nodata!r}"
-        )
+    # session builder.
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
         spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", nodata.lower()
+            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
         )
         yield
     finally:
@@ -171,7 +174,7 @@ def _kafka_parse(df, schema):
 
 #: declared Kafka wire schema per table — the producer contract, NOT
 #: derived from any local file (a broker deploy has no testdata
-#: parquet to sniff; review-r4 finding).  The file source still sniffs
+#: parquet to sniff).  The file source still sniffs
 #: its own parquet, which may legitimately differ (legacy raw-nanos
 #: LONG ts) — downstream code is dtype-agnostic via event_instant().
 _WIRE_SCHEMAS = {
@@ -183,12 +186,11 @@ _WIRE_SCHEMAS = {
 
 
 def stream_source(spark, sf_dir: str, table: str = "events"):
-    """The physical-source seam for every streaming query (VERDICT r3
-    §Next-5): queries declare WHAT they consume (a typed ``events``
-    stream); this function decides WHERE it comes from.  No query
-    touches ``sf_dir`` except through here (the r4 review removed the
-    per-query ``load_raw`` schema sniffs), so retargeting really is
-    config-only.
+    """The physical-source seam for every streaming query: queries
+    declare WHAT they consume (a typed ``events`` stream); this
+    function decides WHERE it comes from.  No query touches
+    ``sf_dir`` or sniffs a schema except through here, so retargeting
+    really is config-only.
 
     Default is the file source over the testdata parquet (one file →
     one micro-batch, which is what makes the queries SQL-oracle-able).
@@ -213,10 +215,10 @@ def stream_source(spark, sf_dir: str, table: str = "events"):
             .option("pathGlobFilter", f"{table}.parquet")
             .parquet(sf_dir)
         )
-    # event-time domain gate (r8, tables.TS_DOMAIN_*): applied AT THE
+    # event-time domain gate (tables.TS_DOMAIN_*): applied AT THE
     # SEAM so every streaming query inherits it — a NULL / year-0001 /
-    # year-9999 event time crashed the stateful cores or emitted
-    # window bounds outside what the driver's collect() can represent.
+    # year-9999 event time crashes the stateful cores or emits window
+    # bounds outside what the driver's collect() can represent.
     # Every oracle mirrors it via sql_ts_domain().
     if "ts" in stream.columns:
         stream = stream.where(ts_domain_gate(stream))
@@ -594,13 +596,12 @@ def s_stream_upsert(spark, sf_dir):
 #: to exact integers on ×100 fixed-point (cents):
 #: (n·vu − sx)² > 9·(n·sxx − sx²).  The Python state fn computes this
 #: in arbitrary-precision int and the oracle in HUGEINT, so the gate
-#: itself never wraps; what CAN wrap is the PERSISTED Σvu² — r8
-#: stored it in a BIGINT state field, which overflows once
-#: Σvu² > 9.2e18 (a single |value| ≥ ~3.04e7 row, or a long stream of
-#: moderate ones — ADVICE r8: an in-domain corrupt double hard-killed
-#: the whole stream, the exact failure the r8 gate claimed to
-#: remove).  r9: sx/sxx persist as DECIMAL(38,0) (round-trips the
-#: state store exactly — probed), the oracle's window sums run in
+#: itself never wraps; what CAN wrap is the PERSISTED Σvu² — a
+#: BIGINT state field overflows once Σvu² > 9.2e18 (a single
+#: |value| ≥ ~3.04e7 row, or a long stream of moderate ones), and an
+#: in-domain corrupt double would hard-kill the whole stream.  So
+#: sx/sxx persist as DECIMAL(38,0) (round-trips the state store
+#: exactly — probed), the oracle's window sums run in
 #: HUGEINT, and the row gate is the value-domain |value| ≤
 #: _ANOM_DOMAIN shared with q_value_outliers.  Exactness headroom at
 #: the bound: vu ≤ 1e11, Σvu² ≤ n·1e22, and the gate's n·sxx ≤ n²·1e22
@@ -704,14 +705,14 @@ def s_stream_anomaly(spark, sf_dir):
     evicting keys idle past the watermark.  Driver-mandated surface
     (SURVEY §2.4); no Main.scala counterpart."""
     src = stream_source(spark, sf_dir)
-    # value-domain gate, not just IS NOT NULL (r8 posture, r9 bound —
-    # _ANOM_DOMAIN note): a NaN/Inf would hard-error the snap, and the
-    # old cast-safety bound (9.2e16) let an in-domain value overflow
-    # the accumulated Σvu² and kill the STREAM, state and all;
-    # out-of-domain rows are excluded like NULLs.  event_id gate (r9,
-    # hostile-nulls sweep): the state fn totally orders each batch by
-    # (ts_us, event_id) and alerts BY event id — a NULL id has no
-    # deterministic position (and int(None) hard-killed the stream)
+    # value-domain gate, not just IS NOT NULL (_ANOM_DOMAIN note): a
+    # NaN/Inf would hard-error the snap, and a looser cast-safety
+    # bound (9.2e16) lets an in-domain value overflow the accumulated
+    # Σvu² and kill the STREAM, state and all; out-of-domain rows are
+    # excluded like NULLs.  event_id gate: the state fn totally orders
+    # each batch by (ts_us, event_id) and alerts BY event id — a NULL
+    # id has no deterministic position (and int(None) would hard-kill
+    # the stream)
     stream = src.where(
         (F.abs(F.col("value")) <= F.lit(_ANOM_DOMAIN))
         & F.col("event_id").isNotNull()

@@ -10,6 +10,7 @@ Pure functions — no SparkSession.
 """
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -165,3 +166,22 @@ class TestBenchFold:
         assert rec["n_sweeps"] == 2
         # provenance: each input's load evidence is carried
         assert [i["load_poisoned"] for i in rec["inputs"]] == [True, False]
+
+
+#: the ``SPARK_GRAFT_*`` environment variables bench.py reads — its
+#: deployment settings: data dir, core count and output path.  The
+#: protocol's repetition, spread, load-gate and segment values are
+#: module constants; a new env knob must be added here, so it shows up
+#: in review.
+BENCH_ENV_KNOBS = {
+    "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_BENCH_OUT",
+}
+
+
+def test_bench_env_knob_inventory():
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "bench.py"), encoding="utf-8") as f:
+        found = set(re.findall(r"SPARK_GRAFT_[A-Z_]+", f.read()))
+    assert found == BENCH_ENV_KNOBS

@@ -533,11 +533,10 @@ def test_global_plan_invariants_every_batch_query(spark, sf_dir):
     arrow_ok = {
         "q_embed_quantize", "q_mm_features", "q_mm_frames", "q_mm_png",
         "q_mm_histogram",
-        # r9: the covariance producer auto-switch selects the Arrow
-        # partials at ≥ _COV_ARROW_MIN_ROWS (sf0.01's 500 rows
-        # qualifies) — the deliberate scale path, measured 3-4× faster
-        # at every size ≥ 500 (similarity.py docstring);
-        # test_covariance_auto_switch_by_corpus_size pins BOTH sides
+        # the covariance's one product stage is Arrow/numpy partials
+        # (MapInPandas, not a row-wise UDF) at every corpus size;
+        # test_covariance_arrow_path_bit_identical pins its oracle
+        # parity
         "q_embed_covariance",
     }
     offenders = []
@@ -813,40 +812,6 @@ def test_tpch_q22_exact_integer_gate(spark, sf_dir):
     assert "LeftAnti" in plan
     assert "o_orderdate" in plan  # pushed date filter on the anti side
     assert "CartesianProduct" not in plan
-
-
-def test_covariance_auto_switch_by_corpus_size(spark, tmp_path):
-    """r9 (VERDICT r8 item 4): q_embed_covariance must select the
-    Arrow/numpy product stage at ≥ _COV_ARROW_MIN_ROWS rows and the
-    zero-Python JVM-HOF stage below it — asserted on the PHYSICAL
-    plan (MapInPandas / posexplode Generate nodes), with both sides'
-    oracle parity covered by test_covariance_arrow_path_bit_identical
-    and the registered-query compare at sf0.01 (500 rows → Arrow)."""
-    from pyspark.sql import functions as F
-
-    from ema_bigdata_spark import registry
-    from ema_bigdata_spark.operators.similarity import _COV_ARROW_MIN_ROWS
-    from ema_bigdata_spark.plans import executed_plan
-
-    registry.load_all()
-    base = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).limit(_COV_ARROW_MIN_ROWS)
-    for n, expect_arrow in (
-        (_COV_ARROW_MIN_ROWS, True),
-        (_COV_ARROW_MIN_ROWS - 1, False),
-    ):
-        d = str(tmp_path / f"cov{n}")
-        base.limit(n).coalesce(1).write.mode("overwrite").parquet(
-            f"{d}/embeddings.parquet"
-        )
-        plan = executed_plan(
-            registry.QUERIES["q_embed_covariance"](spark, d)
-        )
-        has_arrow = "MapInPandas" in plan
-        assert has_arrow == expect_arrow, (n, plan[:500])
-        if not expect_arrow:
-            assert "Generate" in plan  # the posexplode HOF stage
 
 
 def test_day_bucket_sessionize_plan_shape(spark, sf_dir):

@@ -22,7 +22,7 @@ def half_up(x: float, nd: int = 0) -> float:
     return math.copysign(math.floor(abs(x) * m + 0.5), x) / m
 
 
-def test_hash60_cross_engine_parity(spark):
+def test_h60_cross_engine_parity(spark):
     """The md5-60bit hash template that buys the MinHash/SimHash family
     its full-value oracle must agree bit-for-bit between Spark and
     DuckDB on representative strings (ascii, multi-word, empty,
@@ -606,6 +606,42 @@ def test_connected_components_refuses_no_rounds(spark, monkeypatch, max_iter):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _failing_checkpoint(df):
+    raise RuntimeError("injected checkpoint failure")
+
+
+def test_connected_components_failure_releases_caches(spark, monkeypatch):
+    """A distributed CC whose lineage checkpoint raises mid-loop must
+    leave no edge or label cache registered in the session."""
+    from ema_bigdata_spark.operators import dedup as dd
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX", 10)
+    monkeypatch.setattr(dd, "local_checkpoint", _failing_checkpoint)
+    # 10-node chains: diameter 9 needs > 3 rounds, so round 3's
+    # checkpoint is reached
+    pairs = dd.chain_edges(spark, n_nodes=100, group=10)
+    with pytest.raises(RuntimeError, match="injected checkpoint failure"):
+        dd.connected_components(pairs)
+    assert _cache_manager_empty(spark)
+
+
+def test_pagerank_failure_releases_caches(spark, sf_dir, monkeypatch):
+    """q_pagerank whose final-ranks checkpoint raises must leave
+    neither its edge cache nor its node cache registered."""
+    from ema_bigdata_spark.operators import analytics
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(analytics, "local_checkpoint", _failing_checkpoint)
+    with pytest.raises(RuntimeError, match="injected checkpoint failure"):
+        registry.QUERIES["q_pagerank"](spark, sf_dir)
+    assert _cache_manager_empty(spark)
+
+
 def test_ngram_jaccard_hot_shingle_cap_engages(spark):
     """VERDICT r4 §Next-8: the stop-shingle bucket cap under a
     PATHOLOGICAL hot shingle, not uniform testdata.  2 000 documents
@@ -958,33 +994,6 @@ def test_minhash_oracle_parity_on_adversarial_texts(spark):
     duck_sh = sorted(duck.execute(dd._duck_simhash_sql()).fetchall())
     assert spark_sh == duck_sh
     assert any(a == 5 and b == 6 and h == 0 for a, b, h in spark_sh)
-
-
-def test_minhash_production_hash_path(spark, sf_dir):
-    """The documented production swap (hash60=_SPARK_XXH60) must be a
-    working code path, not an editorial claim: xxhash64-based minhash
-    still finds injected exact duplicates and runs the identical LSH
-    plan shape (no Python eval, no cartesian)."""
-    from ema_bigdata_spark.operators import dedup as dd
-    from ema_bigdata_spark.plans import executed_plan
-    from ema_bigdata_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", "text").limit(1).collect()[0]
-    dup = spark.createDataFrame(
-        [(900_000_001, base.text, "en", "dup", len(base.text)),
-         (900_000_002, base.text, "en", "dup", len(base.text))],
-        "doc_id BIGINT, text STRING, lang STRING, source STRING,"
-        " n_chars BIGINT",
-    )
-    pairs_df = dd.minhash_pairs(
-        docs.unionByName(dup), hash60=dd._SPARK_XXH60
-    )
-    plan = executed_plan(pairs_df)
-    assert "xxhash64" in plan and "md5" not in plan
-    assert "EvalPython" not in plan and "CartesianProduct" not in plan
-    pairs = {(r.doc_a, r.doc_b) for r in pairs_df.collect()}
-    assert (900_000_001, 900_000_002) in pairs
 
 
 def test_keep_best_survivor_properties(spark, sf_dir):
@@ -4283,45 +4292,34 @@ class TestParityEMInvariants:
         assert P["phi1"] == 1.0 and math.isfinite(lnl)
 
 
-def test_covariance_arrow_path_bit_identical(spark, sf_dir):
-    """Both covariance producers (JVM-HOF vs Arrow/numpy) must be
-    bit-identical — same domain gate, same exact-integer snap (the
-    numpy HALF_UP reproduction), same assembly — on the driver
-    corpus.  Since r9 the registered query AUTO-SWITCHES between
-    them, so this test drives BOTH producers EXPLICITLY through the
-    internal seams (comparing the registered query to
-    embed_covariance_arrow would compare Arrow to itself at sf0.01's
-    500 rows)."""
-    from ema_bigdata_spark.operators.similarity import (
-        _cov_assemble,
-        _cov_stats,
-        _cov_sxy_arrow,
-        _cov_sxy_hof,
-        _norm_gated,
-    )
+def test_covariance_arrow_path_bit_identical(spark, sf_dir, tmp_path):
+    """The library entry point ``embed_covariance`` (the Arrow/numpy
+    product partials behind ``q_embed_covariance``) must match the
+    query's DuckDB oracle bit-for-bit — the numpy HALF_UP snap
+    reproduces the oracle's per-product round — on the driver corpus,
+    on a NaN/zero/NULL table the domain gate must thin to 2 rows, and
+    on an id-less frame (the ``vec_id`` clause applies only when the
+    column exists)."""
+    import duckdb
+
+    from ema_bigdata_spark.operators.similarity import embed_covariance
     from ema_bigdata_spark.sources.tables import load_table
+    from tests.oracle import rowset
 
-    emb = _norm_gated(load_table(spark, sf_dir, "embeddings"))
-    d, n = _cov_stats(emb)
-    assert n > 0
-    ref = sorted(
-        tuple(r)
-        for r in _cov_assemble(spark, emb, d, _cov_sxy_hof(emb)).collect()
-    )
-    got = sorted(
-        tuple(r)
-        for r in _cov_assemble(
-            spark, emb, d, _cov_sxy_arrow(emb)
-        ).collect()
-    )
-    assert len(ref) == 2080 and got == ref
+    def check(frame, parquet):
+        got = embed_covariance(spark, frame)
+        duck = duckdb.connect()
+        duck.execute(
+            f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{parquet}')"
+        )
+        res = duck.execute(registry.ORACLES["q_embed_covariance"])
+        want = rowset([c[0] for c in res.description], res.fetchall())
+        assert rowset(got.columns, [tuple(r) for r in got.collect()]) == want
+        assert len(want[1]) == 2080
 
-    # hostile table: NaN/zero/NULL vectors — BOTH producers must apply
-    # the identical domain gate (here the registered query takes the
-    # HOF branch, 2 gated rows < _COV_ARROW_MIN_ROWS, so the pair
-    # really is HOF vs forced-Arrow)
-    from ema_bigdata_spark.operators.similarity import (
-        embed_covariance_arrow,
+    check(
+        load_table(spark, sf_dir, "embeddings"),
+        f"{sf_dir}/embeddings.parquet",
     )
 
     hostile = spark.createDataFrame(
@@ -4334,37 +4332,13 @@ def test_covariance_arrow_path_bit_identical(spark, sf_dir):
         ],
         "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
     )
-    import tempfile
-
-    d = tempfile.mkdtemp()
-    hostile.coalesce(1).write.mode("overwrite").parquet(
-        f"{d}/embeddings.parquet"
+    hostile.coalesce(1).write.parquet(f"{tmp_path}/embeddings.parquet")
+    files = f"{tmp_path}/embeddings.parquet/*.parquet"
+    check(load_table(spark, str(tmp_path), "embeddings"), files)
+    check(
+        load_table(spark, str(tmp_path), "embeddings").select("embedding"),
+        files,
     )
-    ref2 = sorted(
-        tuple(r) for r in registry.QUERIES["q_embed_covariance"](
-            spark, d
-        ).collect()
-    )
-    got2 = sorted(
-        tuple(r)
-        for r in embed_covariance_arrow(
-            spark, load_table(spark, d, "embeddings")
-        ).collect()
-    )
-    assert got2 == ref2 and len(ref2) == 2080
-
-    # ADVICE r9: the library entry accepts ANY (…, embedding) frame —
-    # an id-less frame must not raise (the vec_id clause applies only
-    # when the column exists) and, with no NULL-id rows to exclude,
-    # must produce the identical covariance
-    got3 = sorted(
-        tuple(r)
-        for r in embed_covariance_arrow(
-            spark,
-            load_table(spark, d, "embeddings").select("embedding"),
-        ).collect()
-    )
-    assert got3 == ref2
 
 
 class TestTextFoldParity:

@@ -38,7 +38,10 @@ def test_tune_records_rejected_conf(spark, monkeypatch, caplog):
     assert len(warned) == 1
 
 
-def test_stream_context_bad_nodata_leaves_session_untouched(spark, monkeypatch):
+@pytest.mark.parametrize("bad", ["abc", "0", "-2"])
+def test_stream_context_bad_partitions_leaves_session_untouched(
+    spark, monkeypatch, bad
+):
     from ema_bigdata_spark.streaming.stream_queries import _state_partitions
 
     keys = (
@@ -46,15 +49,15 @@ def test_stream_context_bad_nodata_leaves_session_untouched(spark, monkeypatch):
         "spark.sql.streaming.noDataMicroBatches.enabled",
     )
     before = [spark.conf.get(k) for k in keys]
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_NODATA_BATCHES", "maybe")
-    with pytest.raises(ValueError, match="NODATA_BATCHES"):
-        with _state_partitions(spark, 3):
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_PARTITIONS"):
+        with _state_partitions(spark):
             pass
     assert [spark.conf.get(k) for k in keys] == before
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_NODATA_BATCHES", "TRUE")
-    with _state_partitions(spark, 3):
-        assert [spark.conf.get(k) for k in keys] == ["3", "true"]
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITIONS", "3")
+    with _state_partitions(spark):
+        assert [spark.conf.get(k) for k in keys] == ["3", "false"]
     assert [spark.conf.get(k) for k in keys] == before
 
 
@@ -83,9 +86,6 @@ ENV_KNOBS = {
     "SPARK_GRAFT_STREAM_SOURCE": "deployment: file or Kafka stream source",
     "SPARK_GRAFT_KAFKA_BOOTSTRAP": "deployment: Kafka brokers",
     "SPARK_GRAFT_KAFKA_TOPIC_": "deployment: per-table Kafka topic prefix",
-    "SPARK_GRAFT_STREAM_NODATA_BATCHES": (
-        "A/B lever pending the ROADMAP stream-settle item"
-    ),
 }
 
 

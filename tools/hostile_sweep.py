@@ -331,7 +331,7 @@ def _build_hostile_unicode(spark, tables, root: str) -> None:
 #: every similarity/ANN/dedup-embedding query meets the hostile rows
 #: through the same parquet seam the driver uses.  All rows keep the
 #: CORRECT width (64) — ragged width is a DECLARED LOUD REFUSAL
-#: (q_embed_covariance's _cov_stats), pinned separately in pytest, and
+#: (q_embed_covariance's _cov_dim), pinned separately in pytest, and
 #: planting it here would count a designed refusal as a crash.
 _EMB_ROWS = [
     (32_000_000, [float("nan")] * 64, 0),          # NaN vector
