@@ -56,7 +56,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ema_bigdata_spark.functions import xmath as X
 from ema_bigdata_spark.registry import query
-from ema_bigdata_spark.sources.tables import local_checkpoint, sql_on_tables
+from ema_bigdata_spark.sources.tables import (
+    local_checkpoint,
+    local_frame,
+    sql_on_tables,
+)
 
 #: sufficient-statistic snap scales.  BIGINT overflow headroom at
 #: |x| ≤ 1e3: n·1e9 < 2⁶³ to ~9e9 rows, Σgxc·1e6 to ~9e9 rows,
@@ -652,15 +656,16 @@ def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the bit-exact parity EM (module docstring).  One histogram scan,
     then 16 histogram-sized statements of one job each over the
     one-partition histogram (init + 15 iterations); the driver holds 9
-    floats of state."""
+    floats of state, returned as a ``local_frame`` (collect: no job)."""
     _, P, _ = parity_em_spark(spark, sf_dir, K_FIT, ITERS_FIT)
     rows = [
         (j - 1, _round6(P[f"phi{j}"]), _round6(P[f"mu{j}"]),
          _round6(P[f"s2{j}"]))
         for j in range(1, K_FIT + 1)
     ]
-    return spark.createDataFrame(
-        rows, "component BIGINT, weight DOUBLE, mean DOUBLE, variance DOUBLE"
+    return local_frame(
+        spark, list(zip(*rows)),
+        "component BIGINT, weight DOUBLE, mean DOUBLE, variance DOUBLE",
     )
 
 
@@ -673,6 +678,7 @@ def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
     run in lockstep: 8 statements of one job each over the
     one-partition histogram (init, 6 iterations, lnL).  lnL rides the
     same snapped-integer sum discipline as the sufficient statistics.
+    The rows return as a ``local_frame``, whose collect runs no job.
 
     INTENTIONAL: n is the histogram total — the count of non-NULL
     values the likelihood actually sees — not the raw row count."""
@@ -686,6 +692,6 @@ def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
         bic = pd_ * X.xln(nd) - 2.0 * lnl
         rows.append((k, _round3(lnl), _round3(bic)))
     rows.sort(key=lambda r: r[2])
-    return spark.createDataFrame(
-        rows, "k BIGINT, log_likelihood DOUBLE, bic DOUBLE"
+    return local_frame(
+        spark, list(zip(*rows)), "k BIGINT, log_likelihood DOUBLE, bic DOUBLE"
     )

@@ -20,6 +20,7 @@ from ema_bigdata_spark.registry import query
 from ema_bigdata_spark.sources.tables import (
     load_table,
     local_checkpoint,
+    local_frame,
     spread,
 )
 
@@ -45,13 +46,10 @@ _DUCK_H60 = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 #: DuckDB shingle expansion — the same 3-word shingles `_shingles()`
 #: builds Spark-side; shared by every minhash-family oracle below (the
 #: ngram/fuzzy oracles inline a DISTINCT variant of the same shape).
-#: Split ONCE in the subquery, then zip three shifted slices — the
-#: exact lesson `_shingles()`'s docstring records for Spark applies to
-#: DuckDB too: an earlier form re-ran string_split inside the
-#: per-shingle lambda, O(tokens²) per document (measured on the
-#: hostile-docs sweep: ONE 20 k-token boilerplate doc took the oracle
-#: 190 s; the zip form is 0.05 s, byte-identical output on a hostile
-#: text battery incl. multi-space/lead/trail/unicode).
+#: Split ONCE in the subquery, then zip three shifted slices, as
+#: `_shingles()` does for Spark: re-running string_split inside the
+#: per-shingle lambda is O(tokens²) per document (one 20 k-token
+#: document: 190 s, against 0.05 s for the zip form).
 _DUCK_SHINGLES = """
       SELECT doc_id,
              unnest(CASE WHEN length(toks) >= 3
@@ -755,7 +753,10 @@ _CC_DRIVER_MAX = 500_000
 def _components_driver(spark, edge_rows) -> DataFrame:
     """Union-find with min-root labels over a collected edge list —
     a pyarrow Table (from ``edges.limit(...).toArrow()``) or any
-    iterable of rows with ``src``/``dst``."""
+    iterable of rows with ``src``/``dst``.
+
+    The labels leave as one ``local_frame`` at every size (≤ 16 MB at
+    the cutover), so collecting them runs no job."""
     if hasattr(edge_rows, "num_rows"):  # pyarrow.Table
         edge_iter = zip(
             edge_rows.column("src").to_pylist(),
@@ -781,21 +782,10 @@ def _components_driver(spark, edge_rows) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     nodes = sorted(parent)
-    if len(nodes) >= 10_000:
-        # ship the label table back through Arrow, not pickled tuples
-        # (arrow.pyspark.enabled makes createDataFrame(pandas) orders
-        # faster than the row path) — at the 500 k-edge cutover
-        # this table is up to ~1 M rows
-        import pandas as pd
-
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {"doc_id": nodes, "cluster_id": [find(n) for n in nodes]}
-            ),
-            "doc_id BIGINT, cluster_id BIGINT",
-        )
-    rows = [(n, find(n)) for n in nodes]
-    return spark.createDataFrame(rows, "doc_id BIGINT, cluster_id BIGINT")
+    return local_frame(
+        spark, [nodes, [find(n) for n in nodes]],
+        "doc_id BIGINT, cluster_id BIGINT",
+    )
 
 
 def chain_edges(
@@ -862,6 +852,12 @@ def connected_components(
     true cluster scale point ``spark.sparkContext.setCheckpointDir``
     at durable storage and swap in reliable ``checkpoint()``.  Both
     paths return identical labels.
+
+    Cache lifetime: the edge cache and every round's label cache are
+    unpersisted before the call returns, on success and on failure.
+    When the last round was a cached one, its labels are checkpointed
+    (one more job) and the cache dropped, so the returned frame leaves
+    no entry in the session's cache manager.
     """
     if max_iter < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
@@ -869,34 +865,18 @@ def connected_components(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     # ONE bounded collect decides the path AND feeds the driver
-    # variant — a separate count probe would re-evaluate the whole
-    # candidate-pair pipeline and could under-count a source that
-    # changes between jobs, unbounding the later collect.  Collected
-    # as Arrow batches, not pickled Rows: at the 500 k-row cutover Row
-    # pickling dominates the probe, and the probe is the distributed
-    # path's entry fee, so it must be cheap.
+    # variant: a separate count probe would re-run the pair pipeline
+    # and could under-count a changing source.  Arrow batches, not
+    # pickled Rows, keep the distributed path's entry fee cheap.
     probe = edges.limit(_CC_DRIVER_MAX + 1).toArrow()
     if probe.num_rows <= _CC_DRIVER_MAX:
         return _components_driver(pairs.sparkSession, probe)
-    # The distributed shape removes shuffles outright:
-    # (1) SELF-LOOPS: the symmetrized edge set is augmented with one
-    #     (x, x) loop per node, so the per-round propagation min
-    #     already includes the node's own label — no
-    #     labels⋈neighbor_min LEFT JOIN (a full |V| shuffle join per
-    #     round); `min(self ∪ neighbors)` ≡ `least(own,
-    #     min(neighbors))` exactly, and every node has a self-loop so
-    #     no row can drop out.
-    # (2) ROUND-1 SPECIALIZATION: the seed labels are the identity, so
-    #     round 1's propagate is `min(dst) GROUP BY src` straight off
-    #     the edge cache — no join at all.
-    # (3) PRE-PARTITIONED EDGE CACHE: the union's output partitioning
-    #     is unknown, so without it every round's propagate would
-    #     re-exchange the full edge table by dst; hash-repartitioning
-    #     ONCE before the cache (a cache keeps its hash partitioning,
-    #     a checkpoint of several partitions does not) leaves only the
-    #     |V|-sized label side to shuffle per round.  Width follows
-    #     the session's shuffle-partition setting, not a local
-    #     constant.
+    # distributed shape (docstring): self-loops fold each node's own
+    # label into the propagate min, so no row drops out and no
+    # labels⋈neighbor_min join runs; round 1 needs no join at all;
+    # the edge cache is hash-partitioned by dst ONCE (a cache keeps
+    # that partitioning, a checkpoint of several partitions does not),
+    # so only the |V|-sized label side shuffles per round.
     npart = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
@@ -963,6 +943,9 @@ def connected_components(
             if prev_sum is not None and new_sum == prev_sum:
                 break
             prev_sum = new_sum
+        if labels.is_cached:  # the result outlives the call (docstring)
+            cached, labels = labels, local_checkpoint(labels)
+            cached.unpersist()
     except BaseException:
         # a failed round must not leave its label caches registered
         # for the life of the session

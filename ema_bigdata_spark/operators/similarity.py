@@ -24,6 +24,7 @@ from ema_bigdata_spark.registry import query
 from ema_bigdata_spark.sources.tables import (
     load_table,
     local_checkpoint,
+    local_frame,
     spread,
 )
 
@@ -367,15 +368,12 @@ def _with_assignment(spark, emb, cents: list[list[float]]):
     method limit into interpreted evaluation (measured 20× slower).
     The per-row argmin is then a pair of HOF folds over that tiny
     array column, so assignment is a NARROW projection: no row blowup,
-    no shuffle, no re-join — the shape that survives 100 TB (the
-    earlier crossJoin×K + groupBy(vec_id) form shuffled K·N rows).
+    no shuffle, no re-join (a crossJoin×K + groupBy(vec_id) form
+    shuffles K·N rows).
 
     Ties: ``array_position`` returns the FIRST minimal index, matching
     the (distance, list-id) lexicographic tie-break of a min_by."""
-    cdf = spark.createDataFrame(
-        [([[float(v) for v in c] for c in cents],)],
-        "cents ARRAY<ARRAY<DOUBLE>>",
-    )
+    cdf = local_frame(spark, [[cents]], "cents ARRAY<ARRAY<DOUBLE>>")
     dists = (
         "transform(cents, c -> aggregate(zip_with(embedding, c,"
         " (a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)),"
@@ -402,9 +400,7 @@ def _ivf_centroids(spark, sf_dir) -> list[list[float]]:
     then run ``_IVF_SWEEPS`` k-means sweeps in numpy.  This is the
     FAISS recipe — the coarse quantizer needs only ~100–1000 vectors
     per list, so training cost stays CONSTANT as the corpus grows; the
-    cluster only ever runs the narrow assignment projection.  (The
-    earlier all-rows distributed sweeps spent 2 full scans + 2 shuffles
-    training on data the quantizer doesn't need.)
+    cluster only ever runs the narrow assignment projection.
 
     Determinism: sample order is a total order (hash, id); centroid
     means go through ``_IVF_FP`` fixed-point like before; numpy argmin
@@ -1176,8 +1172,8 @@ def ann_pq_topk(spark, sf_dir):
         ]
         for j in range(_PQ_M)
     ]
-    cdf = spark.createDataFrame(
-        [(books, lut)],
+    cdf = local_frame(
+        spark, [[books], [lut]],
         "books ARRAY<ARRAY<ARRAY<DOUBLE>>>, lut ARRAY<ARRAY<DOUBLE>>",
     )
     sub = (

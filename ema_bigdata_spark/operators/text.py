@@ -21,6 +21,7 @@ from ema_bigdata_spark.registry import query
 from ema_bigdata_spark.sources.tables import (
     load_table,
     local_checkpoint,
+    local_frame,
     spread,
 )
 
@@ -103,20 +104,20 @@ def _lexicon_sql_values() -> str:
     """,
 )
 def q_lang_id(spark, sf_dir):
-    """Marker-lexicon language ID as a PURE PROJECTION (r3 rework): the
+    """Marker-lexicon language ID as a PURE PROJECTION: the
     lexicon is 16 literal words, so per-lang hit counts are per-row
     array folds and the argmax is a when-cascade — one scan, zero
-    exchanges, zero joins.  The previous explode → broadcast-join →
-    groupBy → rejoin shape shuffled (doc_id, lang) hit rows and then
-    sort-merge-joined the corpus back to itself per run; at 100 TB
+    exchanges, zero joins.  The explode → broadcast-join → groupBy →
+    rejoin shape shuffles (doc_id, lang) hit rows and then
+    sort-merge-joins the corpus back to itself per run; at 100 TB
     that is two corpus-sized exchanges for something each row can
     answer alone.  For REAL lexicons (100k+ words, too big to inline)
     use :func:`lang_id_join`, which keeps the broadcast-join shape."""
-    # doc_id IS NOT NULL (r9, hostile-nulls sweep): the output is
-    # keyed by doc_id, and the oracle's hits re-attach through a
-    # LEFT JOIN USING (doc_id) that a NULL id never matches (it
-    # read 'und' where the projection read the true language) —
-    # an identity-less doc has no per-document row
+    # doc_id IS NOT NULL: the output is keyed by doc_id, and the
+    # oracle's hits re-attach through a LEFT JOIN USING (doc_id)
+    # that a NULL id never matches (it would read 'und' where the
+    # projection reads the true language) — an identity-less doc
+    # has no per-document row
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id").isNotNull()
     )
@@ -126,9 +127,9 @@ def q_lang_id(spark, sf_dir):
     for lang in langs:
         arr = "array(" + ", ".join(f"'{w}'" for w in LEXICON[lang]) + ")"
         # coalesce: a NULL text must count as zero hits → 'und', the
-        # same semantics as the oracle's LEFT JOIN + coalesce (r6,
-        # found by the adversarial-documents probe: size(split(NULL))
-        # is NULL, which NULLed pred_lang/n_hits on Spark only)
+        # same semantics as the oracle's LEFT JOIN + coalesce —
+        # size(split(NULL)) is NULL, which would NULL pred_lang and
+        # n_hits on Spark only
         hit_cols.append(
             F.expr(
                 f"coalesce(size(filter({toks},"
@@ -160,12 +161,11 @@ def lang_id_join(docs, lexicon: dict[str, tuple[str, ...]]):
     partitioning).  This is the 100 TB shape when the lexicon is a
     real dictionary; the registered q_lang_id uses the literal-fold
     projection instead."""
-    lex = F.broadcast(
-        docs.sparkSession.createDataFrame(
-            [(w, lang) for lang, words in lexicon.items() for w in words],
-            "word STRING, lex_lang STRING",
-        )
-    )
+    pairs = [(w, lang) for lang, words in lexicon.items() for w in words]
+    lex = F.broadcast(local_frame(
+        docs.sparkSession, [[w for w, _ in pairs], [lg for _, lg in pairs]],
+        "word STRING, lex_lang STRING",
+    ))
     tokens = docs.select(
         "doc_id", F.explode(F.split("text", " ", -1)).alias("token")
     )
@@ -300,8 +300,8 @@ def _word_hash(word: str) -> str:
     # every term is CAST to BIGINT before its multiply: ascii() is
     # INT32 on both engines and returns the full CODEPOINT, so a
     # word starting with an emoji (ascii = 128512) times 40503
-    # overflows INT32 — found by the r8 hostile-docs sweep as an ANSI
-    # ARITHMETIC_OVERFLOW that killed the whole job on one document
+    # overflows INT32: an ANSI ARITHMETIC_OVERFLOW that kills the
+    # whole job on one document
     return (
         f"(CAST(length({word}) AS BIGINT) * 2654435761"
         f" + CAST(ascii(substr({word}, 1, 1)) AS BIGINT) * 40503"
@@ -376,13 +376,13 @@ _TFIDF_SCORE = "round(tf * ln(n_docs / df), 6)"
     """,
 )
 def q_tfidf(spark, sf_dir):
-    # single-partition audit (r8, VERDICT item 4): deliberately NOT
-    # spread() — A/B min-of-3 at sf0.1, interleaved: plain 1.07 s vs
-    # spread 1.52 s.  The explode feeds a partial aggregation, so the
-    # one-partition stage is shuffle-write-bound, not CPU-bound, and
-    # the round-robin exchange of full text costs more than it frees
-    # (same verdict as the cheap multimodal codecs; opposite of the
-    # CPU-bound q_mm_png/q_char_entropy sites).
+    # single-partition scan, deliberately NOT spread() — A/B min-of-3
+    # at sf0.1, interleaved: plain 1.07 s vs spread 1.52 s.  The
+    # explode feeds a partial aggregation, so the one-partition stage
+    # is shuffle-write-bound, not CPU-bound, and the round-robin
+    # exchange of full text costs more than it frees (same verdict as
+    # the cheap multimodal codecs; opposite of the CPU-bound
+    # q_mm_png/q_char_entropy sites).
     docs = load_table(spark, sf_dir, "documents")
     n_docs = float(docs.count())
     tok = docs.select(
@@ -470,11 +470,11 @@ def q_stratified_sample(spark, sf_dir):
     rate = F.lit(0)
     for k, v in sorted(_SAMPLE_RATES.items()):
         rate = F.when(F.col("lang") == k, F.lit(v)).otherwise(rate)
-    # mod-first (r9, hostile-extremes sweep): doc_id * C overflows
-    # int64 under ANSI for |doc_id| >= ~3.5e9; (d % 1000) * C tops out
-    # at ~2.7e12 and is value-identical everywhere the old form
-    # didn't overflow ((d*C) mod m == ((d mod m)*C) mod m, and both
-    # engines' truncated % keeps the dividend's sign on both forms)
+    # mod-first: doc_id * C overflows int64 under ANSI for |doc_id|
+    # >= ~3.5e9; (d % 1000) * C tops out at ~2.7e12 and is
+    # value-identical wherever d * C does not overflow ((d*C) mod m
+    # == ((d mod m)*C) mod m, and both engines' truncated % keeps
+    # the dividend's sign on both forms)
     bucket = ((F.col("doc_id") % 1000) * F.lit(_SAMPLE_C)) % 1000
     return (
         load_table(spark, sf_dir, "documents")
@@ -797,7 +797,7 @@ def q_contamination(spark, sf_dir):
     shingles, not corpus size.  Contaminated docs then feed q_except-
     style removal or q_corpus_clean's gates."""
     docs = load_table(spark, sf_dir, "documents")
-    # Shape note (r3, measured): carrying n_shingles through the
+    # Shape note (measured): carrying n_shingles through the
     # explode (the ngram_jaccard trick) removes the sizes scan + join
     # below but interleaves the kgram HOF chain with Generate in a way
     # that benched consistently ~1.6× SLOWER at sf0.1 (interleaved
@@ -1169,7 +1169,7 @@ def q_train_val_split(spark, sf_dir):
     return assign_splits(load_table(spark, sf_dir, "documents"))
 
 
-# -- q_pii_scrub: PII detection + redaction (r4 addition) -----------------
+# -- q_pii_scrub: PII detection + redaction -------------------------------
 
 #: PII patterns shared verbatim by both engines (subset of regex syntax
 #: where Java regex and RE2 agree: char classes, bounded repeats,
@@ -1227,12 +1227,12 @@ def pii_scrub(docs, text_col: str = "text"):
     """,
 )
 def q_pii_scrub(spark, sf_dir):
-    """See :func:`pii_scrub`.  r4 addition to the LLM-pipeline surface
+    """See :func:`pii_scrub`.  Part of the LLM-pipeline surface
     (SURVEY §2.4); no Main.scala counterpart."""
     return pii_scrub(load_table(spark, sf_dir, "documents"))
 
 
-# -- q_topk_ngrams: corpus-wide frequent n-grams (r4 addition) ------------
+# -- q_topk_ngrams: corpus-wide frequent n-grams --------------------------
 
 # shared shingle shapes with the dedup family: the SAME 3-gram
 # definition must drive boilerplate detection and dup-span statistics,
@@ -1275,8 +1275,7 @@ def q_topk_ngrams(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     # NULL-text docs yield a [NULL] shingle fallback; drop it on both
     # engines — otherwise a NULL ngram ties at the top-k boundary and
-    # the engines' opposite NULL orderings pick different rows (r6,
-    # adversarial-documents probe)
+    # the engines' opposite NULL orderings pick different rows
     grid = (
         docs.select(
             "doc_id", F.explode(_shingles()).alias("ngram")
@@ -1296,7 +1295,7 @@ def q_topk_ngrams(spark, sf_dir):
     )
 
 
-# -- q_rag_chunk: overlapping retrieval chunks (r5 addition) --------------
+# -- q_rag_chunk: overlapping retrieval chunks ----------------------------
 
 #: chunk geometry: 120-char windows every 90 chars (25% overlap) — the
 #: RAG-indexing default shape; production swaps token offsets in for
@@ -1361,7 +1360,7 @@ def q_rag_chunk(spark, sf_dir):
     )
 
 
-# -- q_bm25: ranked retrieval scoring (r5 addition) -----------------------
+# -- q_bm25: ranked retrieval scoring -------------------------------------
 
 #: fixed demo query; production parameterizes the term list through
 #: the same plan (tiny broadcast side).
@@ -1439,8 +1438,8 @@ def q_bm25(spark, sf_dir):
     Driver-mandated surface (SURVEY §2.4); no Main.scala
     counterpart.
 
-    Single-partition audit (r8, VERDICT item 4): deliberately NOT
-    spread() — A/B min-of-3 at sf0.1: plain 0.95 s vs spread 1.84 s
+    Single-partition scan, deliberately NOT spread() — A/B min-of-3
+    at sf0.1: plain 0.95 s vs spread 1.84 s
     (the explode feeds partial aggregation; see q_tfidf's note)."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -1453,9 +1452,9 @@ def q_bm25(spark, sf_dir):
         F.count(F.lit(1)).cast("long"), F.sum("dl").cast("long")
     ).first()
     if not n_docs:
-        # designed loud refusal (VERDICT r6 item 4): BM25's idf needs
-        # N > 0, and with zero tokenizable documents the folded
-        # scoring literals would be None — refuse friendly instead
+        # designed loud refusal: BM25's idf needs N > 0, and with
+        # zero tokenizable documents the folded scoring literals
+        # would be None — refuse friendly instead
         raise ValueError(
             "q_bm25: empty corpus — no tokenizable documents;"
             " BM25 scores are undefined without a collection"
@@ -1484,7 +1483,7 @@ def q_bm25(spark, sf_dir):
     )
 
 
-# -- q_char_entropy: character-entropy quality signal (r5 addition) -------
+# -- q_char_entropy: character-entropy quality signal ---------------------
 
 #: per-(doc, char) self-information term in integer micro-nats,
 #: snapped to the 1e-6 grid BEFORE the per-doc sum (BIGINT sum →
@@ -1495,10 +1494,9 @@ _ENT_TERM_U = (
 
 #: H = ln L − (Σ n_c·ln n_c)/L — the identical final expression text
 #: on both engines over identical integers.
-#: trailing `+ CAST(0 AS DOUBLE)` = the signed-zero guard (r6): a
+#: trailing `+ CAST(0 AS DOUBLE)` = the signed-zero guard: a
 #: single-symbol doc's entropy is a tiny negative residual of the
-#: 1e-6 snap, which DuckDB rounds to -0.0 and Spark to +0.0 — found
-#: by the adversarial-domain probe on a repeated-char fixture.
+#: 1e-6 snap, which DuckDB rounds to -0.0 and Spark to +0.0.
 _ENT_FINAL = (
     "(round(ln(CAST(n_chars AS DOUBLE))"
     " - CAST(sum_u AS DOUBLE) / 1000000 / CAST(n_chars AS DOUBLE), 6)"
@@ -1550,8 +1548,8 @@ def q_char_entropy(spark, sf_dir):
     empty doc would emit a spurious NULL-entropy row the oracle
     doesn't have.  Driver-mandated surface (SURVEY §2.4); no
     Main.scala counterpart."""
-    # spread() by measurement (r7): the per-char explode + map-side
-    # combine is the heaviest stage and ran on ONE core at sf0.1
+    # spread() by measurement: the per-char explode + map-side
+    # combine is the heaviest stage, on ONE core at sf0.1 without it
     # (single-file scan → one partition); widening the scan is the
     # same measured win as q_mm_png's. No-op at real scale.
     docs = spread(load_table(spark, sf_dir, "documents")).where(
@@ -1580,7 +1578,7 @@ def q_char_entropy(spark, sf_dir):
     )
 
 
-# -- q_filter_report: rule-based quality gate audit (r5 addition) ---------
+# -- q_filter_report: rule-based quality gate audit -----------------------
 
 #: Gopher-style repetition/quality rules, ALL expressed as integer
 #: comparisons (ratios cross-multiplied) so the pass/fail bits are
@@ -1722,7 +1720,7 @@ def q_filter_report(spark, sf_dir):
     )
 
 
-# -- q_source_interleave: deterministic training order (r5 addition) ------
+# -- q_source_interleave: deterministic training order --------------------
 
 
 def _source_interleave_oracle() -> str:
@@ -1730,8 +1728,7 @@ def _source_interleave_oracle() -> str:
 
     # coalesce(-1): md5(NULL text) is NULL, and the engines disagree
     # on window NULL ordering (Spark NULLS FIRST, DuckDB NULLS LAST)
-    # — pin NULL-text docs first with a concrete key (r6, found by
-    # the adversarial-documents probe)
+    # — pin NULL-text docs first with a concrete key
     h = f"coalesce({_DUCK_H60.format(x='text')}, -1)"
     return f"""
     WITH h AS (
@@ -1778,10 +1775,10 @@ def q_source_interleave(spark, sf_dir):
     from ema_bigdata_spark.operators.dedup import _SPARK_H60
 
     docs = load_table(spark, sf_dir, "documents")
-    # doc_id IS NOT NULL (r9, hostile-nulls sweep): doc_id is the
-    # per-source tiebreak — identical texts hash equal, and a NULL id
-    # in the tie group lands on opposite ends between engines,
-    # shifting every later round number.  No id, no position.
+    # doc_id IS NOT NULL: doc_id is the per-source tiebreak —
+    # identical texts hash equal, and a NULL id in the tie group
+    # lands on opposite ends between engines, shifting every later
+    # round number.  No id, no position.
     h = docs.where(F.col("doc_id").isNotNull()).select(
         "doc_id",
         "source",
@@ -1794,11 +1791,11 @@ def q_source_interleave(spark, sf_dir):
         (F.row_number().over(w) - 1).cast("long").alias("round"),
     )
     ws = Window.orderBy("source")  # ~|sources| rows: tiny window
-    # source IS NOT NULL (r8, hostile-docs sweep): a doc with no
-    # source cannot be dealt into a source-interleaved order — both
-    # engines' equi-joins already drop such rows, but an un-filtered
-    # slots dimension NUMBERED them (Spark sorts the NULL source
-    # first, DuckDB last), shifting every real source's slot
+    # source IS NOT NULL: a doc with no source cannot be dealt into
+    # a source-interleaved order — both engines' equi-joins already
+    # drop such rows, but an un-filtered slots dimension would
+    # NUMBER them (Spark sorts the NULL source first, DuckDB last),
+    # shifting every real source's slot
     slots = (
         docs.select("source")
         .where(F.col("source").isNotNull())
@@ -2012,9 +2009,9 @@ def q_bigram_lm(spark, sf_dir):
     low even when their unigrams are rare).  Driver-mandated surface
     (SURVEY §2.4); no Main.scala counterpart.
 
-    Single-partition audit (r8, VERDICT item 4): NOT spread() — A/B
-    min-of-3 at sf0.1 twice: −0.42 s / +0.12 s, within co-tenant
-    noise; keep the cheaper plan-shape (see q_tfidf's note)."""
+    Single-partition scan, NOT spread() — A/B min-of-3 at sf0.1
+    twice: −0.42 s / +0.12 s, within co-tenant noise; keep the
+    cheaper plan-shape (see q_tfidf's note)."""
     return bigram_lm(load_table(spark, sf_dir, "documents"))
 
 

@@ -50,6 +50,7 @@ import string
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -202,16 +203,16 @@ def event_instant(df: DataFrame, col: str = "ts") -> F.Column:
     return F.timestamp_micros(event_epoch_us(df, col))
 
 
-#: the streaming event-time domain (r8, found by the hostile-ts
-#: sweep): [1900-01-01, 9000-01-01) as epoch-µs.  Window/watermark
-#: arithmetic (≤ 1-day windows/slides/gaps) can push an event time at
-#: most days past these bounds, so every derived window start/end
-#: stays inside [0001-01-01, 9999-12-31] — the range BOTH engines and
-#: Python datetimes represent.  Outside it, a year-0001 event made
+#: the streaming event-time domain: [1900-01-01, 9000-01-01) as
+#: epoch-µs.  Window/watermark arithmetic (≤ 1-day windows/slides/
+#: gaps) can push an event time at most days past these bounds, so
+#: every derived window start/end stays inside [0001-01-01,
+#: 9999-12-31] — the range BOTH engines and Python datetimes
+#: represent.  Outside it, a year-0001 event makes
 #: s_stream_sliding emit a year-0 window start (unrepresentable in
-#: Python — the driver's collect() dies), a year-9999 event pushed
+#: Python — the driver's collect() dies), a year-9999 event pushes
 #: tumbling window ends past 9999-12-31, and a NULL event time
-#: crashed the stateful cores.  NULL fails the comparisons, so the
+#: crashes the stateful cores.  NULL fails the comparisons, so the
 #: gate subsumes IS NOT NULL.  Out-of-domain events are ignored like
 #: NULL keys; the 7100-year window is ~50× any lived data range.
 TS_DOMAIN_MIN_US = -2_208_988_800_000_000
@@ -248,7 +249,7 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     than cores, where shuffling a few MB to unlock every core is free.
     """
     n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    # two-tier guard (ADVICE r2): file count is only a FAST POSITIVE
+    # two-tier guard: file count is only a FAST POSITIVE
     # signal — >= n files always means >= n splits, but the converse
     # fails both ways (Spark packs many small files into few partitions
     # via maxPartitionBytes/openCostInBytes; a few large files can hold
@@ -294,6 +295,21 @@ def local_checkpoint(df: DataFrame) -> DataFrame:
     """
     ckpt = df.localCheckpoint()
     return ckpt.coalesce(1) if ckpt.rdd.getNumPartitions() == 1 else ckpt
+
+
+def local_frame(spark: SparkSession, columns: list, schema: str) -> DataFrame:
+    """A frame of driver-held values, one sequence per field of the DDL
+    ``schema``, sent as one Arrow table.  Below Spark's Arrow
+    ``localRelationThreshold`` (48 MiB) it plans as a ``LocalTableScan``,
+    so its ``collect()`` runs no job whatever ``arrow.pyspark.enabled``
+    says; a row list would be parallelized into a job of
+    ``defaultParallelism`` tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_arrays(columns, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)
 
 
 def filter_ts_range(

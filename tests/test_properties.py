@@ -630,6 +630,25 @@ def test_connected_components_failure_releases_caches(spark, monkeypatch):
     assert _cache_manager_empty(spark)
 
 
+@pytest.mark.parametrize("n_nodes,group", [(100, 10), (60, 3)])
+def test_connected_components_success_releases_caches(
+    spark, monkeypatch, n_nodes, group
+):
+    """A distributed CC that converges on a cached round hands back
+    labels that hold no entry in the session's cache manager, and the
+    labels are still the analytic chain components."""
+    from ema_bigdata_spark.operators import dedup as dd
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX", 10)
+    labels = dd.connected_components(
+        dd.chain_edges(spark, n_nodes=n_nodes, group=group)
+    )
+    assert _cache_manager_empty(spark)
+    got = {r.doc_id: r.cluster_id for r in labels.collect()}
+    assert got == {n: n - n % group for n in range(n_nodes)}
+
+
 def test_pagerank_failure_releases_caches(spark, sf_dir, monkeypatch):
     """q_pagerank whose final-ranks checkpoint raises must leave
     neither its edge cache nor its node cache registered."""
@@ -793,42 +812,34 @@ def test_connected_components_distributed_past_real_gate(spark):
 
 
 def test_components_driver_arrow_paths(spark):
-    """r12 optimization guard: the driver union-find's boundary
-    crossings are Arrow on both sides — a pyarrow-Table edge list in
-    (what ``connected_components``' toArrow probe hands it) and, above
-    the 10 k-node cutover, a pandas-backed createDataFrame out.  Both
-    must label identically to the plain row-list path."""
+    """The driver union-find takes both edge forms — a pyarrow Table
+    (what ``connected_components``' toArrow probe hands it) and a row
+    iterable — and labels identically through its one output path,
+    below and above 10 k nodes."""
     import pyarrow as pa
 
     from ema_bigdata_spark.operators import dedup as dd
-
-    # chain of 30 000 nodes in groups of 3 → 10 000 components and
-    # 20 000 edges (> the 10 k-node pandas cutover)
-    edges = [(i, i + 1) for i in range(30_000) if (i + 1) % 3 != 0]
-    tbl = pa.table(
-        {
-            "src": pa.array([a for a, _ in edges], pa.int64()),
-            "dst": pa.array([b for _, b in edges], pa.int64()),
-        }
-    )
-    got_arrow = {
-        r.doc_id: r.cluster_id
-        for r in dd._components_driver(spark, tbl).collect()
-    }
 
     class Row:
         def __init__(self, a, b):
             self.src, self.dst = a, b
 
-    got_rows = {
-        r.doc_id: r.cluster_id
-        for r in dd._components_driver(
-            spark, [Row(a, b) for a, b in edges]
-        ).collect()
-    }
-    want = {n: n - n % 3 for n in range(30_000)}
-    assert got_arrow == want
-    assert got_rows == want
+    for n_nodes in (3_000, 30_000):
+        # chains in groups of 3 → n/3 components of 2 edges each
+        edges = [(i, i + 1) for i in range(n_nodes) if (i + 1) % 3 != 0]
+        tbl = pa.table(
+            {
+                "src": pa.array([a for a, _ in edges], pa.int64()),
+                "dst": pa.array([b for _, b in edges], pa.int64()),
+            }
+        )
+        want = {n: n - n % 3 for n in range(n_nodes)}
+        for form in (tbl, [Row(a, b) for a, b in edges]):
+            got = {
+                r.doc_id: r.cluster_id
+                for r in dd._components_driver(spark, form).collect()
+            }
+            assert got == want, (n_nodes, type(form).__name__)
 
 
 def test_stratified_sample_rates(spark, sf_dir):

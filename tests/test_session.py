@@ -151,3 +151,20 @@ def test_local_checkpoint_inventory():
     }
     assert sites == {os.path.join("sources", "tables.py"): 1}
     assert "localCheckpoint(" in inspect.getsource(local_checkpoint)
+
+
+def test_create_dataframe_inventory():
+    """``sources.tables.local_frame`` is the package's one
+    ``createDataFrame(`` call, so every driver-built frame enters Spark
+    as an Arrow LocalRelation whose collect runs no job."""
+    import inspect
+
+    from ema_bigdata_spark.sources.tables import local_frame
+
+    sites = {
+        rel: text.count("createDataFrame(")
+        for rel, text in _package_sources()
+        if "createDataFrame(" in text
+    }
+    assert sites == {os.path.join("sources", "tables.py"): 1}
+    assert "createDataFrame(" in inspect.getsource(local_frame)

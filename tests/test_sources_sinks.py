@@ -301,6 +301,72 @@ class TestLocalCheckpoint:
             assert helper == bare > 0, (parts, helper, bare)
 
 
+_NAN, _INF = float("nan"), float("inf")
+
+#: local_frame inputs: case -> (DDL schema, rows)
+_LOCAL_FRAMES = {
+    "scalars": ("a BIGINT, b STRING", [(1, "x"), (2, None), (-(2**63), "")]),
+    "empty": ("a BIGINT, b STRING", []),
+    "nonfinite": ("x DOUBLE", [(1.5,), (_NAN,), (_INF,), (-_INF,), (None,)]),
+    "nested": (
+        "books ARRAY<ARRAY<ARRAY<DOUBLE>>>, lut ARRAY<ARRAY<DOUBLE>>",
+        [([[[1.0, 2.0]], [[_NAN, -_INF]]], [[0.5], []]), (None, [[None]])],
+    ),
+}
+
+
+class TestLocalFrame:
+    """local_frame plans driver-held values as a LocalTableScan, whose
+    collect runs no job, with the schema and values of the row-list
+    ``createDataFrame``."""
+
+    @staticmethod
+    def _check(spark, case):
+        from pyspark.sql.types import StructType
+
+        from ema_bigdata_spark.plans import executed_plan
+        from ema_bigdata_spark.sources.tables import local_frame
+
+        ddl, rows = _LOCAL_FRAMES[case]
+        n = len(StructType.fromDDL(ddl).fields)
+        frame = local_frame(
+            spark, [[r[i] for r in rows] for i in range(n)], ddl
+        )
+        got, jobs = _jobs_run(spark, f"local_frame_{case}", frame.collect)
+        assert jobs == 0
+        assert executed_plan(frame).startswith("LocalTableScan")
+        # repr: NaN compares unequal to itself
+        assert repr([tuple(r) for r in got]) == repr(rows)
+        assert frame.schema == spark.createDataFrame(rows, ddl).schema
+
+    @pytest.mark.parametrize("case", sorted(_LOCAL_FRAMES))
+    def test_collect_runs_no_job_and_matches_row_list(self, spark, case):
+        self._check(spark, case)
+
+    @pytest.mark.parametrize("case", sorted(_LOCAL_FRAMES))
+    def test_independent_of_arrow_pyspark_conf(self, spark, case):
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        before = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            self._check(spark, case)
+        finally:
+            spark.conf.set(key, before)
+        assert spark.conf.get(key) == before
+
+
+@pytest.mark.parametrize("name", ["gmm_fit", "q_dedup_cluster", "q_gmm_bic"])
+def test_driver_built_result_runs_no_job(spark, sf_dir, name):
+    """A query whose result is built on the driver collects with no
+    job: the frame it returns is a LocalTableScan."""
+    from ema_bigdata_spark import registry
+
+    registry.load_all()
+    df = registry.QUERIES[name](spark, sf_dir)
+    rows, jobs = _jobs_run(spark, f"driver_built_{name}", df.collect)
+    assert rows and jobs == 0, (name, jobs)
+
+
 class TestSchemaMemo:
     """load_raw infers a parquet file's schema once per path, and infers
     again when the file or the inference confs change."""
