@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 
-# r6: literals here are parsed by BOTH engines (the *_fixed oracle
+# Literals here are parsed by BOTH engines (the *_fixed oracle
 # texts), and DuckDB 1.0's literal parser is 1 ulp off for some
 # 17-digit reprs (xmath module docstring) — the folded normalizers
 # phi/sqrt(2π·s2) are exactly that shape, so render them in the

@@ -27,10 +27,10 @@ Scale note: fixed-point BIGINT aggregation is also *faster* at 100 TB
 for money types.  Overflow headroom: |x|≤1e6 scaled ×100 summed over
 1e10 rows ≈ 1e18 < 2^63; beyond that, sum in DECIMAL(38,0).
 
-Out-of-domain gate (r8): a NaN/±Inf measure used to HARD-ERROR the
+Out-of-domain gate: without it a NaN/±Inf measure would HARD-ERROR the
 snap (ANSI ``CAST(NaN AS BIGINT)`` → CAST_OVERFLOW on Spark,
-conversion error on DuckDB) — at 100 TB one corrupt double killed the
-whole job mid-stage.  ``cents``/``sql_cents`` snap through
+conversion error on DuckDB) — at 100 TB one corrupt double would kill
+the whole job mid-stage.  ``cents``/``sql_cents`` snap through
 ``TRY_CAST`` (identical semantics on both engines, measured: NULL for
 NaN, ±Inf, and any magnitude whose scaled snap exceeds BIGINT), making
 the declared semantics: **measures whose snap falls outside BIGINT —
@@ -55,7 +55,7 @@ def dlit(v: float) -> str:
     it (BigDecimal, correctly rounded).  DuckDB 1.0's literal parser
     is 1 ulp off for some 17-digit reprs, so any literal an ORACLE
     text will parse must use ``functions.xmath.dlit_exact``
-    (mantissa×2^k) instead — see gaussian.py, which switched in r6."""
+    (mantissa×2^k) instead — as gaussian.py does."""
     return f"CAST({v!r} AS DOUBLE)"
 
 
@@ -91,7 +91,7 @@ def avg_fixed(col: str | Column, scale: int = 100) -> Column:
 
 
 def floor_long(expr: str) -> Column:
-    """``floor(expr)`` as a NULL-gated BIGINT (r8 non-finite gate).
+    """``floor(expr)`` as a NULL-gated BIGINT (the non-finite gate).
 
     Spark's builtin ``floor(DOUBLE)`` converts to LONG *inside* the
     function with JVM d2l semantics — NaN silently becomes 0 and ±Inf
@@ -104,8 +104,8 @@ def floor_long(expr: str) -> Column:
     which propagates to NULL through the else branches) and the ±2^63
     overflow boundary (probed: 1e22/-1e22 → NULL on both).
 
-    The r8 form ``y - ((y % 1 + 1) % 1)`` was NOT exact everywhere
-    (ADVICE r8): for y ∈ (-2^-54, 0) the ``y % 1 + 1`` term rounds to
+    The shorter form ``y - ((y % 1 + 1) % 1)`` is NOT exact
+    everywhere: for y ∈ (-2^-54, 0) the ``y % 1 + 1`` term rounds to
     exactly 1.0, the expression returns y itself, and the cast
     truncates to 0 while real floor is -1 (probed: -1e-17 → 0 vs
     DuckDB's -1).  This form never adds a constant to the fraction, so

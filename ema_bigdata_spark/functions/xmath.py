@@ -1,13 +1,13 @@
-"""Cross-engine BIT-EXACT transcendental approximations (r6).
+"""Cross-engine BIT-EXACT transcendental approximations.
 
 Why: the driver's correctness gate is a bit-sensitive hash of Spark
 output vs a DuckDB oracle.  ``+ - * /`` and ``sqrt`` are IEEE-754
 correctly-rounded in Spark (JVM), DuckDB, and CPython — the same
 inputs give the same bits on all three.  ``exp`` / ``ln`` are NOT
 (each engine's libm is within 1 ulp but differently so), which is why
-the EM queries (``gmm_fit``, ``q_gmm_bic``) stayed rows-only through
-r5: parameter feedback across 15 iterations amplifies a 1-ulp density
-difference into divergent fits.
+the EM queries (``gmm_fit``, ``q_gmm_bic``) cannot be hash-checked on
+libm: parameter feedback across 15 iterations amplifies a 1-ulp
+density difference into divergent fits.
 
 This module replaces them with approximations built ONLY from exact
 ops, emitted as *shared SQL text* (parsed by both engines) plus a
@@ -112,6 +112,19 @@ def dlit_exact(v: float) -> str:
 def xexp_neg(z: float) -> float:
     """exp(-z) for z ≥ 0 via exact-op Taylor + 16 squarings."""
     u = min(z, EXP_CLAMP) * INV_2_16
+    t = 1.0 + u * (-1.0 + u * (0.5 + u * (-_EXP_C3 + u * _EXP_C4)))
+    for _ in range(16):
+        t = t * t
+    return t
+
+
+def xexp_neg_np(z):
+    """:func:`xexp_neg` over a float64 array, op for op.  The clamp is
+    ``np.fmin``, the SQL ``least``: a NaN argument clamps to 708 as it
+    does on Spark and DuckDB, which order NaN above every double."""
+    import numpy as np
+
+    u = np.fmin(z, EXP_CLAMP) * INV_2_16
     t = 1.0 + u * (-1.0 + u * (0.5 + u * (-_EXP_C3 + u * _EXP_C4)))
     for _ in range(16):
         t = t * t
@@ -239,8 +252,9 @@ def atanh_ln_series(s_expr: str, tag: str, terms: int = 26
     return steps
 
 
-def py_atanh_ln(s: float, terms: int = 26) -> float:
-    """Python mirror of :func:`atanh_ln_series`."""
+def py_atanh_ln(s, terms: int = 26):
+    """Python mirror of :func:`atanh_ln_series`, op for op; ``s`` is a
+    float or a float64 array."""
     coefs = tuple(1.0 / float(2 * m + 1) for m in range(1, terms + 1))
     t = (s - 1.0) / (s + 1.0)
     t2 = t * t

@@ -45,8 +45,10 @@ DEFAULT_TOL = 1e-3
 DEFAULT_MAX_ITER = 30
 
 #: histogram-size cutover between the driver (numpy) and distributed
-#: iteration paths.  1 M bins ≈ 16 MB collected — still a "tiny
-#: aggregate" in SURVEY §4.3's sense; beyond it, iterate cluster-side.
+#: iteration paths, for this module's EM and for the parity EM
+#: (``gmm_parity.parity_em_spark_multi``); both read it at call time.
+#: 1 M bins ≈ 16 MB collected — still a "tiny aggregate" in SURVEY
+#: §4.3's sense; beyond it, iterate cluster-side.
 MAX_DRIVER_BINS = 1 << 20
 
 
@@ -57,7 +59,7 @@ class GMMModel:
     variances: list[float]
     log_likelihood: float
     n_iter: int
-    #: per-iteration lnP trace (r4, VERDICT r3 §Next-7): a SECOND
+    #: per-iteration lnP trace: a SECOND
     #: deterministic output beyond the final parameters.  EM guarantees
     #: lnP is non-decreasing, so the trace is a machine-checkable
     #: numeric contract (tests/test_properties.py
@@ -198,7 +200,7 @@ def _em_stats(resp: DataFrame, names: dict[str, str], nbins: int) -> dict:
     always BigDecimal HALF_UP: the ``+ 0.5`` is itself a rounded double
     add, so a scaled term whose fraction lies within an ulp of .5 (or
     any term ≥ 2^52, where the add rounds to even) can land one 1e-12
-    quantum away (ADVICE r13).
+    quantum away.
 
     ``a`` (< 2^126) is split into BIGINT limbs at ``_limb_shifts(nbins)``,
     summed with plain codegen'd long adds, and recombined in Python
@@ -330,7 +332,7 @@ def value_histogram(df: DataFrame, x: str = "value") -> DataFrame:
     distinct-values-per-partition, not rows.  Values outside the
     fit's snap-exact domain (|x| ≤ 1e6 — the module docstring's
     fixed-point headroom; non-finite included, as NaN/±Inf compare
-    greater than any finite bound) are excluded like NULLs (r8,
+    greater than any finite bound) are excluded like NULLs (the
     parity.py posture): a NaN or 1e308 bin would overflow the EM's
     sufficient-statistic snaps mid-iteration — one corrupt double
     must not kill a 100 TB fit."""
@@ -342,11 +344,11 @@ def value_histogram(df: DataFrame, x: str = "value") -> DataFrame:
     )
 
 
-def _head_arrays(head):
+def _head_arrays(head, x: str = "_x"):
     """(vals, cnts) numpy arrays from the Arrow head probe."""
     import numpy as np
 
-    vals = head.column("_x").to_numpy(zero_copy_only=False).astype(
+    vals = head.column(x).to_numpy(zero_copy_only=False).astype(
         np.float64, copy=False
     )
     cnts = head.column("cnt").to_numpy(zero_copy_only=False).astype(

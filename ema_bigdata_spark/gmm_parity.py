@@ -29,18 +29,32 @@ Parity posture:
 
 Spark-first shape (SURVEY §4.3): ONE distributed ``groupBy(value)``
 histogram scan (map-side combined — at 100 TB the only full pass;
-two jobs: its map stage and the checkpoint), then one statement for
-the init and one per EM iteration over the checkpointed histogram.
-Every statement is one projection chain over the histogram plus one
-aggregate, whatever the number of K values fitted in lockstep: no
-second scan, no join, no broadcast.  Over a one-partition histogram
-(the narrow 2-decimal domain) each statement is ONE job and has no
-exchange: ``local_checkpoint`` marks the checkpoint
-``SinglePartition``, so the aggregate and the init's window read it
-in place.  A histogram of several partitions keeps its
-single-partition shuffle — two jobs per statement.  Shuffle volume
-is bin-count, never row-count; the driver holds 3K floats per fit.
-The DuckDB oracle replays the identical computation as a flat
+two jobs: its map stage and the checkpoint), then ONE Arrow probe of
+the checkpoint (``limit(gmm.MAX_DRIVER_BINS + 1)``, one job) picks
+the executor of everything after it.  Shuffle volume is bin-count,
+never row-count, on both.
+
+- Driver executor, at most ``gmm.MAX_DRIVER_BINS`` bins (every
+  2-decimal domain: ~60 k bins whatever the row count).  The probe
+  already holds the whole histogram, so a numpy mirror of the
+  statements runs the init, the iterations and the lnL over it: no
+  further job, whatever K or the iteration count.  Same IEEE ops in
+  the same order as the SQL texts; the snapped sums are exact Python
+  ints (int64 limbs) and raise wherever a BIGINT would leave int64
+  (:func:`_np_snap`, :func:`_np_sum`).
+- Spark executor, a wider histogram: one statement for the init and
+  one per EM iteration over the checkpoint.  Every statement is one
+  projection chain over the histogram plus one aggregate, whatever the
+  number of K values fitted in lockstep: no second scan, no join, no
+  broadcast.  Over a one-partition histogram each statement is ONE
+  job and has no exchange: ``local_checkpoint`` marks the checkpoint
+  ``SinglePartition``, so the aggregate and the init's window read it
+  in place.  A histogram of several partitions keeps its
+  single-partition shuffle — two jobs per statement.
+
+The executors agree bit for bit (tests/test_properties.py
+``TestParityEMInvariants``); the driver holds 3K floats of state per
+fit.  The DuckDB oracle replays the identical computation as a flat
 materialized-CTE chain built from the same text builders.
 
 Reference: the Scala ``Main.scala:59-92`` EM loop (5K+2 full data
@@ -54,6 +68,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ema_bigdata_spark import gmm
 from ema_bigdata_spark.functions import xmath as X
 from ema_bigdata_spark.registry import query
 from ema_bigdata_spark.sources.tables import (
@@ -77,6 +92,8 @@ _N_SCF, _SX_SCF, _SXX_SCF, _LNL_SCF = (
 )
 _FLOOR_F = 1e-300
 _VAR_FLOOR_F = 1e-12
+#: lnL of a bin whose densities all underflowed to the floor
+_LN_FLOOR_F = math.log(_FLOOR_F)
 _FLOOR = X.dlit_exact(_FLOOR_F)
 _VAR_FLOOR = X.dlit_exact(_VAR_FLOOR_F)
 
@@ -177,7 +194,7 @@ def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
     # Param texts are either plain column refs (oracle: the
     # cross-joined 1-row params CTE — these must be CARRIED through
     # the stage chain) or folded literal expressions (Spark — nothing
-    # to carry; see parity_em_spark_multi's docstring for the measured
+    # to carry; see _spark_steps' docstring for the measured
     # literal-vs-view decision).
     pnames = sorted({v for _, P, _, _ in fits for v in P.values()
                      if v.isidentifier()})
@@ -253,7 +270,7 @@ def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
             sel = f"CASE {whens} ELSE {sel} END"
         lnbs.append(
             f"(CASE WHEN {' + '.join(f'{c}w{j}' for j in J)} <= {_FLOOR}"
-            f" THEN {X.dlit_exact(math.log(1e-300))} ELSE {sel} END)"
+            f" THEN {X.dlit_exact(_LN_FLOOR_F)} ELSE {sel} END)"
             f" AS {c}lnbv"
         )
     carry = ["c"] + [f"{c}{v}" for _, _, c, _ in fits for v in ("lnbv", "sv")]
@@ -452,13 +469,18 @@ def _check_fit_args(ks, iters) -> None:
     if not ks:
         raise ValueError("parity EM: ks=() — pass at least one K")
     for k in ks:
-        if not isinstance(k, int) or k < 1:
+        # bool is an int subclass: True would fit as K=1
+        if isinstance(k, bool) or not isinstance(k, int) or k < 1:
             raise ValueError(
                 f"parity EM: K={k!r} in ks={ks!r} is not a positive"
                 " component count"
             )
         if ks.count(k) > 1:
             raise ValueError(f"parity EM: K={k} appears twice in ks={ks!r}")
+    if isinstance(iters, bool) or not isinstance(iters, int):
+        raise ValueError(
+            f"parity EM: iters={iters!r} is not an iteration count"
+        )
     if iters < 0:
         raise ValueError(f"parity EM: iters={iters!r} is negative")
 
@@ -467,72 +489,229 @@ def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
                           ks: tuple[int, ...], iters: int,
                           want_lnl: bool = False,
                           hist: DataFrame | None = None):
-    """Run the bit-exact EM on Spark for one or more independent K values
-    in lockstep over ONE histogram (``hist``, or a fresh
-    :func:`prepare_hist` — two jobs).  One statement computes every
-    fit's init, ONE statement per iteration (SURVEY §4.3) every fit's
-    sufficient-statistic sums, and with ``want_lnl`` one more every
-    fit's log-likelihood.  Each statement is one projection chain over
-    the histogram plus one aggregate, with columns prefixed ``k{K}_``
-    (:func:`init_ctes`, :func:`iter_ctes`), so it runs one job however
-    many K values ride along — ``1 + iters + want_lnl`` in all over a
-    prepared one-partition histogram, twice that over a histogram of
-    several partitions (each aggregate then pays its single-partition
-    shuffle).  Params fold driver-side with the Python mirrors
-    between statements (``update_fold`` is the op-for-op
-    mirror of the oracle's ``update_ctes`` — same IEEE ops on the same
-    doubles).  Returns ``{k: (nd, P, lnl)}``.
+    """Run the bit-exact EM for one or more independent K values in
+    lockstep over ONE histogram (``hist``, or a fresh
+    :func:`prepare_hist` — two jobs); returns ``{k: (nd, P, lnl)}``.
 
-    The histogram is bound into each statement as ``{hist}`` through
-    ``spark.sql`` keyword arguments, so no view outlives a statement.
+    One ``hist.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()`` probe (one
+    job) picks the executor; ``gmm.MAX_DRIVER_BINS`` is read at call
+    time.  At most that many bins: :func:`_driver_steps` computes every
+    step on the probe's arrays, and no statement runs after the probe.
+    Above it: :func:`_spark_steps` runs one statement for every fit's
+    init, ONE per iteration (SURVEY §4.3) for every fit's
+    sufficient-statistic sums, and with ``want_lnl`` one more for every
+    fit's log-likelihood — ``1 + iters + want_lnl`` jobs over a
+    one-partition histogram, twice that over one of several partitions
+    (each aggregate then pays its single-partition shuffle).  Either
+    way, params fold driver-side between steps with the Python mirrors
+    (``update_fold`` is the op-for-op mirror of the oracle's
+    ``update_ctes`` — same IEEE ops on the same doubles), and the two
+    executors return the same bits.
+
     Each fit's expressions are the same text whatever else runs beside
     it, so a lockstep run is bit-identical to separate one-K runs
-    (asserted by TestParityEMInvariants); merging K values only cuts
-    the per-statement fixed cost (~0.35 s of analyze+JIT+schedule) from
-    ``len(ks)``× to 1× per iteration.  Merging keeps tree depth
-    constant; unrolling several iterations into one statement does
-    not, and Catalyst optimizer cost grows superlinearly with depth
-    (sf0.1, 15-iteration fit: 4.2 s per-iteration vs 5.7/7.5/28.6 s at
-    3/5/15 iterations per statement).
-
-    Params fold as literals: a 1-row params view cross-joined for a
-    constant statement text costs a createDataFrame round-trip plus a
-    broadcast join per iteration and times worse (9 s vs 5.5 s for the
-    15-iteration fit at sf0.1)."""
+    (asserted by TestParityEMInvariants); on Spark, merging K values
+    only cuts the per-statement fixed cost (~0.35 s of
+    analyze+JIT+schedule) from ``len(ks)``× to 1× per iteration."""
     _check_fit_args(ks, iters)
     if hist is None:
         hist = prepare_hist(spark, sf_dir)
+    head = hist.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()
+    if head.num_rows > gmm.MAX_DRIVER_BINS:
+        init, step = _spark_steps(spark, hist)
+    else:
+        init, step = _driver_steps(head)
 
-    def collect(ctes, fin):
-        q = _with(ctes, f"SELECT * FROM {fin}")
-        return spark.sql(q, hist=hist).collect()[0]
-
-    def literals(with_lnc: bool = False):
-        """Each fit's params as exact literals (plus ``lnc{j}`` = ln of
-        the normalizers for the log-likelihood pass)."""
-        out = {}
-        for k, (_, P) in state.items():
-            if with_lnc:
-                P = {**P, **{f"lnc{j}": X.xln(P[f"nrm{j}"])
-                             for j in range(1, k + 1)}}
-            out[k] = {key: X.dlit_exact(val) for key, val in P.items()}
-        return out
-
-    ctes, _, fin = init_ctes("{hist}", ks, "i")
-    row = collect(ctes, fin)
+    row = init(ks)
     _require_nonempty(row["n"])
     state = {k: init_fold(row, k) for k in ks}
 
     for _ in range(iters):
-        row = collect(*iter_ctes("spark", "{hist}", literals(), "m", "fit"))
+        row = step({k: P for k, (_, P) in state.items()}, "fit")
         state = {k: (nd, update_fold(row, nd, k))
                  for k, (nd, _) in state.items()}
 
     if not want_lnl:
         return {k: (nd, P, None) for k, (nd, P) in state.items()}
-    row = collect(*iter_ctes("spark", "{hist}", literals(True), "l", "lnl"))
+    # lnc{j} = ln of the normalizers, for the log-likelihood pass
+    row = step({k: {**P, **{f"lnc{j}": X.xln(P[f"nrm{j}"])
+                            for j in range(1, k + 1)}}
+                for k, (_, P) in state.items()}, "lnl")
     return {k: (nd, P, float(row[f"k{k}_lnlu"]) / _LNL_SCF)
             for k, (nd, P) in state.items()}
+
+
+def _spark_steps(spark: SparkSession, hist: DataFrame):
+    """``(init, step)`` running :func:`init_ctes` / :func:`iter_ctes` as
+    Spark statements over ``hist``, each returning its one-row result.
+
+    The histogram is bound into each statement as ``{hist}`` through
+    ``spark.sql`` keyword arguments, so no view outlives a statement.
+    Params fold in as exact literals: a 1-row params view cross-joined
+    for a constant statement text costs a createDataFrame round-trip
+    plus a broadcast join per iteration and times worse (9 s vs 5.5 s
+    for the 15-iteration fit at sf0.1).  Unrolling several iterations
+    into one statement grows the tree with each one, and Catalyst
+    optimizer cost grows superlinearly with depth (sf0.1, 15-iteration
+    fit: 4.2 s per-iteration vs 5.7/7.5/28.6 s at 3/5/15 iterations per
+    statement)."""
+
+    def collect(ctes, fin):
+        q = _with(ctes, f"SELECT * FROM {fin}")
+        return spark.sql(q, hist=hist).collect()[0]
+
+    def init(ks):
+        ctes, _, fin = init_ctes("{hist}", ks, "i")
+        return collect(ctes, fin)
+
+    def step(params, mode):
+        lits = {k: {key: X.dlit_exact(val) for key, val in P.items()}
+                for k, P in params.items()}
+        tag = "m" if mode == "fit" else "l"
+        return collect(*iter_ctes("spark", "{hist}", lits, tag, mode))
+
+    return init, step
+
+
+# ---- driver executor: the statements' math on the collected histogram --
+
+
+def _np_snap(v, scale: float):
+    """:func:`_snap` over a float64 array: ``floor(v·scale + 0.5)`` as
+    int64.  Raises where the double has no int64 (beyond ±2^63, or
+    NaN), as the oracle's ``CAST`` does.  Spark's ``floor(DOUBLE)``
+    saturates there instead (JVM d2l; NaN → 0 — see
+    ``functions.parity.floor_long``), and the sum of a saturated snap is
+    a wrong number."""
+    import numpy as np
+
+    f = np.floor(v * scale + 0.5)
+    ok = (f >= -(2.0 ** 63)) & (f < 2.0 ** 63)
+    if not ok.all():
+        raise OverflowError(
+            f"parity EM: snapped statistic {f[~ok][0]!r} overflows BIGINT"
+        )
+    return f.astype(np.int64)
+
+
+def _np_sum(a) -> int:
+    """Exact Σ of an int64 array as a Python int; raises like Spark's
+    ANSI ``SUM`` when the total leaves BIGINT.  Each element splits
+    into a signed high and an unsigned low 32-bit limb, each limb
+    column sums in int64 (no wrap below 2^31 elements), and the two
+    sums recombine in Python ints."""
+    import numpy as np
+
+    total = ((int((a >> 32).sum(dtype=np.int64)) << 32)
+             + int((a & 0xFFFFFFFF).sum(dtype=np.int64)))
+    if not -(1 << 63) <= total < (1 << 63):
+        raise OverflowError(f"parity EM: BIGINT sum {total} overflows")
+    return total
+
+
+def _np_mul(a, b):
+    """Elementwise int64 ``a·b``; raises like Spark's ANSI multiply on
+    overflow.  The float64 product is within 2^-50 relative of the
+    exact one, so it clears every pair below 2^62; the pairs above are
+    checked in Python ints."""
+    import numpy as np
+
+    near = np.abs(a.astype(np.float64) * b.astype(np.float64)) >= 2.0 ** 62
+    for i in np.flatnonzero(near):
+        if not -(1 << 63) <= int(a[i]) * int(b[i]) < (1 << 63):
+            raise OverflowError(
+                f"parity EM: BIGINT product {int(a[i])}·{int(b[i])}"
+                " overflows"
+            )
+    return a * b
+
+
+def _np_init(x, cnt, ks: tuple[int, ...]) -> dict:
+    """:func:`init_ctes`' final row over the histogram arrays (``x``
+    ascending).  The running count ``cm`` needs no RANGE-frame peers:
+    the histogram's bins are distinct values."""
+    import numpy as np
+
+    n = _np_sum(cnt)
+    if n == 0:
+        return {"n": n}
+    cm = np.cumsum(cnt)  # counts ≥ 0 and their total fits: no wrap
+    s1u = _np_sum(_np_mul(_np_snap(x, _SX_SCF), cnt))
+    s2u = _np_sum(_np_mul(_np_snap(x * x, _SXX_SCF), cnt))
+    nd = float(n)
+    mean0 = (float(s1u) / _SX_SCF) / nd
+    row = {"n": n, "nd": nd,
+           "s20": max((float(s2u) / _SXX_SCF) / nd - mean0 * mean0,
+                      _VAR_FLOOR_F)}
+    for k in ks:
+        for j in range(1, k + 1):
+            pos = (float(j) / float(k + 1)) * (nd - 1.0)
+            lo = math.floor(pos)
+            inc = 1 if pos > float(lo) else 0
+            # min x over the bins with cm ≥ t: the first such bin
+            vlo, vhi = (float(x[np.searchsorted(cm, t)])
+                        for t in (lo + 1, lo + 1 + inc))
+            frac = pos - float(lo)
+            row[f"k{k}_mu0_{j}"] = vlo * (1.0 - frac) + vhi * frac
+    return row
+
+
+def _np_iter(x, cnt, params: dict[int, dict[str, float]], mode: str
+             ) -> dict:
+    """:func:`iter_ctes`' aggregate row over the histogram arrays for
+    float ``params``.  ``least``/``greatest`` are ``np.fmin`` /
+    ``np.maximum`` and the argmax ``CASE`` treats NaN as the largest
+    value, as Spark and DuckDB order doubles."""
+    import numpy as np
+
+    c = cnt.astype(np.float64)
+    row = {}
+    for k, P in params.items():
+        J = range(1, k + 1)
+        zc, w = {}, {}
+        for j in J:
+            d = x - P[f"mu{j}"]
+            zc[j] = np.fmin((d * d) / (2.0 * P[f"s2{j}"]), X.EXP_CLAMP)
+            w[j] = P[f"nrm{j}"] * X.xexp_neg_np(zc[j])
+        ws = w[1]
+        for j in J[1:]:
+            ws = ws + w[j]
+        rs = np.maximum(ws, _FLOOR_F)
+        if mode == "fit":
+            for j in J:
+                g = w[j] / rs
+                gx = g * x
+                row[f"k{k}_n{j}u"] = _np_sum(_np_snap(g * c, _N_SCF))
+                row[f"k{k}_sx{j}u"] = _np_sum(_np_snap(gx * c, _SX_SCF))
+                row[f"k{k}_sxx{j}u"] = _np_sum(
+                    _np_snap((gx * x) * c, _SXX_SCF))
+            continue
+        bg = w[1]
+        for j in J[1:]:
+            bg = np.maximum(bg, w[j])
+        bg = np.maximum(bg, _FLOOR_F)
+        sel = P[f"lnc{k}"] - zc[k]
+        for j in range(k - 1, 0, -1):  # the CASE's first match wins
+            top = np.isnan(w[j]) | (w[j] >= w[j + 1])
+            for jj in range(j + 2, k + 1):
+                top &= np.isnan(w[j]) | (w[j] >= w[jj])
+            sel = np.where(top, P[f"lnc{j}"] - zc[j], sel)
+        lnb = np.where(ws <= _FLOOR_F, _LN_FLOOR_F, sel)
+        v = (lnb + X.py_atanh_ln(rs / bg)) * c
+        row[f"k{k}_lnlu"] = _np_sum(_np_snap(v, _LNL_SCF))
+    return row
+
+
+def _driver_steps(head):
+    """``(init, step)`` computing the same rows as :func:`_spark_steps`
+    on the Arrow probe ``head`` — the whole histogram — with numpy."""
+    import numpy as np
+
+    x, cnt = gmm._head_arrays(head, "x")
+    order = np.argsort(x, kind="stable")
+    x, cnt = x[order], cnt[order]
+    return (lambda ks: _np_init(x, cnt, ks),
+            lambda params, mode: _np_iter(x, cnt, params, mode))
 
 
 # ---- DuckDB oracle builders ---------------------------------------------
@@ -653,10 +832,11 @@ def gmm_bic_oracle_sql() -> str:
 def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic EM fit on events.value → K-row parameter table
     (K=3, fixed 15 iterations), hash-checked against a DuckDB replay
-    via the bit-exact parity EM (module docstring).  One histogram scan,
-    then 16 histogram-sized statements of one job each over the
-    one-partition histogram (init + 15 iterations); the driver holds 9
-    floats of state, returned as a ``local_frame`` (collect: no job)."""
+    via the bit-exact parity EM (module docstring).  One histogram scan
+    and one Arrow probe of it (3 jobs); the init and the 15 iterations
+    then run on the driver over the probed bins — or, for a histogram
+    wider than ``gmm.MAX_DRIVER_BINS``, as 16 statements over it.  The
+    9 fitted floats return as a ``local_frame`` (collect: no job)."""
     _, P, _ = parity_em_spark(spark, sf_dir, K_FIT, ITERS_FIT)
     rows = [
         (j - 1, _round6(P[f"phi{j}"]), _round6(P[f"mu{j}"]),
@@ -674,10 +854,12 @@ def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model selection over K ∈ {2,3,4} via BIC = (3K−1)·ln n − 2·lnL
     (6 fixed iterations per candidate, lnL evaluated at the final
     parameters), hash-checked against a DuckDB replay (module
-    docstring).  ONE histogram scan shared by all three fits, which
-    run in lockstep: 8 statements of one job each over the
-    one-partition histogram (init, 6 iterations, lnL).  lnL rides the
-    same snapped-integer sum discipline as the sufficient statistics.
+    docstring).  ONE histogram scan and one Arrow probe of it (3 jobs),
+    shared by all three fits, which run in lockstep on the driver over
+    the probed bins — or, for a histogram wider than
+    ``gmm.MAX_DRIVER_BINS``, as 8 statements over it (init, 6
+    iterations, lnL).  lnL rides the same snapped-integer sum
+    discipline as the sufficient statistics.
     The rows return as a ``local_frame``, whose collect runs no job.
 
     INTENTIONAL: n is the histogram total — the count of non-NULL

@@ -46,7 +46,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # partition size — Spark only applies the rewrite when the
     # threshold is ≥ advisoryPartitionSizeInBytes, so a static 64 MiB
     # would silently disable it on any deployment that raises the
-    # advisory size.  ADVICE r12.)
+    # advisory size.)
     # Guard for TIMESTAMP(NANOS) parquet columns, which Spark cannot
     # read natively: read them as long (ns since epoch); the loader
     # (tables.py) converts to TIMESTAMP_NTZ only when a column actually
@@ -101,11 +101,11 @@ def tune(spark: SparkSession) -> SparkSession:
     # and the advisory size is exactly the "one normal post-AQE
     # partition" bound that makes the rewritten hash table OOM-safe),
     # so cluster sizing moves it through the advisory size alone.
-    # Evidence: interleaved min-of-3 A/B at sf1 (r13) on the five
+    # Evidence: interleaved min-of-3 A/B at sf1 on the five
     # SMJ-shaped queries — q_join_full −8.8%, q_cdc_merge −10.8%,
     # q_dedup_incremental_near −11.8%, q_pagerank −7.9%,
-    # q_sql_tpch_q2 flat (+2%, noise); the sf0.1 A/B was within noise
-    # (r12), the sf1 one is not.  A session that cannot report its
+    # q_sql_tpch_q2 flat (+2%, noise); the sf0.1 A/B is within noise,
+    # the sf1 one is not.  A session that cannot report its
     # advisory size gets Spark's default one, 64 MiB.
     try:
         shj = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")

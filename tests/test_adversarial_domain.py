@@ -13,11 +13,10 @@ interpolation).  Same bit-faithful compare as the driver sim.
 
 from __future__ import annotations
 
-import datetime
-
 import pytest
 
 from ema_bigdata_spark import registry
+from tests.conftest import write_events
 
 registry.load_all()
 
@@ -42,28 +41,6 @@ _EVENTS_QUERIES = (
     "q_loglik_fixed", "q_mstep_mean_fixed", "q_mstep_var_fixed",
     "q_mstep_weight_fixed",
 )
-
-
-def _write_events(spark, path: str, values) -> None:
-    """Write a full-schema events parquet from a value list (None →
-    NULL value rows)."""
-    base = datetime.datetime(2024, 1, 1)
-    rows = [
-        (
-            i,
-            base + datetime.timedelta(minutes=i),
-            i % 7,
-            ("click", "view", "purchase")[i % 3],
-            v,
-            "{}",
-        )
-        for i, v in enumerate(values)
-    ]
-    spark.createDataFrame(
-        rows,
-        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT,"
-        " event_type STRING, value DOUBLE, props STRING",
-    ).coalesce(2).write.mode("overwrite").parquet(f"{path}/events.parquet")
 
 
 def _make_duck(sf_dir: str, table: str):
@@ -104,32 +81,6 @@ def _compare(spark, sf_dir: str, names) -> None:
     duck = _make_duck(sf_dir, "events")
     for name in names:
         _check_parity(spark, duck, sf_dir, name)
-
-
-@pytest.fixture(scope="module")
-def adv_dirs(spark, tmp_path_factory):
-    """Three adversarial events tables, written once."""
-    import random
-
-    root = tmp_path_factory.mktemp("adv")
-    rng = random.Random(17)
-    # mixed signs, wide magnitudes, nulls — 2-decimal fixed point to
-    # honor the cents contract q_kmeans/q_mean assume
-    neg_wide = [
-        round(rng.uniform(-5000.0, 5000.0), 2) for _ in range(400)
-    ] + [round(rng.uniform(-0.05, 0.05), 2) for _ in range(80)] + [
-        None, None, -0.0, 0.0, -4999.99, 4999.99,
-    ]
-    constant = [42.0] * 200
-    tiny = [-1.5, 0.0, 2.25]
-    dirs = {}
-    for tag, vals in (
-        ("neg_wide", neg_wide), ("constant", constant), ("tiny", tiny)
-    ):
-        d = str(root / tag)
-        _write_events(spark, d, vals)
-        dirs[tag] = d
-    return dirs
 
 
 class TestAdversarialDomains:
@@ -349,7 +300,7 @@ class TestProfilingDomain:
             # benign spread so medians/σ are nondegenerate
             + [round(100.0 + 0.25 * i, 2) for i in range(40)]
         )
-        _write_events(spark, d, values)
+        write_events(spark, d, values)
         return d
 
     @pytest.mark.parametrize("name", _QUERIES)

@@ -1031,11 +1031,15 @@ def test_gmm_fit_task_count(spark):
 
 
 def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
-    """Every parity-EM statement — init, fit iteration, lnL — is one
+    """Every parity-EM statement of the Spark executor (forced by
+    ``MAX_DRIVER_BINS = 0``) — init, fit iteration, lnL — is one
     projection chain over the prepared histogram plus one aggregate.
     The one-partition histogram is checkpointed ``SinglePartition``, so
     each statement is ONE job however many K values run in lockstep,
-    with no exchange, join or broadcast in any executed plan."""
+    with no exchange, join or broadcast in any executed plan.  The
+    driver executor returns the same bits from the executor probe's one
+    job and runs no statement."""
+    from ema_bigdata_spark import gmm
     from ema_bigdata_spark import gmm_parity as G
 
     sc = spark.sparkContext
@@ -1048,18 +1052,29 @@ def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
         frames.append(df)
         return df
 
-    monkeypatch.setattr(spark, "sql", capture)
-    for ks, want_lnl in (((3,), False), ((2, 3, 4), True)):
-        group = f"test_parity_em_job_shape_{len(ks)}"
+    def run(ks, want_lnl, tag):
+        group = f"test_parity_em_job_shape_{tag}_{len(ks)}"
         sc.setJobGroup(group, "parity EM job-shape pin")
         try:
-            G.parity_em_spark_multi(spark, sf_dir, ks, 2,
-                                    want_lnl=want_lnl, hist=hist)
+            fits = G.parity_em_spark_multi(spark, sf_dir, ks, 2,
+                                           want_lnl=want_lnl, hist=hist)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        # init + 2 iterations (+ lnL)
-        assert 0 < jobs <= 3 + want_lnl, (ks, jobs)
+        return fits, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    monkeypatch.setattr(spark, "sql", capture)
+    driver_bins = gmm.MAX_DRIVER_BINS
+    for ks, want_lnl in (((3,), False), ((2, 3, 4), True)):
+        monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
+        want, jobs = run(ks, want_lnl, "spark")
+        # the probe, init + 2 iterations (+ lnL)
+        assert 0 < jobs <= 1 + 3 + want_lnl, (ks, jobs)
+        monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", driver_bins)
+        n_frames = len(frames)
+        got, jobs = run(ks, want_lnl, "driver")
+        assert jobs == 1 and len(frames) == n_frames, (ks, jobs)
+        # repr round-trips every double, -0.0 included: equal bits
+        assert repr(got) == repr(want), ks
     assert hist.rdd.getNumPartitions() == 1
     assert len(frames) == 3 + 4
     for df in frames:
@@ -1075,8 +1090,8 @@ def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
 #: checkpoint that loses its SinglePartition layout adds a shuffle job
 #: per statement and goes over these ceilings.
 _CHECKPOINT_JOB_CEILINGS = {
-    "gmm_fit": 18,
-    "q_gmm_bic": 10,
+    "gmm_fit": 3,
+    "q_gmm_bic": 3,
     "q_kmeans": 7,
     "q_bigram_lm": 7,
     "q_unigram_lm": 6,

@@ -4002,6 +4002,40 @@ def _packed(d):
     return {k: struct.pack(">d", v) for k, v in d.items()}
 
 
+def _packed_fits(fits):
+    """``{k: (nd, P, lnl)}`` with lnL → every float as IEEE bits."""
+    return {k: _packed({"nd": nd, "lnl": lnl, **P})
+            for k, (nd, P, lnl) in fits.items()}
+
+
+def _sql_frames(spark, monkeypatch, run):
+    """``run()``'s result and the frame of every ``spark.sql`` call it
+    made."""
+    frames, sql = [], spark.sql
+
+    def capture(q, **kwargs):
+        frames.append(sql(q, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(spark, "sql", capture)
+    try:
+        return run(), frames
+    finally:
+        monkeypatch.setattr(spark, "sql", sql)
+
+
+#: hand-built (x, cnt) histograms for the parity-EM init and executors
+_PARITY_HISTS = {
+    "one-bin": [(2.5, 7)],
+    "two-bins-n2": [(-1.0, 1), (3.0, 1)],
+    # n = 5: K=3 positions 1, 2, 3 land exactly on cm = 2, 3 and
+    # inside the last bin; K=2's 4/3 and 8/3 straddle boundaries
+    "cm-boundary": [(0.25, 2), (0.75, 1), (1.5, 2)],
+    "counts-2^31": [(1.5, 2**31 + 3), (2.0, 5), (4.25, 2**32)],
+    "negative": [(-3.5, 4), (-1.25, 9), (0.5, 2), (2.0, 1)],
+}
+
+
 class TestJsonBoundary:
     """r7: the DECLARED single-document boundary of q_json_extract
     (scalars.py).  On prefix-valid JSON with trailing garbage the
@@ -4057,39 +4091,39 @@ class TestParityEMInvariants:
         """The snapped-integer sufficient-statistic sums make every
         iteration order-free, so the fit must be bit-identical under
         any histogram partitioning (the same invariant gmm.py's
-        exact limb sums guarantee for the numpy engine).  The
-        histograms go through ``local_checkpoint``: the one-partition
-        one is read in place, the 13-partition one keeps its Exchange
-        — a wide histogram is never squeezed into one task."""
+        exact limb sums guarantee for the numpy engine), on both
+        executors.  The histograms go through ``local_checkpoint``: on
+        the Spark executor (forced by ``MAX_DRIVER_BINS = 0``) the
+        one-partition one is read in place and the 13-partition one
+        keeps its Exchange — a wide histogram is never squeezed into
+        one task.  The driver executor runs no statement at all."""
+        from ema_bigdata_spark import gmm
         from ema_bigdata_spark import gmm_parity as G
         from ema_bigdata_spark.plans import executed_plan
         from ema_bigdata_spark.sources.tables import local_checkpoint
 
         base = G.parity_em_spark(spark, sf_dir, 3, 4)
-        sql = spark.sql
+        driver_bins = gmm.MAX_DRIVER_BINS
         for parts in (1, 13):
             hist = local_checkpoint(
                 G.prepare_hist(spark, sf_dir).repartition(parts)
             )
             assert hist.rdd.getNumPartitions() == parts
-            frames = []
-
-            def capture(q, **kwargs):
-                frames.append(sql(q, **kwargs))
-                return frames[-1]
-
-            monkeypatch.setattr(spark, "sql", capture)
-            got = G.parity_em_spark(spark, sf_dir, 3, 4, hist=hist)
-            monkeypatch.setattr(spark, "sql", sql)
-            assert got[0] == base[0]
-            # compare by IEEE bits: Python == treats -0.0 == +0.0,
-            # exactly the class the driver hash distinguishes
-            assert _packed(got[1]) == _packed(base[1]), parts
-            plans = [executed_plan(f) for f in frames]
-            assert len(plans) == 1 + 4
-            assert all(("Exchange" in p) == (parts > 1) for p in plans), (
-                parts, plans,
-            )
+            for max_bins in (0, driver_bins):
+                monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", max_bins)
+                got, frames = _sql_frames(
+                    spark, monkeypatch,
+                    lambda: G.parity_em_spark(spark, sf_dir, 3, 4,
+                                              hist=hist),
+                )
+                assert got[0] == base[0]
+                # compare by IEEE bits: Python == treats -0.0 == +0.0,
+                # exactly the class the driver hash distinguishes
+                assert _packed(got[1]) == _packed(base[1]), (parts, max_bins)
+                plans = [executed_plan(f) for f in frames]
+                assert len(plans) == (1 + 4 if max_bins == 0 else 0)
+                assert all(("Exchange" in p) == (parts > 1)
+                           for p in plans), (parts, plans)
 
     def test_randomized_xmath_cross_engine(self, spark, duck):
         """Seeded random doubles through the shared exp/ln texts,
@@ -4200,42 +4234,42 @@ class TestParityEMInvariants:
             assert struct.pack(">d", sv) == want, ("spark", c, sv)
             assert struct.pack(">d", dv) == want, ("duckdb", c, dv)
 
-    def test_lockstep_multi_equals_single_k(self, spark, sf_dir):
-        """The merged per-iteration statement (every K fit in one SQL)
-        must produce BIT-identical parameters and lnL to separate one-K
-        runs, whatever order the K values come in — the merge is a
-        scheduling change, not a math change."""
+    def test_lockstep_multi_equals_single_k(self, spark, sf_dir,
+                                            monkeypatch):
+        """The merged per-iteration step (every K fit in one SQL on the
+        Spark executor, forced by ``MAX_DRIVER_BINS = 0``; one numpy
+        pass on the driver executor) must produce BIT-identical
+        parameters and lnL to separate one-K runs on the Spark
+        executor, whatever order the K values come in — the merge is a
+        scheduling change, not a math change.  The driver executor runs
+        no statement."""
+        from ema_bigdata_spark import gmm
         from ema_bigdata_spark import gmm_parity as G
 
         hist = G.prepare_hist(spark, sf_dir)
+        driver_bins = gmm.MAX_DRIVER_BINS
+        monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
         single = {
             k: G.parity_em_spark_multi(
                 spark, sf_dir, (k,), 3, want_lnl=True, hist=hist
             )[k]
             for k in (2, 3, 4)
         }
-        for ks in ((2, 3), (4, 2, 3)):
-            multi = G.parity_em_spark_multi(
-                spark, sf_dir, ks, 3, want_lnl=True, hist=hist
-            )
-            assert sorted(multi) == sorted(ks)
-            for k in ks:
-                nd, P, lnl = single[k]
-                assert multi[k][0] == nd
-                assert _packed(multi[k][1]) == _packed(P), (ks, k)
-                assert _packed({"l": multi[k][2]}) == _packed({"l": lnl}), (
-                    ks, k)
+        for max_bins in (0, driver_bins):
+            monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", max_bins)
+            for ks in ((2,), (2, 3), (4, 2, 3)):
+                multi, frames = _sql_frames(
+                    spark, monkeypatch,
+                    lambda: G.parity_em_spark_multi(
+                        spark, sf_dir, ks, 3, want_lnl=True, hist=hist),
+                )
+                assert len(frames) == (1 + 3 + 1 if max_bins == 0 else 0)
+                assert sorted(multi) == sorted(ks)
+                assert _packed_fits(multi) == _packed_fits(
+                    {k: single[k] for k in ks}), (max_bins, ks)
 
-    @pytest.mark.parametrize("hist_rows", [
-        [(2.5, 7)],
-        [(-1.0, 1), (3.0, 1)],
-        # n = 5: K=3 positions 1, 2, 3 land exactly on cm = 2, 3 and
-        # inside the last bin; K=2's 4/3 and 8/3 straddle boundaries
-        [(0.25, 2), (0.75, 1), (1.5, 2)],
-        [(1.5, 2**31 + 3), (2.0, 5), (4.25, 2**32)],
-        [(-3.5, 4), (-1.25, 9), (0.5, 2), (2.0, 1)],
-    ], ids=["one-bin", "two-bins-n2", "cm-boundary", "counts-2^31",
-            "negative"])
+    @pytest.mark.parametrize("hist_rows", list(_PARITY_HISTS.values()),
+                             ids=list(_PARITY_HISTS))
     def test_init_matches_independent_reference(self, spark, hist_rows):
         """The init statement's row against a reference that shares no
         SQL text with it: numpy percentiles (``gmm._weighted_percentiles``,
@@ -4280,6 +4314,11 @@ class TestParityEMInvariants:
         ((-1,), 2, "K=-1"),
         ((3, 3), 2, "K=3 appears twice"),
         ((3,), -1, "iters=-1"),
+        # bool is an int subclass: True must not pass as K=1 / 1 iter
+        ((True,), 2, "K=True"),
+        ((3,), True, "iters=True"),
+        # a float count would only fail in range(), after the histogram
+        ((3,), 2.0, "iters=2.0"),
     ])
     def test_degenerate_params_refused(self, spark, sf_dir, ks, iters,
                                        named):
@@ -4289,8 +4328,83 @@ class TestParityEMInvariants:
 
         from ema_bigdata_spark import gmm_parity as G
 
-        with pytest.raises(ValueError, match=re.escape(named)):
-            G.parity_em_spark_multi(spark, sf_dir, ks, iters)
+        sc = spark.sparkContext
+        group = "test_parity_em_degenerate_params"
+        sc.setJobGroup(group, "parity EM refusal")
+        try:
+            with pytest.raises(ValueError, match=re.escape(named)):
+                G.parity_em_spark_multi(spark, sf_dir, ks, iters)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    @pytest.mark.parametrize(
+        "source",
+        ["sf_dir", "events-neg_wide", "events-constant", "events-tiny"]
+        + [f"hist-{name}" for name in _PARITY_HISTS],
+    )
+    def test_driver_executor_matches_spark_statements(
+            self, spark, sf_dir, adv_dirs, monkeypatch, source):
+        """The numpy executor against the Spark statements (forced by
+        ``MAX_DRIVER_BINS = 0``) over the same histogram: params, nd
+        and lnL bit for bit, for one, three and three lockstep fits.
+        Inputs: the Tier-1 corpus, the adversarial events tables
+        (negatives, wide magnitudes, a constant column, 3 rows) and the
+        hand-built init histograms (counts past 2^31 included)."""
+        from ema_bigdata_spark import gmm
+        from ema_bigdata_spark import gmm_parity as G
+
+        kind, _, name = source.partition("-")
+        if kind == "hist":
+            hist = spark.createDataFrame(_PARITY_HISTS[name],
+                                         "x DOUBLE, cnt BIGINT")
+        else:
+            hist = G.prepare_hist(
+                spark, sf_dir if kind == "sf_dir" else adv_dirs[name])
+        driver_bins = gmm.MAX_DRIVER_BINS
+        for ks in ((1,), (3,), (2, 3, 4)):
+            monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
+            want = G.parity_em_spark_multi(spark, sf_dir, ks, 3,
+                                           want_lnl=True, hist=hist)
+            monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", driver_bins)
+            got, frames = _sql_frames(
+                spark, monkeypatch,
+                lambda: G.parity_em_spark_multi(spark, sf_dir, ks, 3,
+                                                want_lnl=True, hist=hist),
+            )
+            assert frames == []
+            assert _packed_fits(got) == _packed_fits(want), (source, ks)
+
+    @pytest.mark.parametrize("hist_rows, iters", [
+        # per-bin x² snaps of 5e18 fit; the init's sum of them does not
+        ([(1e6, 500), (-1e6, 500)], 0),
+        # the init's x² sum fits (2^63 − 2^29) and so does each bin's
+        # snapped g·x²·c (K=1: g = 1); the iteration's sxx sum of the
+        # two is 2^63 + 131272704
+        ([(756.7445448376116, 3 * 2**28), (-756.7445448376116, 3 * 2**28)],
+         1),
+    ], ids=["init-x2-sum", "iteration-sxx-sum"])
+    def test_snapped_sum_overflow_raises_on_both_executors(
+            self, spark, sf_dir, monkeypatch, hist_rows, iters):
+        """A snapped sum that leaves BIGINT raises on the Spark
+        statements (ANSI ``SUM``) and on the driver executor (exact
+        limb sum) — neither returns a wrapped number."""
+        from pyspark.errors import ArithmeticException
+
+        from ema_bigdata_spark import gmm
+        from ema_bigdata_spark import gmm_parity as G
+
+        hist = spark.createDataFrame(hist_rows, "x DOUBLE, cnt BIGINT")
+        for max_bins in (0, gmm.MAX_DRIVER_BINS):
+            monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", max_bins)
+            with pytest.raises((ArithmeticException, OverflowError),
+                               match="overflow"):
+                G.parity_em_spark_multi(spark, sf_dir, (1,), iters,
+                                        hist=hist)
+            if iters:
+                # one step short of the overflow, both return the fit
+                G.parity_em_spark_multi(spark, sf_dir, (1,), iters - 1,
+                                        hist=hist)
 
     def test_single_component_fits(self, spark, sf_dir):
         """K=1 is a plain Gaussian, not a degenerate mixture: it fits

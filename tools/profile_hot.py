@@ -147,18 +147,28 @@ def main():
               lambda: _force(registry.QUERIES["q_pagerank"](spark, SF_DIR)))
 
     if "parity" in want:
+        from ema_bigdata_spark import gmm
         from ema_bigdata_spark import gmm_parity as GP
 
         timed("parity: prepare_hist", lambda: GP.prepare_hist(spark, SF_DIR))
         hist = GP.prepare_hist(spark, SF_DIR)
-        timed("parity: 15-iter single fit (gmm_fit body)",
-              lambda: GP.parity_em_spark(spark, SF_DIR, 3, 15,
-                                         want_lnl=False, hist=hist),
-              runs=2)
-        timed("parity: multi-k 6-iter (q_gmm_bic body)",
-              lambda: GP.parity_em_spark_multi(spark, SF_DIR, (2, 3, 4), 6,
-                                               want_lnl=True, hist=hist),
-              runs=2)
+        driver_bins = gmm.MAX_DRIVER_BINS
+        # both executors over the same checkpoint; the cutover constant
+        # forces the Spark statements
+        for executor, max_bins in (("driver", driver_bins), ("spark", 0)):
+            gmm.MAX_DRIVER_BINS = max_bins
+            try:
+                timed(f"parity[{executor}]: 15-iter single fit (gmm_fit)",
+                      lambda: GP.parity_em_spark(spark, SF_DIR, 3, 15,
+                                                 want_lnl=False, hist=hist),
+                      runs=2)
+                timed(f"parity[{executor}]: multi-k 6-iter (q_gmm_bic)",
+                      lambda: GP.parity_em_spark_multi(
+                          spark, SF_DIR, (2, 3, 4), 6, want_lnl=True,
+                          hist=hist),
+                      runs=2)
+            finally:
+                gmm.MAX_DRIVER_BINS = driver_bins
 
     spark.stop()
 
