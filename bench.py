@@ -118,18 +118,16 @@ def bench_fixtures(spark) -> list[tuple[str, object]]:
         ),
     )]
 
-    # wide-domain EM fallback at REALISTIC width (VERDICT r3 §Next-6):
-    # the Python-int reference tests (tests/test_properties.py
-    # TestGMM::test_em_stats_match_python_int_reference and
-    # ::test_distributed_em_layout_invariant) prove _distributed_em's
-    # exact sums at toy size; this entry pins its per-iteration COST on a
-    # generated 2 M-distinct-value histogram (events.value at sf0.1 has
-    # ~60 k bins — far under MAX_DRIVER_BINS — so the distributed path
-    # never runs on testdata).  4 M rows → 2 M bins in [0, 400],
-    # deterministic via xxhash64, k=3, fixed 3 iterations; the reported
-    # number covers histogram build + init + 3 cluster aggregations.
-    from ema_bigdata_spark.gmm import MAX_DRIVER_BINS, gmm_fit_hist
-    from ema_bigdata_spark.gmm import value_histogram
+    # the EM engine's Spark executor at REALISTIC width: the bit-exact
+    # tests (tests/test_properties.py TestGMM and
+    # TestParityEMInvariants) prove the executors agree at toy size;
+    # this entry pins the per-iteration COST on a generated
+    # 2 M-distinct-value histogram (events.value at sf0.1 has ~60 k
+    # bins — far under MAX_DRIVER_BINS — so the Spark executor never
+    # runs on testdata).  4 M rows → 2 M bins in [0, 400], deterministic
+    # via xxhash64, k=3, fixed 3 iterations; the reported number covers
+    # histogram build + probe + checkpoint + init + 3 statements.
+    from ema_bigdata_spark.gmm import MAX_DRIVER_BINS
 
     def wide_em():
         wide = spark.range(0, 4_000_000, 1, 32).select(
@@ -138,8 +136,7 @@ def bench_fixtures(spark) -> list[tuple[str, object]]:
                 / 5000.0
             ).alias("value")
         )
-        hist = value_histogram(wide, "value")
-        model = gmm_fit_hist(hist, k=3, tol=0.0, max_iter=3)
+        model = gmm_fit(wide, "value", k=3, tol=0.0, max_iter=3)
         assert model.n_iter == 3 and len(model.lnp_trace) == 3
 
     # sanity: the fixture genuinely exceeds the driver cutover

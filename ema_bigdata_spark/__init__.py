@@ -6,7 +6,7 @@ training-data platform.  See README.md and SURVEY.md.
 Library entry points (each also backs a declared ``queries()`` entry):
 
 >>> from ema_bigdata_spark import gmm_fit, sessionize, minhash_pairs
->>> model = gmm_fit(df, "value", k=3)          # EM, 1 job/iteration
+>>> model = gmm_fit(df, "value", k=3)          # 1 scan, EM on histogram
 >>> sessions = sessionize(events_df)           # gaps-and-islands
 >>> dups = minhash_pairs(docs_df)              # MinHash-LSH candidates
 """

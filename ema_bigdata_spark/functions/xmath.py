@@ -30,7 +30,9 @@ to 2¹⁶ leaf copies and a 3-reference ``CASE`` chain to 3¹⁰ — planning
 hangs.  Therefore:
 
 - per-ROW chains use nested array ``transform``s (lambdas are opaque
-  to projection collapse → tree size is LINEAR in chain depth);
+  to projection collapse → tree size is LINEAR in chain depth), or on
+  Spark 4 one CTE per step (:func:`exp_neg_stages`: its
+  ``CollapseProject`` keeps a step whose column the next reads twice);
 - the ln range reduction uses the 2-reference spelling
   ``w/(CASE WHEN w >= p THEN p ELSE 1.0 END)`` (÷1.0 is exact), and is
   only ever applied to 1-row scalar CTEs (DuckDB) or Python floats
@@ -173,20 +175,38 @@ def _lt(arr_expr: str, var: str, body: str, dialect: str) -> str:
     return f"{fn}({arr_expr}, {var} -> {body})"
 
 
+def _exp_taylor(var: str) -> str:
+    """The clamped, 2⁻¹⁶-scaled Taylor term of ``xexp_neg(var)``."""
+    u = f"(least({var}, {dlit_exact(EXP_CLAMP)}) * {dlit_exact(INV_2_16)})"
+    return (
+        f"(1.0 + {u} * (-1.0 + {u} * (0.5 + {u} *"
+        f" (-{dlit_exact(_EXP_C3)} + {u} * {dlit_exact(_EXP_C4)}))))"
+    )
+
+
 def exp_neg_arr(z_arr_expr: str, dialect: str, var: str = "zz") -> str:
     """Elementwise ``xexp_neg`` over a DOUBLE array — one expression of
     17 nested ``transform``s, LINEAR tree size (see module docstring).
     Inputs must already be non-negative; the 708 clamp is applied
     here, mirroring :func:`xexp_neg` exactly."""
-    u = f"(least({var}, {dlit_exact(EXP_CLAMP)}) * {dlit_exact(INV_2_16)})"
-    taylor = (
-        f"(1.0 + {u} * (-1.0 + {u} * (0.5 + {u} *"
-        f" (-{dlit_exact(_EXP_C3)} + {u} * {dlit_exact(_EXP_C4)}))))"
-    )
-    out = _lt(z_arr_expr, var, taylor, dialect)
+    out = _lt(z_arr_expr, var, _exp_taylor(var), dialect)
     for _ in range(16):
         out = _lt(out, var, f"({var} * {var})", dialect)
     return out
+
+
+def exp_neg_stages(zs: list[str], outs: list[str]
+                   ) -> list[list[tuple[str, str]]]:
+    """Spark's per-column :func:`exp_neg_arr`: the Taylor stage and the
+    16 squaring stages as projection lists ``(column, expr)``, column
+    ``outs[i]`` holding ``xexp_neg(zs[i])`` after the last stage — the
+    same IEEE ops in the same order, so the same bits.  Chain them one
+    CTE per stage: Spark 4's ``CollapseProject`` does not merge a
+    projection whose non-cheap column the next one reads twice, so the
+    plan stays linear, and whole-stage codegen runs what 17 interpreted
+    ``transform``s ran (1.73 M rows, K=3: 0.2 s instead of 1.9 s)."""
+    stages = [[(o, _exp_taylor(z)) for z, o in zip(zs, outs)]]
+    return stages + [[(o, f"({o} * {o})") for o in outs]] * 16
 
 
 def sql_xln_scalar(v_expr: str, tag: str) -> list[tuple[str, str]]:

@@ -1,70 +1,63 @@
-"""Cross-engine bit-exact EM for the flagship GMM queries.
+"""The package's one EM engine, bit-exact across Spark, CPython and DuckDB.
 
-``gmm_fit`` and ``q_gmm_bic`` are hash-checked against a DuckDB replay
-even though a numpy EM built on libm ``exp``/``ln`` would not be: those
-functions differ by an ulp between engines and EM feedback amplifies
-the difference over iterations.  This module re-expresses the
-fixed-iteration EM so that every arithmetic step is IEEE-exact and
-identical across Spark SQL, DuckDB SQL and CPython (see
-``functions/xmath.py``) — the unrolled-iteration pattern of
-``q_pagerank`` and ``q_kmeans``, extended to transcendental-bearing EM.
-
-Parity posture:
-- per-row density math is SHARED SQL text (dialect differences limited
-  to ``transform``/``list_transform``, array constructor/indexing, and
-  parameters appearing as folded literals on Spark vs CTE column refs
-  on DuckDB — literals render via ``xmath.dlit_exact``, the
-  mantissa×2^k form immune to DuckDB's literal-parser ulp bug);
-- sufficient statistics are snapped to integers per bin
+It backs the library :func:`ema_bigdata_spark.gmm.gmm_fit` and the
+registered ``gmm_fit`` and ``q_gmm_bic``, which are hash-checked
+against a DuckDB replay.  A numpy EM on libm ``exp``/``ln`` could not
+be: those differ by an ulp between engines and EM feedback amplifies
+the difference.  Here every arithmetic step is IEEE-exact and identical
+across Spark SQL, DuckDB SQL and CPython (``functions/xmath.py``):
+- per-row density math is SHARED SQL text (dialects differ only in
+  the exp's form, scalar CTE stages on Spark vs ``list_transform``s
+  over an array on DuckDB, the same ops either way, and parameters as
+  folded ``xmath.dlit_exact`` literals on Spark vs CTE column refs on
+  DuckDB, whose literal parser is off by an ulp on some doubles);
+- sufficient statistics and lnL are snapped to integers per bin
   (``floor(v·scale + 0.5)``) BEFORE summation, so the sums are
-  order-free (partitioning-independent on Spark, identical on DuckDB);
+  order-free.  The Spark and numpy executors sum them exactly at any
+  row count: a snap stays an exact double, splits into int64 limbs at
+  :func:`_layouts` (one limb unless the histogram's largest |x| and
+  counts say a snap can outgrow it), and the limb sums recombine in
+  Python ints.  A snap that is not finite raises on both;
 - parameter updates are a handful of scalar double ops, mirrored
-  op-for-op between Python (Spark-side fold) and the oracle's CTEs;
-- ``exp`` is the 16-squaring polynomial (``exp_neg_arr`` — nested
-  array transforms, linear expression trees), per-row ``ln`` (for the
-  BIC log-likelihood) uses the argmax-component factorization
-  ``ln(rs) = ln(w_max) + ln(rs/w_max)`` whose series argument is
-  bounded in [1, K], and scalar ``ln`` (component normalizers, ln n)
-  runs as Python ``xln`` / a DuckDB CTE chain of the same ops.
+  op-for-op between Python and the oracle's CTEs;
+- ``exp`` is the 16-squaring polynomial (``exp_neg_arr``), per-row
+  ``ln`` the argmax-component factorization ``ln(rs) = ln(w_max) +
+  ln(rs/w_max)`` (series argument bounded in [1, K]), scalar ``ln``
+  Python ``xln`` / a DuckDB CTE chain of the same ops.
 
 Spark-first shape (SURVEY §4.3): ONE distributed ``groupBy(value)``
-histogram scan (map-side combined — at 100 TB the only full pass;
-two jobs: its map stage and the checkpoint), then ONE Arrow probe of
-the checkpoint (``limit(gmm.MAX_DRIVER_BINS + 1)``, one job) picks
-the executor of everything after it.  Shuffle volume is bin-count,
-never row-count, on both.
-
+histogram scan (map-side combined — at 100 TB the only full pass),
+cached and probed once with ``limit(gmm.MAX_DRIVER_BINS +
+1).toArrow()``, which fills the cache and picks the executor (3 jobs).
 - Driver executor, at most ``gmm.MAX_DRIVER_BINS`` bins (every
-  2-decimal domain: ~60 k bins whatever the row count).  The probe
-  already holds the whole histogram, so a numpy mirror of the
-  statements runs the init, the iterations and the lnL over it: no
-  further job, whatever K or the iteration count.  Same IEEE ops in
-  the same order as the SQL texts; the snapped sums are exact Python
-  ints (int64 limbs) and raise wherever a BIGINT would leave int64
-  (:func:`_np_snap`, :func:`_np_sum`).
-- Spark executor, a wider histogram: one statement for the init and
-  one per EM iteration over the checkpoint.  Every statement is one
-  projection chain over the histogram plus one aggregate, whatever the
-  number of K values fitted in lockstep: no second scan, no join, no
-  broadcast.  Over a one-partition histogram each statement is ONE
-  job and has no exchange: ``local_checkpoint`` marks the checkpoint
-  ``SinglePartition``, so the aggregate and the init's window read it
-  in place.  A histogram of several partitions keeps its
-  single-partition shuffle — two jobs per statement.
+  2-decimal domain: ~60 k bins whatever the row count): the probe holds
+  the whole histogram, and a numpy mirror of the statements runs the
+  init, the iterations and the lnL over it in the same IEEE ops.  No
+  further job, whatever K or the iteration count.
+- Spark executor, a wider histogram: ``local_checkpoint`` of the cache
+  (one job), then one statement for its bounds (bins, largest |x|,
+  largest count), one for the init and one per EM step, each one
+  projection chain over the checkpoint plus one aggregate, however
+  many K values run in lockstep: no second scan, no join, no
+  broadcast.  Over a one-partition histogram each statement is ONE job
+  with no exchange (the checkpoint is ``SinglePartition``); a
+  histogram of several partitions keeps its single-partition shuffle.
 
-The executors agree bit for bit (tests/test_properties.py
-``TestParityEMInvariants``); the driver holds 3K floats of state per
-fit.  The DuckDB oracle replays the identical computation as a flat
-materialized-CTE chain built from the same text builders.
+The cache is released before the first step either way, the checkpoint
+when the fit ends, and the executors agree bit for bit
+(tests/test_properties.py ``TestParityEMInvariants``).  The DuckDB oracle replays the same
+computation as a flat materialized-CTE chain from the same text
+builders, with one BIGINT ``SUM`` per snapped statistic.
 
 Reference: the Scala ``Main.scala:59-92`` EM loop (5K+2 full data
-passes per iteration — SURVEY §3.3).  Textbook math
-(Bishop PRML §9.2), not the reference's precedence bugs (SURVEY §2.3).
+passes per iteration — SURVEY §3.3).  Textbook math (Bishop PRML
+§9.2), not the reference's precedence bugs (SURVEY §2.3).
 """
 
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -74,13 +67,15 @@ from ema_bigdata_spark.registry import query
 from ema_bigdata_spark.sources.tables import (
     local_checkpoint,
     local_frame,
+    release_checkpoint,
     sql_on_tables,
 )
 
-#: sufficient-statistic snap scales.  BIGINT overflow headroom at
-#: |x| ≤ 1e3: n·1e9 < 2⁶³ to ~9e9 rows, Σgxc·1e6 to ~9e9 rows,
-#: Σgx²c·1e4 to ~9e8 rows — far above any per-partition reality, and
-#: the snap sits below EM's statistical noise by ≥ 6 orders.
+#: sufficient-statistic snap scales: the snap sits below EM's
+#: statistical noise by ≥ 6 orders.  The oracle sums each snap in one
+#: BIGINT — headroom at |x| ≤ 1e3: n·1e9 < 2⁶³ to ~9e9 rows, Σgxc·1e6
+#: to ~9e9 rows, Σgx²c·1e4 to ~9e8 rows; the Spark and numpy executors
+#: sum in limbs and have no such bound.
 N_SC = "1000000000.0"
 SX_SC = "1000000.0"
 SXX_SC = "10000.0"
@@ -96,6 +91,11 @@ _VAR_FLOOR_F = 1e-12
 _LN_FLOOR_F = math.log(_FLOOR_F)
 _FLOOR = X.dlit_exact(_FLOOR_F)
 _VAR_FLOOR = X.dlit_exact(_VAR_FLOOR_F)
+#: bound on a bin's |lnL term| / cnt: |ln _FLOOR_F| + EXP_CLAMP (the
+#: lowest ln w), the ln of the largest normalizer (≤ 13 at the variance
+#: floor) and ln K (the series term), with room to spare
+_LNL_TOP = 2048.0
+_SNAP_ERR = "parity EM: a snapped statistic is not finite or overflows"
 
 K_FIT = 3
 ITERS_FIT = 15
@@ -106,18 +106,136 @@ ITERS_BIC = 6
 
 
 def _snap(expr: str, scale: str) -> str:
+    """The oracle's snap: a BIGINT, raising where it leaves int64."""
     return f"CAST(floor((({expr}) * {scale}) + 0.5) AS BIGINT)"
+
+
+def _exact_floor(u: str, bound: float) -> str:
+    """Spark's snap of ``u = v·scale + 0.5``: ``floor(u)`` as an exact
+    DOUBLE, raising where ``|u| ≥ bound`` or ``u`` is not finite.
+    Spark's ``floor(DOUBLE)`` converts with JVM d2l (NaN → 0, past 2^63
+    saturates, even under ANSI), so this floors in doubles: ``r = u %
+    1.0`` is exact, ``u − r`` truncates exactly, and ``− 1`` where
+    ``r < 0`` makes it a true floor, so negative ties match the
+    oracle's (larger doubles than 2^52 are integers, ``r = 0``)."""
+    u = f"({u})"
+    r = f"({u} % 1.0)"
+    return (
+        f"CASE WHEN NOT abs({u}) < {X.dlit_exact(bound)}"
+        f" THEN raise_error('{_SNAP_ERR}')"
+        f" WHEN {r} < 0.0 THEN ({u} - {r}) - 1.0 ELSE {u} - {r} END"
+    )
+
+
+def _limb_shifts(nbins: int, top: int) -> list[int]:
+    """Bit boundaries of the int64 limbs a snap below 2^top is split
+    into: the multiples of ``w = 62 − bit_length(nbins)`` below
+    ``top``, then ``top``; limb i holds bits ``[b[i], b[i+1])``.  Each
+    limb is < 2^w and ``nbins < 2^bit_length``, so a limb's sum over all
+    bins stays below 2^62 and cannot overflow int64 at any bin count."""
+    w = 62 - nbins.bit_length()
+    if w < 1:
+        raise ValueError(f"histogram too wide for int64 limb sums: {nbins}")
+    return list(range(0, top, w)) + [top]
+
+
+def _layouts(bounds: tuple, e: int) -> tuple[list[int], list[int]]:
+    """The :func:`_limb_shifts` of the init's and of an iteration's
+    sums over a histogram with ``bounds = (nbins, max |x|, max cnt,
+    n)``, scaled by 2^e.  The init sums each bin's x and x² snaps
+    weighted by its count, so its limbs are sized for ``n`` terms; an
+    iteration's per-bin terms carry their count and a γ ≤ 1, so none
+    reaches ``max cnt·max(scale·|term| / cnt)``.  One limb covers every
+    snap of a 2-decimal domain.  A snap past its layout raises rather
+    than wraps (:func:`_exact_floor`)."""
+    nbins, mx, mc, n = bounds
+    mx = math.ldexp(mx, e)
+    x1, x2 = _SX_SCF * mx, _SXX_SCF * mx * mx
+    it = float(mc) * max(_N_SCF, x1, x2, _LNL_SCF * _LNL_TOP)
+    if not math.isfinite(it):
+        raise OverflowError(_SNAP_ERR)
+    # a snap of a term below b is below 2^(exponent of b + 1)
+    return (_limb_shifts(n, math.frexp(max(x1, x2))[1] + 1),
+            _limb_shifts(nbins, math.frexp(it)[1] + 1))
+
+
+def _pow2_exponent(mx: float) -> int:
+    """The ``e ≥ 0`` that lifts a largest |x| ``mx`` below 2^8 into
+    [2^8, 2^9): the snap steps are absolute (1e-6 for Σγx, 1e-4 for
+    Σγx²), sized for data like ``events.value`` (largest |x| 490–600,
+    ``e = 0``), and a fit of values near 1e-3 would lose its variances
+    to them.  Scaling by 2^e is exact, so below 2^8 the fit is the same
+    for the data at every power-of-two scale.  0 for ``mx = 0``; capped
+    where 2^e is still a normal double."""
+    return min(max(9 - math.frexp(mx)[1], 0), 1023) if mx > 0.0 else 0
+
+
+def _sum_ctes(src: str, sums: dict[str, tuple[str, str]], out: str,
+              limbs: list[int] | None) -> list[tuple[str, str]]:
+    """CTEs ending in the one-row aggregate ``out`` of each per-bin
+    term's snap, for ``sums``: name → (term text, scale).  Without
+    ``limbs`` (the oracle): one BIGINT ``SUM`` per name.  With the
+    :func:`_limb_shifts` boundaries (Spark): :func:`_limb_ctes`' limb
+    sums."""
+    if limbs is None:
+        return [(out, "SELECT " + ", ".join(
+            f"CAST(SUM({_snap(t, s)}) AS BIGINT) AS {n}"
+            for n, (t, s) in sums.items()) + f" FROM {src}")]
+    ctes, cols = _limb_ctes(src, sums, out, limbs)
+    return ctes + [(out, f"SELECT {cols} FROM {out}_f")]
+
+
+def _limb_ctes(src: str, sums: dict[str, tuple[str, str]], out: str,
+               limbs: list[int], keep: str = "", weight: str = ""
+               ) -> tuple[list[tuple[str, str]], str]:
+    """``(ctes, cols)``: CTEs over ``src`` ending in ``{out}_f``, which
+    holds the :func:`_exact_floor` snap of each term in ``sums`` (name
+    → (term text, scale)), raising at or past 2^top, beside the
+    columns ``keep``; and the aggregate columns summing each snap's
+    magnitude split into BIGINT limbs at ``limbs``, times ``weight``,
+    one plain ``SUM`` each (``{name}_q{i}``, folded back by
+    :func:`_recombine`).  Each limb is computed flat from the
+    magnitude, ``|f| % 2^hi / 2^lo`` (exact on a non-negative double),
+    and then signed: a floor-mod of a negative value, ``2^s − |d|``,
+    can need ``s`` significand bits and round."""
+    ctes = [
+        (f"{out}_u", f"SELECT {keep}" + ", ".join(
+            f"(({t}) * {s}) + 0.5 AS u_{n}" for n, (t, s) in sums.items())
+         + f" FROM {src}"),
+        (f"{out}_f", f"SELECT {keep}" + ", ".join(
+            f"{_exact_floor(f'u_{n}', 2.0 ** limbs[-1])} AS f_{n}"
+            for n in sums)
+         + f" FROM {out}_u"),
+    ]
+    cols = ", ".join(
+        f"SUM(CASE WHEN f_{n} < 0 THEN -1L ELSE 1L END * floor("
+        f"(abs(f_{n}) % {X.dlit_exact(2.0 ** hi)})"
+        f" / {X.dlit_exact(2.0 ** lo)}){weight}) AS {n}_q{i}"
+        for n in sums for i, (lo, hi) in enumerate(zip(limbs, limbs[1:]))
+    )
+    return ctes, cols
+
+
+def _recombine(row: dict, limbs: list[int]) -> dict:
+    """A row with :func:`_limb_ctes` limb sums → the same row with each
+    name's limbs folded into one exact Python int."""
+    out: dict = {}
+    for key, v in row.items():
+        name, sep, i = key.rpartition("_q")
+        if sep and i.isdigit():
+            out[name] = out.get(name, 0) + (int(v) << limbs[int(i)])
+        else:
+            out[key] = v
+    return out
 
 
 def hist_sql(events_src: str) -> str:
     """The ONE data-proportional pass: exact (value, count) histogram
-    (map-side combined on Spark; shuffle = distinct values).
-    Values outside the fit's snap-exact domain (|x| ≤ 1e6, matching
-    gmm.value_histogram; same filter text on both engines — NaN/±Inf
-    compare greater than any finite bound on both, and NULL fails the
-    predicate, so the gate subsumes IS NOT NULL) are excluded like
-    NULLs: a NaN or 1e308 bin would overflow the fixed-point snaps
-    mid-iteration."""
+    (map-side combined on Spark; shuffle = distinct values).  Values
+    outside the fit domain |x| ≤ 1e6 (NaN/±Inf compare greater than any
+    finite bound on both engines; NULL fails the predicate) are
+    excluded like NULLs: a NaN or 1e308 bin would make the snaps raise,
+    and one corrupt double must not kill a fit."""
     return (
         "SELECT value AS x, CAST(count(*) AS BIGINT) AS cnt"
         f" FROM {events_src}"
@@ -125,18 +243,24 @@ def hist_sql(events_src: str) -> str:
     )
 
 
-def init_ctes(src: str, ks: tuple[int, ...], tag: str
+def init_ctes(dialect: str, src: str, ks: tuple[int, ...], tag: str,
+              limbs: list[int] | None = None
               ) -> tuple[list[tuple[str, str]], str, str]:
     """Init CTEs over the histogram ``src`` for every K in ``ks``: exact
     frequency-weighted percentile means (linear interpolation at
     p·(n−1), Spark ``percentile`` semantics) and the snapped-integer
-    mean/variance.  One window pass carries the running count ``cm``
-    and the total ``tot`` on every bin; one aggregate over it emits
-    ``n``, the snapped sums ``s1u``/``s2u`` and each fit's
+    moments.  One window pass carries the running count ``cm`` and the
+    total ``tot`` on every bin; one aggregate over it emits ``n``, the
+    snapped sums ``s1u``/``s2u`` and each fit's
     ``k{K}_vlo{j}``/``k{K}_vhi{j}``/``k{K}_frac{j}``.  Returns
     ``(ctes, agg, final)``: ``agg`` is that aggregate (the oracle's
-    update reads ``n`` from it), ``final`` has columns nd, n, s20 and
-    ``k{K}_mu0_1..K`` (the init variance is K-independent)."""
+    update reads ``n`` from it), ``final`` has n, nd and
+    ``k{K}_mu0_1..K``.  The oracle sums snap·cnt in BIGINT and its
+    ``final`` adds s20 (K-independent).  Spark sums the snaps in
+    :func:`_limb_ctes` limbs weighted by cnt, at the init layout
+    ``limbs`` of :func:`_layouts`; its ``final`` carries the limb sums
+    instead, and :func:`init_fold` derives the moments from the exact
+    ints, as for the driver executor."""
     qcols, mu0 = [], []
     for k in ks:
         for j in range(1, k + 1):
@@ -154,18 +278,35 @@ def init_ctes(src: str, ks: tuple[int, ...], tag: str
             mu0.append(f"({c}vlo{j} * (1.0 - {c}frac{j})"
                        f" + {c}vhi{j} * {c}frac{j}) AS {c}mu0_{j}")
     mu_fwd = ", ".join(f"k{k}_mu0_{j}" for k in ks for j in range(1, k + 1))
+    snaps = {"s1u": ("x", SX_SC), "s2u": ("(x * x)", SXX_SC)}
     ctes = [
         (f"{tag}_cum",
          "SELECT x, cnt, SUM(cnt) OVER (ORDER BY x) AS cm,"
          f" SUM(cnt) OVER () AS tot FROM {src}"),
+    ]
+    if dialect == "spark":
+        lctes, sums = _limb_ctes(f"{tag}_cum", snaps, f"{tag}_s", limbs,
+                                 keep="x, cnt, cm, tot, ", weight=" * cnt")
+        ctes += lctes
+        agg_src = f"{tag}_s_f"
+        fwd = ", ".join(f"{n}_q{i}" for n in snaps
+                        for i in range(len(limbs) - 1))
+    else:
+        sums = ", ".join(f"CAST(SUM({_snap(t, s)} * cnt) AS BIGINT) AS {n}"
+                         for n, (t, s) in snaps.items())
+        agg_src = f"{tag}_cum"
+        fwd = "s1u, s2u"
+    ctes += [
         (f"{tag}_q",
-         "SELECT CAST(max(tot) AS BIGINT) AS n, "
-         f"CAST(SUM({_snap('x', SX_SC)} * cnt) AS BIGINT) AS s1u, "
-         f"CAST(SUM({_snap('(x * x)', SXX_SC)} * cnt) AS BIGINT) AS s2u, "
-         f"{', '.join(qcols)} FROM {tag}_cum"),
+         f"SELECT CAST(max(tot) AS BIGINT) AS n, {sums},"
+         f" {', '.join(qcols)} FROM {agg_src}"),
         (f"{tag}_i0",
-         f"SELECT CAST(n AS DOUBLE) AS nd, n, s1u, s2u, {', '.join(mu0)}"
-         f" FROM {tag}_q"),
+         f"SELECT CAST(n AS DOUBLE) AS nd, n, {fwd},"
+         f" {', '.join(mu0)} FROM {tag}_q"),
+    ]
+    if dialect == "spark":
+        return ctes, f"{tag}_q", f"{tag}_i0"
+    ctes += [
         (f"{tag}_i1",
          f"SELECT nd, n, {mu_fwd},"
          f" (CAST(s1u AS DOUBLE) / {SX_SC}) / nd AS mean0, s2u"
@@ -180,16 +321,20 @@ def init_ctes(src: str, ks: tuple[int, ...], tag: str
 
 
 def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
-              tag: str, mode: str) -> tuple[list[tuple[str, str]], str]:
+              tag: str, mode: str, limbs: list[int] | None = None
+              ) -> tuple[list[tuple[str, str]], str]:
     """One EM pass over histogram ``src`` for every fit in ``params``
     (K → parameter texts keyed mu{j}, s2{j}, nrm{j} [, lnc{j} for
-    mode='lnl']).  All fits share one projection chain and one
-    aggregate, their columns prefixed ``k{K}_``; each column's
+    mode='lnl' or 'both']).  All fits share one projection chain and
+    one aggregate, their columns prefixed ``k{K}_``; each column's
     expression is the same text whatever other fits run beside it, so
     a lockstep pass is bit-identical to separate one-K passes.
     mode='fit' emits the snapped sufficient-statistic sums
     ``k{K}_n{j}u``/``k{K}_sx{j}u``/``k{K}_sxx{j}u``; mode='lnl' emits
-    the snapped log-likelihood sums ``k{K}_lnlu``."""
+    the snapped log-likelihood sums ``k{K}_lnlu``; mode='both' emits
+    all of them from one aggregate, the lnL at the same params the
+    statistics use.  ``limbs`` selects :func:`_sum_ctes`' limb sums
+    (Spark); without it each snap sums in one BIGINT (the oracle)."""
     fits = [(k, P, f"k{k}_", range(1, k + 1)) for k, P in params.items()]
     # Param texts are either plain column refs (oracle: the
     # cross-joined 1-row params CTE — these must be CARRIED through
@@ -204,14 +349,11 @@ def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
         f" / (2.0 * {P[f's2{j}']}), {X.dlit_exact(X.EXP_CLAMP)}) AS {c}zc{j}"
         for _, P, c, J in fits for j in J
     )
-    et = ", ".join(
-        f"{X.exp_neg_arr(X.arr([f'{c}zc{j}' for j in J], dialect), dialect)}"
-        f" AS {c}et"
-        for _, _, c, J in fits
-    )
     zfwd = ", ".join(f"{c}zc{j}" for _, _, c, J in fits for j in J)
     wcols = ", ".join(
-        f"{P[f'nrm{j}']} * {X.ix(f'{c}et', j, dialect)} AS {c}w{j}"
+        f"{P[f'nrm{j}']} * "
+        + (f"{c}e{j}" if dialect == "spark" else X.ix(f"{c}et", j, dialect))
+        + f" AS {c}w{j}"
         for _, P, c, J in fits for j in J
     )
     wfwd = ", ".join(f"{c}w{j}" for _, _, c, J in fits for j in J)
@@ -223,37 +365,37 @@ def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
     ctes = [
         (f"{tag}_b",
          f"SELECT x, CAST(cnt AS DOUBLE) AS c{pfwd}, {zc} FROM {src}"),
-        (f"{tag}_e",
-         f"SELECT x, c{pfwd}, {zfwd}, {et} FROM {tag}_b"),
+        *_exp_ctes(dialect, fits, tag, pfwd, zfwd),
         (f"{tag}_w",
          f"SELECT x, c{pfwd}, {zfwd}, {wcols} FROM {tag}_e"),
         (f"{tag}_r",
          f"SELECT x, c{pfwd}, {zfwd}, {wfwd}, {rs} FROM {tag}_w"),
     ]
-    if mode == "fit":
-        sums = []
+    stats: dict[str, tuple[str, str]] = {}
+    if mode != "lnl":
         for _, _, c, J in fits:
             for j in J:
                 g = f"({c}w{j} / {c}rs)"
-                sums += [
-                    f"CAST(SUM({_snap(f'({g} * c)', N_SC)}) AS BIGINT)"
-                    f" AS {c}n{j}u",
-                    f"CAST(SUM({_snap(f'(({g} * x) * c)', SX_SC)})"
-                    f" AS BIGINT) AS {c}sx{j}u",
-                    f"CAST(SUM({_snap(f'((({g} * x) * x) * c)', SXX_SC)})"
-                    f" AS BIGINT) AS {c}sxx{j}u",
-                ]
-        ctes.append((f"{tag}_s", f"SELECT {', '.join(sums)} FROM {tag}_r"))
+                stats[f"{c}n{j}u"] = (f"({g} * c)", N_SC)
+                stats[f"{c}sx{j}u"] = (f"(({g} * x) * c)", SX_SC)
+                stats[f"{c}sxx{j}u"] = (f"((({g} * x) * x) * c)", SXX_SC)
+    if mode == "fit":
+        ctes += _sum_ctes(f"{tag}_r", stats, f"{tag}_s", limbs)
         return ctes, f"{tag}_s"
-    # mode == 'lnl': ln(rs) = lnb + atanh-series(rs / max-w), bounded
-    # series argument in [1, k] (see module docstring)
+    # mode 'lnl'/'both': ln(rs) = lnb + atanh-series(rs / max-w),
+    # bounded series argument in [1, k] (see module docstring).  'both'
+    # computes the statistics' per-bin terms here and carries them to
+    # the one aggregate at the end of the series.
+    terms = "".join(f", {t} AS t_{n}" for n, (t, _) in stats.items())
+    tfwd = "".join(f", t_{n}" for n in stats)
     bg = ", ".join(
         f"greatest({', '.join(f'{c}w{j}' for j in J)}, {_FLOOR}) AS {c}bg"
         for _, _, c, J in fits
     )
     ctes.append(
         (f"{tag}_m",
-         f"SELECT c{pfwd}, {zfwd}, {wfwd}, {rfwd}, {bg} FROM {tag}_r")
+         f"SELECT c{pfwd}, {zfwd}, {wfwd}, {rfwd}, {bg}{terms}"
+         f" FROM {tag}_r")
     )
     # argmax-selected ln(w_max) ≈ lnc_m − zc_m; floor fallback when all
     # densities underflowed (bg clamped to the rs floor)
@@ -273,13 +415,15 @@ def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
             f" THEN {X.dlit_exact(_LN_FLOOR_F)} ELSE {sel} END)"
             f" AS {c}lnbv"
         )
-    carry = ["c"] + [f"{c}{v}" for _, _, c, _ in fits for v in ("lnbv", "sv")]
+    carry = (["c"] + [f"t_{n}" for n in stats]
+             + [f"{c}{v}" for _, _, c, _ in fits for v in ("lnbv", "sv")])
     sv = ", ".join(f"{c}lnbv, ({c}rs / {c}bg) AS {c}sv"
                    for _, _, c, _ in fits)
     rbg = ", ".join(f"{c}rs, {c}bg" for _, _, c, _ in fits)
     ctes.append(
-        (f"{tag}_l0", f"SELECT c, {sv} FROM"
-                      f" (SELECT c, {rbg}, {', '.join(lnbs)} FROM {tag}_m)")
+        (f"{tag}_l0", f"SELECT c{tfwd}, {sv} FROM"
+                      f" (SELECT c{tfwd}, {rbg}, {', '.join(lnbs)}"
+                      f" FROM {tag}_m)")
     )
     # atanh steps reference earlier step columns → chain as CTEs, step
     # i of every fit in one CTE so the chain is as deep as one fit's
@@ -294,23 +438,52 @@ def iter_ctes(dialect: str, src: str, params: dict[int, dict[str, str]],
         )
         carry += [n for n, _ in step]
         prev = f"{tag}_a{i}"
-    lnl = ", ".join(
-        f"CAST(SUM({_snap(f'(({c}lnbv + {s[-1][0]}) * c)', LNL_SC)})"
-        f" AS BIGINT) AS {c}lnlu"
-        for (_, _, c, _), s in zip(fits, series)
-    )
-    ctes.append((f"{tag}_lnl", f"SELECT {lnl} FROM {prev}"))
+    sums = {n: (f"t_{n}", s) for n, (_, s) in stats.items()}
+    for (_, _, c, _), s in zip(fits, series):
+        sums[f"{c}lnlu"] = (f"(({c}lnbv + {s[-1][0]}) * c)", LNL_SC)
+    ctes += _sum_ctes(prev, sums, f"{tag}_lnl", limbs)
     return ctes, f"{tag}_lnl"
 
 
 # ---- Python-side parameter fold (mirrors the oracle's CTE math) ---------
 
 
+def _exp_ctes(dialect: str, fits, tag: str, pfwd: str, zfwd: str
+              ) -> list[tuple[str, str]]:
+    """The CTEs from ``{tag}_b`` to ``{tag}_e``, which adds each fit's
+    densities' exp: the oracle's one ``{c}et`` array column, or on
+    Spark the scalar ``{c}e{j}`` columns of
+    :func:`xmath.exp_neg_stages`, one CTE per stage (same bits, a
+    fraction of the interpreted ``transform`` cost)."""
+    if dialect != "spark":
+        et = ", ".join(
+            f"{X.exp_neg_arr(X.arr([f'{c}zc{j}' for j in J], dialect), dialect)}"
+            f" AS {c}et"
+            for _, _, c, J in fits
+        )
+        return [(f"{tag}_e", f"SELECT x, c{pfwd}, {zfwd}, {et} FROM {tag}_b")]
+    stages = X.exp_neg_stages(
+        [f"{c}zc{j}" for _, _, c, J in fits for j in J],
+        [f"{c}e{j}" for _, _, c, J in fits for j in J])
+    ctes, prev = [], f"{tag}_b"
+    for i, stage in enumerate(stages):
+        name = f"{tag}_e" if i == len(stages) - 1 else f"{tag}_e{i}"
+        ctes.append((name, f"SELECT x, c{pfwd}, {zfwd}, "
+                     + ", ".join(f"{e} AS {n}" for n, e in stage)
+                     + f" FROM {prev}"))
+        prev = name
+    return ctes
+
+
 def init_fold(row, k: int) -> tuple[float, dict[str, float]]:
-    """From the collected init row → fit K's (nd, params dict)."""
-    nd = float(row["nd"])
+    """From the init row (n, the exact snapped sums s1u/s2u and the
+    percentile means) → fit K's (nd, params dict); the mean and
+    variance fold mirrors the oracle's ``_i1``/``_i2`` CTEs."""
+    nd = float(int(row["n"]))
+    mean0 = (float(int(row["s1u"])) / _SX_SCF) / nd
+    s20 = max((float(int(row["s2u"])) / _SXX_SCF) / nd - mean0 * mean0,
+              _VAR_FLOOR_F)
     phi0 = 1.0 / float(k)
-    s20 = float(row["s20"])
     P: dict[str, float] = {}
     for j in range(1, k + 1):
         P[f"mu{j}"] = float(row[f"k{k}_mu0_{j}"])
@@ -420,18 +593,18 @@ _SQL_R6 = "floor((({v}) * 1000000.0) + 0.5) / 1000000.0"
 _SQL_R3 = "floor((({v}) * 1000.0) + 0.5) / 1000.0"
 
 
-# ---- Spark-side driver loop ---------------------------------------------
+# ---- the EM loop and its two executors ---------------------------------
 
 
 def _require_nonempty(n) -> None:
-    """Loud refusal for an empty corpus: the init statement's histogram
-    total is NULL when events.value has no non-NULL rows, and a mixture
-    fit is undefined without data — refuse with the same friendly
+    """Loud refusal for an empty corpus: the init's histogram total is
+    NULL (or 0) when no value lies in the fit domain, and a mixture fit
+    is undefined without data — refuse with the same friendly
     ValueError as the similarity family's probe guards instead of
     crashing in ``init_fold``."""
     if n is None or n == 0:
         raise ValueError(
-            "gmm: empty corpus — events.value has no non-NULL rows;"
+            "gmm: empty corpus — no non-NULL value in the fit domain;"
             " a mixture fit is undefined without data"
         )
 
@@ -443,18 +616,10 @@ def _with(ctes: list[tuple[str, str]], final_sql: str,
     return f"WITH {body} {final_sql}"
 
 
-def prepare_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize the (value, count) histogram once and return it.
-    No hand-set width: the histogram is domain-bounded (~60 k bins for
-    2-decimal data regardless of row count — gmm.py module docstring),
-    and the checkpoint runs the aggregate through AQE, which coalesces
-    its shuffle partitions to the data — one partition for a narrow
-    domain, as many as the advisory partition size asks for a wide
-    one.  :func:`~ema_bigdata_spark.sources.tables.local_checkpoint`
-    marks a one-partition histogram ``SinglePartition``, so each
-    statement over it is one job of one task with no exchange."""
-    hist = sql_on_tables(spark, sf_dir, hist_sql("{events}"))
-    return local_checkpoint(hist)
+def events_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (value, count) histogram of ``events.value`` as a lazy frame
+    (:func:`hist_sql`); :func:`run_em` materializes it."""
+    return sql_on_tables(spark, sf_dir, hist_sql("{events}"))
 
 
 def parity_em_spark(spark: SparkSession, sf_dir: str, k: int, iters: int,
@@ -489,160 +654,218 @@ def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
                           ks: tuple[int, ...], iters: int,
                           want_lnl: bool = False,
                           hist: DataFrame | None = None):
-    """Run the bit-exact EM for one or more independent K values in
-    lockstep over ONE histogram (``hist``, or a fresh
-    :func:`prepare_hist` — two jobs); returns ``{k: (nd, P, lnl)}``.
-
-    One ``hist.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()`` probe (one
-    job) picks the executor; ``gmm.MAX_DRIVER_BINS`` is read at call
-    time.  At most that many bins: :func:`_driver_steps` computes every
-    step on the probe's arrays, and no statement runs after the probe.
-    Above it: :func:`_spark_steps` runs one statement for every fit's
-    init, ONE per iteration (SURVEY §4.3) for every fit's
-    sufficient-statistic sums, and with ``want_lnl`` one more for every
-    fit's log-likelihood — ``1 + iters + want_lnl`` jobs over a
-    one-partition histogram, twice that over one of several partitions
-    (each aggregate then pays its single-partition shuffle).  Either
-    way, params fold driver-side between steps with the Python mirrors
-    (``update_fold`` is the op-for-op mirror of the oracle's
-    ``update_ctes`` — same IEEE ops on the same doubles), and the two
-    executors return the same bits.
-
-    Each fit's expressions are the same text whatever else runs beside
-    it, so a lockstep run is bit-identical to separate one-K runs
-    (asserted by TestParityEMInvariants); on Spark, merging K values
-    only cuts the per-statement fixed cost (~0.35 s of
-    analyze+JIT+schedule) from ``len(ks)``× to 1× per iteration."""
-    _check_fit_args(ks, iters)
+    """:func:`run_em` for independent K values in lockstep, ``iters``
+    fixed iterations over ONE histogram (``hist``, or
+    :func:`events_hist`); returns ``{k: (nd, P, lnl)}``, ``lnl`` at the
+    final params when ``want_lnl``.  A lockstep run is bit-identical to
+    separate one-K runs (TestParityEMInvariants); on Spark it only cuts
+    the per-statement fixed cost (~0.35 s) from ``len(ks)``× to 1×."""
     if hist is None:
-        hist = prepare_hist(spark, sf_dir)
-    head = hist.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()
-    if head.num_rows > gmm.MAX_DRIVER_BINS:
-        init, step = _spark_steps(spark, hist)
-    else:
-        init, step = _driver_steps(head)
-
-    row = init(ks)
-    _require_nonempty(row["n"])
-    state = {k: init_fold(row, k) for k in ks}
-
-    for _ in range(iters):
-        row = step({k: P for k, (_, P) in state.items()}, "fit")
-        state = {k: (nd, update_fold(row, nd, k))
-                 for k, (nd, _) in state.items()}
-
-    if not want_lnl:
-        return {k: (nd, P, None) for k, (nd, P) in state.items()}
-    # lnc{j} = ln of the normalizers, for the log-likelihood pass
-    row = step({k: {**P, **{f"lnc{j}": X.xln(P[f"nrm{j}"])
-                            for j in range(1, k + 1)}}
-                for k, (_, P) in state.items()}, "lnl")
-    return {k: (nd, P, float(row[f"k{k}_lnlu"]) / _LNL_SCF)
-            for k, (nd, P) in state.items()}
+        hist = events_hist(spark, sf_dir)
+    return run_em(hist, ks, iters, want_lnl=want_lnl)[0]
 
 
-def _spark_steps(spark: SparkSession, hist: DataFrame):
-    """``(init, step)`` running :func:`init_ctes` / :func:`iter_ctes` as
-    Spark statements over ``hist``, each returning its one-row result.
+def _with_lnc(params: dict[int, dict[str, float]]) -> dict:
+    """Each fit's params plus ``lnc{j}`` = ln of its normalizers, which
+    an lnL step reads."""
+    return {k: {**P, **{f"lnc{j}": X.xln(P[f"nrm{j}"])
+                        for j in range(1, k + 1)}}
+            for k, P in params.items()}
 
-    The histogram is bound into each statement as ``{hist}`` through
-    ``spark.sql`` keyword arguments, so no view outlives a statement.
-    Params fold in as exact literals: a 1-row params view cross-joined
-    for a constant statement text costs a createDataFrame round-trip
-    plus a broadcast join per iteration and times worse (9 s vs 5.5 s
-    for the 15-iteration fit at sf0.1).  Unrolling several iterations
-    into one statement grows the tree with each one, and Catalyst
-    optimizer cost grows superlinearly with depth (sf0.1, 15-iteration
-    fit: 4.2 s per-iteration vs 5.7/7.5/28.6 s at 3/5/15 iterations per
-    statement)."""
+
+def run_em(hist: DataFrame, ks: tuple[int, ...], iters: int,
+           tol: float | None = None, want_lnl: bool = False,
+           scale_free: bool = False):
+    """The package's one EM loop: up to ``iters`` iterations of every fit
+    in ``ks``, in lockstep over the ``(x, cnt)`` histogram ``hist``;
+    returns ``({k: (nd, P, lnl)}, {k: lnL trace})``.  Params fold on the
+    driver between the steps of :func:`_executor`'s pick.
+
+    Without ``tol`` each step sums the sufficient statistics and every
+    iteration runs (the registered queries' fixed budget); ``want_lnl``
+    adds one step for the lnL at the final params.  With ``tol`` each
+    step also sums, in the same pass, the lnL at the params it starts
+    from onto the trace, and the loop stops once every fit has
+    ``|ΔlnL| < tol`` or an update that returned parameters it had
+    already reached: from there the fit repeats a cycle (a fixed point
+    is the cycle of length 1) and every later iteration would repeat
+    it (a mean of ±0.0 compares equal, and means only enter squared).
+    ``tol = 0`` therefore stops only on such a repeat.
+
+    ``scale_free`` fits the histogram scaled by :func:`_pow2_exponent`'s
+    2^e (data whose largest |x| is below 2^8 is lifted into [2^8, 2^9),
+    so the snaps' absolute steps stay small against its variances) and
+    returns the params and lnL in the data's units; the registered
+    queries fit ``events.value`` as it is, like their oracle."""
+    _check_fit_args(ks, iters)
+    with _executor(hist) as (bounds, steps):
+        e = _pow2_exponent(bounds[1]) if scale_free else 0
+        init, step = steps(e)
+        row = init(ks)
+        _require_nonempty(row["n"])
+        fits = {k: init_fold(row, k) for k in ks}
+        seen = {k: {_state(P)} for k, (_, P) in fits.items()}
+        traces: dict[int, list[float]] = {k: [] for k in ks}
+        for _ in range(iters):
+            params = {k: P for k, (_, P) in fits.items()}
+            if tol is None:
+                row = step(params, "fit")
+            else:
+                row = step(_with_lnc(params), "both")
+                for k, tr in traces.items():
+                    tr.append(float(row[f"k{k}_lnlu"]) / _LNL_SCF)
+            fits = {k: (nd, update_fold(row, nd, k))
+                    for k, (nd, _) in fits.items()}
+            done = tol is not None
+            for k, tr in traces.items():
+                state = _state(fits[k][1])
+                done &= (state in seen[k]
+                         or (len(tr) > 1 and abs(tr[-1] - tr[-2]) < tol))
+                seen[k].add(state)
+            if done:
+                break
+        lnl = dict.fromkeys(ks)
+        if want_lnl:
+            row = step(_with_lnc({k: P for k, (_, P) in fits.items()}), "lnl")
+            lnl = {k: float(row[f"k{k}_lnlu"]) / _LNL_SCF for k in ks}
+    # ln p(x) = ln p_e(x·2^e) + e·ln 2 for the density p_e of the fit
+    # in scaled units
+    shift = {k: nd * (e * X.LN2) for k, (nd, _) in fits.items()}
+    return ({k: (nd, _unscale(P, e),
+                 None if lnl[k] is None else lnl[k] + shift[k])
+             for k, (nd, P) in fits.items()},
+            {k: [v + shift[k] for v in tr] for k, tr in traces.items()})
+
+
+def _state(P: dict[str, float]) -> tuple:
+    return tuple(sorted(P.items()))
+
+
+def _unscale(P: dict[str, float], e: int) -> dict[str, float]:
+    """Params fitted to the data scaled by 2^e → the data's units
+    (exact: each is a power-of-two multiple)."""
+    power = {"phi": 0, "mu": -e, "s2": -2 * e, "nrm": e}
+    return {key: math.ldexp(v, next(p for name, p in power.items()
+                                    if key.startswith(name)))
+            for key, v in P.items()}
+
+
+@contextmanager
+def _executor(hist: DataFrame):
+    """``(bounds, steps)`` over ``hist`` for the duration of a fit:
+    ``bounds = (nbins, max |x|, max cnt, n)`` and ``steps(e)`` →
+    ``(init, step)`` over the histogram scaled by 2^e, its limb layouts
+    from :func:`_layouts` — the driver executor when ``hist`` has
+    at most ``gmm.MAX_DRIVER_BINS`` bins (read at call time), else the
+    Spark statements.  The probe fills ``hist``'s cache, so a wide
+    histogram is not computed again for the ``local_checkpoint`` (one
+    job) that gives the statements their ``SinglePartition`` layout;
+    statements over the bare cache would plan an exchange each.  AQE
+    sizes the cached plan (``session.RUNTIME_CONFS``): a ~30 k-bin
+    histogram builds and probes in one task each.  The cache is
+    released before the first step, the checkpoint when the fit ends."""
+    cached = hist.cache()
+    try:
+        head = cached.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()
+        wide = head.num_rows > gmm.MAX_DRIVER_BINS
+        ckpt = local_checkpoint(cached) if wide else None
+    finally:
+        cached.unpersist()
+    if ckpt is None:
+        yield _driver_steps(head)
+        return
+    try:
+        yield _spark_steps(ckpt)
+    finally:
+        release_checkpoint(ckpt)
+
+
+def _spark_steps(hist: DataFrame):
+    """``(bounds, steps)`` running one aggregate for the bounds, then
+    :func:`init_ctes` / :func:`iter_ctes` as Spark statements over
+    ``hist`` (bound as ``{hist}`` through ``spark.sql`` keyword
+    arguments) scaled in a leading CTE, each returning its one-row
+    result, limb sums recombined.  Params fold in as exact literals: a
+    cross-joined 1-row params view costs a createDataFrame round-trip
+    plus a broadcast join per iteration (9 s vs 5.5 s for the
+    15-iteration fit at sf0.1), and unrolling iterations into one
+    statement grows Catalyst's cost superlinearly (4.2 s per-iteration
+    vs 5.7/7.5/28.6 s at 3/5/15 iterations per statement)."""
+    spark = hist.sparkSession
 
     def collect(ctes, fin):
         q = _with(ctes, f"SELECT * FROM {fin}")
-        return spark.sql(q, hist=hist).collect()[0]
+        return spark.sql(q, hist=hist).collect()[0].asDict()
 
-    def init(ks):
-        ctes, _, fin = init_ctes("{hist}", ks, "i")
-        return collect(ctes, fin)
+    b = spark.sql(
+        "SELECT count(*) AS nbins, coalesce(max(abs(x)), 0.0) AS mx,"
+        " coalesce(max(cnt), 0) AS mc, coalesce(sum(cnt), 0) AS n"
+        " FROM {hist}", hist=hist).collect()[0]
+    bounds = (int(b["nbins"]), float(b["mx"]), int(b["mc"]), int(b["n"]))
 
-    def step(params, mode):
-        lits = {k: {key: X.dlit_exact(val) for key, val in P.items()}
-                for k, P in params.items()}
-        tag = "m" if mode == "fit" else "l"
-        return collect(*iter_ctes("spark", "{hist}", lits, tag, mode))
+    def steps(e):
+        init_limbs, limbs = _layouts(bounds, e)
+        src = [("h", f"SELECT x * {X.dlit_exact(2.0 ** e)} AS x, cnt"
+                     " FROM {hist}")]
 
-    return init, step
+        def init(ks):
+            ctes, _, fin = init_ctes("spark", "h", ks, "i", init_limbs)
+            return _recombine(collect(src + ctes, fin), init_limbs)
+
+        def step(params, mode):
+            lits = {k: {key: X.dlit_exact(val) for key, val in P.items()}
+                    for k, P in params.items()}
+            tag = "m" if mode == "fit" else "l"
+            ctes, fin = iter_ctes("spark", "h", lits, tag, mode, limbs)
+            return _recombine(collect(src + ctes, fin), limbs)
+
+        return init, step
+
+    return bounds, steps
 
 
-# ---- driver executor: the statements' math on the collected histogram --
-
-
-def _np_snap(v, scale: float):
-    """:func:`_snap` over a float64 array: ``floor(v·scale + 0.5)`` as
-    int64.  Raises where the double has no int64 (beyond ±2^63, or
-    NaN), as the oracle's ``CAST`` does.  Spark's ``floor(DOUBLE)``
-    saturates there instead (JVM d2l; NaN → 0 — see
-    ``functions.parity.floor_long``), and the sum of a saturated snap is
-    a wrong number."""
+def _np_limb_sum(v, scale: float, limbs: list[int], weight=1) -> int:
+    """Exact Σ of the snaps of ``v·scale``, times ``weight``, as a
+    Python int: the :func:`_exact_floor` snaps, raising where Spark's
+    raise, and the limbs of :func:`_limb_ctes`, each summed in int64.
+    A limb of the magnitude
+    ``a`` is ``⌊a/2^lo⌋ − ⌊a/2^hi⌋·2^(hi−lo)``: power-of-two scalings
+    and floors are exact, and the difference, an integer below
+    2^(hi−lo), is a multiple of the larger term's ulp, so it is exact
+    too (half the cost of ``fmod``)."""
     import numpy as np
 
-    f = np.floor(v * scale + 0.5)
-    ok = (f >= -(2.0 ** 63)) & (f < 2.0 ** 63)
-    if not ok.all():
-        raise OverflowError(
-            f"parity EM: snapped statistic {f[~ok][0]!r} overflows BIGINT"
-        )
-    return f.astype(np.int64)
-
-
-def _np_sum(a) -> int:
-    """Exact Σ of an int64 array as a Python int; raises like Spark's
-    ANSI ``SUM`` when the total leaves BIGINT.  Each element splits
-    into a signed high and an unsigned low 32-bit limb, each limb
-    column sums in int64 (no wrap below 2^31 elements), and the two
-    sums recombine in Python ints."""
-    import numpy as np
-
-    total = ((int((a >> 32).sum(dtype=np.int64)) << 32)
-             + int((a & 0xFFFFFFFF).sum(dtype=np.int64)))
-    if not -(1 << 63) <= total < (1 << 63):
-        raise OverflowError(f"parity EM: BIGINT sum {total} overflows")
+    u = v * scale + 0.5
+    if not (np.abs(u) < 2.0 ** limbs[-1]).all():
+        raise OverflowError(_SNAP_ERR)
+    f = np.floor(u)
+    a = np.abs(f)
+    total = 0
+    for lo, hi in zip(limbs, limbs[1:]):
+        q = (np.floor(a * 2.0 ** -lo)
+             - np.floor(a * 2.0 ** -hi) * 2.0 ** (hi - lo))
+        q = np.copysign(q, f).astype(np.int64)
+        total += int((q * weight).sum()) << lo
     return total
 
 
-def _np_mul(a, b):
-    """Elementwise int64 ``a·b``; raises like Spark's ANSI multiply on
-    overflow.  The float64 product is within 2^-50 relative of the
-    exact one, so it clears every pair below 2^62; the pairs above are
-    checked in Python ints."""
+def _np_init(x, cnt, n: int, ks: tuple[int, ...], limbs: list[int]
+             ) -> dict:
+    """The Spark :func:`init_ctes` row over the histogram arrays (``x``
+    ascending, ``n`` their total count), sums recombined.  The running
+    count ``cm`` needs no RANGE-frame peers: the histogram's bins are
+    distinct values."""
     import numpy as np
 
-    near = np.abs(a.astype(np.float64) * b.astype(np.float64)) >= 2.0 ** 62
-    for i in np.flatnonzero(near):
-        if not -(1 << 63) <= int(a[i]) * int(b[i]) < (1 << 63):
-            raise OverflowError(
-                f"parity EM: BIGINT product {int(a[i])}·{int(b[i])}"
-                " overflows"
-            )
-    return a * b
-
-
-def _np_init(x, cnt, ks: tuple[int, ...]) -> dict:
-    """:func:`init_ctes`' final row over the histogram arrays (``x``
-    ascending).  The running count ``cm`` needs no RANGE-frame peers:
-    the histogram's bins are distinct values."""
-    import numpy as np
-
-    n = _np_sum(cnt)
+    if n >= 1 << 63:  # the BIGINT SUM(cnt) raises
+        raise OverflowError(f"parity EM: BIGINT sum {n} overflows")
     if n == 0:
         return {"n": n}
-    cm = np.cumsum(cnt)  # counts ≥ 0 and their total fits: no wrap
-    s1u = _np_sum(_np_mul(_np_snap(x, _SX_SCF), cnt))
-    s2u = _np_sum(_np_mul(_np_snap(x * x, _SXX_SCF), cnt))
+    row = {"n": n}
+    for name, v, scale in (("s1u", x, _SX_SCF), ("s2u", x * x, _SXX_SCF)):
+        row[name] = _np_limb_sum(v, scale, limbs, cnt)
     nd = float(n)
-    mean0 = (float(s1u) / _SX_SCF) / nd
-    row = {"n": n, "nd": nd,
-           "s20": max((float(s2u) / _SXX_SCF) / nd - mean0 * mean0,
-                      _VAR_FLOOR_F)}
+    cm = np.cumsum(cnt)  # counts ≥ 0 and their total fits: no wrap
     for k in ks:
         for j in range(1, k + 1):
             pos = (float(j) / float(k + 1)) * (nd - 1.0)
@@ -656,12 +879,12 @@ def _np_init(x, cnt, ks: tuple[int, ...]) -> dict:
     return row
 
 
-def _np_iter(x, cnt, params: dict[int, dict[str, float]], mode: str
-             ) -> dict:
+def _np_iter(x, cnt, limbs: list[int],
+             params: dict[int, dict[str, float]], mode: str) -> dict:
     """:func:`iter_ctes`' aggregate row over the histogram arrays for
-    float ``params``.  ``least``/``greatest`` are ``np.fmin`` /
-    ``np.maximum`` and the argmax ``CASE`` treats NaN as the largest
-    value, as Spark and DuckDB order doubles."""
+    float ``params``, recombined.  ``least``/``greatest`` are
+    ``np.fmin`` / ``np.maximum`` and the argmax ``CASE`` treats NaN as
+    the largest value, as Spark and DuckDB order doubles."""
     import numpy as np
 
     c = cnt.astype(np.float64)
@@ -677,14 +900,15 @@ def _np_iter(x, cnt, params: dict[int, dict[str, float]], mode: str
         for j in J[1:]:
             ws = ws + w[j]
         rs = np.maximum(ws, _FLOOR_F)
-        if mode == "fit":
+        if mode != "lnl":
             for j in J:
                 g = w[j] / rs
                 gx = g * x
-                row[f"k{k}_n{j}u"] = _np_sum(_np_snap(g * c, _N_SCF))
-                row[f"k{k}_sx{j}u"] = _np_sum(_np_snap(gx * c, _SX_SCF))
-                row[f"k{k}_sxx{j}u"] = _np_sum(
-                    _np_snap((gx * x) * c, _SXX_SCF))
+                for name, v, scale in (("n", g * c, _N_SCF),
+                                       ("sx", gx * c, _SX_SCF),
+                                       ("sxx", (gx * x) * c, _SXX_SCF)):
+                    row[f"k{k}_{name}{j}u"] = _np_limb_sum(v, scale, limbs)
+        if mode == "fit":
             continue
         bg = w[1]
         for j in J[1:]:
@@ -698,20 +922,32 @@ def _np_iter(x, cnt, params: dict[int, dict[str, float]], mode: str
             sel = np.where(top, P[f"lnc{j}"] - zc[j], sel)
         lnb = np.where(ws <= _FLOOR_F, _LN_FLOOR_F, sel)
         v = (lnb + X.py_atanh_ln(rs / bg)) * c
-        row[f"k{k}_lnlu"] = _np_sum(_np_snap(v, _LNL_SCF))
+        row[f"k{k}_lnlu"] = _np_limb_sum(v, _LNL_SCF, limbs)
     return row
 
 
 def _driver_steps(head):
-    """``(init, step)`` computing the same rows as :func:`_spark_steps`
-    on the Arrow probe ``head`` — the whole histogram — with numpy."""
+    """``(bounds, steps)`` computing the same values as
+    :func:`_spark_steps` on the Arrow probe ``head`` — the whole
+    histogram — with numpy."""
     import numpy as np
 
-    x, cnt = gmm._head_arrays(head, "x")
+    x = head.column("x").to_numpy(zero_copy_only=False).astype(
+        np.float64, copy=False)
+    cnt = head.column("cnt").to_numpy(zero_copy_only=False).astype(
+        np.int64, copy=False)
     order = np.argsort(x, kind="stable")
     x, cnt = x[order], cnt[order]
-    return (lambda ks: _np_init(x, cnt, ks),
-            lambda params, mode: _np_iter(x, cnt, params, mode))
+    bounds = (len(x), float(np.abs(x).max(initial=0.0)),
+              int(cnt.max(initial=0)), sum(cnt.tolist()))
+
+    def steps(e):
+        xs = np.ldexp(x, e)
+        init_limbs, limbs = _layouts(bounds, e)
+        return (lambda ks: _np_init(xs, cnt, bounds[3], ks, init_limbs),
+                lambda params, mode: _np_iter(xs, cnt, limbs, params, mode))
+
+    return bounds, steps
 
 
 # ---- DuckDB oracle builders ---------------------------------------------
@@ -722,7 +958,8 @@ def _oracle_em_ctes(k: int, iters: int, tag: str, want_lnl: bool
     """Full oracle CTE list for one fit; returns (ctes, params_cte,
     lnl_cte_or_None)."""
     ctes: list[tuple[str, str]] = []
-    ictes, tot, ifin = init_ctes(f"{tag}_hist", (k,), f"{tag}_ini")
+    ictes, tot, ifin = init_ctes("duckdb", f"{tag}_hist", (k,),
+                                 f"{tag}_ini")
     ctes += ictes
     pctes, pcur = init_param_ctes(ifin, k, f"{tag}_x0")
     ctes += pctes
@@ -833,10 +1070,12 @@ def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic EM fit on events.value → K-row parameter table
     (K=3, fixed 15 iterations), hash-checked against a DuckDB replay
     via the bit-exact parity EM (module docstring).  One histogram scan
-    and one Arrow probe of it (3 jobs); the init and the 15 iterations
-    then run on the driver over the probed bins — or, for a histogram
-    wider than ``gmm.MAX_DRIVER_BINS``, as 16 statements over it.  The
-    9 fitted floats return as a ``local_frame`` (collect: no job)."""
+    and one Arrow probe of its cache (3 jobs); the init and the 15
+    iterations then run on the driver over the probed bins — or, for a
+    histogram wider than ``gmm.MAX_DRIVER_BINS``, as its checkpoint and
+    17 statements over it (bounds, init, 15 iterations).  The 9 fitted
+    floats return as a
+    ``local_frame`` (collect: no job)."""
     _, P, _ = parity_em_spark(spark, sf_dir, K_FIT, ITERS_FIT)
     rows = [
         (j - 1, _round6(P[f"phi{j}"]), _round6(P[f"mu{j}"]),
@@ -854,11 +1093,11 @@ def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model selection over K ∈ {2,3,4} via BIC = (3K−1)·ln n − 2·lnL
     (6 fixed iterations per candidate, lnL evaluated at the final
     parameters), hash-checked against a DuckDB replay (module
-    docstring).  ONE histogram scan and one Arrow probe of it (3 jobs),
-    shared by all three fits, which run in lockstep on the driver over
-    the probed bins — or, for a histogram wider than
-    ``gmm.MAX_DRIVER_BINS``, as 8 statements over it (init, 6
-    iterations, lnL).  lnL rides the same snapped-integer sum
+    docstring).  ONE histogram scan and one Arrow probe of its cache
+    (3 jobs), shared by all three fits, which run in lockstep on the
+    driver over the probed bins — or, for a histogram wider than
+    ``gmm.MAX_DRIVER_BINS``, as its checkpoint and 9 statements over it
+    (bounds, init, 6 iterations, lnL).  lnL rides the same snapped-integer sum
     discipline as the sufficient statistics.
     The rows return as a ``local_frame``, whose collect runs no job.
 

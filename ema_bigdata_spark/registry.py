@@ -37,58 +37,55 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-#: Round-13 verification priority.  The external driver records a
-#: CORRECTNESS row for only the FIRST 50 names in ``queries()`` order.
-#: Rotation rule (steady state since r3): never-checked first, then
-#: red rows / changed-this-round, then stalest-official-row (an old
-#: green row doesn't certify refactored code).  Freshness invariant
-#: (VERDICT r9 item 7, enforced by ``tools/check_freshness.py``): at
-#: round close, no query's latest official row may predate N-3.
+#: Verification priority.  The external driver records a CORRECTNESS
+#: row for only the FIRST 50 names in ``queries()`` order, so this
+#: window decides which queries a run certifies.  Rotation rule:
+#: never-checked first, then red rows and queries whose code changed
+#: after their latest official row, then the stalest official rows (an
+#: old green row doesn't certify refactored code).  Freshness invariant
+#: (enforced by ``tools/check_freshness.py``): at round close, no
+#: query's latest official row may be more than three rounds old.
 #:
-#: This window (r13, optimization round 2):
+#: The window holds four groups:
 #:
-#: (1) The four OWED r9 rows (N-3 edge this round; staged by the r12
-#:     registry docstring): s_stream_dedup, s_stream_join,
-#:     s_stream_static_join, s_stream_upsert.  Their execution also
-#:     changed this round (the no-data micro-batch is now skipped in
-#:     the drain context — stream_queries._state_partitions), so the
-#:     re-certification is doubly owed.
+#: (1) s_stream_dedup, s_stream_join, s_stream_static_join and
+#:     s_stream_upsert: the oldest official rows, at the freshness
+#:     edge, and their drain now skips the no-data micro-batch
+#:     (stream_queries._state_partitions), which no official row has
+#:     certified.
 #:
-#: (2) The five remaining s_stream_* rows (r11/r12 rows, same
-#:     changed-this-round drain conf; A/B'd rows-identical in-repo,
-#:     but the driver-of-record should certify the new execution).
+#: (2) The five other s_stream_* queries: the same drain change,
+#:     rows-identical in-repo, not yet certified by the driver.
 #:
-#: (3) The seven queries whose PLANS changed in r12 after their
-#:     latest official rows (VERDICT r12 item 1 / Next-round #2):
-#:     the six sort-removals + q_pagerank.  q_pagerank,
-#:     q_dedup_cluster and q_dedup_keep_best changed AGAIN this round
-#:     (pre-partitioned caches; self-loop CC), so their inclusion
-#:     certifies the r13 plans directly.
+#: (3) Seven queries whose PLANS changed after their latest official
+#:     rows: the six sort-removals and q_pagerank.  q_pagerank,
+#:     q_dedup_cluster and q_dedup_keep_best also changed again
+#:     (pre-partitioned caches; self-loop CC), so their rows certify
+#:     the current plans directly.
 #:
-#: (4) THIRTY-FOUR of the 45 remaining r10 rows (alphabetical) —
-#:     the rest of the stalest cohort.
+#: (4) Thirty-four of the 45 next-stalest rows (alphabetical).
 #:
-#: OWED r14 (the eleven r10 rows that did not fit; they hit the N-3
-#: edge next round, so they MUST head the r14 window):
-#: q_skew_metrics, q_skyline, q_source_interleave, q_sql_tpch_q10,
-#: q_sql_tpch_q14, q_sql_tpch_q17, q_sql_tpch_q6, q_train_val_split,
-#: q_unigram_lm, q_window_frames, q_window_running.  All unchanged
-#: for multiple rounds; green in every full driver sim since r10.
+#: Next window first: the eleven next-stalest rows that did not fit,
+#: which reach the freshness edge next: q_skew_metrics, q_skyline,
+#: q_source_interleave, q_sql_tpch_q10, q_sql_tpch_q14,
+#: q_sql_tpch_q17, q_sql_tpch_q6, q_train_val_split, q_unigram_lm,
+#: q_window_frames, q_window_running.  All unchanged for multiple
+#: rounds and green in every full driver sim.
 #:
-#: (The full r9-r12 window rationales live in git history and
-#: ROUND9_NOTES.md … ROUND12_NOTES.md.)
+#: (Earlier windows' rationales live in git history and the
+#: ROUND*_NOTES.md files.)
 _CHECK_WINDOW: tuple[str, ...] = (
-    # — (1) the four owed r9 stream rows (N-3 edge this round) —
+    # — (1) the four oldest stream rows, at the freshness edge —
     "s_stream_dedup", "s_stream_join", "s_stream_static_join",
     "s_stream_upsert",
-    # — (2) the rest of the stream family (drain conf changed r13) —
+    # — (2) the rest of the stream family (same drain change) —
     "s_stream_anomaly", "s_stream_session", "s_stream_sliding",
     "s_stream_topk", "s_stream_tumbling",
-    # — (3) plans changed r12 (and three of them again r13) —
+    # — (3) plans changed after their latest official rows —
     "q_pagerank", "q_dedup_cluster", "q_dedup_keep_best",
     "q_dedup_minhash", "q_dedup_simhash", "q_minhash_jaccard_est",
     "q_embed_quantize",
-    # — (4) 34 of the 45 remaining r10 rows (alphabetical) —
+    # — (4) 34 of the 45 next-stalest rows (alphabetical) —
     "gmm_fit", "q_agg_distinct", "q_ann_ivf", "q_bm25",
     "q_char_entropy", "q_collect_agg", "q_compact_latest",
     "q_contamination", "q_corpus_clean", "q_corr_stats", "q_cube",
@@ -102,9 +99,8 @@ _CHECK_WINDOW: tuple[str, ...] = (
 
 #: The round whose window is staged above.  ``tools/check_freshness.py``
 #: (and its CI test) read this instead of inferring the round from the
-#: recorded CORRECTNESS files, so committing round N's artifact does not
-#: flip the tripwire before the N+1 window is actually staged
-#: (ADVICE r10, tools/check_freshness.py:54).
+#: recorded CORRECTNESS files, so committing a round's artifact does
+#: not flip the tripwire before the next window is actually staged.
 _CHECK_WINDOW_ROUND = 13
 
 

@@ -31,8 +31,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # CACHED plan too.  Spark's default builds every cache with these
     # final-stage optimizations off, so a cached groupBy keeps all
     # ``spark.sql.shuffle.partitions`` partitions.  What it buys: the EM
-    # histogram cache (``gmm.gmm_fit_hist``, ~30 k bins) is built and
-    # probed in one task each instead of 32 near-empty ones each, and
+    # engine's histogram cache (``gmm_parity._executor``, ~30 k bins) is
+    # built and probed in one task each instead of 32 near-empty ones, and
     # CC's per-round label cache shrinks the same way.  Why it is safe:
     # the two caches whose LAYOUT later plans rely on — CC's
     # dst-partitioned edge cache (``dedup.py``) and ``q_pagerank``'s

@@ -117,54 +117,55 @@ def test_gmm_iteration_is_single_shuffle_free_job(spark, sf_dir):
     assert "SinglePartition" in plan
 
 
-def test_em_stats_sums_only_bigint_at_any_width(spark, monkeypatch):
-    """The exact EM sums stay plain int64 adds however wide the
-    histogram: at nbins = 2^40 (21-bit limbs, six of them) the
-    executed aggregate holds only ``sum`` over BIGINT, with no Decimal
-    arithmetic anywhere in the plan."""
+def test_em_stats_sums_only_bigint_at_any_width(spark):
+    """The EM engine's exact snapped sums stay plain int64 adds however
+    wide the histogram: at nbins = 2^40 (21-bit limbs, six of them for
+    126-bit snaps) the executed aggregate holds only ``sum``, every
+    result column is a BIGINT, and no Decimal arithmetic appears
+    anywhere in the plan."""
     import re
 
-    from ema_bigdata_spark.gmm import _em_stats
+    from pyspark.sql.types import LongType
+
+    from ema_bigdata_spark import gmm_parity as G
 
     terms = spark.createDataFrame(
         [(1.5, -2.25), (-3.0e20, 4.0e-9)], "g DOUBLE, x DOUBLE"
     )
-    plans = []
-    collect = type(terms).collect
+    sums = {"n": ("g", G.N_SC), "sx": ("(g * x)", G.SX_SC)}
+    ctes = G._sum_ctes("{t}", sums, "s", G._limb_shifts(1 << 40, 126))
+    df = spark.sql(G._with(ctes, "SELECT * FROM s"), t=terms)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
 
-    def collect_and_record(df):
-        rows = collect(df)
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return rows
-
-    monkeypatch.setattr(type(terms), "collect", collect_and_record)
-    _em_stats(terms, {"n": "g", "sx": "g * x"}, 1 << 40)
-
-    (plan,) = plans
+    assert len(df.columns) == 2 * 6
+    assert all(isinstance(f.dataType, LongType) for f in df.schema), df.schema
     for bad in ("Decimal", "MakeDecimal", "CheckOverflow"):
         assert bad not in plan, bad
-    funcs = re.findall(r"functions=\[([^\]]*)\]", plan)
+    funcs = re.findall(r"functions=\[(.*)\], output", plan)
     assert funcs
     for fs in funcs:
-        for f in fs.split(", "):
-            assert re.fullmatch(r"(partial_)?sum\(\w+#\d+L\)", f), f
+        for f in re.split(r", (?=(?:partial_)?\w+\()", fs):
+            assert re.match(r"(partial_)?sum\(", f), f
 
 
 def test_limb_layout_covers_126_bits_without_overflow():
-    """For every bin-count bit length the int64 limb layout covers bits
-    0–125, no limb is wider than w = 62 − bit_length(nbins), and a
-    limb summed over nbins bins stays below 2^63."""
+    """For every bin-count bit length and snap width up to 126 bits the
+    int64 limb layout covers bits 0 to top − 1, no limb is wider than
+    w = 62 − bit_length(nbins), and a limb summed over nbins bins stays
+    below 2^63."""
     import hypothesis.strategies as st
     from hypothesis import given, settings
 
-    from ema_bigdata_spark.gmm import _limb_shifts
+    from ema_bigdata_spark.gmm_parity import _limb_shifts
 
     def check(nbins):
         w = 62 - nbins.bit_length()
-        shifts = _limb_shifts(nbins)
-        bounds = shifts + [126]
-        assert shifts[0] == 0 and shifts == sorted(set(shifts))
-        assert all(0 < hi - lo <= w for lo, hi in zip(bounds, bounds[1:]))
+        for top in (1, 38, 63, 126):
+            bounds = _limb_shifts(nbins, top)
+            assert bounds[0] == 0 and bounds[-1] == top
+            assert all(0 < hi - lo <= w
+                       for lo, hi in zip(bounds, bounds[1:]))
         assert (1 << w) * nbins < 1 << 63
 
     for bl in range(1, 62):  # both ends of every bit length
@@ -1030,58 +1031,112 @@ def test_gmm_fit_task_count(spark):
     assert 0 < tasks <= 2 * par + 1, (tasks, par)
 
 
+def _group_jobs(sc, group, run):
+    """``run()``'s result and the number of jobs it started."""
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _persisted(sc) -> set:
+    """Ids of the RDDs persisted now.  A run that leaves none behind
+    keeps the set or shrinks it (the JVM may collect other tests'
+    unreferenced ones meanwhile)."""
+    return set(sc._jsc.getPersistentRDDs().keys())
+
+
 def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
     """Every parity-EM statement of the Spark executor (forced by
-    ``MAX_DRIVER_BINS = 0``) — init, fit iteration, lnL — is one
-    projection chain over the prepared histogram plus one aggregate.
-    The one-partition histogram is checkpointed ``SinglePartition``, so
+    ``MAX_DRIVER_BINS = 0``) — bounds, init, fit iteration, lnL — is
+    one projection chain over the checkpointed histogram plus one
+    aggregate.  The one-partition checkpoint is ``SinglePartition``, so
     each statement is ONE job however many K values run in lockstep,
-    with no exchange, join or broadcast in any executed plan.  The
-    driver executor returns the same bits from the executor probe's one
-    job and runs no statement."""
+    with no exchange, join or broadcast in any executed plan: the
+    histogram scan and its cached probe (3 jobs), the checkpoint (1),
+    then 1 per statement, and the checkpoint is released when the fit
+    ends.  The driver executor returns the same bits from the probe's
+    3 jobs, runs no statement and releases its cache."""
     from ema_bigdata_spark import gmm
     from ema_bigdata_spark import gmm_parity as G
 
     sc = spark.sparkContext
-    hist = G.prepare_hist(spark, sf_dir)
     frames = []
     sql = spark.sql
 
     def capture(q, **kwargs):
         df = sql(q, **kwargs)
-        frames.append(df)
+        if "{hist}" in q:  # an EM statement, not the histogram
+            frames.append(df)
         return df
 
     def run(ks, want_lnl, tag):
-        group = f"test_parity_em_job_shape_{tag}_{len(ks)}"
-        sc.setJobGroup(group, "parity EM job-shape pin")
-        try:
-            fits = G.parity_em_spark_multi(spark, sf_dir, ks, 2,
-                                           want_lnl=want_lnl, hist=hist)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return fits, len(sc.statusTracker().getJobIdsForGroup(group))
+        return _group_jobs(
+            sc, f"test_parity_em_job_shape_{tag}_{len(ks)}",
+            lambda: G.parity_em_spark_multi(spark, sf_dir, ks, 2,
+                                            want_lnl=want_lnl))
 
+    G.events_hist(spark, sf_dir)  # the events footer read, once
     monkeypatch.setattr(spark, "sql", capture)
     driver_bins = gmm.MAX_DRIVER_BINS
     for ks, want_lnl in (((3,), False), ((2, 3, 4), True)):
         monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
+        persisted = _persisted(sc)
         want, jobs = run(ks, want_lnl, "spark")
-        # the probe, init + 2 iterations (+ lnL)
-        assert 0 < jobs <= 1 + 3 + want_lnl, (ks, jobs)
+        # histogram + probe, checkpoint, bounds, init + 2 iterations
+        # (+ lnL)
+        assert jobs == 3 + 1 + 1 + 3 + want_lnl, (ks, jobs)
+        assert _persisted(sc) <= persisted
         monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", driver_bins)
         n_frames = len(frames)
         got, jobs = run(ks, want_lnl, "driver")
-        assert jobs == 1 and len(frames) == n_frames, (ks, jobs)
+        assert jobs == 3 and len(frames) == n_frames, (ks, jobs)
+        assert _persisted(sc) <= persisted
         # repr round-trips every double, -0.0 included: equal bits
         assert repr(got) == repr(want), ks
-    assert hist.rdd.getNumPartitions() == 1
-    assert len(frames) == 3 + 4
+    assert len(frames) == 4 + 5
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
         assert "BroadcastExchange" not in plan, plan
+
+
+def test_library_fit_job_shape(spark, sf_dir, monkeypatch):
+    """The library ``gmm_fit`` runs the same engine: on the Spark
+    executor (``MAX_DRIVER_BINS = 0``) each iteration is ONE job over
+    the one-partition checkpoint — its statistics and its lnL come from
+    one statement — after the histogram, its probe, the checkpoint, the
+    bounds and the init (6 jobs); on the driver executor the whole fit
+    is the histogram and its probe (3 jobs).  Neither leaves a
+    persisted RDD behind: the cache and the checkpoint are released."""
+    from ema_bigdata_spark import gmm
+    from ema_bigdata_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    ev = load_table(spark, sf_dir, "events")
+
+    def fit(max_iter, tag):
+        return _group_jobs(
+            sc, f"test_library_fit_job_shape_{tag}_{max_iter}",
+            lambda: gmm.gmm_fit(ev, "value", k=3, tol=0.0,
+                                max_iter=max_iter))
+
+    driver_bins = gmm.MAX_DRIVER_BINS
+    persisted = _persisted(sc)
+    monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
+    for max_iter in (2, 4):
+        model, jobs = fit(max_iter, "spark")
+        assert model.n_iter == max_iter
+        assert jobs == 6 + max_iter, (max_iter, jobs)
+        assert _persisted(sc) <= persisted
+    monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", driver_bins)
+    got, jobs = fit(4, "driver")
+    assert jobs == 3
+    assert _persisted(sc) <= persisted
+    assert got == model
 
 
 #: jobs each iterative query runs at the Tier-1 scale, result collect

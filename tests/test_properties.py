@@ -248,14 +248,43 @@ class TestGMM:
         for g, want in zip(got, [-5.0, 0.0, 6.0]):
             assert abs(g - want) < 0.3, (got, model)
 
+    def test_small_scale_mixture_recovers(self, spark):
+        """The snap steps are absolute (1e-6 for Σγx, 1e-4 for Σγx²), so
+        the library fit lifts data whose largest |x| is below 2^8 by a
+        power of two first: a mixture at means 0.002 and 0.006 (sd
+        5e-4) recovers its means and variances, and the same data at
+        2^-10 of the scale fits to exactly scaled parameters."""
+        import numpy as np
+
+        from ema_bigdata_spark.gmm import gmm_fit
+
+        rng = np.random.default_rng(3)
+        xs = np.concatenate(
+            [rng.normal(0.002, 5e-4, 3000), rng.normal(0.006, 5e-4, 3000)]
+        )
+
+        def fit(vals):
+            df = spark.createDataFrame([(float(v),) for v in vals],
+                                       "value DOUBLE")
+            return gmm_fit(df, "value", k=2, tol=0.0, max_iter=60)
+
+        m = fit(xs)
+        for got, want in zip(sorted(m.means), (0.002, 0.006)):
+            assert abs(got - want) < 5e-5, m
+        for v in m.variances:
+            assert abs(v - 2.5e-7) < 0.1 * 2.5e-7, m
+        small = fit(xs * 2.0**-10)
+        assert [v * 2.0**10 for v in small.means] == m.means
+        assert [v * 2.0**20 for v in small.variances] == m.variances
+        assert small.weights == m.weights and small.n_iter == m.n_iter
+
     def test_distributed_em_matches_driver_path(self, spark, monkeypatch):
-        """The wide-domain fallback (``_distributed_em``: one cluster
-        aggregation per iteration over the cached histogram) must agree
-        with the driver-side numpy path on the same data — it's the
-        path that actually runs at 100 TB when the value domain
-        exceeds MAX_DRIVER_BINS, so it can't stay untested.  Init
-        differs microscopically (×100 fixed-point percentile vs float
-        percentile), so compare loosely after a fixed budget."""
+        """The Spark executor (one statement per iteration over the
+        checkpointed histogram — the path that actually runs at 100 TB
+        when the value domain exceeds MAX_DRIVER_BINS) and the driver
+        executor run one math: the library fit agrees to the last bit
+        in every parameter, the whole lnP trace and the iteration
+        count."""
         import numpy as np
 
         from ema_bigdata_spark import gmm as gmm_mod
@@ -273,21 +302,16 @@ class TestGMM:
         monkeypatch.setattr(gmm_mod, "MAX_DRIVER_BINS", 4)
         dist = gmm_mod.gmm_fit(df, "value", k=2, tol=0.0, max_iter=8)
 
-        for a, b in zip(sorted(driver.means), sorted(dist.means)):
-            assert abs(a - b) < 0.05, (driver, dist)
-        for a, b in zip(sorted(driver.weights), sorted(dist.weights)):
-            assert abs(a - b) < 0.02, (driver, dist)
-        assert (
-            abs(driver.log_likelihood - dist.log_likelihood)
-            < abs(driver.log_likelihood) * 0.01
-        )
+        assert _packed_model(dist) == _packed_model(driver)
+        assert dist.n_iter == driver.n_iter == 8
 
     @staticmethod
     def _em_fixture(spark, seed):
-        """Seed 41: two components near the origin (small terms, one
-        limb).  Seed 7: components at −400, 2.5e5 and 9e5, whose
-        Σγ·x²·c terms reach ~1e24 at 1e-12 scale, so several limbs are
-        non-zero and the ``+ 0.5`` add rounds to even."""
+        """Seed 41: two components near the origin (the fit runs on the
+        data lifted by 2^5; one limb).  Seed 7: components at −400, 2.5e5
+        and 9e5, whose snapped γ·x²·c·1e4 per bin can pass 2^49, the
+        limb width at its 4,327 bins, so its snaps split into two
+        limbs."""
         import numpy as np
 
         rng = np.random.default_rng(seed)
@@ -303,13 +327,16 @@ class TestGMM:
         return spark.createDataFrame([(float(v),) for v in xs], "value DOUBLE")
 
     def test_em_stats_match_python_int_reference(self, spark):
-        """``_em_stats`` must return, for EVERY limb layout, exactly
-        Σ sign·(u − u % 1.0) with u = |t|·1e12 + 0.5 computed in Python
-        ints over the same doubles: a lost or double-counted bit in
-        any limb, or a split that rounds, changes the integer."""
+        """The engine's exact snapped sums must return, for EVERY limb
+        layout, exactly Σ floor(t·scale + 0.5) computed in Python ints
+        over the same doubles — on the Spark statements and in numpy: a
+        lost or double-counted bit in any limb, a split that rounds, or
+        a floor that is not one (negative ties) changes the integer."""
+        import math
+
         import numpy as np
 
-        from ema_bigdata_spark.gmm import _em_stats
+        from ema_bigdata_spark import gmm_parity as G
 
         rng = np.random.default_rng(5)
         mags = 10.0 ** rng.uniform(-13.0, 25.9, 300)  # up to ~8e25
@@ -321,46 +348,47 @@ class TestGMM:
         df = spark.createDataFrame(
             list(zip(col_a, col_b)), "a DOUBLE, b DOUBLE"
         )
+        scale = "1000000000000.0"
 
         def ref(ts):
-            total = 0
-            for t in ts:
-                u = abs(t) * 1e12 + 0.5
-                a = int(u - u % 1.0)
-                total += -a if t < 0 else a
-            return total
+            return sum(math.floor(t * float(scale) + 0.5) for t in ts)
 
         want = {"a": ref(col_a), "b": ref(col_b)}
         assert max(abs(t) for t in col_a) * 1e12 > 2.0**125
+        sums = {"a": ("a", scale), "b": ("b", scale)}
         for nbins in ((1 << 20) + 1, 1 << 29, 1 << 31, 1 << 44, 1 << 52):
-            got = _em_stats(df, {"a": "a", "b": "b"}, nbins)
-            assert got == want, nbins
+            limbs = G._limb_shifts(nbins, 126)
+            ctes = G._sum_ctes("{t}", sums, "s", limbs)
+            row = spark.sql(G._with(ctes, "SELECT * FROM s"),
+                            t=df).collect()[0].asDict()
+            assert G._recombine(row, limbs) == want, nbins
+            for name, col in (("a", col_a), ("b", col_b)):
+                got = G._np_limb_sum(np.array(col), float(scale), limbs)
+                assert got == want[name], (nbins, name)
 
     @pytest.mark.parametrize("seed", [41, 7])
     def test_distributed_em_layout_invariant(self, spark, monkeypatch, seed):
-        """A distributed fit with the bin-count-derived limb layout and
-        one forced to the widest tested layout (nbins = 2^52: 9-bit
-        limbs, 14 of them) must agree to the last bit in every
-        parameter and the whole lnp trace."""
+        """The library fit on the driver executor, on the Spark
+        executor with the data-derived limb layout, and on the Spark
+        executor forced to the widest tested layout (nbins = 2^52:
+        9-bit limbs) must agree to the last bit in every parameter, the
+        whole lnP trace and the iteration count."""
         from ema_bigdata_spark import gmm as gmm_mod
+        from ema_bigdata_spark import gmm_parity as G
 
         df = self._em_fixture(spark, seed)
+        driver = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
         monkeypatch.setattr(gmm_mod, "MAX_DRIVER_BINS", 4)
         natural = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
 
-        em_stats = gmm_mod._em_stats
-        monkeypatch.setattr(
-            gmm_mod,
-            "_em_stats",
-            lambda resp, names, nbins: em_stats(resp, names, 1 << 52),
-        )
+        shifts = G._limb_shifts
+        monkeypatch.setattr(G, "_limb_shifts",
+                            lambda nbins, top: shifts(1 << 52, top))
         wide = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
 
-        assert natural.weights == wide.weights
-        assert natural.means == wide.means
-        assert natural.variances == wide.variances
-        assert natural.lnp_trace == wide.lnp_trace
-        assert natural.log_likelihood == wide.log_likelihood
+        assert _packed_model(natural) == _packed_model(driver)
+        assert _packed_model(wide) == _packed_model(driver)
+        assert driver.n_iter == 5
 
     def test_matches_sparkml_loglik(self, spark, sf_dir):
         """Converged average log-likelihood within tolerance of
@@ -2028,12 +2056,12 @@ class TestMediaCodecs:
 
 
 class TestGMMNumericContract:
-    """r4 (VERDICT r3 §Next-7): the two rows-only queries carry a
-    machine-checked numeric contract beyond double-run determinism —
-    the per-iteration lnP trace must be monotone non-decreasing (EM's
-    ascent guarantee) on BOTH execution paths, and the fitted
-    parameters must agree with a third, independent, naive per-row
-    numpy EM seeded with the identical init."""
+    """The library fit carries a machine-checked numeric contract
+    beyond double-run determinism: the per-iteration lnP trace must be
+    non-decreasing (EM's ascent guarantee) on BOTH executors, up to the
+    snap of its sums, and the fitted parameters must agree with an
+    independent, naive per-row numpy EM seeded with the identical
+    init."""
 
     @staticmethod
     def _naive_em(xs, k, iters):
@@ -2092,7 +2120,18 @@ class TestGMMNumericContract:
             2,
         )
 
+    @staticmethod
+    def _snap_slack(xs) -> float:
+        """The most two snapped lnL sums can misorder: each per-bin
+        snap is within 0.5/LNL_SC of its term, so a sum over the
+        histogram's bins is within nbins·0.5/LNL_SC of the exact one."""
+        from ema_bigdata_spark import gmm_parity as G
+
+        return len(set(xs.tolist())) / float(G.LNL_SC)
+
     def test_driver_path_trace_and_reference(self, spark):
+        import numpy as np
+
         from ema_bigdata_spark.gmm import gmm_fit
 
         xs = self._fixture()
@@ -2100,8 +2139,24 @@ class TestGMMNumericContract:
         model = gmm_fit(df, "value", k=2, tol=0.0, max_iter=10)
         tr = model.lnp_trace
         assert len(tr) == 10
-        assert all(b >= a - 1e-6 for a, b in zip(tr, tr[1:])), tr
+        slack = self._snap_slack(xs)
+        assert all(b >= a - slack for a, b in zip(tr, tr[1:])), tr
         assert abs(tr[-1] - model.log_likelihood) < 1e-9
+        # the exact (unsnapped) lnL along the engine's own parameter
+        # trajectory: the fit after i iterations is the i-th point
+        vals, cnts = np.unique(xs, return_counts=True)
+        exact = []
+        for i in range(len(tr)):
+            m = gmm_fit(df, "value", k=2, tol=0.0, max_iter=i)
+            dens = sum(
+                w / np.sqrt(2.0 * np.pi * v)
+                * np.exp(-((vals - mu) ** 2) / (2.0 * v))
+                for w, mu, v in zip(m.weights, m.means, m.variances)
+            )
+            exact.append(float((np.log(np.maximum(dens, 1e-300))
+                                * cnts).sum()))
+            assert abs(exact[-1] - tr[i]) <= slack, (i, exact[-1], tr[i])
+        assert all(b >= a - 1e-6 for a, b in zip(exact, exact[1:])), exact
         phi, mu, s2, rtr = self._naive_em(xs, 2, 10)
         # same init, same math → near-identical trajectory and params
         for a, b in zip(sorted(model.means), sorted(mu)):
@@ -2121,7 +2176,8 @@ class TestGMMNumericContract:
         model = gmm_mod.gmm_fit(df, "value", k=2, tol=0.0, max_iter=6)
         tr = model.lnp_trace
         assert len(tr) == 6
-        assert all(b >= a - 1e-6 for a, b in zip(tr, tr[1:])), tr
+        slack = self._snap_slack(xs)
+        assert all(b >= a - slack for a, b in zip(tr, tr[1:])), tr
         assert abs(tr[-1] - model.log_likelihood) < 1e-9
 
     def test_bic_lnl_tracks_numpy_trace(self, spark, sf_dir):
@@ -2151,10 +2207,11 @@ class TestGMMNumericContract:
             )
 
     def test_parity_fit_matches_numpy_fit(self, spark, sf_dir):
-        """r6: the registered (oracled) parity EM and the numpy library
-        EM run the same algorithm with different arithmetic backends —
-        their K=3 fixed-budget fits must agree to well under the
-        statistical noise floor."""
+        """The library fit and the registered (oracled) ``gmm_fit`` are
+        one engine: a K=3 fit with the registered 15-iteration budget
+        returns the engine's parameters bit for bit, and the registered
+        rows are exactly their rounding."""
+        from ema_bigdata_spark import gmm_parity as G
         from ema_bigdata_spark import registry
         from ema_bigdata_spark.gmm import gmm_fit
         from ema_bigdata_spark.sources.tables import load_table
@@ -2167,11 +2224,14 @@ class TestGMMNumericContract:
             load_table(spark, sf_dir, "events"), "value",
             k=3, tol=0.0, max_iter=15,
         )
+        # an earlier stop is a fixed point: later iterations repeat it
+        _, P, _ = G.parity_em_spark(spark, sf_dir, 3, 15)
+        want = [P[f"{a}{j}"] for a in ("phi", "mu", "s2") for j in (1, 2, 3)]
+        assert _packed(dict(enumerate(m.weights + m.means + m.variances))) \
+            == _packed(dict(enumerate(want)))
         for j in range(3):
-            w, mu, s2 = got[j]
-            assert abs(w - m.weights[j]) < 1e-4, (j, w, m.weights[j])
-            assert abs(mu - m.means[j]) < 1e-3 * max(1.0, abs(m.means[j]))
-            assert abs(s2 - m.variances[j]) < 1e-3 * max(1.0, m.variances[j])
+            assert got[j] == (G._round6(m.weights[j]), G._round6(m.means[j]),
+                              G._round6(m.variances[j])), j
 
 
 class TestSemDedup:
@@ -4002,6 +4062,14 @@ def _packed(d):
     return {k: struct.pack(">d", v) for k, v in d.items()}
 
 
+def _packed_model(m):
+    """A ``GMMModel`` → its iteration count and every float as IEEE
+    bits."""
+    floats = (m.weights + m.means + m.variances + m.lnp_trace
+              + [m.log_likelihood])
+    return m.n_iter, _packed(dict(enumerate(floats)))
+
+
 def _packed_fits(fits):
     """``{k: (nd, P, lnl)}`` with lnL → every float as IEEE bits."""
     return {k: _packed({"nd": nd, "lnl": lnl, **P})
@@ -4090,9 +4158,8 @@ class TestParityEMInvariants:
     def test_partitioning_independence(self, spark, sf_dir, monkeypatch):
         """The snapped-integer sufficient-statistic sums make every
         iteration order-free, so the fit must be bit-identical under
-        any histogram partitioning (the same invariant gmm.py's
-        exact limb sums guarantee for the numpy engine), on both
-        executors.  The histograms go through ``local_checkpoint``: on
+        any histogram partitioning, on both executors.  The histograms
+        go through ``local_checkpoint``: on
         the Spark executor (forced by ``MAX_DRIVER_BINS = 0``) the
         one-partition one is read in place and the 13-partition one
         keeps its Exchange — a wide histogram is never squeezed into
@@ -4106,7 +4173,7 @@ class TestParityEMInvariants:
         driver_bins = gmm.MAX_DRIVER_BINS
         for parts in (1, 13):
             hist = local_checkpoint(
-                G.prepare_hist(spark, sf_dir).repartition(parts)
+                G.events_hist(spark, sf_dir).repartition(parts)
             )
             assert hist.rdd.getNumPartitions() == parts
             for max_bins in (0, driver_bins):
@@ -4121,7 +4188,8 @@ class TestParityEMInvariants:
                 # exactly the class the driver hash distinguishes
                 assert _packed(got[1]) == _packed(base[1]), (parts, max_bins)
                 plans = [executed_plan(f) for f in frames]
-                assert len(plans) == (1 + 4 if max_bins == 0 else 0)
+                # bounds, init, 4 iterations
+                assert len(plans) == (2 + 4 if max_bins == 0 else 0)
                 assert all(("Exchange" in p) == (parts > 1)
                            for p in plans), (parts, plans)
 
@@ -4246,7 +4314,7 @@ class TestParityEMInvariants:
         from ema_bigdata_spark import gmm
         from ema_bigdata_spark import gmm_parity as G
 
-        hist = G.prepare_hist(spark, sf_dir)
+        hist = G.events_hist(spark, sf_dir)
         driver_bins = gmm.MAX_DRIVER_BINS
         monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
         single = {
@@ -4263,7 +4331,8 @@ class TestParityEMInvariants:
                     lambda: G.parity_em_spark_multi(
                         spark, sf_dir, ks, 3, want_lnl=True, hist=hist),
                 )
-                assert len(frames) == (1 + 3 + 1 if max_bins == 0 else 0)
+                # bounds, init, 3 iterations, lnL
+                assert len(frames) == (2 + 3 + 1 if max_bins == 0 else 0)
                 assert sorted(multi) == sorted(ks)
                 assert _packed_fits(multi) == _packed_fits(
                     {k: single[k] for k in ks}), (max_bins, ks)
@@ -4271,24 +4340,19 @@ class TestParityEMInvariants:
     @pytest.mark.parametrize("hist_rows", list(_PARITY_HISTS.values()),
                              ids=list(_PARITY_HISTS))
     def test_init_matches_independent_reference(self, spark, hist_rows):
-        """The init statement's row against a reference that shares no
-        SQL text with it: numpy percentiles (``gmm._weighted_percentiles``,
-        Spark ``percentile`` semantics) for every K's mean, Python-int
-        sums of the per-bin snaps for n / s1u / s2u."""
+        """The init statement's row, in both dialects' text, against a
+        reference that shares no SQL text with it: numpy percentiles
+        (Spark ``percentile`` semantics: linear interpolation at
+        position p·(n−1) of the expanded sorted multiset) for every K's
+        mean, Python-int sums of the per-bin snaps for n / s1u / s2u."""
         import math
 
         import numpy as np
 
         from ema_bigdata_spark import gmm_parity as G
-        from ema_bigdata_spark.gmm import _weighted_percentiles
 
         ks = (1, 2, 3, 4)
         hist = spark.createDataFrame(hist_rows, "x DOUBLE, cnt BIGINT")
-        ctes, agg, fin = G.init_ctes("{hist}", ks, "i")
-        tot = spark.sql(G._with(ctes, f"SELECT n, s1u, s2u FROM {agg}"),
-                        hist=hist).collect()[0]
-        row = spark.sql(G._with(ctes, f"SELECT * FROM {fin}"),
-                        hist=hist).collect()[0]
 
         def snap(v, scale):
             return math.floor((v * scale) + 0.5)
@@ -4296,17 +4360,38 @@ class TestParityEMInvariants:
         n = sum(c for _, c in hist_rows)
         s1u = sum(snap(x, 1e6) * c for x, c in hist_rows)
         s2u = sum(snap(x * x, 1e4) * c for x, c in hist_rows)
-        assert (tot["n"], tot["s1u"], tot["s2u"]) == (n, s1u, s2u)
-        assert row["n"] == n and row["nd"] == float(n)
-        vals = np.array([x for x, _ in hist_rows])
-        cnts = np.array([c for _, c in hist_rows], dtype=np.int64)
-        for k in ks:
-            want = _weighted_percentiles(
-                vals, cnts, [(j + 1) / (k + 1) for j in range(k)]
-            )
-            got = [row[f"k{k}_mu0_{j}"] for j in range(1, k + 1)]
-            assert _packed(dict(enumerate(got))) == _packed(
-                dict(enumerate(want))), (k, got, want)
+        rows = sorted(hist_rows)
+        vals = np.array([x for x, _ in rows])
+        cum = np.cumsum([c for _, c in rows])
+
+        def percentile(p):
+            pos = p * (n - 1)
+            lo, hi = math.floor(pos), math.ceil(pos)
+            vlo = float(vals[np.searchsorted(cum, lo + 1)])
+            vhi = float(vals[np.searchsorted(cum, hi + 1)])
+            return vlo * (1.0 - (pos - lo)) + vhi * (pos - lo)
+
+        bounds = (len(hist_rows), max(abs(x) for x, _ in hist_rows),
+                  max(c for _, c in hist_rows), n)
+        for dialect in ("spark", "duckdb"):
+            # Spark sums the snaps in limbs; the oracle in one BIGINT
+            limbs = G._layouts(bounds, 0)[0] if dialect == "spark" else None
+            ctes, agg, fin = G.init_ctes(dialect, "{hist}", ks, "i", limbs)
+            row = spark.sql(G._with(ctes, f"SELECT * FROM {fin}"),
+                            hist=hist).collect()[0].asDict()
+            if limbs:
+                tot = row = G._recombine(row, limbs)
+            else:
+                tot = spark.sql(
+                    G._with(ctes, f"SELECT n, s1u, s2u FROM {agg}"),
+                    hist=hist).collect()[0]
+            assert (tot["n"], tot["s1u"], tot["s2u"]) == (n, s1u, s2u)
+            assert row["n"] == n and row["nd"] == float(n)
+            for k in ks:
+                want = [percentile((j + 1) / (k + 1)) for j in range(k)]
+                got = [row[f"k{k}_mu0_{j}"] for j in range(1, k + 1)]
+                assert _packed(dict(enumerate(got))) == _packed(
+                    dict(enumerate(want))), (dialect, k, got, want)
 
     @pytest.mark.parametrize("ks, iters, named", [
         ((), 2, "ks=()"),
@@ -4359,7 +4444,7 @@ class TestParityEMInvariants:
             hist = spark.createDataFrame(_PARITY_HISTS[name],
                                          "x DOUBLE, cnt BIGINT")
         else:
-            hist = G.prepare_hist(
+            hist = G.events_hist(
                 spark, sf_dir if kind == "sf_dir" else adv_dirs[name])
         driver_bins = gmm.MAX_DRIVER_BINS
         for ks in ((1,), (3,), (2, 3, 4)):
@@ -4376,35 +4461,111 @@ class TestParityEMInvariants:
             assert _packed_fits(got) == _packed_fits(want), (source, ks)
 
     @pytest.mark.parametrize("hist_rows, iters", [
-        # per-bin x² snaps of 5e18 fit; the init's sum of them does not
+        # per-bin x² snaps of 5e18 fit; the init's sum of them is 1e19
         ([(1e6, 500), (-1e6, 500)], 0),
         # the init's x² sum fits (2^63 − 2^29) and so does each bin's
         # snapped g·x²·c (K=1: g = 1); the iteration's sxx sum of the
         # two is 2^63 + 131272704
         ([(756.7445448376116, 3 * 2**28), (-756.7445448376116, 3 * 2**28)],
          1),
-    ], ids=["init-x2-sum", "iteration-sxx-sum"])
-    def test_snapped_sum_overflow_raises_on_both_executors(
-            self, spark, sf_dir, monkeypatch, hist_rows, iters):
-        """A snapped sum that leaves BIGINT raises on the Spark
-        statements (ANSI ``SUM``) and on the driver executor (exact
-        limb sum) — neither returns a wrapped number."""
-        from pyspark.errors import ArithmeticException
+        # one bin whose snapped x²·c alone is 2^63 + 2048: a BIGINT
+        # snap of the iteration's sxx term saturates or raises
+        ([(273337.5618841549, 12345)], 1),
+    ], ids=["init-x2-sum", "iteration-sxx-sum", "one-bin-sxx-sum"])
+    def test_snapped_sums_exact_on_both_executors(
+            self, spark, monkeypatch, hist_rows, iters):
+        """Snapped sums past BIGINT fit exactly and identically on the
+        Spark statements and the driver executor, equal to a Python-int
+        reference: the init's s1u/s2u and, for K=1 (every γ is 1.0),
+        one iteration's n/sx/sxx."""
+        import math
 
+        from ema_bigdata_spark import gmm
+        from ema_bigdata_spark import gmm_parity as G
+
+        def snapped(term, scale):
+            return sum(math.floor(term(x, float(c)) * scale + 0.5)
+                       for x, c in hist_rows)
+
+        want_init = (
+            sum(math.floor(x * 1e6 + 0.5) * c for x, c in hist_rows),
+            sum(math.floor((x * x) * 1e4 + 0.5) * c for x, c in hist_rows),
+        )
+        want_iter = {
+            "k1_n1u": snapped(lambda x, c: 1.0 * c, 1e9),
+            "k1_sx1u": snapped(lambda x, c: (1.0 * x) * c, 1e6),
+            "k1_sxx1u": snapped(lambda x, c: ((1.0 * x) * x) * c, 1e4),
+        }
+        assert max(max(want_init), *want_iter.values()) >= 1 << 63
+        hist = spark.createDataFrame(hist_rows, "x DOUBLE, cnt BIGINT")
+        fits = []
+        for max_bins in (0, gmm.MAX_DRIVER_BINS):
+            monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", max_bins)
+            with G._executor(hist) as (_, steps):
+                init, step = steps(0)
+                row = init((1,))
+                assert (int(row["s1u"]), int(row["s2u"])) == want_init
+                nd, P = G.init_fold(row, 1)
+                if iters:
+                    assert step({1: P}, "fit") == want_iter, max_bins
+            fits.append(G.run_em(hist, (1,), iters, want_lnl=True)[0])
+        assert _packed_fits(fits[0]) == _packed_fits(fits[1])
+
+    def test_stops_on_repeated_parameters(self, monkeypatch):
+        """With ``tol = 0`` the loop stops once an update returns
+        parameters the fit already reached — a fixed point or a cycle,
+        which every later iteration would repeat — and not on a
+        repeated lnL while the parameters still move.  A stub executor
+        cycles A → B → A after the init."""
+        from contextlib import contextmanager
+
+        from ema_bigdata_spark import gmm_parity as G
+
+        def sums(mu, lnl):
+            return {"k1_n1u": 10**9, "k1_sx1u": int(mu * 1e6),
+                    "k1_sxx1u": int((mu * mu + 1.0) * 1e4),
+                    "k1_lnlu": lnl}
+
+        calls = []
+
+        def step(params, mode):
+            calls.append(params[1]["mu1"])
+            # lnL repeats (Δ = 0 at the second step) while params move
+            return sums(3.0 if params[1]["mu1"] == 2.0 else 2.0,
+                        5 if len(calls) < 3 else len(calls))
+
+        def init(ks):
+            return {"n": 1, "s1u": 0, "s2u": 10**4, "k1_mu0_1": 0.0}
+
+        @contextmanager
+        def executor(hist):
+            yield (1, 0.0, 1), lambda e: (init, step)
+
+        monkeypatch.setattr(G, "_executor", executor)
+        fits, traces = G.run_em(None, (1,), 50, tol=0.0)
+        assert calls == [0.0, 2.0, 3.0]  # A = 2.0, B = 3.0, then A again
+        assert fits[1][1]["mu1"] == 2.0 and len(traces[1]) == 3
+        _, traces = G.run_em(None, (1,), 2, tol=0.0)
+        assert len(traces[1]) == 2
+
+    @pytest.mark.parametrize("hist_rows", [
+        [(float("nan"), 3), (1.0, 2)],
+        [(1e200, 1), (2.0, 1)],  # x² is +Inf
+    ], ids=["nan", "inf-square"])
+    def test_nonfinite_snap_raises_on_both_executors(
+            self, spark, monkeypatch, hist_rows):
+        """A snap that is not finite raises on the Spark statements and
+        on the driver executor — neither returns a wrapped, saturated or
+        zeroed number.  (``hist_sql`` keeps such values out of every
+        histogram it builds; a caller's own histogram may not.)"""
         from ema_bigdata_spark import gmm
         from ema_bigdata_spark import gmm_parity as G
 
         hist = spark.createDataFrame(hist_rows, "x DOUBLE, cnt BIGINT")
         for max_bins in (0, gmm.MAX_DRIVER_BINS):
             monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", max_bins)
-            with pytest.raises((ArithmeticException, OverflowError),
-                               match="overflow"):
-                G.parity_em_spark_multi(spark, sf_dir, (1,), iters,
-                                        hist=hist)
-            if iters:
-                # one step short of the overflow, both return the fit
-                G.parity_em_spark_multi(spark, sf_dir, (1,), iters - 1,
-                                        hist=hist)
+            with pytest.raises(Exception, match="not finite or overflows"):
+                G.run_em(hist, (1,), 1)
 
     def test_single_component_fits(self, spark, sf_dir):
         """K=1 is a plain Gaussian, not a degenerate mixture: it fits

@@ -71,11 +71,7 @@ def main() -> int:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    from ema_bigdata_spark.gmm import (
-        MAX_DRIVER_BINS,
-        gmm_fit_hist,
-        value_histogram,
-    )
+    from ema_bigdata_spark.gmm import MAX_DRIVER_BINS, gmm_fit
     from ema_bigdata_spark.operators.dedup import (
         _CC_DRIVER_MAX,
         chain_edges,
@@ -123,8 +119,7 @@ def main() -> int:
                     / 5000.0
                 ).alias("value")
             )
-            hist = value_histogram(wide, "value")
-            model = gmm_fit_hist(hist, k=3, tol=0.0, max_iter=3)
+            model = gmm_fit(wide, "value", k=3, tol=0.0, max_iter=3)
             assert model.n_iter == 3 and len(model.lnp_trace) == 3
             assert all(math.isfinite(v) for v in model.lnp_trace)
 

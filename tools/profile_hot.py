@@ -71,13 +71,7 @@ def main():
               lambda: _force(connected_components(chain_edges(spark))))
 
     if "em" in want:
-        from ema_bigdata_spark.gmm import (
-            _distributed_em,
-            _init_params_hist,
-            gmm_fit_hist,
-            value_histogram,
-        )
-        from ema_bigdata_spark.sources.tables import spread
+        from ema_bigdata_spark import gmm
 
         def wide_df():
             return spark.range(0, 4_000_000, 1, 32).select(
@@ -87,26 +81,17 @@ def main():
                 ).alias("value")
             )
 
-        timed("em: histogram build (noop)",
-              lambda: _force(value_histogram(wide_df(), "value")))
-
-        def cached_hist():
-            h = spread(value_histogram(wide_df(), "value")).cache()
-            h.count()
-            return h
-
-        h = cached_hist()
-        timed("em: init agg over cached hist",
-              lambda: _init_params_hist(h, 3))
-        timed("em: 3-iter distributed_em over cached hist",
-              lambda: _distributed_em(h, 3, 0.0, 3))
-        h.unpersist()
-        timed("em: head-probe limit(1M+1).collect over hist",
-              lambda: value_histogram(wide_df(), "value")
-              .limit((1 << 20) + 1).collect(), runs=2)
-        timed("em: full gmm_fit_hist (= bench fixture body)",
-              lambda: gmm_fit_hist(value_histogram(wide_df(), "value"),
-                                   k=3, tol=0.0, max_iter=3), runs=2)
+        driver_bins = gmm.MAX_DRIVER_BINS
+        # the bench fixture body on each executor of the EM engine over
+        # the 2 M-bin histogram; the cutover constant picks the executor
+        for executor, max_bins in (("driver", 1 << 22), ("spark", 0)):
+            gmm.MAX_DRIVER_BINS = max_bins
+            try:
+                timed(f"em[{executor}]: 3-iter gmm_fit over 2 M bins",
+                      lambda: gmm.gmm_fit(wide_df(), "value", k=3, tol=0.0,
+                                          max_iter=3), runs=2)
+            finally:
+                gmm.MAX_DRIVER_BINS = driver_bins
 
     if "pagerank" in want:
         from ema_bigdata_spark.sources.tables import load_table
@@ -150,10 +135,9 @@ def main():
         from ema_bigdata_spark import gmm
         from ema_bigdata_spark import gmm_parity as GP
 
-        timed("parity: prepare_hist", lambda: GP.prepare_hist(spark, SF_DIR))
-        hist = GP.prepare_hist(spark, SF_DIR)
+        hist = GP.events_hist(spark, SF_DIR)
         driver_bins = gmm.MAX_DRIVER_BINS
-        # both executors over the same checkpoint; the cutover constant
+        # both executors over the same histogram; the cutover constant
         # forces the Spark statements
         for executor, max_bins in (("driver", driver_bins), ("spark", 0)):
             gmm.MAX_DRIVER_BINS = max_bins
