@@ -27,27 +27,29 @@ across Spark SQL, DuckDB SQL and CPython (``functions/xmath.py``):
 
 Spark-first shape (SURVEY §4.3): ONE distributed ``groupBy(value)``
 histogram scan (map-side combined — at 100 TB the only full pass),
-cached and probed once with ``limit(gmm.MAX_DRIVER_BINS +
-1).toArrow()``, which fills the cache and picks the executor (3 jobs).
+marked as a lazy local checkpoint that its probe
+``limit(gmm.MAX_DRIVER_BINS + 1).toArrow()`` fills; the probe picks
+the executor (2 jobs of one task each at every 2-decimal domain).
 - Driver executor, at most ``gmm.MAX_DRIVER_BINS`` bins (every
   2-decimal domain: ~60 k bins whatever the row count): the probe holds
   the whole histogram, and a numpy mirror of the statements runs the
   init, the iterations and the lnL over it in the same IEEE ops.  No
   further job, whatever K or the iteration count.
-- Spark executor, a wider histogram: ``local_checkpoint`` of the cache
-  (one job), then one statement for its bounds (bins, largest |x|,
-  largest count), one for the init and one per EM step, each one
-  projection chain over the checkpoint plus one aggregate, however
-  many K values run in lockstep: no second scan, no join, no
-  broadcast.  Over a one-partition histogram each statement is ONE job
-  with no exchange (the checkpoint is ``SinglePartition``); a
-  histogram of several partitions keeps its single-partition shuffle.
+- Spark executor, a wider histogram: one statement over the filled
+  checkpoint for its bounds (bins, largest |x|, largest count), one for
+  the init and one per EM step, each one projection chain over the
+  checkpoint plus one aggregate, however many K values run in lockstep:
+  no second scan, no join, no broadcast.  Over a one-partition
+  histogram each statement is ONE job with no exchange (the checkpoint
+  is ``SinglePartition``); a histogram of several partitions keeps its
+  single-partition shuffle.
 
-The cache is released before the first step either way, the checkpoint
-when the fit ends, and the executors agree bit for bit
-(tests/test_properties.py ``TestParityEMInvariants``).  The DuckDB oracle replays the same
-computation as a flat materialized-CTE chain from the same text
-builders, with one BIGINT ``SUM`` per snapped statistic.
+The checkpoint is released before a driver fit's first step and when a
+Spark fit ends, and the executors agree bit for bit
+(tests/test_properties.py ``TestParityEMInvariants``).  The DuckDB
+oracle replays the same computation as a flat materialized-CTE chain
+from the same text builders, with one BIGINT ``SUM`` per snapped
+statistic.
 
 Reference: the Scala ``Main.scala:59-92`` EM loop (5K+2 full data
 passes per iteration — SURVEY §3.3).  Textbook math (Bishop PRML
@@ -757,27 +759,25 @@ def _executor(hist: DataFrame):
     ``(init, step)`` over the histogram scaled by 2^e, its limb layouts
     from :func:`_layouts` — the driver executor when ``hist`` has
     at most ``gmm.MAX_DRIVER_BINS`` bins (read at call time), else the
-    Spark statements.  The probe fills ``hist``'s cache, so a wide
-    histogram is not computed again for the ``local_checkpoint`` (one
-    job) that gives the statements their ``SinglePartition`` layout;
-    statements over the bare cache would plan an exchange each.  AQE
-    sizes the cached plan (``session.RUNTIME_CONFS``): a ~30 k-bin
-    histogram builds and probes in one task each.  The cache is
-    released before the first step, the checkpoint when the fit ends."""
-    cached = hist.cache()
+    Spark statements.  ``hist`` is marked as a lazy
+    ``local_checkpoint``: building its RDD runs the map stage (AQE sizes
+    the result, so a ~30 k-bin histogram is one partition), and the
+    probe's collect computes and persists that result: two jobs of one
+    task each.  A wide histogram's statements read the blocks the probe
+    filled, with no second checkpoint job and no re-scan, and see the
+    ``SinglePartition`` layout of a one-partition checkpoint, which a
+    cache would not give them.  The checkpoint is released before a
+    driver fit's first step, and when a Spark fit ends or its probe
+    raises."""
+    ckpt = local_checkpoint(hist, eager=False)
     try:
-        head = cached.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()
-        wide = head.num_rows > gmm.MAX_DRIVER_BINS
-        ckpt = local_checkpoint(cached) if wide else None
-    finally:
-        cached.unpersist()
-    if ckpt is None:
-        yield _driver_steps(head)
-        return
-    try:
-        yield _spark_steps(ckpt)
+        head = ckpt.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()
+        if head.num_rows > gmm.MAX_DRIVER_BINS:
+            yield _spark_steps(ckpt)
+            return
     finally:
         release_checkpoint(ckpt)
+    yield _driver_steps(head)
 
 
 def _spark_steps(hist: DataFrame):
@@ -1070,12 +1070,12 @@ def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic EM fit on events.value → K-row parameter table
     (K=3, fixed 15 iterations), hash-checked against a DuckDB replay
     via the bit-exact parity EM (module docstring).  One histogram scan
-    and one Arrow probe of its cache (3 jobs); the init and the 15
-    iterations then run on the driver over the probed bins — or, for a
-    histogram wider than ``gmm.MAX_DRIVER_BINS``, as its checkpoint and
-    17 statements over it (bounds, init, 15 iterations).  The 9 fitted
-    floats return as a
-    ``local_frame`` (collect: no job)."""
+    and one Arrow probe that fills its lazy checkpoint (2 jobs); the
+    init and the 15 iterations then run on the driver over the probed
+    bins — or, for a histogram wider than ``gmm.MAX_DRIVER_BINS``, as
+    17 statements over the checkpoint (bounds, init, 15 iterations).
+    The 9 fitted floats return as a ``local_frame`` (collect: no
+    job)."""
     _, P, _ = parity_em_spark(spark, sf_dir, K_FIT, ITERS_FIT)
     rows = [
         (j - 1, _round6(P[f"phi{j}"]), _round6(P[f"mu{j}"]),
@@ -1093,12 +1093,12 @@ def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model selection over K ∈ {2,3,4} via BIC = (3K−1)·ln n − 2·lnL
     (6 fixed iterations per candidate, lnL evaluated at the final
     parameters), hash-checked against a DuckDB replay (module
-    docstring).  ONE histogram scan and one Arrow probe of its cache
-    (3 jobs), shared by all three fits, which run in lockstep on the
-    driver over the probed bins — or, for a histogram wider than
-    ``gmm.MAX_DRIVER_BINS``, as its checkpoint and 9 statements over it
-    (bounds, init, 6 iterations, lnL).  lnL rides the same snapped-integer sum
-    discipline as the sufficient statistics.
+    docstring).  ONE histogram scan and one Arrow probe that fills its
+    lazy checkpoint (2 jobs), shared by all three fits, which run in
+    lockstep on the driver over the probed bins — or, for a histogram
+    wider than ``gmm.MAX_DRIVER_BINS``, as 9 statements over the
+    checkpoint (bounds, init, 6 iterations, lnL).  lnL rides the same
+    snapped-integer sum discipline as the sufficient statistics.
     The rows return as a ``local_frame``, whose collect runs no job.
 
     INTENTIONAL: n is the histogram total — the count of non-NULL

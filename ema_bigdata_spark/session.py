@@ -30,13 +30,13 @@ RUNTIME_CONFS: dict[str, str] = {
     # Let AQE coalesce (and re-plan joins in) the final stage of a
     # CACHED plan too.  Spark's default builds every cache with these
     # final-stage optimizations off, so a cached groupBy keeps all
-    # ``spark.sql.shuffle.partitions`` partitions.  What it buys: the EM
-    # engine's histogram cache (``gmm_parity._executor``, ~30 k bins) is
-    # built and probed in one task each instead of 32 near-empty ones, and
-    # CC's per-round label cache shrinks the same way.  Why it is safe:
-    # the two caches whose LAYOUT later plans rely on — CC's
-    # dst-partitioned edge cache (``dedup.py``) and ``q_pagerank``'s
-    # src-partitioned one (``analytics.py``) — are built with
+    # ``spark.sql.shuffle.partitions`` partitions.  What it buys: CC's
+    # per-round label cache (``dedup.connected_components``) is built in
+    # as few tasks as its size needs instead of one near-empty task per
+    # shuffle partition.  Why it is safe: the two caches whose LAYOUT
+    # later plans rely on — CC's dst-partitioned edge cache
+    # (``dedup.py``) and ``q_pagerank``'s src-partitioned one
+    # (``analytics.py``) — are built with
     # ``repartition(n, key)``, whose partitioning AQE never changes, so
     # their iteration joins stay exchange-free on the edge side
     # (pinned in tests/test_plans.py).

@@ -276,7 +276,7 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df if _SPREAD_CACHE[key] else df.repartition(n)
 
 
-def local_checkpoint(df: DataFrame) -> DataFrame:
+def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` once (``localCheckpoint``) and keep a
     one-partition result's layout.
 
@@ -294,10 +294,16 @@ def local_checkpoint(df: DataFrame) -> DataFrame:
     A ``cache()`` is no substitute: statements over a cached
     one-partition histogram still plan an exchange each (the EM
     engine's init and 2 iterations, K=3 at sf0.01, ran 9 jobs over the
-    bare cache and 3 over its checkpoint), which is why the engine
-    checkpoints its cache before iterating on Spark.
+    bare cache and 3 over its checkpoint).
+
+    ``eager`` is Spark's: ``True`` runs a job that fills the checkpoint
+    now.  With ``False`` the first action over the result fills it (the
+    EM engine's probe, ``gmm_parity._executor``), so a caller must not
+    drop what the result reads from before that action has run.
+    Building the RDD still runs the map stages under AQE, which is how
+    the partition count is known here either way.
     """
-    ckpt = df.localCheckpoint()
+    ckpt = df.localCheckpoint(eager=eager)
     return ckpt.coalesce(1) if ckpt.rdd.getNumPartitions() == 1 else ckpt
 
 

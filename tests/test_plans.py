@@ -994,11 +994,11 @@ def test_pagerank_iteration_edge_side_has_no_exchange(
 
 
 def test_gmm_fit_task_count(spark):
-    """The EM fit's histogram cache must be sized by AQE, not by
+    """The EM fit's histogram checkpoint must be sized by AQE, not by
     ``spark.sql.shuffle.partitions``: a ~30 k-row mixture (a few
-    thousand bins) costs one map stage over the input plus one task
-    each for the cache build and its head probe — never one near-empty
-    task per shuffle partition for both."""
+    thousand bins) costs one map stage over the input plus ONE task
+    for the probe that fills the checkpoint — never one near-empty
+    task per shuffle partition."""
     from pyspark.sql import functions as F
 
     from ema_bigdata_spark.gmm import gmm_fit
@@ -1028,7 +1028,7 @@ def test_gmm_fit_task_count(spark):
             if info is not None:
                 tasks += info.numCompletedTasks
     assert model.n_iter == 20
-    assert 0 < tasks <= 2 * par + 1, (tasks, par)
+    assert 0 < tasks <= par + 1, (tasks, par)
 
 
 def _group_jobs(sc, group, run):
@@ -1039,6 +1039,45 @@ def _group_jobs(sc, group, run):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rdd_nodes(cluster) -> str:
+    """The RDD nodes of a stage's operation-graph cluster, nested
+    clusters included, as one string."""
+    kids = cluster.childClusters()
+    return cluster.childNodes().mkString(",") + "".join(
+        _rdd_nodes(kids.apply(i)) for i in range(kids.size()))
+
+
+def _one_histogram_pass(sc, group, one_partition=True) -> None:
+    """The job group ran the histogram's map stage once: exactly one
+    completed stage scans the source (a ``FileScanRDD`` in its RDD
+    graph; input records would not tell, since reading the persisted
+    checkpoint counts as input too), and it writes the histogram's
+    shuffle.  Over a one-partition histogram no other stage writes
+    shuffle; over several partitions each statement's aggregate
+    gathers through its own exchange, which is what shows the
+    partitions are there."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    st = sc.statusTracker()
+    stages = []  # (stage id, scans the source, shuffle bytes written)
+    for sid in sorted({sid for jid in st.getJobIdsForGroup(group)
+                       for sid in st.getJobInfo(jid).stageIds}):
+        # A skipped stage has no completion time, so once the store
+        # holds ``spark.ui.retainedStages`` it is the first evicted.
+        if st.getStageInfo(sid) is None:
+            continue
+        data = store.lastStageAttempt(sid)
+        if data.status().toString() == "COMPLETE":
+            graph = _rdd_nodes(store.operationGraphForStage(sid).rootCluster())
+            stages.append((sid, "FileScanRDD" in graph,
+                           data.shuffleWriteBytes()))
+    scans = [sid for sid, scan, _ in stages if scan]
+    writers = [sid for sid, _, written in stages if written > 0]
+    assert len(scans) == 1 and scans[0] in writers, stages
+    assert (writers == scans) == one_partition, stages
 
 
 def _persisted(sc) -> set:
@@ -1055,10 +1094,12 @@ def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
     aggregate.  The one-partition checkpoint is ``SinglePartition``, so
     each statement is ONE job however many K values run in lockstep,
     with no exchange, join or broadcast in any executed plan: the
-    histogram scan and its cached probe (3 jobs), the checkpoint (1),
-    then 1 per statement, and the checkpoint is released when the fit
-    ends.  The driver executor returns the same bits from the probe's
-    3 jobs, runs no statement and releases its cache."""
+    histogram's map stage and the probe that fills its lazy checkpoint
+    (2 jobs), then 1 per statement, and the checkpoint is released when
+    the fit ends.  The driver executor returns the same bits from the
+    same 2 jobs, runs no statement and releases the checkpoint.  Either
+    way the events are scanned once and only that stage writes
+    shuffle."""
     from ema_bigdata_spark import gmm
     from ema_bigdata_spark import gmm_parity as G
 
@@ -1073,10 +1114,13 @@ def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
         return df
 
     def run(ks, want_lnl, tag):
-        return _group_jobs(
-            sc, f"test_parity_em_job_shape_{tag}_{len(ks)}",
+        group = f"test_parity_em_job_shape_{tag}_{len(ks)}"
+        out = _group_jobs(
+            sc, group,
             lambda: G.parity_em_spark_multi(spark, sf_dir, ks, 2,
                                             want_lnl=want_lnl))
+        _one_histogram_pass(sc, group)
+        return out
 
     G.events_hist(spark, sf_dir)  # the events footer read, once
     monkeypatch.setattr(spark, "sql", capture)
@@ -1085,14 +1129,13 @@ def test_parity_em_statement_job_shape(spark, sf_dir, monkeypatch):
         monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
         persisted = _persisted(sc)
         want, jobs = run(ks, want_lnl, "spark")
-        # histogram + probe, checkpoint, bounds, init + 2 iterations
-        # (+ lnL)
-        assert jobs == 3 + 1 + 1 + 3 + want_lnl, (ks, jobs)
+        # histogram + probe, bounds, init + 2 iterations (+ lnL)
+        assert jobs == 2 + 1 + 3 + want_lnl, (ks, jobs)
         assert _persisted(sc) <= persisted
         monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", driver_bins)
         n_frames = len(frames)
         got, jobs = run(ks, want_lnl, "driver")
-        assert jobs == 3 and len(frames) == n_frames, (ks, jobs)
+        assert jobs == 2 and len(frames) == n_frames, (ks, jobs)
         assert _persisted(sc) <= persisted
         # repr round-trips every double, -0.0 included: equal bits
         assert repr(got) == repr(want), ks
@@ -1108,10 +1151,11 @@ def test_library_fit_job_shape(spark, sf_dir, monkeypatch):
     """The library ``gmm_fit`` runs the same engine: on the Spark
     executor (``MAX_DRIVER_BINS = 0``) each iteration is ONE job over
     the one-partition checkpoint — its statistics and its lnL come from
-    one statement — after the histogram, its probe, the checkpoint, the
-    bounds and the init (6 jobs); on the driver executor the whole fit
-    is the histogram and its probe (3 jobs).  Neither leaves a
-    persisted RDD behind: the cache and the checkpoint are released."""
+    one statement — after the histogram's map stage, the probe that
+    fills the checkpoint, the bounds and the init (4 jobs); on the
+    driver executor the whole fit is the map stage and the probe (2
+    jobs).  Each scans the events once, only that stage writes shuffle,
+    and neither leaves a persisted RDD behind."""
     from ema_bigdata_spark import gmm
     from ema_bigdata_spark.sources.tables import load_table
 
@@ -1119,10 +1163,13 @@ def test_library_fit_job_shape(spark, sf_dir, monkeypatch):
     ev = load_table(spark, sf_dir, "events")
 
     def fit(max_iter, tag):
-        return _group_jobs(
-            sc, f"test_library_fit_job_shape_{tag}_{max_iter}",
+        group = f"test_library_fit_job_shape_{tag}_{max_iter}"
+        out = _group_jobs(
+            sc, group,
             lambda: gmm.gmm_fit(ev, "value", k=3, tol=0.0,
                                 max_iter=max_iter))
+        _one_histogram_pass(sc, group)
+        return out
 
     driver_bins = gmm.MAX_DRIVER_BINS
     persisted = _persisted(sc)
@@ -1130,13 +1177,44 @@ def test_library_fit_job_shape(spark, sf_dir, monkeypatch):
     for max_iter in (2, 4):
         model, jobs = fit(max_iter, "spark")
         assert model.n_iter == max_iter
-        assert jobs == 6 + max_iter, (max_iter, jobs)
+        assert jobs == 4 + max_iter, (max_iter, jobs)
         assert _persisted(sc) <= persisted
     monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", driver_bins)
     got, jobs = fit(4, "driver")
-    assert jobs == 3
+    assert jobs == 2
     assert _persisted(sc) <= persisted
     assert got == model
+
+
+def test_wide_fit_over_several_partitions_scans_once(
+        spark, sf_dir, monkeypatch):
+    """With AQE's coalescing off the histogram keeps all 8 shuffle
+    partitions, and the Spark executor's probe must still fill every
+    one of them into the checkpoint its statements read: one stage
+    scans the events (a recomputed histogram would add a second), the
+    fit is bit-identical to the one-partition fit, and the checkpoint
+    is released."""
+    from ema_bigdata_spark import gmm
+    from ema_bigdata_spark.sources.tables import load_table
+
+    sc = spark.sparkContext
+    ev = load_table(spark, sf_dir, "events")
+    monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 0)
+    narrow = gmm.gmm_fit(ev, "value", k=3, tol=0.0, max_iter=2)
+    persisted = _persisted(sc)
+    group = "test_wide_fit_over_several_partitions"
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    coalesce = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        wide, _ = _group_jobs(
+            sc, group,
+            lambda: gmm.gmm_fit(ev, "value", k=3, tol=0.0, max_iter=2))
+    finally:
+        spark.conf.set(key, coalesce)
+    _one_histogram_pass(sc, group, one_partition=False)
+    assert _persisted(sc) <= persisted
+    assert wide == narrow
 
 
 #: jobs each iterative query runs at the Tier-1 scale, result collect
@@ -1145,8 +1223,8 @@ def test_library_fit_job_shape(spark, sf_dir, monkeypatch):
 #: checkpoint that loses its SinglePartition layout adds a shuffle job
 #: per statement and goes over these ceilings.
 _CHECKPOINT_JOB_CEILINGS = {
-    "gmm_fit": 3,
-    "q_gmm_bic": 3,
+    "gmm_fit": 2,
+    "q_gmm_bic": 2,
     "q_kmeans": 7,
     "q_bigram_lm": 7,
     "q_unigram_lm": 6,

@@ -366,6 +366,37 @@ class TestGMM:
                 got = G._np_limb_sum(np.array(col), float(scale), limbs)
                 assert got == want[name], (nbins, name)
 
+    @pytest.mark.parametrize("seed", range(6))
+    def test_np_one_limb_sum_matches_python_ints(self, seed):
+        """On a one-limb layout ``[0, top]`` (every 2-decimal domain)
+        the numpy limb sum must return what Python ints return, with
+        negative ties, ±0.0 and snaps just under 2^top in the data,
+        weighted by counts and not."""
+        import math
+
+        import numpy as np
+
+        from ema_bigdata_spark import gmm_parity as G
+
+        rng = np.random.default_rng(seed)
+        n = int(rng.integers(8, 4000))
+        cnt = rng.integers(1, 60, n)
+        for weight, terms in ((1, n), (cnt, int(cnt.sum()))):
+            top = 62 - terms.bit_length() - int(rng.integers(0, 40))
+            limbs = G._limb_shifts(terms, top)
+            assert limbs == [0, top]
+            edge = math.nextafter(2.0**top - 1.0, 0.0)
+            ties = -(rng.integers(0, 1 << min(top - 1, 51), n) + 0.5)
+            v = np.where(rng.random(n) < 0.5,
+                         rng.uniform(-0.999, 0.999, n) * edge, ties)
+            v[:5] = [0.0, -0.0, -0.5, edge, -edge]
+            v = rng.permutation(v)
+            w = np.broadcast_to(weight, n)
+            want = sum(math.floor(t + 0.5) * int(c) for t, c in zip(v, w))
+            assert G._np_limb_sum(v, 1.0, limbs, weight) == want
+        signed_zeros = np.array([-0.0, 0.0, -0.0])
+        assert G._np_limb_sum(signed_zeros, 1.0, [0, 8]) == 0
+
     @pytest.mark.parametrize("seed", [41, 7])
     def test_distributed_em_layout_invariant(self, spark, monkeypatch, seed):
         """The library fit on the driver executor, on the Spark

@@ -50,6 +50,37 @@ def test_gmm_on_reference_format(spark, tmp_path):
     assert abs(max(model.means) - 10.0) < 0.5
 
 
+@pytest.mark.parametrize("max_driver_bins", [0, None])
+def test_gmm_failed_fit_leaves_nothing_persisted(
+        spark, tmp_path, monkeypatch, max_driver_bins):
+    """A fit that fails leaves no persisted RDD behind, on both
+    executors (``MAX_DRIVER_BINS = 0`` forces the Spark one).  One
+    non-numeric line in a strict read raises Spark's cast error in the
+    histogram's map stage; a histogram whose result stage raises fails
+    the probe that fills the EM checkpoint, which must still be
+    released."""
+    from pyspark.errors import NumberFormatException, SparkRuntimeException
+
+    from ema_bigdata_spark import gmm
+    from ema_bigdata_spark import gmm_parity as G
+
+    if max_driver_bins is not None:
+        monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", max_driver_bins)
+    p = tmp_path / "dirty.txt"
+    p.write_text("1.5\n-2.25\nnot-a-number\n3.0\n")
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    with pytest.raises(NumberFormatException, match="CAST_INVALID_INPUT"):
+        gmm.gmm_fit(read_doubles_text(spark, str(p), strict=True), k=2)
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
+    values = spark.range(10).selectExpr("CAST(id AS DOUBLE) AS value")
+    hist = spark.sql(G.hist_sql("{v}"), v=values).selectExpr(
+        "x", "cnt + CAST(raise_error('probe failed') AS BIGINT) AS cnt")
+    with pytest.raises(SparkRuntimeException, match="probe failed"):
+        G.run_em(hist, (2,), 2)
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
+
+
 def test_parquet_roundtrip_partitioned(spark, sf_dir, tmp_path):
     from ema_bigdata_spark.sources.tables import load_table
 
